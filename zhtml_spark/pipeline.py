@@ -3,7 +3,7 @@
 The Spark-side architecture (SURVEY §4.2): everything outside the
 fused UDF is declarative DataFrame code — scans prune columns and push
 filters (Catalyst), AQE handles runtime re-planning for the join/agg
-stages, and the ONLY imperative stage is the single mapInPandas parse.
+stages, and the ONLY imperative stage is the single mapInArrow parse.
 
 Skew: document sizes are heavy-tailed (giant pages), and a document is
 one row — key-salting frequency tricks don't apply to row-size skew.
@@ -16,7 +16,10 @@ balls-in-bins stays smooth.
 Resume (north rule "resumable from any snapshot checkpoint"): each
 run writes spans/metrics/lineage/checkpoint under a per-attempt
 directory and publishes the attempt with an atomically-renamed commit
-marker as the LAST step.  Readers (``read_spans`` / ``read_checkpoint``)
+marker as the LAST step.  The four staged writes read the same pinned
+extraction cache and run concurrently on driver threads, so their
+driver-side planning, scheduling and commit overlap; the one commit
+rename waits for all of them.  Readers (``read_spans`` / ``read_checkpoint``)
 only see committed attempts, and resume anti-joins the committed
 checkpoint — so a crash at ANY point leaves orphan uncommitted files,
 never duplicate spans.  This is the sandbox analog of an Iceberg
@@ -29,7 +32,10 @@ snapshot itself.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -189,9 +195,15 @@ def salted_repartition(
 
     hash_slot = F.pmod(F.xxhash64("doc_id"), F.lit(num_partitions))
     if assignment:
-        spark = df.sparkSession
-        amap = spark.createDataFrame(
-            list(assignment.items()), "doc_id string, giant_slot int"
+        # an Arrow table plans as a LocalTableScan; a Python list would
+        # go through a pickled RDD and cost its own Spark job
+        amap = df.sparkSession.createDataFrame(
+            pa.table(
+                {
+                    "doc_id": pa.array(list(assignment), pa.string()),
+                    "giant_slot": pa.array(list(assignment.values()), pa.int32()),
+                }
+            )
         )
         df = df.join(F.broadcast(amap), "doc_id", "left")
         slot = F.coalesce(F.col("giant_slot"), hash_slot)
@@ -465,9 +477,18 @@ def run_job(
     committed attempts only, so a crash in ANY window — including
     between table writes — leaves orphan bytes, never duplicate or
     phantom rows; there is no multi-marker ordering window because one
-    rename commits all four tables.  ``_fault_injection={"after":
-    <stage>}`` (stage ∈ spans/metrics/lineage/checkpoint_data) aborts
-    the job at that point — the exactly-once pytest uses it.
+    rename commits all four tables.
+
+    After the cache-pinning aggregate, the staged writes run
+    concurrently on driver threads; each thread inherits the caller's
+    local properties (job group, job tags), so every write job is
+    attributed to the caller.  The commit waits for every write, lists
+    the staged dirs in the fixed order spans, metrics, lineage,
+    checkpoint, and is skipped if any write fails.
+    ``_fault_injection={"after": <stage>}`` (stage ∈
+    spans/metrics/lineage/checkpoint_data) aborts the job at that point
+    — the checks fire in stage order once all writes have finished,
+    just before the commit; the exactly-once pytest uses it.
     """
     import uuid
 
@@ -497,37 +518,58 @@ def run_job(
     attempt = uuid.uuid4().hex[:12]
     fault = _fault_injection or {}
 
-    def _abort_if(stage: str) -> None:
-        if fault.get("after") == stage:
-            raise RuntimeError(f"fault injection: crash after {stage}")
-
-    staged: list[str] = []
-
-    def _stage(df: DataFrame, table_dir: str) -> None:
-        d = f"{table_dir}/attempt={attempt}"
-        df.write.mode("overwrite").parquet(d)
-        staged.append(d)
-
     try:
-        _stage(extracted.select("doc_id", "spans"), f"{output_path}/spans")
-        _abort_if("spans")
-        _stage(
-            metrics_table(extracted).withColumn(
-                "snapshot_id", F.lit(snapshot_id).cast("long")
+        at = f"attempt={attempt}"
+        # (fault point, table, staged dir) in the fixed stage order
+        writes = [
+            (
+                "spans",
+                extracted.select("doc_id", "spans"),
+                f"{output_path}/spans/{at}",
             ),
-            f"{output_path}/metrics",
-        )
-        _abort_if("metrics")
-        _stage(lineage_table(extracted, snapshot_id), f"{output_path}/lineage")
-        _abort_if("lineage")
+            (
+                "metrics",
+                metrics_table(extracted).withColumn(
+                    "snapshot_id", F.lit(snapshot_id).cast("long")
+                ),
+                f"{output_path}/metrics/{at}",
+            ),
+            (
+                "lineage",
+                lineage_table(extracted, snapshot_id),
+                f"{output_path}/lineage/{at}",
+            ),
+        ]
         if checkpoint_path is not None:
-            _stage(
-                extracted.select("doc_id")
-                .withColumn("snapshot_id", F.lit(snapshot_id).cast("long"))
-                .withColumn("partition_id", F.spark_partition_id()),
-                checkpoint_path,
+            writes.append(
+                (
+                    "checkpoint_data",
+                    extracted.select("doc_id")
+                    .withColumn("snapshot_id", F.lit(snapshot_id).cast("long"))
+                    .withColumn("partition_id", F.spark_partition_id()),
+                    f"{checkpoint_path}/{at}",
+                )
             )
-            _abort_if("checkpoint_data")
+
+        def _write(df: DataFrame, d: str) -> None:
+            df.write.mode("overwrite").parquet(d)
+
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            # decorated here, once per write: the wrapper copies the
+            # caller's local properties (job group, job tags) when it is
+            # built, and each thread needs a copy of its own — a shared
+            # one would mix up the writes' SQL execution ids
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(_write), df, d)
+                for _, df, d in writes
+            ]
+        # leaving the pool joined every write; re-raise the first
+        # failure in stage order
+        for fut in futures:
+            fut.result()
+        for stage, _, _ in writes:
+            if fault.get("after") == stage:
+                raise RuntimeError(f"fault injection: crash after {stage}")
 
         # commit: ONE atomic rename publishes the whole attempt
         commits = f"{output_path}/_commits"
@@ -536,14 +578,15 @@ def run_job(
         with open(tmp, "w") as f:
             f.write(
                 f"snapshot_id={snapshot_id}\n"
-                + "\n".join(f"staged={d}" for d in staged)
+                + "\n".join(f"staged={d}" for _, _, d in writes)
                 + "\n"
             )
         os.rename(tmp, os.path.join(commits, attempt))
     finally:
         # release caches on success AND on any write/abort failure —
         # the crash-retry loop this protocol serves must not leak
-        # executor storage across attempts
+        # executor storage across attempts (every write thread has
+        # finished by now: the pool joins them even when one fails)
         extracted.unpersist()
         if ckpt is not None:
             ckpt.unpersist()

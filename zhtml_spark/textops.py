@@ -300,11 +300,13 @@ def ngram_jaccard_pairs(
     else:
         # uncapped sizes = the per-row distinct-gram array length —
         # same number the explode+groupBy computed, minus one full
-        # shuffle branch and a recompute of the gram build (r8; the
-        # inner joins below only ever see docs that produced grams,
-        # so the gramless-doc rows this adds are join-invisible)
-        sizes = fan_out(docs).select(
-            "doc_id", F.size(word_ngrams(n)).alias("n_grams")
+        # shuffle branch and a recompute of the gram build (r8).  The
+        # filter keeps the sizes table to docs that produced grams,
+        # the same key set the shared-gram side can join against.
+        sizes = (
+            fan_out(docs)
+            .select("doc_id", F.size(word_ngrams(n)).alias("n_grams"))
+            .where(F.col("n_grams") > 0)
         )
     a = grams.alias("a")
     b = grams.alias("b")

@@ -1,11 +1,12 @@
-"""Fused tokenize→tree→extract mapInPandas stage.
+"""Fused tokenize→tree→extract mapInArrow stage.
 
 One Python stage, one JVM↔Python Arrow crossing (SURVEY §4.2 "UDF
 fusion": Catalyst cannot fuse across two Python stages, so we never
 split the parse).  Input/output cross the boundary as Arrow record
 batches; inside the batch we loop documents — the per-document DFA is
 inherently sequential (SURVEY §7.2), parallelism comes from doc-level
-batching across tasks.
+batching across tasks.  ``make_extract_arrow_udf`` (mapInArrow) is the
+engine; ``make_extract_udf`` keeps the mapInPandas reference path.
 
 Input schema  (BASELINE.json input_hint):
     doc_id: string,
