@@ -38,7 +38,7 @@ def main() -> None:
 
     from zhtml_spark.corpus import corpus_dataframe
     from zhtml_spark.pipeline import build_session, extract_documents
-    from zhtml_spark.udfs import EXTRACT_SCHEMA, make_extract_udf
+    from zhtml_spark.udfs import EXTRACT_SCHEMA, make_extract_arrow_udf
 
     spark = build_session(app="zhtml-bench", cores=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
@@ -51,7 +51,9 @@ def main() -> None:
     docs = spark.read.parquet(CORPUS_CACHE)
 
     # ---- warmup: fork the Python workers + JIT the hot paths
-    docs.limit(200).mapInPandas(make_extract_udf(), EXTRACT_SCHEMA).count()
+    docs.limit(200).mapInArrow(
+        make_extract_arrow_udf(), EXTRACT_SCHEMA
+    ).count()
 
     timings: dict[str, float] = {}
 

@@ -36,7 +36,6 @@ import sys, time, json
 sys.path.insert(0, {repo!r})
 import pyspark.sql.functions as F
 from zhtml_spark.pipeline import build_session, extract_documents
-from zhtml_spark.udfs import make_extract_udf, EXTRACT_SCHEMA
 from zhtml_spark.langid_model import SEED_TEXTS
 from zhtml_spark.textops import lang_gate, minhash_banded_candidates
 

@@ -489,17 +489,15 @@ def test_source_offsets_whitespace_and_cdata_anchors():
 
 
 def test_fused_stage_rejects_source_offsets():
-    """Code-review r4c: the fused stages' schema has no src column —
+    """Code-review r4c: the fused stage's schema has no src column —
     asking for with_source_offsets must fail at CONSTRUCTION time on
     the driver, never as an executor unpack error past the per-doc
     poison-pill guard."""
     import pytest
 
     from zhtml_spark.extract import ExtractConfig
-    from zhtml_spark.udfs import make_extract_arrow_udf, make_extract_udf
+    from zhtml_spark.udfs import make_extract_arrow_udf
 
-    with pytest.raises(ValueError, match="src column"):
-        make_extract_udf(ExtractConfig(with_source_offsets=True))
     with pytest.raises(ValueError, match="src column"):
         make_extract_arrow_udf(ExtractConfig(with_source_offsets=True))
 

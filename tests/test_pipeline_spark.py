@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import time
+from collections import Counter
 from pathlib import Path
 
 import pytest
@@ -21,6 +22,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from conftest import assert_jvm_only
 
 from zhtml_spark.corpus import corpus_dataframe
 from zhtml_spark.errors import PREPROCESSING_ERROR_IDS
@@ -429,29 +431,40 @@ def test_media_resolution_join_and_span_order(spark):
         extracted.unpersist()
 
 
-def test_arrow_and_pandas_engines_identical(spark):
-    """mapInArrow fast path must emit byte-identical results to the
-    mapInPandas reference path (same fused extract semantics)."""
+def test_extract_documents_matches_per_doc_reference(spark):
+    """Every row of the one fused mapInArrow stage equals a direct
+    ``extract_document_safe`` call on that doc — the same per-doc
+    reference the benchmark's mismatch check uses."""
+    from zhtml_spark.extract import ExtractConfig
+    from zhtml_spark.udfs import extract_document_safe
+
     docs = corpus_dataframe(spark, 40, seed=13).persist()
     try:
-        def snap(engine):
-            rows = extract_documents(docs, engine=engine).collect()
-            return sorted(
-                (
-                    r["doc_id"],
-                    tuple(
-                        (s["kind"], s["text"], s["media_ref"], s["offset"])
-                        for s in r["spans"]
-                    ),
-                    r["n_bytes"],
-                    r["n_spans"],
-                    r["n_errors"],
-                    tuple(sorted(r["error_codes"].items())),
-                )
-                for r in rows
+        out = extract_documents(docs)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
+        got = {r["doc_id"]: r for r in out.collect()}
+        inputs = {
+            r["doc_id"]: [
+                (s["kind"], s["text"], s["media_ref"], s["offset"])
+                for s in r["spans"]
+            ]
+            for r in docs.collect()
+        }
+        assert sorted(got) == sorted(inputs)
+        for doc_id, in_spans in inputs.items():
+            spans, errs, n_bytes = extract_document_safe(
+                in_spans, ExtractConfig()
             )
-
-        assert snap("arrow") == snap("pandas")
+            row = got[doc_id]
+            assert [
+                (s["kind"], s["text"], s["media_ref"], s["offset"])
+                for s in row["spans"]
+            ] == [(k, t, m, i) for i, (k, t, m) in enumerate(spans)]
+            assert (row["n_bytes"], row["n_spans"], row["n_errors"]) == (
+                n_bytes, len(spans), len(errs)
+            )
+            assert row["error_codes"] == dict(Counter(errs))
     finally:
         docs.unpersist()
 
@@ -512,6 +525,17 @@ def test_textops_accept_string_doc_ids(spark):
     assert simhash48(docs).count() == 3
     surv = sorted(r["doc_id"] for r in dedup_survivors(docs, n=3).collect())
     assert surv == ["doc-a", "doc-c"]
+
+
+@pytest.mark.parametrize("op", ["simhash_dup_candidates", "simhash_candidate_stats"])
+def test_simhash_ops_reject_too_few_blocks(spark, op):
+    """n_blocks <= max_hamming puts every doc in one bucket: both
+    simhash candidate ops refuse it before touching the data."""
+    from zhtml_spark import textops
+
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="more blocks"):
+        getattr(textops, op)(docs, max_hamming=3, n_blocks=3)
 
 
 def test_arrow_engine_handles_sliced_batches(spark):
@@ -609,7 +633,7 @@ def test_decontaminate_drops_overlapping_docs(spark):
     # plan: benchmark side broadcasts, no Python stage
     plan = clean._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert_jvm_only(plan)
 
 
 def test_redact_pii_patterns(spark):
@@ -669,7 +693,8 @@ def test_hash_sample_deterministic_and_stratified(spark):
     assert hash_sample(docs, 0).count() == 0
     # pure filter: no shuffle, no Python
     plan = hash_sample(docs, 20)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "EvalPython" not in plan
+    assert "Exchange" not in plan
+    assert_jvm_only(plan)
 
 
 def test_substring_dup_spans_offsets_and_cap(spark):
@@ -706,7 +731,8 @@ def test_substring_dup_spans_offsets_and_cap(spark):
     assert full.count() == 15  # all C(6,2) pairs
     # plan: no Python stage, no cross join
     plan = full._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan and "CartesianProduct" not in plan
+    assert "CartesianProduct" not in plan
+    assert_jvm_only(plan)
     assert "BroadcastNestedLoop" not in plan
 
 
@@ -748,7 +774,8 @@ def test_absolutize_url_shapes(spark):
     assert out[1]["resolved_ref"] is None
     plan = absolutize_media_refs(spans)._jdf.queryExecution() \
         .executedPlan().toString()
-    assert "Exchange" not in plan and "EvalPython" not in plan
+    assert "Exchange" not in plan
+    assert_jvm_only(plan)
 
 
 def test_absolutize_url_preserves_query_and_counts_deep_dots(spark):
@@ -982,7 +1009,7 @@ def test_bloom_seen_set(spark):
         bloom_gate(fresh, bloom, m_bits=m, k=k)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert_jvm_only(plan)
     import pytest as _p
 
     with _p.raises(ValueError):
@@ -1012,7 +1039,7 @@ def test_anchor_text_stats(spark):
         2, 1, "alpha")
     plan = anchor_text_stats(links)._jdf.queryExecution() \
         .executedPlan().toString()
-    assert "EvalPython" not in plan
+    assert_jvm_only(plan)
 
 
 def test_dedup_components_chains_and_convergence(spark):
@@ -1118,7 +1145,7 @@ def test_substring_dedup_apply(spark):
         substring_dedup_apply(docs, spans)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert_jvm_only(plan)
 
 
 def test_pack_sequences_invariants(spark):
@@ -1165,7 +1192,7 @@ def test_pack_sequences_invariants(spark):
         if p != tail[b]:
             assert 256 - 99 < sum(toks) < 256 + 99, (b, p, sum(toks))
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert_jvm_only(plan)
     import pytest as _p
 
     with _p.raises(ValueError):
@@ -2058,7 +2085,8 @@ def test_embed_hashing_semantics_and_plan(spark):
     assert fast[4] == [0.0] * 16
     plan = embed_hashing(docs)._jdf.queryExecution() \
         .executedPlan().toString()
-    assert "EvalPython" not in plan and "Exchange" not in plan
+    assert "Exchange" not in plan
+    assert_jvm_only(plan)
 
 
 def test_noindex_gate_channels_and_near_misses(spark):
@@ -2217,7 +2245,7 @@ def test_lang_id_v2_discriminates_held_out(spark):
         lang_id_v2(docs)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert_jvm_only(plan)
 
 
 def test_trigram_lm_score_orders_text_quality(spark):
@@ -2245,7 +2273,7 @@ def test_trigram_lm_score_orders_text_quality(spark):
         trigram_lm_score(docs)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert_jvm_only(plan)
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
@@ -2435,7 +2463,7 @@ def test_lang_gate_fused_one_pass(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("xxhash64(") == 1, "trigram chain re-evaluated"
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert_jvm_only(plan)
     plan_md5 = (
         lang_gate(docs, lang="en", hash_fn="md5")
         ._jdf.queryExecution().executedPlan().toString()
@@ -2943,8 +2971,7 @@ def test_bpe_encode_matches_independent_apply(spark):
     )
     # plan: JVM-only; the encoded vocabulary comes back broadcast
     plan = enc._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
+    assert_jvm_only(plan)
     assert "BroadcastHashJoin" in plan
 
 
@@ -2995,8 +3022,7 @@ def test_score_tiers_cut_rule_and_determinism(spark):
     with _pytest.raises(ValueError):
         score_tiers(df, head_ppm=800_000, middle_ppm=300_000)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
+    assert_jvm_only(plan)
     assert "BroadcastHashJoin" in plan
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from conftest import assert_jvm_only
 
 
 def _plan(df) -> str:
@@ -94,7 +95,7 @@ def test_minhash_band_signatures_single_exchange(spark):
         1 if plan.startswith("Exchange") else 0
     )
     assert n_ex == 1, f"expected exactly 1 exchange, plan:\n{plan}"
-    assert "EvalPython" not in plan
+    assert_jvm_only(plan)
 
 
 def test_simhash_zero_shuffle_signatures(spark):

@@ -5,6 +5,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pyspark.sql.functions as F
+from conftest import assert_jvm_only
 
 from zhtml_spark.timeops import asof_join, sessionize
 
@@ -43,7 +44,7 @@ def test_asof_join_is_single_shuffle(spark):
         asof_join(left, right, value_cols=["score"])
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert_jvm_only(plan)
 
 
 def test_sessionize_gap_splits(spark):

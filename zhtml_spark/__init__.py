@@ -13,7 +13,7 @@ entities    WHATWG named-character-reference table (stdlib data).
 tokenizer   full 80-state WHATWG §13.2.5 tokenizer, batch-friendly.
 tree        tree construction (insertion modes) over flat node arrays.
 extract     span emission + text/link-density boilerplate stripping.
-udfs        the fused tokenize→tree→extract mapInPandas stage.
+udfs        the fused tokenize→tree→extract mapInArrow stage.
 pipeline    job shell: salted repartition, checkpoint resume,
             metrics + lineage sinks.
 corpus      deterministic synthetic interleaved-document generator.

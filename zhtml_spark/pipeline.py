@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .extract import ExtractConfig
-from .udfs import EXTRACT_SCHEMA, make_extract_udf
+from .udfs import EXTRACT_SCHEMA, make_extract_arrow_udf
 
 DEFAULT_ARROW_BATCH = 256  # docs per Arrow batch: ~4KB mean docs → ~1MB batches
 
@@ -266,24 +266,16 @@ def extract_documents(
     config: ExtractConfig | None = None,
     num_partitions: int | None = None,
     salt: bool = True,
-    engine: str = "arrow",
 ) -> DataFrame:
-    """The core stage: salted repartition → fused parse/extract UDF.
-
-    ``engine='arrow'`` uses mapInArrow (flat Arrow child arrays, no
-    pandas object-dict round trip — measurably faster at high core
-    counts); ``'pandas'`` keeps the mapInPandas reference path.
-    """
+    """The core stage: salted repartition → fused parse/extract
+    mapInArrow stage (flat Arrow child arrays in and out)."""
     if num_partitions and salt:
         df = salted_repartition(df, num_partitions)
     elif num_partitions:
         df = df.repartition(num_partitions, "doc_id")
-    df = df.select("doc_id", "spans")
-    if engine == "arrow" and hasattr(df, "mapInArrow"):
-        from .udfs import make_extract_arrow_udf
-
-        return df.mapInArrow(make_extract_arrow_udf(config), EXTRACT_SCHEMA)
-    return df.mapInPandas(make_extract_udf(config), EXTRACT_SCHEMA)
+    return df.select("doc_id", "spans").mapInArrow(
+        make_extract_arrow_udf(config), EXTRACT_SCHEMA
+    )
 
 
 def resolve_media_refs(

@@ -1049,8 +1049,12 @@ def warc_interleaved_spans(
     # once, and (with parse_warc_records' own scan-width guard) in
     # parallel.  At archive scale the trade is one shuffle of parsed
     # records against five-to-ten re-parses of every payload — the
-    # exchange wins long before 100 TB.
-    target = records.sparkSession.sparkContext.defaultParallelism
+    # exchange wins long before 100 TB.  The exchange never narrows:
+    # an input wider than the session keeps its width.
+    target = max(
+        records.rdd.getNumPartitions(),
+        records.sparkSession.sparkContext.defaultParallelism,
+    )
     records = records.repartition(target, F.col("warc_url"))
     records = decode_http_payloads(records)
     # 3xx-with-Location records are crawl-graph EDGES, not documents:

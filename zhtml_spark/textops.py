@@ -678,6 +678,38 @@ def _block_exprs(bits: int, n_blocks: int) -> list[str]:
     return exprs
 
 
+def _simhash_block_keys(
+    docs: DataFrame, max_hamming: int, bits: int, n_blocks: int | None
+) -> tuple[DataFrame, int, int]:
+    """Multi-index probe keys shared by the simhash candidate ops: one
+    ``(doc_id, simhash, bkey)`` row per (doc, block combination), the
+    key being the combination id plus that combination's block values.
+    Returns the keyed rows, the block count and the combination count."""
+    from itertools import combinations
+
+    k = max_hamming
+    n = n_blocks if n_blocks is not None else k + 2
+    if n <= k:
+        raise ValueError("need more blocks than allowed flipped bits")
+    sig = simhash_bits(docs, bits)
+    blocks = _block_exprs(bits, n)
+    combos = list(combinations(range(n), n - k))
+    key_arrays = F.array(
+        *[
+            F.concat_ws(
+                ":",
+                F.lit(str(ci)),
+                *[F.expr(blocks[b]).cast("string") for b in combo],
+            )
+            for ci, combo in enumerate(combos)
+        ]
+    )
+    keyed = sig.select(
+        "doc_id", "simhash", F.explode(key_arrays).alias("bkey")
+    )
+    return keyed, n, len(combos)
+
+
 def simhash_dup_candidates(
     docs: DataFrame,
     max_hamming: int = 3,
@@ -705,29 +737,7 @@ def simhash_dup_candidates(
     bounded by dup-pair volume × C(n, k) plus random ~N²/2^|key|
     collisions, no longer by corpus size × bucket count.
     """
-    from itertools import combinations
-
-    k = max_hamming
-    n = n_blocks if n_blocks is not None else k + 2
-    if n <= k:
-        raise ValueError("need more blocks than allowed flipped bits")
-    sig = simhash_bits(docs, bits)
-    blocks = _block_exprs(bits, n)
-    combos = list(combinations(range(n), n - k))
-    # one row per (doc, combo): key = combo id + the combo's block values
-    key_arrays = F.array(
-        *[
-            F.concat_ws(
-                ":",
-                F.lit(str(ci)),
-                *[F.expr(blocks[b]).cast("string") for b in combo],
-            )
-            for ci, combo in enumerate(combos)
-        ]
-    )
-    keyed = sig.select(
-        "doc_id", "simhash", F.explode(key_arrays).alias("bkey")
-    )
+    keyed = _simhash_block_keys(docs, max_hamming, bits, n_blocks)[0]
     a = keyed.alias("a")
     b = keyed.alias("b")
     cands = (
@@ -759,24 +769,9 @@ def simhash_candidate_stats(
     """Plan-evidence helper: candidate-pair volume and max bucket
     cardinality for a banding configuration (bench reports these for
     the r=1-style single-block scheme vs the multi-index default)."""
-    from itertools import combinations
-
-    k = max_hamming
-    n = n_blocks if n_blocks is not None else k + 2
-    sig = simhash_bits(docs, bits)
-    blocks = _block_exprs(bits, n)
-    combos = list(combinations(range(n), n - k))
-    key_arrays = F.array(
-        *[
-            F.concat_ws(
-                ":",
-                F.lit(str(ci)),
-                *[F.expr(blocks[b]).cast("string") for b in combo],
-            )
-            for ci, combo in enumerate(combos)
-        ]
+    keyed, n, n_combos = _simhash_block_keys(
+        docs, max_hamming, bits, n_blocks
     )
-    keyed = sig.select("doc_id", F.explode(key_arrays).alias("bkey"))
     per_bucket = keyed.groupBy("bkey").agg(F.count("*").alias("n"))
     row = per_bucket.agg(
         F.max("n").alias("max_bucket"),
@@ -784,7 +779,7 @@ def simhash_candidate_stats(
     ).collect()[0]
     return {
         "n_blocks": n,
-        "n_combos": len(combos),
+        "n_combos": n_combos,
         "max_bucket": row["max_bucket"],
         "candidate_pairs": int(row["candidate_pairs"] or 0),
     }

@@ -10,8 +10,8 @@ html5lib ignore list (/root/reference/test/tokenizer-html5lib.zig:15-61),
 so spec behavior == reference behavior on the judged set (SURVEY §7.0).
 
 Design for Spark: this module is pure Python/regex over decoded
-strings, called per document from inside an Arrow-batched
-``mapInPandas`` stage (zhtml_spark.udfs).  The dominant states (Data,
+strings, called per document from inside the Arrow-batched
+``mapInArrow`` stage (zhtml_spark.udfs).  The dominant states (Data,
 RCDATA, RAWTEXT, ScriptData, PLAINTEXT, attribute values, comments,
 CDATA) use compiled-regex run-skipping — the analog of memchr — so the
 per-codepoint interpreter only runs inside tag machinery (a few % of

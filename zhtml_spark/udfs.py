@@ -6,7 +6,7 @@ split the parse).  Input/output cross the boundary as Arrow record
 batches; inside the batch we loop documents — the per-document DFA is
 inherently sequential (SURVEY §7.2), parallelism comes from doc-level
 batching across tasks.  ``make_extract_arrow_udf`` (mapInArrow) is the
-engine; ``make_extract_udf`` keeps the mapInPandas reference path.
+one extraction engine.
 
 Input schema  (BASELINE.json input_hint):
     doc_id: string,
@@ -146,7 +146,7 @@ def extract_document(
 
 
 def _reject_source_offsets(cfg: ExtractConfig) -> None:
-    """The fused stages' span schema (EXTRACT_SCHEMA — the driver/sink
+    """The fused stage's span schema (EXTRACT_SCHEMA — the driver/sink
     contract) has no ``src`` column, so ``with_source_offsets`` cannot
     ride through them: fail LOUDLY at stage-construction time on the
     driver (code-review r4c — the 4-tuple spans previously blew up as
@@ -159,77 +159,21 @@ def _reject_source_offsets(cfg: ExtractConfig) -> None:
         raise ValueError(
             "with_source_offsets is not supported by the fused extract "
             "stage (EXTRACT_SCHEMA has no src column); use "
-            "extract_html/extract_spans or a custom mapInPandas stage"
+            "extract_html/extract_spans or a custom Python stage"
         )
 
 
-def make_extract_udf(config: ExtractConfig | None = None):
-    """Build the mapInPandas function for the extraction stage."""
-    cfg = config or ExtractConfig()
-    _reject_source_offsets(cfg)
-
-    def extract_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids = pdf["doc_id"].tolist()
-            spans_col = pdf["spans"].tolist()
-            out_spans = []
-            out_bytes = []
-            out_nspans = []
-            out_nerrors = []
-            out_codes = []
-            out_wall = []
-            for in_spans in spans_col:
-                t0 = time.perf_counter_ns()
-                # rows arrive as dicts (Arrow struct) — normalize once
-                recs = [
-                    (s["kind"], s["text"], s["media_ref"], s["offset"])
-                    for s in in_spans
-                ]
-                spans, errs, nbytes = extract_document_safe(recs, cfg)
-                wall = (time.perf_counter_ns() - t0) // 1000
-                out_spans.append(
-                    [
-                        {
-                            "kind": k,
-                            "text": t,
-                            "media_ref": m,
-                            "offset": i,
-                        }
-                        for i, (k, t, m) in enumerate(spans)
-                    ]
-                )
-                out_bytes.append(nbytes)
-                out_nspans.append(len(spans))
-                out_nerrors.append(len(errs))
-                out_codes.append(dict(Counter(errs)))
-                out_wall.append(wall)
-            yield pd.DataFrame(
-                {
-                    "doc_id": doc_ids,
-                    "spans": out_spans,
-                    "n_bytes": out_bytes,
-                    "n_spans": out_nspans,
-                    "n_errors": out_nerrors,
-                    "error_codes": out_codes,
-                    "wall_us": out_wall,
-                }
-            )
-
-    return extract_batches
-
-
 def make_extract_arrow_udf(config: ExtractConfig | None = None):
-    """mapInArrow variant of the extraction stage.
+    """Build the mapInArrow function for the extraction stage.
 
-    Same semantics as :func:`make_extract_udf`, but consumes/produces
-    ``pyarrow.RecordBatch`` directly: the spans ``list<struct>`` column
-    is deconstructed into flat child arrays (one ``to_pylist`` per flat
-    string column) instead of per-row lists of Python dicts, and the
-    output is assembled as Arrow arrays.  This skips the
-    pandas-object-dict round trip — the dominant Spark-side overhead at
-    32 cores (see BENCH/BASELINE.md).
+    Each document runs through :func:`extract_document_safe`.  The
+    function consumes/produces ``pyarrow.RecordBatch`` directly: the
+    spans ``list<struct>`` column is deconstructed into flat child
+    arrays (one ``to_pylist`` per flat string column) instead of
+    per-row lists of Python dicts, and the output is assembled as
+    Arrow arrays.  This skips the pandas-object-dict round trip of a
+    mapInPandas stage — the dominant Spark-side overhead at 32 cores
+    (1.66×, see BENCH/NOTES.md step 3).
     """
     import pyarrow as pa
 
