@@ -970,8 +970,8 @@ def _q_dedup_components(spark, sf_dir):
 
 
 def _q_dedup_survivors_banded(spark, sf_dir):
-    """The composed dedup job on its scale path: b×r banded LSH
-    candidate generation instead of r=1 agreement counting."""
+    """The composed dedup job: exact dedup, then b×r banded LSH
+    near-dup dominance."""
     from zhtml_spark.textops import dedup_survivors
 
     d = _docs(spark, sf_dir).select("doc_id", "text")

@@ -1,6 +1,8 @@
-"""Stale-import guard: every ``zhtml_spark`` name that a script imports
-must exist, so deleting an API a script still names fails the suite
-instead of a later run of that script.
+"""Stale-import and stale-keyword guards: every ``zhtml_spark`` name
+that a script imports must exist, and every keyword argument a script
+passes to an imported ``zhtml_spark`` callable must name one of its
+parameters.  Deleting an API or an option a script still uses then
+fails the suite instead of a later run of that script.
 
 Scripts are parsed, not run.  Imports nested in functions count, and
 so do import lines inside string literals (code snippets a script
@@ -12,6 +14,7 @@ from __future__ import annotations
 import ast
 import importlib
 import importlib.util
+import inspect
 from pathlib import Path
 
 import pytest
@@ -20,6 +23,8 @@ REPO = Path(__file__).resolve().parent.parent
 SCRIPTS = sorted(
     [REPO / "bench.py", REPO / "__spark_entry__.py", *REPO.glob("jobs/*.py")]
 )
+# perfbench is the benchmark harness: parsed here, never edited for it
+KWARG_SCRIPTS = sorted([*SCRIPTS, *REPO.glob("perfbench/*.py")])
 
 
 def _engine_imports(tree: ast.AST):
@@ -85,4 +90,83 @@ def test_guard_sees_nested_and_snippet_imports():
     assert [n for m, n in sorted(found) if not _resolves(m, n)] == [
         "gone_fn",
         "gone_udf",
+    ]
+
+
+def _stale_keywords(tree: ast.AST) -> list[str]:
+    """``f(kw=)`` for each keyword argument in ``tree`` that a call to
+    an imported ``zhtml_spark`` callable passes but the callable does
+    not accept.  Names resolve file-wide (import scope is ignored);
+    callables taking ``**kwargs`` accept anything."""
+    bound: dict[str, list] = {}
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.ImportFrom) or node.level:
+            continue
+        module = node.module or ""
+        if module.split(".")[0] != "zhtml_spark":
+            continue
+        for alias in node.names:
+            if _resolves(module, alias.name):
+                mod = importlib.import_module(module)
+                if hasattr(mod, alias.name):
+                    obj = getattr(mod, alias.name)
+                else:  # a submodule: ``from zhtml_spark import textops``
+                    obj = importlib.import_module(f"{module}.{alias.name}")
+                bound.setdefault(alias.asname or alias.name, []).append(obj)
+    stale = set()
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        if isinstance(f, ast.Name):
+            label, targets = f.id, bound.get(f.id, [])
+        elif isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name):
+            label = f"{f.value.id}.{f.attr}"
+            targets = [
+                getattr(m, f.attr)
+                for m in bound.get(f.value.id, [])
+                if inspect.ismodule(m) and hasattr(m, f.attr)
+            ]
+        else:
+            continue
+        for kw in node.keywords:
+            if kw.arg is not None and targets and not any(
+                _accepts(t, kw.arg) for t in targets
+            ):
+                stale.add(f"{label}({kw.arg}=)")
+    return sorted(stale)
+
+
+def _accepts(fn, keyword: str) -> bool:
+    try:
+        params = inspect.signature(fn).parameters
+    except (TypeError, ValueError):  # not introspectable: give it a pass
+        return True
+    return keyword in params or any(
+        p.kind is inspect.Parameter.VAR_KEYWORD for p in params.values()
+    )
+
+
+@pytest.mark.parametrize("script", KWARG_SCRIPTS, ids=lambda p: p.name)
+def test_script_engine_keywords_exist(script):
+    tree = ast.parse(script.read_text(), filename=str(script))
+    stale = _stale_keywords(tree)
+    assert not stale, f"{script.name} passes removed keywords: {stale}"
+
+
+def test_keyword_guard_flags_removed_option():
+    src = (
+        "def job(docs):\n"
+        "    from zhtml_spark.textops import dedup_survivors\n"
+        "    from zhtml_spark import textops\n"
+        "    from zhtml_spark.textops import winnow_dup_candidates as wdc\n"
+        "    dedup_survivors(docs, n=3, seeds=8, bands=4)\n"
+        "    textops.ngram_jaccard_pairs(docs, threshold=0.5, max_doc_freq=9)\n"
+        "    wdc(docs, max_doc_freq=20, shingle='char')\n"
+        "    len(docs, seeds=8)\n"
+    )
+    assert _stale_keywords(ast.parse(src)) == [
+        "dedup_survivors(seeds=)",
+        "textops.ngram_jaccard_pairs(max_doc_freq=)",
+        "wdc(shingle=)",
     ]

@@ -146,29 +146,6 @@ def make_document(
     return {"doc_id": doc_id, "spans": spans}
 
 
-def generate_documents(
-    n_docs: int,
-    seed: int = 42,
-    mean_bytes: int = 4000,
-    giant_rate: float = 0.01,
-    giant_multiplier: int = 40,
-    **doc_kwargs,
-):
-    """Yield ``n_docs`` deterministic interleaved documents.
-
-    Byte lengths are log-normal-ish heavy tailed; ``giant_rate`` of
-    docs are scaled by ``giant_multiplier`` to exercise size-skew
-    handling.  Each document derives its own RNG from (seed, index) so
-    generation order / partitioning cannot change content.
-    """
-    for i in range(n_docs):
-        rng = random.Random((seed << 20) ^ i)
-        target = int(rng.lognormvariate(0, 0.8) * mean_bytes) + 300
-        if rng.random() < giant_rate:
-            target *= giant_multiplier
-        yield make_document(f"doc-{seed}-{i:08d}", rng, target, **doc_kwargs)
-
-
 def corpus_dataframe(spark, n_docs: int, seed: int = 42, **kwargs):
     """Materialize the corpus as a Spark DataFrame with the input_hint
     schema (distributed generation: one task per ~2k docs, rows built

@@ -110,31 +110,6 @@ def word_ngrams(n: int, col: str = "text") -> Column:
     )
 
 
-def char_ngrams(n: int, col: str = "text") -> Column:
-    """Distinct character n-grams (shingles) as an array column.
-
-    The CJK-safe shingle: whitespace word-splitting produces one
-    giant "word" for unsegmented scripts (zh/ja/th), collapsing every
-    word-gram op; character shingles need no segmentation.  JVM
-    higher-order fns only.
-
-    WARNING (r5): this column form calls ``substring(col, i, n)`` per
-    position, which is O(position) on UTF8String (code-point scan
-    from byte 0) — QUADRATIC in doc length.  Fine for short strings;
-    every corpus-facing path must instead build grams via
-    :func:`_char_gram_expr`'s length-hybrid plan (see
-    ``ngram_gram_table``) — the r5 adversarial corpus's giant pages
-    turned this exact pattern into a 20× slowdown."""
-    return F.array_distinct(
-        F.expr(
-            f"CASE WHEN length({col}) < {n} "
-            f"THEN array() "
-            f"ELSE transform(sequence(1, length({col}) - {n} + 1),"
-            f" i -> substring({col}, i, {n})) END"
-        )
-    )
-
-
 def _char_gram_expr(text_col: str, k: int) -> str:
     """SQL expr for the array of ALL ``k``-char grams of ``text_col``
     in LINEAR time — positioned ``substring(text, i, k)`` is O(i) on
@@ -245,6 +220,88 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
     )
 
 
+# One blocking skeleton for the near-dup generators (SparkER, EDBT'19:
+# blocking → block purging → matching): each generator emits its
+# (doc_id, key) rows and the helpers below own the shared steps.
+def _bucket_pairs(keyed: DataFrame, keys, *carry: str) -> DataFrame:
+    """Blocking: self-join ``keyed`` on ``keys`` (a column name or
+    list), keep ``doc_a < doc_b`` and count the keys each pair shares.
+    Returns ``(doc_a, doc_b, <c>_a, <c>_b…, shared)`` — every ``carry``
+    column once per side.  A bucketed equality join, never a cross
+    join; callers that drop ``shared`` get the same plan as a
+    ``distinct`` (the optimizer prunes the unused count)."""
+    a = keyed.alias("a")
+    b = keyed.alias("b")
+    sides = [
+        F.col(f"{side}.{c}").alias(f"{c}_{side}")
+        for c in carry
+        for side in ("a", "b")
+    ]
+    return (
+        a.join(b, keys)
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        .groupBy(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            *sides,
+        )
+        .agg(F.count("*").alias("shared"))
+    )
+
+
+def _shared_keys(keys: DataFrame, key: str, max_df: int) -> DataFrame:
+    """Block purging: the ``key`` values of ``keys`` (one row per
+    (doc, key)) with ``2 <= df <= max_df``.  A df=1 key pairs no docs;
+    one above the cap is boilerplate whose f² pair expansion swamps
+    the join.  The kept set scales with duplication, not corpus size."""
+    return (
+        keys.groupBy(key)
+        .agg(F.count("*").alias("df"))
+        .where((F.col("df") >= 2) & (F.col("df") <= max_df))
+        .select(key)
+    )
+
+
+def _bucket_volume(
+    per_key: DataFrame, n: str, capped: Column | None = None, *extra: Column
+) -> dict:
+    """Plan-evidence stats over per-bucket sizes ``n`` in ONE
+    aggregation pass: the largest bucket and Σ C(n, 2) candidate
+    pairs, the same two restricted to buckets where ``capped`` holds
+    (when given), and any ``extra`` aggregates by their alias."""
+    size = F.col(n)
+    pairs = size * (size - 1) / 2
+    aggs = [
+        F.max(size).alias("max_bucket"),
+        F.sum(pairs).alias("candidate_pairs"),
+    ]
+    if capped is not None:
+        aggs += [
+            F.max(F.when(capped, size)).alias("capped_max_bucket"),
+            F.sum(F.when(capped, pairs)).alias("capped_candidate_pairs"),
+        ]
+    out = per_key.agg(*aggs, *extra).collect()[0].asDict()
+    for k in ("candidate_pairs", "capped_candidate_pairs"):
+        if k in out:
+            out[k] = int(out[k] or 0)
+    return out
+
+
+def _dominated_ids(
+    sig: DataFrame, buckets: DataFrame, min_bands: int
+) -> DataFrame:
+    """Band probe: ids of ``sig``'s docs whose ``(band, band_sig)``
+    keys hit ``buckets`` — a foreign bucket set, not a self-join — in
+    at least ``min_bands`` bands."""
+    return (
+        sig.join(buckets, ["band", "band_sig"])
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n_bands"))
+        .where(F.col("n_bands") >= min_bands)
+        .select("doc_id")
+    )
+
+
 def _gram_array(n: int, shingle: str) -> Column:
     """Per-row DISTINCT shingle array (word or CJK-safe char grams) —
     the shared source for the gram table and the per-row signature
@@ -266,58 +323,24 @@ def ngram_gram_table(
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    max_doc_freq: int | None = None,
+    docs: DataFrame, n: int = 3, threshold: float = 0.5
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs ≥ threshold.
 
     Distributed shape: gram-inverted-index self-join (shared-gram
-    counting), never a doc×doc cross join.  ``max_doc_freq`` is the
-    scale lever: a gram appearing in f docs contributes f² join rows,
-    so stopword-like grams explode the shuffle quadratically at 10^12
-    docs — capping document frequency drops them before the join.
-    Capped grams can only LOWER a pair's computed Jaccard (shared and
-    sizes both computed post-cap), so the filter is high-precision:
-    every reported pair meets the threshold on the capped gram space.
-    Leave ``None`` for the exact (oracle-matched) semantics.
+    counting, :func:`_bucket_pairs`), never a doc×doc cross join.
     """
-    grams = ngram_gram_table(docs, n)
-    if max_doc_freq is not None:
-        df_counts = grams.groupBy("gram").agg(
-            F.count("*").alias("doc_freq")
-        )
-        keep = df_counts.where(
-            F.col("doc_freq") <= F.lit(max_doc_freq)
-        ).select("gram")
-        grams = grams.join(keep, "gram")
-        # post-cap sizes: count the SURVIVING grams (shared and sizes
-        # both computed post-cap — the documented semantics)
-        sizes = grams.groupBy("doc_id").agg(
-            F.count("*").alias("n_grams")
-        )
-    else:
-        # uncapped sizes = the per-row distinct-gram array length —
-        # same number the explode+groupBy computed, minus one full
-        # shuffle branch and a recompute of the gram build (r8).  The
-        # filter keeps the sizes table to docs that produced grams,
-        # the same key set the shared-gram side can join against.
-        sizes = (
-            fan_out(docs)
-            .select("doc_id", F.size(word_ngrams(n)).alias("n_grams"))
-            .where(F.col("n_grams") > 0)
-        )
-    a = grams.alias("a")
-    b = grams.alias("b")
-    shared = (
-        a.join(b, "gram")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("shared"))
+    # sizes = the per-row distinct-gram array length — same number an
+    # explode+groupBy computes, minus one full shuffle branch and a
+    # recompute of the gram build (r8).  The filter keeps the sizes
+    # table to docs that produced grams, the same key set the
+    # shared-gram side can join against.
+    sizes = (
+        fan_out(docs)
+        .select("doc_id", F.size(word_ngrams(n)).alias("n_grams"))
+        .where(F.col("n_grams") > 0)
     )
+    shared = _bucket_pairs(ngram_gram_table(docs, n), "gram")
     sa = sizes.select(
         F.col("doc_id").alias("doc_a"), F.col("n_grams").alias("size_a")
     )
@@ -341,7 +364,7 @@ def ngram_jaccard_pairs(
 
 
 def _minhash_min_table(
-    docs: DataFrame, n: int, seeds: int, shingle: str
+    docs: DataFrame, n: int, seeds: int, shingle: str = "word"
 ) -> DataFrame:
     """One row per doc with the whole signature as ``seeds`` columns
     ``_mh0.._mh{seeds-1}`` — the shared r8 core of the minhash tier.
@@ -405,15 +428,9 @@ def minhash_dup_candidates(
     the seed minima.  Equality join on (seed, minhash) buckets — the
     banding join; no cross join anywhere."""
     sig = minhash_signatures(docs, n, seeds)
-    a = sig.alias("a")
-    b = sig.alias("b")
     return (
-        a.join(b, ["seed", "minhash"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("n_agree"))
+        _bucket_pairs(sig, ["seed", "minhash"])
+        .withColumnRenamed("shared", "n_agree")
         .where(F.col("n_agree") >= min_agree)
     )
 
@@ -423,7 +440,6 @@ def minhash_banded_candidates(
     n: int = 3,
     bands: int = 4,
     rows: int = 2,
-    shingle: str = "word",
 ) -> DataFrame:
     """Standard b×r banded MinHash LSH: signature of ``bands × rows``
     minhashes; a pair is a candidate iff some band's ENTIRE r-row slice
@@ -441,16 +457,9 @@ def minhash_banded_candidates(
     near-dup pairs plus exponentially-rare accidents.  Join stays a
     bucketed equality join on (band, band_sig); no cross join.
     """
-    band_sig = _band_signatures(docs, n, bands, rows, shingle)
-    a = band_sig.alias("a")
-    b = band_sig.alias("b")
-    return (
-        a.join(b, ["band", "band_sig"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("n_bands"))
+    band_sig = _band_signatures(docs, n, bands, rows)
+    return _bucket_pairs(band_sig, ["band", "band_sig"]).withColumnRenamed(
+        "shared", "n_bands"
     )
 
 
@@ -459,7 +468,6 @@ def minhash_band_index(
     n: int = 3,
     bands: int = 4,
     rows: int = 2,
-    shingle: str = "word",
 ) -> DataFrame:
     """The persisted LSH bucket index of an EXISTING corpus —
     ``(doc_id, band, band_sig)`` rows.  Build once, write bucketed on
@@ -467,7 +475,7 @@ def minhash_band_index(
     every incremental crawl joins THIS instead of rescanning corpus
     text: the index is the only state 10^12-doc incremental dedup
     keeps."""
-    return _band_signatures(docs, n, bands, rows, shingle)
+    return _band_signatures(docs, n, bands, rows)
 
 
 def dedup_against_index(
@@ -476,7 +484,6 @@ def dedup_against_index(
     n: int = 3,
     bands: int = 4,
     rows: int = 2,
-    shingle: str = "word",
     min_bands: int = 1,
 ) -> DataFrame:
     """Incremental (asymmetric) near-dup dedup — the pass every
@@ -495,17 +502,9 @@ def dedup_against_index(
     concern (:func:`dedup_survivors`), run before or after at the
     pipeline's choice.  Returns surviving ``(doc_id, text)`` rows of
     ``new_docs``."""
-    sig = _band_signatures(new_docs, n, bands, rows, shingle)
-    buckets = index.select(
-        "band", F.col("band_sig").alias("band_sig")
-    ).distinct()
-    dominated = (
-        sig.join(buckets, ["band", "band_sig"])
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_bands"))
-        .where(F.col("n_bands") >= min_bands)
-        .select("doc_id")
-    )
+    sig = _band_signatures(new_docs, n, bands, rows)
+    buckets = index.select("band", "band_sig").distinct()
+    dominated = _dominated_ids(sig, buckets, min_bands)
     return new_docs.join(dominated, "doc_id", "left_anti").select(
         "doc_id", "text"
     )
@@ -542,7 +541,7 @@ def persist_band_index(
 
 
 def _band_signatures(
-    docs: DataFrame, n: int, bands: int, rows: int, shingle: str
+    docs: DataFrame, n: int, bands: int, rows: int
 ) -> DataFrame:
     """(doc_id, band, band_sig) rows — the b×r LSH bucket keys shared
     by ``minhash_banded_candidates`` and ``minhash_band_stats``.
@@ -554,7 +553,7 @@ def _band_signatures(
     per-(doc, band) collect_list.  The band signature string —
     minhashes in seed order, comma-joined — is byte-identical to the
     aggregated form's."""
-    mins = _minhash_min_table(docs, n, bands * rows, shingle)
+    mins = _minhash_min_table(docs, n, bands * rows)
     band_structs = F.array(
         *[
             F.struct(
@@ -582,26 +581,16 @@ def minhash_band_stats(
     n: int = 3,
     bands: int = 4,
     rows: int = 2,
-    shingle: str = "word",
 ) -> dict:
     """Plan-evidence helper (mirrors ``simhash_candidate_stats``): max
     bucket cardinality + candidate-pair volume for a b×r banding — the
     per-round trend line VERDICT r2 #9 asked for, so r=2 bucket growth
     is tracked the same way the simhash scheme's is."""
-    band_sig = _band_signatures(docs, n, bands, rows, shingle)
+    band_sig = _band_signatures(docs, n, bands, rows)
     per_bucket = band_sig.groupBy("band", "band_sig").agg(
         F.count("*").alias("n")
     )
-    row = per_bucket.agg(
-        F.max("n").alias("max_bucket"),
-        F.sum(F.expr("n * (n - 1) / 2")).alias("candidate_pairs"),
-    ).collect()[0]
-    return {
-        "bands": bands,
-        "rows": rows,
-        "max_bucket": row["max_bucket"],
-        "candidate_pairs": int(row["candidate_pairs"] or 0),
-    }
+    return {"bands": bands, "rows": rows, **_bucket_volume(per_bucket, "n")}
 
 
 def simhash_bits(docs: DataFrame, bits: int = 48) -> DataFrame:
@@ -738,22 +727,11 @@ def simhash_dup_candidates(
     collisions, no longer by corpus size × bucket count.
     """
     keyed = _simhash_block_keys(docs, max_hamming, bits, n_blocks)[0]
-    a = keyed.alias("a")
-    b = keyed.alias("b")
-    cands = (
-        a.join(b, "bkey")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("ha"),
-            F.col("b.simhash").alias("hb"),
-        )
-        .distinct()
-    )
+    cands = _bucket_pairs(keyed, "bkey", "simhash")
     return (
         cands.withColumn(
-            "hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+            "hamming",
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
         )
         .where(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
@@ -773,24 +751,17 @@ def simhash_candidate_stats(
         docs, max_hamming, bits, n_blocks
     )
     per_bucket = keyed.groupBy("bkey").agg(F.count("*").alias("n"))
-    row = per_bucket.agg(
-        F.max("n").alias("max_bucket"),
-        F.sum(F.expr("n * (n - 1) / 2")).alias("candidate_pairs"),
-    ).collect()[0]
     return {
         "n_blocks": n,
         "n_combos": n_combos,
-        "max_bucket": row["max_bucket"],
-        "candidate_pairs": int(row["candidate_pairs"] or 0),
+        **_bucket_volume(per_bucket, "n"),
     }
 
 
 def dedup_survivors(
     docs: DataFrame,
     n: int = 3,
-    seeds: int = 8,
-    min_agree: int = 4,
-    bands: int | None = None,
+    bands: int = 4,
     rows: int = 2,
 ) -> DataFrame:
     """Composed dedup job: exact dedup, then near-dup removal.
@@ -802,11 +773,9 @@ def dedup_survivors(
     join loop; smallest-neighbor dominance is the standard one-pass
     approximation and is what this returns deterministically.
     Distributed shape: one hash-agg + one banding join + one anti-join.
-
-    Candidate generation: r=1 agreement counting by default
-    (``min_agree`` of ``seeds``); pass ``bands`` to switch to b×r
-    banded LSH (``minhash_banded_candidates``) — the scale path, where
-    a popular single gram can no longer merge buckets.
+    Candidates come from b×r banded LSH
+    (:func:`minhash_banded_candidates`), where a popular single gram
+    can no longer merge buckets.
     """
     # dedup_exact emits string ids for its own contract; recover the
     # input id type for the ordering-based dominance join
@@ -814,12 +783,7 @@ def dedup_survivors(
     exact = dedup_exact(docs).select(
         F.col("doc_id").cast(id_type).alias("doc_id"), "text"
     )
-    if bands is not None:
-        pairs = minhash_banded_candidates(exact, n=n, bands=bands,
-                                          rows=rows)
-    else:
-        pairs = minhash_dup_candidates(exact, n=n, seeds=seeds,
-                                       min_agree=min_agree)
+    pairs = minhash_banded_candidates(exact, n=n, bands=bands, rows=rows)
     dominated = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     return exact.join(dominated, "doc_id", "left_anti").select(
         "doc_id", "text"
@@ -1913,7 +1877,7 @@ def winnow_dup_candidates(
     xxhash64, oracles pin md5), with the standard doc-frequency cap
     (fingerprints shared by more than ``max_doc_freq`` docs are
     boilerplate and dropped, bounding the per-bucket join at
-    max_doc_freq² — the same scale lever as ngram_jaccard_pairs).
+    max_doc_freq² — :func:`_shared_keys`).
     Plan (r5): df-capped POSTING-LIST pair expansion instead of the
     fp×fp self-join — after the frequency gate every posting list is
     ≤ ``max_doc_freq`` entries, so ``collect_list`` per fingerprint is
@@ -1924,13 +1888,7 @@ def winnow_dup_candidates(
 
     Returns (doc_a, doc_b, shared) with doc_a < doc_b."""
     fps = winnow_fingerprints(docs, k, window, text_col, id_col, hash_fn)
-    freq = fps.groupBy("fp").agg(F.count("*").alias("df"))
-    kept = fps.join(
-        freq.where(
-            (F.col("df") <= max_doc_freq) & (F.col("df") >= 2)
-        ).select("fp"),
-        "fp",
-    )
+    kept = fps.join(_shared_keys(fps, "fp", max_doc_freq), "fp")
     posting = kept.groupBy("fp").agg(
         F.array_sort(F.collect_list(id_col)).alias("ids")
     )
@@ -3770,7 +3728,7 @@ def substring_dup_spans(
     output end-to-end, so the DuckDB oracle is exact.
 
     ``max_gram_freq`` is the scale lever (same role as in
-    ``ngram_jaccard_pairs``): a k-gram in f docs contributes f² join
+    ``winnow_dup_candidates``): a k-gram in f docs contributes f² join
     rows; boilerplate grams (headers, licenses) explode quadratically
     at corpus scale — cap their document frequency and runs split at
     the capped grams only (spans through ubiquitous boilerplate are
@@ -3860,16 +3818,10 @@ def substring_dup_spans(
         # counts (distinct grams and distinct hashes coincide short
         # of a 2^-64 collision, which this op's contract already
         # accepts for pair generation)
-        keep = (
-            docs.select(
-                F.explode(F.array_distinct(arr_h)).alias("gh"),
-            )
-            .groupBy("gh")
-            .agg(F.count("*").alias("df"))
-            .where(
-                (F.col("df") >= 2) & (F.col("df") <= max_gram_freq)
-            )
-            .select("gh")
+        keep = _shared_keys(
+            docs.select(F.explode(F.array_distinct(arr_h)).alias("gh")),
+            "gh",
+            max_gram_freq,
         )
         grams = grams.join(F.broadcast(keep), "gh")
     a = grams.alias("a")
@@ -3999,23 +3951,20 @@ def substring_gram_stats(
             F.count_distinct("doc_id").alias("df"),
         )
     )
-    pairs = F.expr("n * (n - 1) / 2")
-    capped = F.col("df") <= max_gram_freq
-    row = per_gram.agg(
+    v = _bucket_volume(
+        per_gram,
+        "n",
+        F.col("df") <= max_gram_freq,
         F.max("df").alias("max_df"),
-        F.max("n").alias("max_bucket"),
-        F.sum(pairs).alias("uncapped_pairs"),
-        F.max(F.when(capped, F.col("n"))).alias("capped_max_bucket"),
-        F.sum(F.when(capped, pairs)).alias("capped_pairs"),
-    ).collect()[0]
+    )
     return {
         "k": k,
         "max_gram_freq": max_gram_freq,
-        "max_df": row["max_df"],
-        "uncapped_max_bucket": row["max_bucket"],
-        "uncapped_candidate_pairs": int(row["uncapped_pairs"] or 0),
-        "capped_max_bucket": row["capped_max_bucket"],
-        "capped_candidate_pairs": int(row["capped_pairs"] or 0),
+        "max_df": v["max_df"],
+        "uncapped_max_bucket": v["max_bucket"],
+        "uncapped_candidate_pairs": v["candidate_pairs"],
+        "capped_max_bucket": v["capped_max_bucket"],
+        "capped_candidate_pairs": v["capped_candidate_pairs"],
     }
 
 
@@ -4038,22 +3987,15 @@ def winnow_candidate_stats(
     variants."""
     fps = winnow_fingerprints(docs, k, window, text_col, id_col, hash_fn)
     per_fp = fps.groupBy("fp").agg(F.count("*").alias("df"))
-    pairs = F.expr("df * (df - 1) / 2")
-    capped = F.col("df") <= max_doc_freq
-    row = per_fp.agg(
-        F.max("df").alias("max_df"),
-        F.sum(pairs).alias("uncapped_pairs"),
-        F.max(F.when(capped, F.col("df"))).alias("capped_max_df"),
-        F.sum(F.when(capped, pairs)).alias("capped_pairs"),
-    ).collect()[0]
+    v = _bucket_volume(per_fp, "df", F.col("df") <= max_doc_freq)
     return {
         "k": k,
         "window": window,
         "max_doc_freq": max_doc_freq,
-        "max_df": row["max_df"],
-        "uncapped_candidate_pairs": int(row["uncapped_pairs"] or 0),
-        "capped_max_df": row["capped_max_df"],
-        "capped_candidate_pairs": int(row["capped_pairs"] or 0),
+        "max_df": v["max_bucket"],
+        "uncapped_candidate_pairs": v["candidate_pairs"],
+        "capped_max_df": v["capped_max_bucket"],
+        "capped_candidate_pairs": v["capped_candidate_pairs"],
     }
 
 
@@ -4707,7 +4649,6 @@ def decontaminate_fuzzy(
     n: int = 3,
     bands: int = 4,
     rows: int = 2,
-    shingle: str = "word",
     min_bands: int = 1,
 ) -> DataFrame:
     """NEAR-duplicate benchmark decontamination: drop every training
@@ -4728,22 +4669,12 @@ def decontaminate_fuzzy(
     bucketed).  Returns the CLEAN subset of ``docs`` (all original
     columns)."""
     buckets = (
-        _band_signatures(
-            benchmark.select("doc_id", "text"), n, bands, rows, shingle
-        )
+        _band_signatures(benchmark.select("doc_id", "text"), n, bands, rows)
         .select("band", "band_sig")
         .distinct()
     )
-    sig = _band_signatures(
-        docs.select("doc_id", "text"), n, bands, rows, shingle
-    )
-    dirty = (
-        sig.join(F.broadcast(buckets), ["band", "band_sig"])
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_bands"))
-        .where(F.col("n_bands") >= min_bands)
-        .select("doc_id")
-    )
+    sig = _band_signatures(docs.select("doc_id", "text"), n, bands, rows)
+    dirty = _dominated_ids(sig, F.broadcast(buckets), min_bands)
     return docs.join(dirty, "doc_id", "left_anti")
 
 
