@@ -3,8 +3,9 @@
 ``entry(spark)`` — flagship extraction over sf0.001 documents wrapped
 as interleaved HTML docs through the real fused UDF pipeline.
 ``queries()`` / ``oracle_sql()`` — per-operator DataFrame callables and
-their DuckDB-oracle SQL (same column names/aliases both sides; the
-driver hash-compares values order-insensitively).
+their DuckDB-oracle SQL over the ``TABLES`` views (same column
+names/aliases both sides); ``digest`` is the one comparison protocol,
+an order-insensitive value hash.
 
 The extraction queries wrap the deterministic ``documents`` table rows
 in deterministic HTML so the DuckDB oracle can predict the engine's
@@ -14,7 +15,8 @@ tokenize→tree→extract path.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import hashlib
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -3973,131 +3975,50 @@ def entry(spark: SparkSession) -> DataFrame:
     return _q_interleaved_passthrough(spark, "/root/testdata/sf0.001")
 
 
-# Evidence-policy inputs for test_registry_evidence_policy (VERDICT r5 #9):
-# update per round. NEW = no driver-green row exists yet; CHANGED = the
-# query's implementation (or a function it calls) changed this round, so
-# old green rows evidence old code.  LEDGER_ROUND pins WHICH round the
-# constants and the window sort describe (VERDICT r6 #1): the policy test
-# reads CORRECTNESS history only from rounds BEFORE it, so the suite is
-# green both before and after the driver drops this round's results file.
-LEDGER_ROUND = 8
-NEW_THIS_ROUND: list[str] = [
-    # r8 (optimization round): no new queries — every registry entry
-    # has a driver-green row in r1-r7
-]
-CHANGED_THIS_ROUND: list[str] = [
-    # r8 optimization round: every query whose implementation (or a
-    # textops/sources function it calls) was reworked this round —
-    # scan-width fan-out, the one-shuffle minhash signature fold,
-    # zero-shuffle simhash, fused gram-hash builders, row-engine
-    # substring grams, per-row cosine/ivf norms, and the shared-
-    # exchange WARC parse.  Old green rows evidence the old plans,
-    # so all 36 re-enter the window.
-    "bigram_selfscore",
-    "bm25_topk",
-    "cosine_topk",
-    "decontaminate_fuzzy",
-    "dedup_components",
-    "dedup_incremental",
-    "dedup_survivors_banded",
-    "ivf_topk_embedded",
-    "lang_gate",
-    "lang_id_v2",
-    "minhash_banded_candidates",
-    "minhash_dup_candidates",
-    "ngram_jaccard_pairs",
-    "quality_tiers",
-    "recrawl_candidates",
-    "resolve_redirects",
-    "simhash60",
-    "simhash_dup_candidates",
-    "substring_dedup_apply",
-    "substring_dup_spans",
-    "trigram_lm_score",
-    "warc_canonical_header",
-    "warc_cdx_index",
-    "warc_charset_extract",
-    "warc_extract",
-    "warc_feed_extract",
-    "warc_frontier_mixed",
-    "warc_http_codec_extract",
-    "warc_length_audit",
-    "warc_noindex_gate",
-    "warc_pdf_extract",
-    "warc_plaintext_extract",
-    "warc_redirect_extract",
-    "warc_revisit_dedup",
-    "winnow_dup_candidates",
-    "winnow_fingerprints",
-]
+# The sf-directory parquet tables the oracle SQL reads, one DuckDB view
+# each.
+TABLES = (
+    "region nation customer supplier part orders lineitem events "
+    "documents embeddings"
+).split()
+
+
+def _canon(v) -> str:
+    if v is None:
+        return "<NULL>"
+    if isinstance(v, float):
+        # 12 significant digits, so 1e-12 engine jitter ties
+        return f"{v:.12g}"
+    if isinstance(v, bool):
+        return str(int(v))
+    if isinstance(v, (list, tuple)):
+        return "[" + ",".join(_canon(x) for x in v) + "]"
+    if isinstance(v, bytes):
+        return v.hex()
+    return str(v)
+
+
+def digest(rows: Sequence[Sequence], cols: Sequence[str]) -> str:
+    """Order-insensitive value hash of a result: columns sorted by
+    name, each row canonicalized to one line, md5 over the sorted
+    lines.  A Spark result and its oracle match when their digests
+    are equal."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    lines = sorted(
+        "\x1f".join(_canon(r[i]) for i in order) for r in rows
+    )
+    h = hashlib.md5()
+    for ln in lines:
+        h.update(ln.encode())
+        h.update(b"\x1e")
+    return h.hexdigest()
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry ORDER IS EVIDENCE POLICY (VERDICT r3 #1/#9, rotation
-    per VERDICT r4 #3): the driver checks only the FIRST 50 entries
-    against the DuckDB oracle each round, so the window is ordered by
-    evidence debt —
-
-      block A: NO driver-green row yet (new this round) — always
-               first;
-      block A'': implementation CHANGED this round — past green rows
-               evidence the old code, so they re-enter the window;
-      block B: oldest latest-green row (rotated out of earlier
-               windows) — refreshed so no query's latest green row
-               ever ages past 2 rounds;
-      tail (positions 51+): green THIS-or-last round, rotated out.
-
-    When adding a query, insert it at the TOP of block A and demote
-    the youngest-green window entry to the tail — never let a
-    never-checked query sit past position 50 (the whole r3 crawl-ops
-    layer shipped driver-unevidenced that way), and re-window any
-    query whose implementation changed.  The local sweep
-    (`python jobs/oracle_sweep.py`) still covers ALL entries.
-
-    Green-row ledger (round -> window): r8 window (LEDGER_ROUND=8) =
-    0 new (every registry entry has a driver-green row by r7) +
-    36 CHANGED (the optimization round's rework — fan-out, the
-    one-shuffle minhash fold, zero-shuffle simhash, fused gram-hash
-    builders, row-engine substring grams, per-row cosine/ivf norms,
-    shared-exchange WARC parse; the whole list is
-    CHANGED_THIS_ROUND) + 14 refresh slots holding the oldest
-    latest-green entries (all r5-green: pdf_extract …
-    article_meta_unified, in prior registry order).  Tail = the four
-    remaining r5-greens first (extract_style_media,
-    frontier_with_base, extract_lazy_media, extract_srcset — they
-    lead the r9 window), then the r6-greens, then the r7-green block
-    rotated out; nothing in the tail is older than r5 = age 3 at the
-    r8 run.
-    History (r7): 13 new + 3 changed (langid tier) + r4-green
-    refreshes; TWO twins retired in r7 (VERDICT r6 #9, coverage in
-    STATUS.md):
-    lang_id (superseded by the 10-language lang_id_v2; op stays,
-    pytest-gated) and minhash_char_signatures (param-only variant of
-    the gated signature fold; pytest-gated vs an independent Python
-    md5 computation) — registry 109 + 13 new − 2 retired = 120 (the
-    last 7 new: decontaminate_fuzzy, bm25_topk, dsir_weights,
-    doc_line_dedup, bigram_selfscore, corpus_kl, doc_chunks — their
-    window slots came from demoting the r5-green
-    warc_charset_extract, warc_pdf_extract, pdf_extract,
-    media_container_meta, embed_hashing, warc_extract,
-    winnow_fingerprints to the tail front, keeping the oldest-first
-    refresh order intact).
-    NINE registry twins were retired in r6 (VERDICT r5 #10, coverage
-    argued per removal in STATUS.md): simhash48, ivf_topk,
-    minhash_signatures, interval_join, sitemap_urls, dedup_survivors,
-    events_by_type, token_count, dedup_by_url — registry 113 -> 104
-    before the five late-r6 additions (kmeans_centroids, lang_id_v2,
-    trigram_lm_score, dedup_incremental, lang_gate) brought it to
-    109 (the "115" in earlier drafts of this ledger was the
-    accumulated-green count, not the registry size — ADVICE r6 #3).
-    The window invariants are enforced MECHANICALLY by
-    tests/test_entry_oracle.py::test_registry_evidence_policy
-    (VERDICT r5 #9) against LEDGER_ROUND / NEW_THIS_ROUND /
-    CHANGED_THIS_ROUND below; update those constants when you add or
-    touch queries."""
+    """Every registry query by name; ``oracle_sql()`` holds the DuckDB
+    mirror of each, and the tier-1 test compares every pair with
+    :func:`digest`."""
     return {
-        # -- block A'': implementation changed this round (r8
-        #    optimization rework — see CHANGED_THIS_ROUND) ------------
         "bigram_selfscore": _q_bigram_selfscore,
         "bm25_topk": _q_bm25_topk,
         "cosine_topk": _q_cosine_topk,
@@ -4134,9 +4055,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "warc_revisit_dedup": _q_warc_revisit_dedup,
         "winnow_dup_candidates": _q_winnow_dup_candidates,
         "winnow_fingerprints": _q_winnow_fingerprints,
-        # -- block B: refresh — the 14 oldest latest-green entries
-        #    (all r5-green; 4 more r5-greens head the tail and lead
-        #    the r9 window) ------------------------------------------
         "pdf_extract": _q_pdf_extract,
         "media_container_meta": _q_media_container_meta,
         "embed_hashing": _q_embed_hashing,
@@ -4151,8 +4069,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "span_kind_counts": _q_span_kind_counts,
         "interleaved_passthrough": _q_interleaved_passthrough,
         "article_meta_unified": _q_article_meta_unified,
-        # -- tail: r5-green front (next window), then r6-green, then
-        #    the r7-green block rotated out --------------------------
         "extract_style_media": _q_extract_style_media,
         "frontier_with_base": _q_frontier_with_base,
         "extract_lazy_media": _q_extract_lazy_media,

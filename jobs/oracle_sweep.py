@@ -1,57 +1,22 @@
-"""Local replica of the driver's CORRECTNESS gate.
+"""Command-line form of the correctness gate at a chosen scale factor.
 
 Runs every `__spark_entry__.queries()` entry on Spark AND its
-`oracle_sql()` DuckDB mirror at a given scale factor, compares
-row count, schema (column names sorted), and a canonical value hash
-(columns sorted by name, rows sorted by their full stringified tuple
-— the driver's documented protocol).  Queries with no oracle entry
-get the weaker rows-only check, exactly like the driver.
+`oracle_sql()` DuckDB mirror, and compares row count, column names
+(sorted) and `__spark_entry__.digest` — the same protocol as
+`tests/test_entry_oracle.py`.
 
 Usage:  python jobs/oracle_sweep.py [sf_dir] [query ...]
         (default sf_dir /root/testdata/sf0.01; no query args = all)
 """
 from __future__ import annotations
 
-import hashlib
 import json
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
-def _canon(v) -> str:
-    if v is None:
-        return "<NULL>"
-    if isinstance(v, float):
-        # driver-style float canonicalization: round-trip via repr of
-        # a 12-significant-digit round, so 1e-12 engine jitter ties
-        return f"{v:.12g}"
-    if isinstance(v, bool):
-        return str(int(v))
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_canon(x) for x in v) + "]"
-    if isinstance(v, bytes):
-        return v.hex()
-    return str(v)
-
-
-def _hash(rows: list[tuple], cols: list[str]) -> str:
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted(
-        "\x1f".join(_canon(r[i]) for i in order) for r in rows
-    )
-    h = hashlib.md5()
-    for ln in lines:
-        h.update(ln.encode())
-        h.update(b"\x1e")
-    return h.hexdigest()
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -61,9 +26,9 @@ def main() -> None:
     import __spark_entry__ as entry
     from zhtml_spark.pipeline import build_session
 
-    spark = build_session("oracle-sweep", cores=16)
+    spark = build_session("oracle-sweep")
     con = duckdb.connect()
-    for t in TABLES:
+    for t in entry.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{sf_dir}/{t}.parquet')"
@@ -83,9 +48,6 @@ def main() -> None:
             bad.append((name, f"spark err: {e}"))
             print(f"{name}: SPARK ERROR {e}")
             continue
-        if name not in oracles:
-            print(f"{name}: rows-only ({len(srows)} rows)")
-            continue
         try:
             cur = con.execute(oracles[name])
             ocols = [d[0] for d in cur.description]
@@ -96,7 +58,9 @@ def main() -> None:
             continue
         rows_ok = len(srows) == len(orows)
         schema_ok = sorted(scols) == sorted(ocols)
-        hash_ok = schema_ok and _hash(srows, scols) == _hash(orows, ocols)
+        hash_ok = schema_ok and (
+            entry.digest(srows, scols) == entry.digest(orows, ocols)
+        )
         status = "OK" if (rows_ok and schema_ok and hash_ok) else "FAIL"
         print(
             f"{name}: {status} rows={len(srows)}/{len(orows)} "

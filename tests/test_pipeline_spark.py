@@ -2343,11 +2343,7 @@ def test_dedup_against_persisted_index_plan(spark, tmp_path):
     distribution, so incremental-dedup shuffle cost is bounded by the
     BATCH, never the corpus.  Results identical to the in-plan
     index."""
-    from zhtml_spark.textops import (
-        dedup_against_index,
-        minhash_band_index,
-        persist_band_index,
-    )
+    from zhtml_spark.textops import dedup_against_index, minhash_band_index
 
     base = spark.createDataFrame(
         [
@@ -2358,9 +2354,12 @@ def test_dedup_against_persisted_index_plan(spark, tmp_path):
         "doc_id long, text string",
     )
     index = minhash_band_index(base, n=3, bands=4, rows=2)
-    persist_band_index(
-        index, "band_index_t", buckets=8,
-        path=str(tmp_path / "band_index"),
+    (
+        index.write.mode("overwrite")
+        .bucketBy(8, "band", "band_sig")
+        .sortBy("band", "band_sig")
+        .option("path", str(tmp_path / "band_index"))
+        .saveAsTable("band_index_t", format="parquet")
     )
     try:
         persisted = spark.table("band_index_t")

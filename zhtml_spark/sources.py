@@ -589,8 +589,6 @@ def _decoded_archives(raw: DataFrame, charset: str = "UTF-8") -> DataFrame:
 # headers declare no coding never leave the JVM, so a Common-Crawl-
 # shaped archive pays zero Python for this layer.
 
-_HTTP_CODINGS = ("chunked", "gzip", "x-gzip", "deflate")
-
 
 def _dechunk(body: bytes) -> tuple[bytes, bool]:
     """Reassemble an RFC 9112 chunked body.  Tolerates the archive

@@ -510,36 +510,6 @@ def dedup_against_index(
     )
 
 
-def persist_band_index(
-    index: DataFrame,
-    table: str,
-    buckets: int = 64,
-    path: str | None = None,
-) -> None:
-    """Write a :func:`minhash_band_index` as a table BUCKETED on the
-    join key ``(band, band_sig)`` (VERDICT r6 #7) — the storage form
-    the 100-TB incremental-dedup claim rests on: with the index
-    bucketed, :func:`dedup_against_index`'s equality join needs NO
-    exchange on the index side (the scan itself satisfies the
-    distribution — plan-asserted in test_pipeline_spark), so the
-    per-crawl shuffle is bounded by the NEW BATCH's size while the
-    index grows with the corpus.  ``sortBy`` the same key so the
-    distinct/agg over bucket keys runs sort-based within buckets.
-
-    On a real cluster this is the Iceberg
-    ``bucket(N, band_sig)``-partitioned table the pipeline appends
-    each crawl's signatures to; the sandbox uses the session catalog
-    (``path`` makes it external — point it at durable storage).
-    ``buckets`` should scale with index size (64 here; thousands at
-    10^12 docs — each bucket file stays splittable)."""
-    w = index.write.mode("overwrite").bucketBy(
-        buckets, "band", "band_sig"
-    ).sortBy("band", "band_sig")
-    if path is not None:
-        w = w.option("path", path)
-    w.format("parquet").saveAsTable(table)
-
-
 def _band_signatures(
     docs: DataFrame, n: int, bands: int, rows: int
 ) -> DataFrame:

@@ -81,7 +81,6 @@ N_DOCTYPE = 4
 ) = range(23)
 
 _WS = "\t\n\f "
-_WS_SET = frozenset("\t\n\f \r")
 
 VOID_ELEMENTS = frozenset(
     "area base basefont bgsound br col embed hr img input keygen link meta "
