@@ -729,7 +729,7 @@ def _q_extract_svg_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_extract_src_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gates span source provenance (r4): tokenizer token positions →
     tree node anchors → 4-tuple spans, distributed through one
-    mapInPandas stage.  The page shape makes every anchor computable
+    ``udfs.map_rows`` stage.  The page shape makes every anchor computable
     from construction: the heading text starts at char 10
     ('<body><h1>'), the paragraph text at 22 + len(doc_id) — the
     oracle states those arithmetic offsets, so the whole
@@ -742,6 +742,9 @@ def _q_extract_src_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
+    from zhtml_spark.extract import ExtractConfig, extract_html
+    from zhtml_spark.udfs import map_rows
+
     schema = StructType([
         StructField("doc_id", StringType()),
         StructField("offset", IntegerType()),
@@ -749,34 +752,26 @@ def _q_extract_src_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("text", StringType()),
         StructField("src", IntegerType()),
     ])
+    cfg = ExtractConfig(with_source_offsets=True)
 
-    def batches(it):
-        import pandas as pd
-
-        from zhtml_spark.extract import ExtractConfig, extract_html
-
-        cfg = ExtractConfig(with_source_offsets=True)
-        for pdf in it:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                html = f"<body><h1>Doc {did}</h1><p>{text}</p></body>"
-                spans, _ = extract_html(html, cfg)
-                for off, (k, t, _ref, src) in enumerate(spans):
-                    rows.append((str(did), off, k, t, src))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "offset", "kind", "text", "src"]
-            )
+    def row(did, text):
+        html = f"<body><h1>Doc {did}</h1><p>{text}</p></body>"
+        spans, _ = extract_html(html, cfg)
+        return [
+            (did, off, k, t, src)
+            for off, (k, t, _ref, src) in enumerate(spans)
+        ]
 
     d = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
-    return d.mapInPandas(batches, schema)
+    return map_rows(d, ["doc_id", "text"], row, schema)
 
 
 def _q_extract_fragment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gates fragment parsing (r2): innerHTML-shaped list fragments in
     a ul context through the distributed fragment UDF."""
-    from zhtml_spark.udfs import REPLAY_SCHEMA, make_fragment_extract_udf
+    from zhtml_spark.udfs import extract_fragments
 
     frags = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"),
@@ -787,9 +782,7 @@ def _q_extract_fragment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("text"),
         ).alias("fragment"),
     )
-    out = frags.mapInPandas(
-        make_fragment_extract_udf("ul"), REPLAY_SCHEMA
-    )
+    out = extract_fragments(frags, "ul")
     return out.select("doc_id", F.explode("spans").alias("s")).select(
         "doc_id",
         F.col("s.offset").alias("offset"),
@@ -1950,7 +1943,7 @@ def _q_image_meta(spark, sf_dir):
     are synthesized JVM-side (``unhex`` over the PNG signature + IHDR
     chunk with per-doc dims), then ``decode_image_meta``'s pure-Python
     sniffer parses width/height/format back out of the raw bytes in
-    one Arrow-batched ``mapInPandas`` stage.  The oracle states the
+    one Arrow-batched ``map_rows`` stage.  The oracle states the
     dims from CONSTRUCTION knowledge — the row only matches if the
     byte-level round trip (hex → binary → Arrow → struct.unpack) is
     exact."""
@@ -2011,7 +2004,7 @@ def _q_media_container_meta(spark, sf_dir):
       TimecodeScale+Duration, Tracks/Video pixel dims).
 
     ``decode_container_meta``'s pure-Python walker parses them back in
-    one Arrow-batched ``mapInPandas`` stage; the oracle states every
+    one Arrow-batched ``map_rows`` stage; the oracle states every
     field from CONSTRUCTION arithmetic (integer //), so rows match
     only if the byte-level round trip is exact."""
     from zhtml_spark.multimodal import decode_container_meta

@@ -108,7 +108,7 @@ def main() -> None:
             StructType,
         )
 
-        from zhtml_spark.udfs import REPLAY_SCHEMA, replay_tokenizer_batches
+        from zhtml_spark.udfs import replay_tokenizer
 
         cases = _json.loads(
             (
@@ -136,7 +136,7 @@ def main() -> None:
             ]
         )
         df = spark.createDataFrame(rows, schema).repartition(CPUS)
-        df.mapInPandas(replay_tokenizer_batches, REPLAY_SCHEMA).count()
+        replay_tokenizer(df).count()
 
     timed("tokenize_replay", replay)
 

@@ -42,14 +42,6 @@ def test_feature_extraction_deterministic(spark, media):
     assert feats[0] == round(int(want[0:4], 16) / 65535.0, 6)
 
 
-def test_real_decode_raises_at_integration_point(spark, media):
-    with pytest.raises(Exception) as exc_info:
-        extract_media_features(media, real=True).collect()
-    assert "NotImplementedError" in str(exc_info.value) or isinstance(
-        exc_info.value, NotImplementedError
-    )
-
-
 def test_resize_dims_aspect_ratio(spark, media):
     out = {r["media_ref"]: r for r in resize_dims(media, 512).collect()}
     assert (out["m-1"]["target_width"], out["m-1"]["target_height"]) == (
@@ -261,7 +253,7 @@ def test_sniff_container_meta_formats():
 
 
 def test_decode_container_meta_spark(spark):
-    """The mapInPandas stage: mixed containers + an unsniffable payload
+    """The map_rows stage: mixed containers + an unsniffable payload
     in one DataFrame; decoder column audits the path per row."""
     from zhtml_spark.multimodal import decode_container_meta
 

@@ -1,5 +1,5 @@
 """PDF text + layout extraction (pdfops) — pure-Python parser units
-plus the Spark mapInPandas round trip.
+plus the Spark map_rows round trip.
 
 Every builder here constructs the PDF bytes from scratch (no
 fixtures, no libraries), so each test states its expectation from

@@ -1,5 +1,5 @@
 """Spark pipeline tests: the judged correctness path (tokenizer corpus
-replayed as DataFrame rows through the real mapInPandas stage,
+replayed as DataFrame rows through the real map_rows stage,
 span-sequence equality), plus media passthrough, salting determinism,
 resume idempotence, metrics/lineage counts (SURVEY §5 engine test plan).
 """
@@ -35,7 +35,7 @@ from zhtml_spark.pipeline import (
     salted_repartition,
     with_doc_bytes,
 )
-from zhtml_spark.udfs import REPLAY_SCHEMA, replay_tokenizer_batches
+from zhtml_spark.udfs import replay_tokenizer
 
 FIXTURE = Path(__file__).parent / "fixtures" / "tokenizer_cases.json"
 
@@ -87,9 +87,7 @@ def test_tokenizer_corpus_replay_spark(spark):
             )
 
     df = spark.createDataFrame(rows, REPLAY_IN_SCHEMA)
-    out = df.repartition(8).mapInPandas(
-        replay_tokenizer_batches, REPLAY_SCHEMA
-    )
+    out = replay_tokenizer(df.repartition(8))
     got = {
         r["doc_id"]: (
             [s["text"] for s in sorted(r["spans"], key=lambda s: s["offset"])],
@@ -514,7 +512,7 @@ def test_ngram_ops_handle_short_docs(spark):
 def test_textops_accept_string_doc_ids(spark):
     """Corpus-style string ids must flow through the dedup ops
     (code-review finding: stray cast-to-long)."""
-    from zhtml_spark.textops import dedup_survivors, simhash48
+    from zhtml_spark.textops import dedup_survivors, simhash_bits
 
     docs = spark.createDataFrame(
         [("doc-a", "the quick brown fox jumps high"),
@@ -522,7 +520,7 @@ def test_textops_accept_string_doc_ids(spark):
          ("doc-c", "completely different words entirely present")],
         "doc_id string, text string",
     )
-    assert simhash48(docs).count() == 3
+    assert simhash_bits(docs, 48).count() == 3
     surv = sorted(r["doc_id"] for r in dedup_survivors(docs, n=3).collect())
     assert surv == ["doc-a", "doc-c"]
 

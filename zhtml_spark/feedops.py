@@ -38,9 +38,7 @@ matching what real-world feeds actually emit.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -50,6 +48,7 @@ from pyspark.sql.types import (
 )
 
 from .entities import ENTITIES
+from .udfs import map_rows
 
 # One scan, every construct atomic.  CDATA / comments / PIs tolerate
 # a missing terminator at EOF (truncated responses must not deadlock
@@ -323,38 +322,26 @@ FEED_SPANS_SCHEMA = StructType(
 )
 
 
+def _feed_span_rows(doc_id, xml) -> list[tuple]:
+    """One document → its ``FEED_SPANS_SCHEMA`` rows; a parser
+    exception becomes a single ``error`` span (malformed input ≠ dead
+    job)."""
+    try:
+        spans = extract_feed_spans(str(xml))
+    except Exception as e:
+        spans = [("error", type(e).__name__, None, 0)]
+    return [(doc_id, off, kind, text, ref) for kind, text, ref, off in spans]
+
+
 def decode_feed_spans(df: DataFrame) -> DataFrame:
     """Feed extraction over decoded XML strings — ONE Arrow-batched
-    ``mapInPandas`` stage (the :func:`zhtml_spark.pdfops.
+    ``udfs.map_rows`` stage (the :func:`zhtml_spark.pdfops.
     decode_pdf_spans` contract: a pure map, embarrassingly parallel,
     no shuffle, no driver state).  Input columns: ``doc_id`` +
     ``xml``.  Output: one row per span, offsets dense per document.
     Non-feed XML produces ZERO rows; a document that makes the parser
     RAISE emits one ``error`` span carrying the exception class name
     — surprises become metric rows, never a dead 10^12-doc job."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "doc_id": [],
-                "offset": [],
-                "kind": [],
-                "text": [],
-                "media_ref": [],
-            }
-            for did, xml in zip(pdf["doc_id"], pdf["xml"]):
-                try:
-                    spans = extract_feed_spans(str(xml))
-                except Exception as e:  # malformed input ≠ dead job
-                    spans = [("error", type(e).__name__, None, 0)]
-                for kind, text, ref, off in spans:
-                    out["doc_id"].append(did)
-                    out["offset"].append(off)
-                    out["kind"].append(kind)
-                    out["text"].append(text)
-                    out["media_ref"].append(ref)
-            yield pd.DataFrame(out)
-
-    return df.select("doc_id", "xml").mapInPandas(
-        batches, FEED_SPANS_SCHEMA
+    return map_rows(
+        df, ["doc_id", "xml"], _feed_span_rows, FEED_SPANS_SCHEMA
     )

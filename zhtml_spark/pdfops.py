@@ -6,7 +6,7 @@ interleaved corpora: web crawls carry PDFs as first-class documents
 (and as media payloads harvested by the crawl layer).  This module
 parses them with ZERO dependencies — pure byte-walking Python in the
 same capability posture as ``multimodal.sniff_image_meta``, running
-inside one Arrow-batched ``mapInPandas`` stage: an embarrassingly
+inside one Arrow-batched ``udfs.map_rows`` stage: an embarrassingly
 parallel map at any corpus scale (no shuffle, no driver state;
 10^12 docs are 10^12 independent rows, so the stage scales linearly
 with executors exactly like the HTML parse stage).
@@ -68,9 +68,7 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -78,6 +76,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .udfs import map_rows
 
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
@@ -1252,9 +1252,21 @@ PDF_SPANS_SCHEMA = StructType(
 )
 
 
+def _pdf_span_rows(media_ref, payload) -> list[tuple]:
+    """One document → its ``PDF_SPANS_SCHEMA`` rows; a decoder
+    exception becomes a single ``error`` span (malformed input ≠ dead
+    job)."""
+    try:
+        spans = extract_pdf_spans(bytes(payload))
+    except Exception as e:
+        spans = [("error", type(e).__name__, None, 0)]
+    return [(media_ref, off, kind, text, sref)
+            for kind, text, sref, off in spans]
+
+
 def decode_pdf_spans(df: DataFrame) -> DataFrame:
     """PDF text+layout extraction over binary payloads — ONE
-    Arrow-batched ``mapInPandas`` stage (same contract as
+    Arrow-batched ``udfs.map_rows`` stage (same contract as
     :func:`zhtml_spark.multimodal.decode_image_meta`: a pure map,
     embarrassingly parallel at any scale; no shuffle, no driver
     state).  Input columns: ``media_ref`` (document identity) +
@@ -1265,29 +1277,6 @@ def decode_pdf_spans(df: DataFrame) -> DataFrame:
     — emits one ``error`` span carrying the exception class name, so
     10^12-doc jobs surface surprises as metric rows, never as a dead
     job."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "media_ref": [],
-                "offset": [],
-                "kind": [],
-                "text": [],
-                "span_ref": [],
-            }
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                try:
-                    spans = extract_pdf_spans(bytes(payload))
-                except Exception as e:  # malformed input ≠ dead job
-                    spans = [("error", type(e).__name__, None, 0)]
-                for kind, text, sref, off in spans:
-                    out["media_ref"].append(ref)
-                    out["offset"].append(off)
-                    out["kind"].append(kind)
-                    out["text"].append(text)
-                    out["span_ref"].append(sref)
-            yield pd.DataFrame(out)
-
-    return df.select("media_ref", "payload").mapInPandas(
-        batches, PDF_SPANS_SCHEMA
+    return map_rows(
+        df, ["media_ref", "payload"], _pdf_span_rows, PDF_SPANS_SCHEMA
     )

@@ -7,7 +7,7 @@ around that.  Spark-first: record splitting and header parsing are
 pure JVM expressions (split/explode/regexp_extract).  Plain ``.warc``
 archives stay entirely JVM-side; gzipped archives (``.warc.gz``,
 Common Crawl's wire format) add ONE Arrow-native codec stage
-(``mapInArrow`` gunzip — a codec, not logic) that also re-chunks the
+(``udfs.map_rows`` gunzip — a codec, not logic) that also re-chunks the
 decompressed text at record boundaries so no single Arrow cell
 approaches the 2 GB string limit.  The fused extraction UDF remains
 the only Python LOGIC stage.
@@ -27,10 +27,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
+
+from .udfs import map_rows
 
 WARC_VERSION = "WARC/1.0"
 _RECORD_SEP = "\r\n\r\nWARC/1.0\r\n"
 _CHUNK_TARGET = 64 << 20  # max Arrow string cell after decompression
+_CONTENT_SCHEMA = StructType([StructField("content", StringType())])
 
 
 def warc_record(
@@ -447,7 +451,7 @@ def read_warc(
     ``binaryFile`` keeps whole-archive integrity (a text scan would
     split records at arbitrary line boundaries).  Plain archives
     decode + split entirely JVM-side; gzip members (Common Crawl's
-    wire format) decompress in ONE Arrow-native ``mapInArrow`` stage —
+    wire format) decompress in ONE Arrow-native ``map_rows`` stage —
     a codec, not logic, and gzip is unsplittable anyway so per-file
     decompression is the parallelism ceiling regardless of engine.
     Multi-member gzip (Common Crawl concatenates one member per
@@ -549,25 +553,15 @@ def _decoded_archives(raw: DataFrame, charset: str = "UTF-8") -> DataFrame:
     plain = raw.where(~F.col("path").endswith(".gz")).select(
         F.decode(F.col("content"), charset).alias("content")
     )
-    gz = raw.where(F.col("path").endswith(".gz")).select("content")
+    gz = raw.where(F.col("path").endswith(".gz"))
 
-    def gunzip_batches(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            chunks: list[str] = []
-            for blob in batch.column("content"):
-                # streamed: bounded working set, never the whole
-                # decompressed segment (see _stream_gunzip_chunks)
-                chunks.extend(
-                    _stream_gunzip_chunks(blob.as_py(), py_charset)
-                )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(chunks, pa.string())], names=["content"]
-            )
+    def gunzip(blob):
+        # streamed: bounded working set, never the whole decompressed
+        # segment (see _stream_gunzip_chunks)
+        return [(c,) for c in _stream_gunzip_chunks(blob, py_charset)]
 
     return plain.unionByName(
-        gz.mapInArrow(gunzip_batches, "content string")
+        map_rows(gz, ["content"], gunzip, _CONTENT_SCHEMA)
     )
 
 
@@ -754,8 +748,6 @@ def stream_warc_extract(
     the crawl-to-spans path as a stream (availableNow drain; Spark's
     file-source checkpoint guarantees each archive is processed once).
     """
-    from pyspark.sql import functions as F  # noqa: F401 (parity w/ streaming)
-
     from .pipeline import extract_documents
 
     def process_batch(batch_df, batch_id: int) -> None:

@@ -617,11 +617,6 @@ def simhash_bits(docs: DataFrame, bits: int = 48) -> DataFrame:
     )
 
 
-def simhash48(docs: DataFrame) -> DataFrame:
-    """48-bit SimHash (the round-1 contract; see ``simhash_bits``)."""
-    return simhash_bits(docs, 48)
-
-
 def _block_exprs(bits: int, n_blocks: int) -> list[str]:
     """SQL expressions extracting ``n_blocks`` disjoint bit-blocks from
     a ``simhash`` column (last block absorbs the remainder)."""

@@ -8,6 +8,11 @@ inherently sequential (SURVEY §7.2), parallelism comes from doc-level
 batching across tasks.  ``make_extract_arrow_udf`` (mapInArrow) is the
 one extraction engine.
 
+``map_rows`` is the one row-at-a-time Arrow stage every other Python
+decoder runs through (fragment extraction, tokenizer replay, the
+PDF/feed/media decoders, the archive gunzip): the stage supplies a
+per-row function, ``map_rows`` owns the batch format.
+
 Input schema  (BASELINE.json input_hint):
     doc_id: string,
     spans:  array<struct<kind,text,media_ref,offset:int>>
@@ -21,9 +26,9 @@ from __future__ import annotations
 
 import time
 from collections import Counter
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable
 
-import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -36,7 +41,7 @@ from pyspark.sql.types import (
 
 from .extract import ExtractConfig, extract_spans
 from .tokenizer import tokenize
-from .tree import parse_document
+from .tree import parse_document, parse_fragment
 
 SPAN_STRUCT = StructType(
     [
@@ -277,44 +282,55 @@ def make_extract_arrow_udf(config: ExtractConfig | None = None):
     return extract_batches
 
 
-def make_fragment_extract_udf(context: str = "div"):
-    """Fragment extraction as a distributed stage: mapInPandas over
-    rows ``(doc_id, fragment)`` → ``REPLAY_SCHEMA`` rows (spans +
-    errors).  innerHTML-shaped corpora (comment feeds, CMS exports,
-    scraped widget payloads) ship fragments, not documents — this is
-    the engine surface for them (spec §13.2.2.2 via
-    ``tree.parse_fragment``)."""
-    from .extract import ExtractConfig, extract_spans
-    from .tree import parse_fragment
+def map_rows(
+    df: DataFrame, cols: list, fn: Callable[..., Iterable[tuple]],
+    schema: StructType,
+) -> DataFrame:
+    """ONE mapInArrow stage that calls ``fn(*values)`` per row of
+    ``df.select(*cols)`` (Arrow nulls arrive as ``None``) and emits
+    the zero or more tuples it returns, in ``schema`` field order, as
+    a ``pyarrow.RecordBatch`` typed by ``to_arrow_schema(schema)``.
+    The one place a per-document Python stage meets the batch format;
+    error handling stays with ``fn``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
+    out_schema = to_arrow_schema(schema)
+
+    def row_batches(batches):
+        for batch in batches:
+            values = [col.to_pylist() for col in batch.columns]
+            rows = [out for row in zip(*values) for out in fn(*row)]
+            columns = list(zip(*rows)) or [()] * len(out_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(columns, out_schema)],
+                schema=out_schema,
+            )
+
+    return df.select(*cols).mapInArrow(row_batches, schema)
+
+
+def extract_fragments(df: DataFrame, context: str = "div") -> DataFrame:
+    """Fragment extraction as a distributed stage: rows ``(doc_id,
+    fragment)`` → ``REPLAY_SCHEMA`` rows (spans + errors).
+    innerHTML-shaped corpora (comment feeds, CMS exports, scraped
+    widget payloads) ship fragments, not documents — this is the
+    engine surface for them (spec §13.2.2.2 via
+    ``tree.parse_fragment``)."""
     cfg = ExtractConfig()
 
-    def fragment_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = {"doc_id": [], "spans": [], "errors": []}
-            for doc_id, fragment in zip(pdf["doc_id"], pdf["fragment"]):
-                tree, root, errors = parse_fragment(
-                    fragment or "", context
-                )
-                spans = [
-                    {"kind": k, "text": t, "media_ref": m, "offset": i}
-                    for i, (k, t, m) in enumerate(
-                        extract_spans(tree, cfg, root=root)
-                    )
-                ]
-                out_rows["doc_id"].append(doc_id)
-                out_rows["spans"].append(spans)
-                out_rows["errors"].append(list(errors))
-            yield pd.DataFrame(out_rows)
+    def row(doc_id, fragment):
+        tree, root, errors = parse_fragment(fragment or "", context)
+        spans = [
+            (k, t, m, i)
+            for i, (k, t, m) in enumerate(extract_spans(tree, cfg, root=root))
+        ]
+        return [(doc_id, spans, list(errors))]
 
-    return fragment_batches
+    return map_rows(df, ["doc_id", "fragment"], row, REPLAY_SCHEMA)
 
 
-def replay_tokenizer_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def replay_tokenizer(df: DataFrame) -> DataFrame:
     """Tokenizer-corpus replay stage (the judged correctness path,
     SURVEY §3.3): input rows (doc_id, input, initial_state,
     last_start_tag) → character-run spans + error codes.
@@ -323,24 +339,17 @@ def replay_tokenizer_batches(
     become kind='text' spans; tags/comments/doctypes shape nothing
     here.
     """
-    for pdf in batches:
-        out_rows = {"doc_id": [], "spans": [], "errors": []}
-        for doc_id, text, state, lst in zip(
-            pdf["doc_id"], pdf["input"], pdf["initial_state"],
-            pdf["last_start_tag"],
-        ):
-            tokens, errors = tokenize(
-                text,
-                initial_state=state or "Data",
-                last_start_tag=lst if lst is not None and lst == lst else None,
-            )
-            spans = [
-                {"kind": "text", "text": t[1], "media_ref": None, "offset": i}
-                for i, t in enumerate(
-                    tok for tok in tokens if tok[0] == "Character"
-                )
-            ]
-            out_rows["doc_id"].append(doc_id)
-            out_rows["spans"].append(spans)
-            out_rows["errors"].append(list(errors))
-        yield pd.DataFrame(out_rows)
+
+    def row(doc_id, text, state, last_start_tag):
+        tokens, errors = tokenize(
+            text, initial_state=state or "Data",
+            last_start_tag=last_start_tag,
+        )
+        runs = [tok[1] for tok in tokens if tok[0] == "Character"]
+        spans = [("text", t, None, i) for i, t in enumerate(runs)]
+        return [(doc_id, spans, list(errors))]
+
+    return map_rows(
+        df, ["doc_id", "input", "initial_state", "last_start_tag"], row,
+        REPLAY_SCHEMA,
+    )
