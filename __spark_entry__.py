@@ -391,8 +391,8 @@ def _q_extract_srcset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gates responsive-image harvesting (r5): per-doc img with src +
     a two-candidate srcset (trailing comma tolerated), a
     picture>source srcset, and a src-less img whose bare srcset still
-    surfaces; composed with ``absolutize_media_refs``-style URL
-    resolution via ``textops.absolutize_url`` against the page URL,
+    surfaces; composed with media-ref URL resolution via
+    ``textops.absolutize_url`` against the page URL,
     so the oracle cross-checks BOTH the srcset split and the
     resolver."""
     from zhtml_spark.extract import ExtractConfig
@@ -2809,8 +2809,8 @@ def _q_order_window_rank(spark, sf_dir):
 
 
 def _q_events_windowed(spark, sf_dir):
-    """Tumbling event-time windows (the batch shape of the streaming
-    watermark+window aggregation in zhtml_spark.streaming)."""
+    """Tumbling event-time windows: one (window, event_type) row per
+    hour bucket with its event count and rounded value total."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")

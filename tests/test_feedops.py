@@ -240,6 +240,21 @@ def test_feed_root_re_shared_semantics():
         assert not re.match(FEED_ROOT_RE, s), s
 
 
+def test_blank_prefixed_non_feed_is_linear():
+    """A blank run before a non-feed root must not backtrack the root
+    sniff exponentially (each two more blanks once cost 4x: 26 took
+    ~6 s, ~40 would stall a task for hours)."""
+    import time
+
+    for n in (26, 10_000):
+        t0 = time.perf_counter()
+        assert extract_feed_spans(" " * n + "<html>") == []
+        assert time.perf_counter() - t0 < 0.5, n
+    assert extract_feed_spans(
+        " \n\t <rss><channel><item><title>T</title></item></channel></rss>"
+    ) == [("heading", "T", None, 0)]
+
+
 def test_self_closed_elements_do_not_open_captures():
     """ADVICE r5 (high): the greedy attribute-soup group used to
     swallow the self-closing slash, so `<title/>` opened a capture

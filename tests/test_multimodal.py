@@ -276,6 +276,41 @@ def test_decode_container_meta_spark(spark):
     assert all(got[k]["decoder"] == "sniff" for k in ("v-1", "a-1", "w-1"))
 
 
+@pytest.mark.parametrize(
+    "decoder, payload, want",
+    [
+        ("image", _png(2**31, 7), ("png", None, 7, "sniff")),
+        ("image", _bmp(5, 2**31), ("bmp", 5, None, "sniff")),
+        ("image", None, (None, None, None, "none")),
+        ("container", _mp4_bytes(tscale=1, dur=2**64 - 1, ver=1),
+         ("mp4", 640, 360, None, None, None, "sniff")),
+        ("container", None, (None,) * 6 + ("none",)),
+    ],
+    ids=["png_width_2e31", "bmp_height_neg_2e31", "image_null_payload",
+         "mp4_duration_past_int64", "container_null_payload"],
+)
+def test_bad_media_row_nulls_its_fields(spark, decoder, payload, want):
+    """A header claiming a dimension past its column's integer range
+    (PNG width 2^31, BMP height -2^31) nulls that field, and a null
+    payload gives null fields with decoder 'none'; a good row in the
+    same batch still decodes, so one bad row no longer fails the task."""
+    from zhtml_spark.multimodal import (
+        decode_container_meta,
+        decode_image_meta,
+    )
+
+    fn, good, good_want = {
+        "image": (decode_image_meta, _png(8, 6), ("png", 8, 6, "sniff")),
+        "container": (decode_container_meta, _wav_bytes(),
+                      ("wav", None, None, 3000, 16000, 2, "sniff")),
+    }[decoder]
+    df = spark.createDataFrame(
+        [("bad", payload), ("ok", good)], "media_ref string, payload binary"
+    )
+    got = {r["media_ref"]: tuple(r)[1:] for r in fn(df).collect()}
+    assert got == {"bad": want, "ok": good_want}
+
+
 def test_engine_auto_falls_back_to_hash_without_pil(spark, media):
     """engine='auto' on a Pillow-less host produces the hash features
     with decoder='hash' — byte-identical to the default path."""

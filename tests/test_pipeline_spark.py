@@ -735,7 +735,7 @@ def test_substring_dup_spans_offsets_and_cap(spark):
 
 
 def test_absolutize_url_shapes(spark):
-    from zhtml_spark.textops import absolutize_media_refs, absolutize_url
+    from zhtml_spark.textops import absolutize_url
 
     cases = [
         ("https://ex.com/a/b/page.html", "img/x.png",
@@ -761,19 +761,6 @@ def test_absolutize_url_shapes(spark):
     ).collect()
     for r in got:
         assert r["got"] == r["want"], (r["got"], r["want"])
-    # span-table convenience: non-media rows stay NULL; pure projection
-    spans = spark.createDataFrame(
-        [("https://ex.com/d/p.html", "i.png"),
-         ("https://ex.com/d/p.html", None)],
-        "page_url string, media_ref string",
-    )
-    out = absolutize_media_refs(spans).collect()
-    assert out[0]["resolved_ref"] == "https://ex.com/d/i.png"
-    assert out[1]["resolved_ref"] is None
-    plan = absolutize_media_refs(spans)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan
-    assert_jvm_only(plan)
 
 
 def test_absolutize_url_preserves_query_and_counts_deep_dots(spark):
@@ -1592,7 +1579,9 @@ def test_crawl_delay_group_selection(spark):
 def test_sitemap_entries_block_scoped_fields(spark):
     """Optional fields bind to THEIR block's loc (a bare entry between
     annotated ones must not inherit a neighbor's lastmod); garbage
-    priority → NULL; multiline blocks parse ((?s) scope)."""
+    priority → NULL; multiline blocks parse ((?s) scope); ``&amp;``
+    decodes and a padded ``<loc>`` trims; sitemapindex blocks carry
+    ``is_index``; an empty urlset yields no rows."""
     from zhtml_spark.textops import sitemap_entries
 
     docs = spark.createDataFrame(
@@ -1605,42 +1594,26 @@ def test_sitemap_entries_block_scoped_fields(spark):
              "<url><loc>https://x/p2</loc></url>\n"
              "<url><loc>https://x/p3</loc>"
              "<priority>soon</priority></url>\n</urlset>"),
+            ("b", '<urlset><url><loc> https://x/p?a=1&amp;b=2 </loc>'
+                  "</url></urlset>"),
+            ("c", "<sitemapindex><sitemap><loc>https://x/sub.xml</loc>"
+                  "</sitemap></sitemapindex>"),
+            ("d", "<urlset></urlset>"),  # no locs -> no rows
         ],
         "host string, text string",
     )
     rows = {
-        r["url"]: (r["lastmod"], r["changefreq"], r["priority"],
-                   r["is_index"])
+        r["url"]: (r["host"], r["lastmod"], r["changefreq"],
+                   r["priority"], r["is_index"])
         for r in sitemap_entries(docs).collect()
     }
     assert rows == {
-        "https://x/p1": ("2024-02-01", "weekly", 0.5, False),
-        "https://x/p2": (None, None, None, False),
-        "https://x/p3": (None, None, None, False),
+        "https://x/p1": ("a", "2024-02-01", "weekly", 0.5, False),
+        "https://x/p2": ("a", None, None, None, False),
+        "https://x/p3": ("a", None, None, None, False),
+        "https://x/p?a=1&b=2": ("b", None, None, None, False),
+        "https://x/sub.xml": ("c", None, None, None, True),
     }
-
-
-def test_sitemap_urls_escapes_and_index(spark):
-    from zhtml_spark.textops import sitemap_urls
-
-    docs = spark.createDataFrame(
-        [
-            ("a", '<urlset><url><loc> https://x/p?a=1&amp;b=2 </loc>'
-                  "</url></urlset>"),
-            ("b", "<sitemapindex><sitemap><loc>https://x/sub.xml</loc>"
-                  "</sitemap></sitemapindex>"),
-            ("c", "<urlset></urlset>"),  # no locs -> no rows
-        ],
-        "host string, text string",
-    )
-    rows = sorted(
-        (r["host"], r["url"], r["is_index"])
-        for r in sitemap_urls(docs).collect()
-    )
-    assert rows == [
-        ("a", "https://x/p?a=1&b=2", False),
-        ("b", "https://x/sub.xml", True),
-    ]
 
 
 def test_dedup_by_canonical_collapses_pairs(spark):
@@ -2668,26 +2641,6 @@ def test_rebalance_sample_rates_and_determinism(spark):
         rebalance_sample(df, {})
     with _pytest.raises(ValueError):
         rebalance_sample(df, {"a": 0})
-
-
-def test_lang_id_stopword_heuristic(spark):
-    """Pytest gate for the r1 stopword lang_id (its oracle query was
-    retired in r7 — lang_id_v2 supersedes it; the op stays for
-    cheap-pass callers): majority-stopword voting + 'und' fallback."""
-    from zhtml_spark.textops import lang_id
-
-    df = spark.createDataFrame(
-        [
-            (0, "the cat and the dog of it is on a mat"),
-            (1, "el perro y la casa de los gatos es un lugar"),
-            (2, "qwzx bnmp vvvv"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {
-        r["doc_id"]: r["predicted_lang"] for r in lang_id(df).collect()
-    }
-    assert got == {0: "en", 1: "es", 2: "und"}
 
 
 def test_minhash_char_shingle_signatures(spark):

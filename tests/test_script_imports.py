@@ -2,7 +2,9 @@
 that a script imports must exist, and every keyword argument a script
 passes to an imported ``zhtml_spark`` callable must name one of its
 parameters.  Deleting an API or an option a script still uses then
-fails the suite instead of a later run of that script.
+fails the suite instead of a later run of that script.  The reverse
+guard: every public function in the package has a caller outside the
+tests, so test-only surface cannot grow back.
 
 Scripts are parsed, not run.  Imports nested in functions count, and
 so do import lines inside string literals (code snippets a script
@@ -25,6 +27,13 @@ SCRIPTS = sorted(
 )
 # perfbench is the benchmark harness: parsed here, never edited for it
 KWARG_SCRIPTS = sorted([*SCRIPTS, *REPO.glob("perfbench/*.py")])
+PACKAGE = sorted(REPO.glob("zhtml_spark/*.py"))
+# public functions kept without a caller outside the tests
+NO_CALLER_OK = {
+    "predict": "pure-Python lang-id reference for the Spark scores",
+    "read_warc": "public WARC directory reader, the entry to sources",
+    "list_snapshots": "public audit view of run_job's committed snapshots",
+}
 
 
 def _engine_imports(tree: ast.AST):
@@ -170,3 +179,57 @@ def test_keyword_guard_flags_removed_option():
         "textops.ngram_jaccard_pairs(max_doc_freq=)",
         "wdc(shingle=)",
     ]
+
+
+def _references(paths) -> set[str]:
+    """Every name the files in ``paths`` refer to: Name and Attribute
+    nodes and imported names, string-snippet imports included.  A
+    top-level function's references to itself and anything inside a
+    docstring do not count."""
+    refs: set[str] = set()
+    for path in paths:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            body = getattr(node, "body", None)
+            if (
+                isinstance(body, list)
+                and body
+                and isinstance(body[0], ast.Expr)
+                and isinstance(body[0].value, ast.Constant)
+                and isinstance(body[0].value.value, str)
+            ):
+                body[0] = ast.Pass()
+        for top in tree.body:
+            own = top.name if isinstance(top, ast.FunctionDef) else None
+            for node in ast.walk(top):
+                if isinstance(node, ast.Name):
+                    name = node.id
+                elif isinstance(node, ast.Attribute):
+                    name = node.attr
+                elif isinstance(node, ast.alias):
+                    name = node.name
+                else:
+                    continue
+                if name != own:
+                    refs.add(name)
+        refs.update(name for _, name in _engine_imports(tree) if name)
+    return refs
+
+
+def test_public_functions_have_a_non_test_caller():
+    refs = _references([*PACKAGE, *KWARG_SCRIPTS])
+    public = [
+        (path.stem, node.name)
+        for path in PACKAGE
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, ast.FunctionDef) and not node.name.startswith("_")
+    ]
+    orphans = sorted(
+        f"{module}.{name}"
+        for module, name in public
+        if name not in refs and name not in NO_CALLER_OK
+    )
+    assert not orphans, f"public functions only tests call: {orphans}"
+    names = {name for _, name in public}
+    stale = sorted(n for n in NO_CALLER_OK if n in refs or n not in names)
+    assert not stale, f"NO_CALLER_OK entries that now have a caller: {stale}"

@@ -168,88 +168,6 @@ def test_warc_body_containing_blank_lines(spark):
     assert recs[0]["html"] == html
 
 
-def test_stream_warc_extract_incremental(spark, tmp_path):
-    """Streaming WARC ingestion: each archive processed exactly once
-    across availableNow drains."""
-    from zhtml_spark.sources import stream_warc_extract
-
-    inp = tmp_path / "warcs"
-    inp.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    c1 = _synth_archive(spark, 5).collect()[0]["content"]
-    (inp / "a.warc").write_bytes(c1.encode())
-    stream_warc_extract(spark, str(inp), out, ckpt, num_partitions=2)
-    assert spark.read.parquet(f"{out}/spans").count() == 5
-
-    c2 = _synth_archive(spark, 3).collect()[0]["content"]
-    (inp / "b.warc").write_bytes(c2.encode())
-    stream_warc_extract(spark, str(inp), out, ckpt, num_partitions=2)
-    spans = spark.read.parquet(f"{out}/spans")
-    # 5 from a.warc + 3 from b.warc (b's urls overlap a's → same ids,
-    # but file-offset semantics process each FILE once: 8 rows)
-    assert spans.count() == 8
-
-
-def test_stream_crawl_frontier_incremental(spark, tmp_path):
-    """Streaming frontier discovery: links extracted + absolutized +
-    robots-gated per micro-batch; each archive contributes once
-    across drains; disallowed paths come back allowed=False."""
-    from zhtml_spark.sources import stream_crawl_frontier, warc_record
-    from zhtml_spark.textops import parse_robots
-
-    inp = tmp_path / "warcs"
-    inp.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def archive(n, tag):
-        docs = spark.range(n).select(
-            F.concat(
-                F.lit(f"https://ex.com/{tag}/page"), F.col("id")
-            ).alias("url"),
-            F.lit("2024-01-01T00:00:00Z").alias("date"),
-            F.concat(
-                F.lit('<body><p><a href="/keep/'), F.col("id"),
-                F.lit('">ok</a> and <a href="/private/'), F.col("id"),
-                F.lit('">no</a></p></body>'),
-            ).alias("html"),
-        )
-        return docs.select(
-            warc_record(
-                F.col("url"), F.col("date"), F.col("html")
-            ).alias("rec")
-        ).agg(
-            F.concat_ws("", F.collect_list("rec")).alias("content")
-        ).collect()[0]["content"]
-
-    rules = parse_robots(
-        spark.createDataFrame(
-            [("ex.com", "User-agent: *\nDisallow: /private/\n")],
-            "host string, text string",
-        )
-    )
-    (inp / "a.warc").write_bytes(archive(3, "a").encode())
-    stream_crawl_frontier(spark, str(inp), out, ckpt, rules, "bot")
-    f1 = spark.read.parquet(f"{out}/frontier")
-    assert f1.count() == 6  # 3 pages x 2 links
-    assert f1.where("allowed").count() == 3
-    assert (
-        f1.where("allowed = false")
-        .where(F.col("url").contains("/private/")).count() == 3
-    )
-    # resolved against each page's own URL
-    assert (
-        f1.where(F.col("url") == "https://ex.com/keep/1").count() == 1
-    )
-
-    (inp / "b.warc").write_bytes(archive(2, "b").encode())
-    stream_crawl_frontier(spark, str(inp), out, ckpt, rules, "bot")
-    f2 = spark.read.parquet(f"{out}/frontier")
-    assert f2.count() == 10  # + 2 pages x 2 links, a.warc not redone
-
-
 def test_warc_gzip_archives(spark, tmp_path):
     """Common Crawl wire format: .warc.gz, one gzip member per record
     (multi-member concatenation)."""
@@ -291,21 +209,6 @@ def test_record_aligned_chunking():
     assert "".join(chunks) == content
     for c in chunks:
         assert c.startswith("WARC/1.0\r\n")
-
-
-def test_stream_warc_extract_accepts_gzip(spark, tmp_path):
-    import gzip
-
-    from zhtml_spark.sources import stream_warc_extract
-
-    inp = tmp_path / "in"
-    inp.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    content = _synth_archive(spark, 3).collect()[0]["content"]
-    (inp / "seg.warc.gz").write_bytes(gzip.compress(content.encode()))
-    stream_warc_extract(spark, str(inp), out, ckpt, num_partitions=2)
-    assert spark.read.parquet(f"{out}/spans").count() == 3
 
 
 def test_warc_http_response_payload_stripped(spark):

@@ -77,8 +77,11 @@ _REF_RE = re.compile(r"&(#[0-9]+;|#[xX][0-9A-Fa-f]+;|[A-Za-z][A-Za-z0-9]*;)")
 # Root-element sniff for the dispatch (shared with sources): optional
 # prolog / comments / doctype, then the feed root.  XML names are
 # case-sensitive — `rss`, `feed`, `rdf:RDF` are the wire spellings.
+# One whitespace char per repetition, never `\s+` inside the `*`: the
+# nested quantifier splits an n-blank run 2^n ways, and a non-feed
+# document with a long blank prefix backtracked for minutes.
 FEED_ROOT_RE = (
-    r"(?s)^(?:\s+|<\?.*?\?>|<!--.*?-->|<!DOCTYPE[^>]*>)*"
+    r"(?s)^(?:\s|<\?.*?\?>|<!--.*?-->|<!DOCTYPE[^>]*>)*"
     r"<(rss|feed|rdf:RDF)[\s>]"
 )
 

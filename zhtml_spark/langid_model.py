@@ -1,12 +1,12 @@
 """Hashed char-trigram Naive-Bayes language-id model (VERDICT r5 #7,
 breadth + engine-hash split r7 per VERDICT r6 #4/#5).
 
-The heuristic :func:`zhtml_spark.textops.lang_id` votes on a dozen
-stopwords per language — defensible as a smoke signal, not at corpus
-scale where short or stopword-poor pages abound.  This module holds
-the v2 model: per-language log-probability weights over HASHED char
-trigrams, trained once at import time from the small seed corpora
-below (original text written for this repo; no external data).
+A stopword vote is a smoke signal at best, and fails at corpus scale
+where short or stopword-poor pages abound.  This module holds the
+model behind :func:`zhtml_spark.textops.lang_id_v2`: per-language
+log-probability weights over HASHED char trigrams, trained once at
+import time from the small seed corpora below (original text written
+for this repo; no external data).
 
 Design constraints, in order:
 

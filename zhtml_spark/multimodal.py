@@ -168,6 +168,23 @@ def extract_media_features(
     return map_rows(df, cols, row, FEATURE_SCHEMA)
 
 
+_INT_LIMIT = {IntegerType: 1 << 31, LongType: 1 << 63}
+
+
+def _fit_ints(values: tuple, schema: StructType) -> tuple:
+    """``values`` with every integer outside its ``schema`` column's
+    range (int / bigint) replaced by None: a header that claims a
+    width of 2^31 nulls that field instead of failing the whole
+    task's Arrow batch."""
+    out = []
+    for v, f in zip(values, schema.fields):
+        lim = _INT_LIMIT.get(type(f.dataType))
+        if lim and v is not None and not -lim <= v < lim:
+            v = None
+        out.append(v)
+    return tuple(out)
+
+
 IMAGE_META_SCHEMA = StructType(
     [
         StructField("media_ref", StringType(), False),
@@ -278,6 +295,8 @@ def decode_image_meta(
     def row(media_ref, payload):
         import io
 
+        if payload is None:
+            return [(media_ref, None, None, None, "none")]
         b = bytes(payload)
         meta = None if engine == "pil" else sniff_image_meta(b)
         dec = "sniff" if meta else "none"
@@ -288,7 +307,8 @@ def decode_image_meta(
                     dec = "pil"
             except Exception:
                 meta, dec = None, "none"
-        return [(media_ref, *(meta or (None, None, None)), dec)]
+        out = (media_ref, *(meta or (None, None, None)), dec)
+        return [_fit_ints(out, IMAGE_META_SCHEMA)]
 
     return map_rows(df, ["media_ref", "payload"], row, IMAGE_META_SCHEMA)
 
@@ -549,10 +569,12 @@ def decode_container_meta(df: DataFrame) -> DataFrame:
     :func:`extract_media_features(engine='pil')`."""
 
     def row(media_ref, payload):
-        meta = sniff_container_meta(bytes(payload))
+        meta = None if payload is None else sniff_container_meta(
+            bytes(payload)
+        )
         if meta is None:
             return [(media_ref, None, None, None, None, None, None, "none")]
-        return [(media_ref, *meta, "sniff")]
+        return [_fit_ints((media_ref, *meta, "sniff"), CONTAINER_META_SCHEMA)]
 
     return map_rows(
         df, ["media_ref", "payload"], row, CONTAINER_META_SCHEMA

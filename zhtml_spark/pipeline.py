@@ -265,14 +265,11 @@ def extract_documents(
     df: DataFrame,
     config: ExtractConfig | None = None,
     num_partitions: int | None = None,
-    salt: bool = True,
 ) -> DataFrame:
     """The core stage: salted repartition → fused parse/extract
     mapInArrow stage (flat Arrow child arrays in and out)."""
-    if num_partitions and salt:
+    if num_partitions:
         df = salted_repartition(df, num_partitions)
-    elif num_partitions:
-        df = df.repartition(num_partitions, "doc_id")
     return df.select("doc_id", "spans").mapInArrow(
         make_extract_arrow_udf(config), EXTRACT_SCHEMA
     )

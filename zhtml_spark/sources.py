@@ -736,134 +736,6 @@ def decode_http_payloads(records: DataFrame) -> DataFrame:
     return plain.unionByName(coded.mapInArrow(codec, schema))
 
 
-def stream_warc_extract(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_location: str,
-    num_partitions: int | None = None,
-):
-    """Incremental WARC ingestion: new .warc / .warc.gz files dropped into
-    ``input_path`` are split, adapted, and extracted per micro-batch —
-    the crawl-to-spans path as a stream (availableNow drain; Spark's
-    file-source checkpoint guarantees each archive is processed once).
-    """
-    from .pipeline import extract_documents
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        docs = warc_to_documents(
-            parse_warc_records(_decoded_archives(batch_df))
-        )
-        out = extract_documents(
-            docs, num_partitions=num_partitions, salt=False
-        )
-        # idempotent per-batch dir (foreachBatch is at-least-once; a
-        # replayed epoch overwrites its own directory)
-        out.select("doc_id", "spans").write.mode("overwrite").parquet(
-            f"{output_path}/spans/batch={batch_id}"
-        )
-
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "*.warc*")
-        .load(input_path)
-    )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_location)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
-
-
-def stream_crawl_frontier(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_location: str,
-    rules: DataFrame,
-    agent: str,
-    num_partitions: int | None = None,
-):
-    """Incremental frontier discovery: each new archive dropped into
-    ``input_path`` yields its pages' outbound links (the REAL
-    extraction path with ``emit_links`` — media-target anchors
-    included, a frontier fetches both), absolutized against each
-    page's own WARC-Target-URI and gated against a STATIC robots
-    rules table (:func:`zhtml_spark.textops.parse_robots` output —
-    stream-static joins are natively supported and the rules table
-    broadcasts) — the crawl loop's discovery half as a stream.
-
-    Same exactly-once shape as :func:`stream_warc_extract`: file-
-    source checkpointing dedups archives across drains, and each
-    micro-batch overwrites its OWN idempotent output directory
-    (foreachBatch is at-least-once; a replayed epoch rewrites
-    ``frontier/batch=<id>`` identically).  Re-running after new
-    archives arrive processes only the new files — the steady-state
-    crawl cycle: fetch → drop archives → drain → new frontier."""
-    from .extract import ExtractConfig
-    from .pipeline import extract_documents
-    from .textops import absolutize_url, robots_gate, url_host
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        records = parse_warc_records(_decoded_archives(batch_df))
-        docs = warc_to_documents(records)
-        spans = extract_documents(
-            docs,
-            config=ExtractConfig(emit_links=True),
-            num_partitions=num_partitions,
-            salt=False,
-        )
-        links = (
-            spans.select("doc_id", F.explode("spans").alias("s"))
-            .where(F.col("s.kind").isin("link", "media"))
-            .where(F.col("s.media_ref").isNotNull())
-            .select(
-                F.col("doc_id").alias("page_url"),
-                F.col("s.media_ref").alias("href"),
-            )
-        )
-        urls = links.select(
-            "page_url",
-            absolutize_url(F.col("page_url"), F.col("href"))
-            .alias("url"),
-        ).select(
-            "page_url", "url", url_host(F.col("url")).alias("host")
-        )
-        gated = robots_gate(urls, rules, agent)
-        gated.write.mode("overwrite").parquet(
-            f"{output_path}/frontier/batch={batch_id}"
-        )
-
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "*.warc*")
-        .load(input_path)
-    )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_location)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
-
-
 def warc_to_documents(records: DataFrame) -> DataFrame:
     """Adapt WARC records to the engine's interleaved-document input
     shape (doc_id = target URI, one html span) — feed straight into

@@ -23,12 +23,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-# Shared stopword lists (tiny, deterministic; used by lang-id and
-# quality scoring — both engines embed the same literals).
+# Stopword list for quality scoring (tiny, deterministic; both
+# engines embed the same literals).
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "a", "in", "is", "it", "for", "on"],
-    "es": ["el", "la", "de", "que", "y", "en", "un", "es", "por", "los"],
-    "de": ["der", "die", "und", "das", "ist", "ein", "zu", "mit", "den", "von"],
 }
 
 
@@ -1117,7 +1115,7 @@ def embed_hashing(
 
     Distributed shape: ZERO-shuffle, pure JVM higher-order functions —
     tokenize (the same ``\\w+|[^\\w\\s]`` pre-tokenizer as
-    :func:`token_count`), one ``transform`` to (bucket, sign) pairs
+    :func:`_n_tokens`), one ``transform`` to (bucket, sign) pairs
     (ONE hash per token), one ``aggregate`` folding into a
     ``dim``-wide count array, one normalize pass.  Per-row cost is
     O(tokens × dim) for the fold — right for sketch-sized dims
@@ -2289,18 +2287,6 @@ def host_stats(
     )
 
 
-def dedup_by_url(docs: DataFrame, url_col: str = "url") -> DataFrame:
-    """URL-identity dedup: one survivor (min doc_id) per normalized
-    URL — one hash-agg shuffle, the cheapest dedup tier (runs before
-    any content hashing at corpus scale)."""
-    return (
-        docs.withColumn("norm_url", url_normalize(F.col(url_col)))
-        .groupBy("norm_url")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id", "norm_url")
-    )
-
-
 def spans_to_markdown(
     spans: DataFrame,
     id_col: str = "doc_id",
@@ -2491,8 +2477,8 @@ def dedup_by_canonical(
     that still fails to resolve to an absolute URL (``?page=2`` /
     ``#top`` pagination canonicals, resolver passthrough) falls back
     to the page's own URL rather than becoming a cross-host group key
-    (code-review r3c).  Same cost shape as :func:`dedup_by_url`: one
-    hash-agg shuffle."""
+    (code-review r3c); a null canonical groups by the page's own URL.
+    One hash-agg shuffle."""
     resolved = absolutize_url(F.col(url_col), F.col(canonical_col))
     eff = F.when(
         F.col(canonical_col).isNotNull()
@@ -2576,34 +2562,6 @@ def link_header_canonical(link_header: Column) -> Column:
         1,
     )
     return F.when(quoted != "", quoted).otherwise(bare)
-
-
-def sitemap_urls(
-    sitemaps: DataFrame,
-    id_col: str = "host",
-    text_col: str = "text",
-) -> DataFrame:
-    """Extract ``<loc>`` URLs from sitemap / sitemap-index XML —
-    the crawl frontier's seed source.  The sitemap schema is strict
-    (no attributes on <loc>, URLs XML-escaped), so one
-    ``regexp_extract_all`` + explode is exact; ``&amp;`` (the only
-    escape that occurs in practice in query strings) is decoded.
-    ``is_index`` marks sitemapindex documents (their locs are
-    sitemap URLs to fetch, not page URLs).  Projection + explode —
-    no shuffle."""
-    locs = F.expr(
-        f"regexp_extract_all({text_col}, "
-        "'<loc>\\\\s*(.*?)\\\\s*</loc>', 1)"
-    )
-    return sitemaps.select(
-        id_col,
-        F.col(text_col).contains("<sitemapindex").alias("is_index"),
-        F.explode(locs).alias("loc"),
-    ).select(
-        id_col,
-        F.regexp_replace("loc", "&amp;", "&").alias("url"),
-        "is_index",
-    )
 
 
 def sitemap_entries(
@@ -2706,29 +2664,6 @@ def quality_filter(
     return docs.join(keep, "doc_id").select("doc_id", "text")
 
 
-def lang_id(docs: DataFrame) -> DataFrame:
-    """Stopword-voting language id (deterministic heuristic):
-    argmax over per-language stopword hits, alphabetical tie-break,
-    'und' when all scores are zero."""
-    toks = _words()
-    arrays = {
-        lang: F.array(*[F.lit(w) for w in words])
-        for lang, words in STOPWORDS.items()
-    }
-    def _hits(arr):
-        return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-
-    scores = {lang: _hits(arrays[lang]) for lang in STOPWORDS}
-    # deterministic argmax: iterate langs alphabetically, strict >
-    pred = F.lit("und")
-    best = F.lit(0)
-    for lang in sorted(scores):
-        better = scores[lang] > best
-        pred = F.when(better, F.lit(lang)).otherwise(pred)
-        best = F.when(better, scores[lang]).otherwise(best)
-    return docs.select("doc_id", pred.alias("predicted_lang"))
-
-
 def _langid_buckets(grams: Column, hash_fn: str) -> Column:
     """Trigram array → bucket-id array under the chosen hash engine
     (the winnow-style split, VERDICT r6 #4): ``md5`` = md5-48 %
@@ -2782,29 +2717,6 @@ def _langid_argmax(scores: dict[str, Column]) -> Column:
     )
 
 
-def _langid_weight_arrays(hash_fn: str) -> dict[str, Column]:
-    """lang → ONE constant-foldable array<long> of its 4096 weights,
-    as ``from_json('[-83…, …]')``.  NOT ``F.array(*4096 lits)`` and
-    NOT ``F.lit(list)`` (which pyspark desugars to the same
-    CreateArray): 4096 child expressions per language walk through
-    analysis / canonicalization / codegen — ~41k nodes at 10
-    languages cost ~20 s of DRIVER time per query and OOMed the
-    driver generating an explain string (NOTES r7-b).  A from_json
-    literal is 2 leaf nodes; Catalyst's ConstantFolding evaluates it
-    ONCE at optimization into a true array Literal (measured: 3.3 s
-    vs 19.6 s for ten 4096-slot folds, identical results)."""
-    import json as _json
-
-    from .langid_model import trigram_weights
-
-    return {
-        lang: F.from_json(
-            F.lit(_json.dumps(list(wv))), "array<bigint>"
-        )
-        for lang, wv in trigram_weights(hash_fn=hash_fn).items()
-    }
-
-
 def _langid_score_vector(
     bucket_col: Column, hash_fn: str
 ) -> tuple[list[str], Column]:
@@ -2816,12 +2728,18 @@ def _langid_score_vector(
     separate folds — the bucket array was walked k times with k
     lookups per element; at the r7 model's k=10 the isolated fold
     A/B reads 1.3–1.5× (NOTES r7-k), sums bit-identical (integer
-    adds commute).  The transposed literal is the same from_json
-    constant-folding trick as ``_langid_weight_arrays`` (r7-b: never
-    ``F.array(*N lits)``).  Returns (sorted langs, vector Column);
-    CALLERS must land the vector in a guarded materialized column
-    before referencing it more than once (the pushdown re-inlining
-    trap — see lang_gate's ``_sc``)."""
+    adds commute).  The transposed literal is ONE constant-foldable
+    ``from_json('[[…], …]')``, NOT ``F.array(*4096 lits)`` and NOT
+    ``F.lit(list)`` (which pyspark desugars to the same CreateArray):
+    thousands of child expressions walk through analysis /
+    canonicalization / codegen — ~41k nodes at 10 languages cost
+    ~20 s of DRIVER time per query and OOMed the driver generating
+    an explain string (NOTES r7-b).  A from_json literal is 2 leaf
+    nodes that Catalyst's ConstantFolding evaluates ONCE at
+    optimization into a true array Literal.  Returns (sorted langs,
+    vector Column); CALLERS must land the vector in a guarded
+    materialized column before referencing it more than once (the
+    pushdown re-inlining trap — see lang_gate's ``_sc``)."""
     import json as _json
 
     from .langid_model import N_BUCKETS, trigram_weights
@@ -2852,8 +2770,7 @@ def lang_id_v2(
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Hashed char-trigram Naive-Bayes language id (VERDICT r5 #7;
-    ten seed languages incl. Cyrillic + CJK since r7) — the
-    corpus-scale upgrade over :func:`lang_id`'s stopword vote:
+    ten seed languages incl. Cyrillic + CJK since r7):
     score(doc, ℓ) = Σ over char trigrams of the pre-baked integer
     log-weight ``W[ℓ][hash(gram) % 4096]``
     (:mod:`zhtml_spark.langid_model`), argmax with alphabetical
@@ -3224,18 +3141,12 @@ def score_tiers(
 
 def _n_tokens(col: str) -> Column:
     """The BPE-ish pre-tokenizer count expression (words + punctuation
-    singles) — the ONE definition :func:`token_count` and
-    :func:`pack_sequences` (and their oracles) share.  NULL-safe:
-    ``size`` of a null extraction is -1 in legacy Spark, which would
-    silently corrupt prefix sums (code-review r4b) — null text counts
-    as zero tokens in both engines."""
+    singles) that :func:`pack_sequences` (and its oracle) counts with.
+    NULL-safe: ``size`` of a null extraction is -1 in legacy Spark,
+    which would silently corrupt prefix sums (code-review r4b) — null
+    text counts as zero tokens in both engines."""
     safe = F.coalesce(F.col(col), F.lit(""))
     return F.size(F.regexp_extract_all(safe, F.lit(r"\w+|[^\w\s]"), 0))
-
-
-def token_count(docs: DataFrame) -> DataFrame:
-    """BPE-ish pre-tokenizer count: words + punctuation singles."""
-    return docs.select("doc_id", _n_tokens("text").alias("n_tokens"))
 
 
 def pack_sequences(
@@ -3262,7 +3173,7 @@ def pack_sequences(
     Start-offset packing is the standard scan-free approximation: a
     pack's total may overrun the budget by at most its LAST doc's
     tail (exact greedy close-on-overflow needs a sequential scan).
-    Token counts are :func:`token_count`'s BPE-ish pre-tokenizer
+    Token counts are :func:`_n_tokens`' BPE-ish pre-tokenizer
     (words + punctuation singles).  Deterministic end-to-end: same
     corpus → same packs, both engines.
 
@@ -4039,23 +3950,6 @@ def absolutize_url(base: Column, ref: Column) -> Column:
     # behavior); the authority is untouchable by construction
     head = F.regexp_replace(head, r"(://[^/?#]+/)(?:\.\./)+", "$1")
     return F.concat(head, tail)
-
-
-def absolutize_media_refs(
-    spans: DataFrame,
-    url_col: str = "page_url",
-    ref_col: str = "media_ref",
-    out_col: str = "resolved_ref",
-) -> DataFrame:
-    """Span-table convenience: add ``resolved_ref`` for media spans
-    (non-media rows pass through with NULL).  Pure projection."""
-    return spans.withColumn(
-        out_col,
-        F.when(
-            F.col(ref_col).isNotNull(),
-            absolutize_url(F.col(url_col), F.col(ref_col)),
-        ),
-    )
 
 
 def pagerank(

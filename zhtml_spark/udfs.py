@@ -52,13 +52,6 @@ SPAN_STRUCT = StructType(
     ]
 )
 
-DOC_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("spans", ArrayType(SPAN_STRUCT), False),
-    ]
-)
-
 EXTRACT_SCHEMA = StructType(
     [
         StructField("doc_id", StringType(), False),
