@@ -285,24 +285,34 @@ def test_decode_container_meta_spark(spark):
         ("container", _mp4_bytes(tscale=1, dur=2**64 - 1, ver=1),
          ("mp4", 640, 360, None, None, None, "sniff")),
         ("container", None, (None,) * 6 + ("none",)),
+        ("features", None, (None, None, None, "none")),
     ],
     ids=["png_width_2e31", "bmp_height_neg_2e31", "image_null_payload",
-         "mp4_duration_past_int64", "container_null_payload"],
+         "mp4_duration_past_int64", "container_null_payload",
+         "features_null_payload"],
 )
 def test_bad_media_row_nulls_its_fields(spark, decoder, payload, want):
     """A header claiming a dimension past its column's integer range
     (PNG width 2^31, BMP height -2^31) nulls that field, and a null
-    payload gives null fields with decoder 'none'; a good row in the
+    payload gives null fields with decoder 'none' (for the feature
+    extractor too: null checksum and features); a good row in the
     same batch still decodes, so one bad row no longer fails the task."""
     from zhtml_spark.multimodal import (
         decode_container_meta,
         decode_image_meta,
     )
 
+    png_md5 = hashlib.md5(_png(8, 6)).hexdigest()
+    png_feats = [
+        round(int(png_md5[(i * 4) % 32:(i * 4) % 32 + 4], 16) / 65535.0, 6)
+        for i in range(8)
+    ]
     fn, good, good_want = {
         "image": (decode_image_meta, _png(8, 6), ("png", 8, 6, "sniff")),
         "container": (decode_container_meta, _wav_bytes(),
                       ("wav", None, None, 3000, 16000, 2, "sniff")),
+        "features": (extract_media_features, _png(8, 6),
+                     (None, png_md5, png_feats, "hash")),
     }[decoder]
     df = spark.createDataFrame(
         [("bad", payload), ("ok", good)], "media_ref string, payload binary"

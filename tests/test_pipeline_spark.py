@@ -407,6 +407,29 @@ def test_metrics_and_lineage_counts(spark):
         extracted.unpersist()
 
 
+def test_lineage_attempt_is_the_committed_attempt_dir(spark, tmp_path):
+    """Reading the lineage root, each row's ``attempt`` comes from its
+    ``attempt=<id>`` directory (a string) and names the committed
+    attempt that wrote it: two runs give two attempts, each matching
+    its ``list_snapshots`` entry and that entry's snapshot id."""
+    from zhtml_spark.pipeline import list_snapshots
+
+    inp = str(tmp_path / "input")
+    corpus_dataframe(spark, 20, seed=4).write.parquet(inp)
+    out = str(tmp_path / "out")
+    run_job(spark, inp, out, num_partitions=2, snapshot_id=1)
+    run_job(spark, inp, out, num_partitions=2, snapshot_id=2)
+
+    lineage = spark.read.parquet(f"{out}/lineage")
+    assert dict(lineage.dtypes)["attempt"] == "string"
+    snaps = {s["attempt"]: s["snapshot_id"] for s in list_snapshots(out)}
+    rows = lineage.select("attempt", "snapshot_id", "n_docs").collect()
+    assert {r["attempt"]: r["snapshot_id"] for r in rows} == snaps
+    assert sorted(snaps.values()) == [1, 2]
+    for attempt in snaps:
+        assert sum(r["n_docs"] for r in rows if r["attempt"] == attempt) == 20
+
+
 def test_media_resolution_join_and_span_order(spark):
     from zhtml_spark.pipeline import resolve_media_refs, span_order_violations
 
@@ -528,12 +551,19 @@ def test_textops_accept_string_doc_ids(spark):
 @pytest.mark.parametrize("op", ["simhash_dup_candidates", "simhash_candidate_stats"])
 def test_simhash_ops_reject_too_few_blocks(spark, op):
     """n_blocks <= max_hamming puts every doc in one bucket: both
-    simhash candidate ops refuse it before touching the data."""
-    from zhtml_spark import textops
+    simhash candidate ops refuse it before touching the data.  Each op
+    is called by name so the defaulted-parameter guard sees the call."""
+    from zhtml_spark.textops import (
+        simhash_candidate_stats,
+        simhash_dup_candidates,
+    )
 
     docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     with pytest.raises(ValueError, match="more blocks"):
-        getattr(textops, op)(docs, max_hamming=3, n_blocks=3)
+        if op == "simhash_dup_candidates":
+            simhash_dup_candidates(docs, max_hamming=3, n_blocks=3)
+        else:
+            simhash_candidate_stats(docs, max_hamming=3, n_blocks=3)
 
 
 def test_arrow_engine_handles_sliced_batches(spark):

@@ -233,3 +233,100 @@ def test_public_functions_have_a_non_test_caller():
     names = {name for _, name in public}
     stale = sorted(n for n in NO_CALLER_OK if n in refs or n not in names)
     assert not stale, f"NO_CALLER_OK entries that now have a caller: {stale}"
+
+
+# defaulted parameters kept although no caller passes them
+NO_CALLER_PARAM_OK = {
+    "bpe_train.checkpoint": "plan-depth guard for vocab-sized merge counts",
+}
+CALLER_FILES = sorted([*PACKAGE, *KWARG_SCRIPTS, *REPO.glob("tests/*.py")])
+
+
+def _trees(tree: ast.AST):
+    """``tree`` and every string literal in it that parses as Python
+    with a call in it (code a script hands to a subprocess)."""
+    yield tree
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            try:
+                snippet = ast.parse(node.value)
+            except (SyntaxError, ValueError):
+                continue
+            if any(isinstance(n, ast.Call) for n in ast.walk(snippet)):
+                yield snippet
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
+    """(position or None for keyword-only, name) of each parameter of
+    ``fn`` that has a default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out = [(i, p.arg) for i, p in enumerate(pos) if i >= first]
+    out += [
+        (None, p.arg)
+        for p, d in zip(a.kwonlyargs, a.kw_defaults)
+        if d is not None
+    ]
+    return out
+
+
+def _passed(paths) -> set[str]:
+    """``f.p`` for each parameter ``p`` that some call to a function
+    named ``f`` (or an import alias of it) in ``paths`` passes, by
+    keyword as ``f.p`` and by position as ``f.#i``."""
+    passed: set[str] = set()
+    for path in paths:
+        for tree in _trees(ast.parse(path.read_text(), filename=str(path))):
+            alias = {
+                a.asname: a.name
+                for n in ast.walk(tree)
+                if isinstance(n, ast.ImportFrom)
+                for a in n.names
+                if a.asname
+            }
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                name = alias.get(name, name)
+                passed.update(f"{name}.#{i}" for i in range(len(node.args)))
+                passed.update(f"{name}.{kw.arg}" for kw in node.keywords)
+    return passed
+
+
+def _unpassed_parameters(package, callers) -> list[str]:
+    passed = _passed(callers)
+    unpassed = []
+    for path in package:
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.ClassDef) and node.name == "ExtractConfig":
+                for field in node.body:
+                    if isinstance(field, ast.AnnAssign):
+                        key = f"{node.name}.{field.target.id}"
+                        if key not in passed:
+                            unpassed.append(key)
+            if not isinstance(node, ast.FunctionDef) or node.name.startswith("_"):
+                continue
+            if node.args.kwarg is not None:
+                unpassed.append(f"{node.name}.**{node.args.kwarg.arg}")
+            for i, p in _defaulted(node):
+                if (
+                    f"{node.name}.{p}" not in passed
+                    and f"{node.name}.#{i}" not in passed
+                ):
+                    unpassed.append(f"{node.name}.{p}")
+    return sorted(unpassed)
+
+
+def test_defaulted_parameters_have_a_caller():
+    """A defaulted parameter of a public package function, or an
+    ``ExtractConfig`` field, that no call anywhere in the repo (tests
+    included) passes by keyword or by position is a constant with a
+    dial on it; ``**kwargs`` catch-alls hide such dials and fail too."""
+    unpassed = _unpassed_parameters(PACKAGE, CALLER_FILES)
+    extra = sorted(set(unpassed) - set(NO_CALLER_PARAM_OK))
+    assert not extra, f"defaulted parameters no caller sets: {extra}"
+    stale = sorted(set(NO_CALLER_PARAM_OK) - set(unpassed))
+    assert not stale, f"NO_CALLER_PARAM_OK entries that now have a caller: {stale}"

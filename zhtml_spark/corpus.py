@@ -8,9 +8,10 @@ order with media spans passed through positionally (FIXTURES.md §2).
 
 Everything is seeded (seed=42 default) — resume tests and the
 two-parallelism scaling runs must see byte-identical inputs
-(SURVEY §7.2).  Knobs: doc count, heavy-tailed byte-length
-distribution with occasional multi-hundred-KB "giant pages" (exercises
-quantile salting), entity/comment/malformed densities, media rate.
+(SURVEY §7.2).  The knobs are the doc count and the seed; the heavy-tailed
+byte-length distribution with occasional multi-hundred-KB "giant
+pages" (exercises quantile salting), the entity/comment/malformed
+densities and the media rate are module constants.
 """
 
 from __future__ import annotations
@@ -35,6 +36,16 @@ _MALFORMED = [
     "<?php echo 1; ?>",
 ]
 _MEDIA_KINDS = ("image", "video", "audio")
+# per-document draw rates
+MEDIA_RATE = 0.08
+ENTITY_DENSITY = 0.3
+MALFORMED_RATE = 0.04
+NAV_RATE = 0.5
+# corpus_dataframe's byte-length draw: lognormal × MEAN_BYTES + 300,
+# GIANT_RATE of docs × GIANT_MULTIPLIER (perfbench mirrors these)
+MEAN_BYTES = 4000
+GIANT_RATE = 0.01
+GIANT_MULTIPLIER = 40
 
 
 def _sentence(rng: random.Random, n_words: int) -> str:
@@ -42,9 +53,9 @@ def _sentence(rng: random.Random, n_words: int) -> str:
     return " ".join(ws)
 
 
-def _paragraph(rng: random.Random, entity_density: float) -> str:
+def _paragraph(rng: random.Random) -> str:
     s = _sentence(rng, rng.randint(8, 40))
-    if rng.random() < entity_density:
+    if rng.random() < ENTITY_DENSITY:
         s += " " + rng.choice(_ENTITIES) + " " + _sentence(rng, 4)
     if rng.random() < 0.25:
         s += f" <a href=\"/l/{rng.randint(0, 999)}\">{_sentence(rng, 2)}</a> "
@@ -52,10 +63,10 @@ def _paragraph(rng: random.Random, entity_density: float) -> str:
     return f"<p>{s}</p>"
 
 
-def _block(rng: random.Random, entity_density: float, malformed_rate: float) -> str:
+def _block(rng: random.Random) -> str:
     r = rng.random()
     if r < 0.55:
-        return _paragraph(rng, entity_density)
+        return _paragraph(rng)
     if r < 0.65:
         return f"<h{rng.randint(1, 3)}>{_sentence(rng, rng.randint(2, 8))}</h{rng.randint(1, 3)}>"
     if r < 0.75:
@@ -79,25 +90,17 @@ def _block(rng: random.Random, entity_density: float, malformed_rate: float) -> 
         return f"<pre>{_sentence(rng, rng.randint(4, 20))}</pre>"
     if r < 0.90:
         return f"<!-- {_sentence(rng, rng.randint(2, 6))} -->"
-    if r < 0.90 + malformed_rate:
+    if r < 0.90 + MALFORMED_RATE:
         return rng.choice(_MALFORMED)
     if r < 0.97:
         return f"<script>var x_{rng.randint(0, 99)} = 1 < 2;</script>"
     return (
         f"<div class=\"c{rng.randint(0, 9)}\">"
-        f"{_paragraph(rng, entity_density)}</div>"
+        f"{_paragraph(rng)}</div>"
     )
 
 
-def make_document(
-    doc_id: str,
-    rng: random.Random,
-    target_bytes: int,
-    media_rate: float = 0.08,
-    entity_density: float = 0.3,
-    malformed_rate: float = 0.04,
-    nav_rate: float = 0.5,
-) -> dict:
+def make_document(doc_id: str, rng: random.Random, target_bytes: int) -> dict:
     """One interleaved document row: {doc_id, spans:[{kind,text,media_ref,offset}]}."""
     spans: list[dict] = []
     offset = 0
@@ -115,7 +118,7 @@ def make_document(
         "<style>body{margin:0}</style></head><body>"
     )
     parts = [head]
-    if rng.random() < nav_rate:
+    if rng.random() < NAV_RATE:
         links = "".join(
             f"<li><a href=\"/nav/{k}\">{_sentence(rng, 1)}</a></li>"
             for k in range(rng.randint(3, 8))
@@ -124,10 +127,10 @@ def make_document(
     size = sum(len(p) for p in parts)
     media_i = 0
     while size < target_bytes:
-        b = _block(rng, entity_density, malformed_rate)
+        b = _block(rng)
         parts.append(b)
         size += len(b)
-        if rng.random() < media_rate:
+        if rng.random() < MEDIA_RATE:
             # flush accumulated html as one span; then a media span
             add("html", "".join(parts), None)
             parts = []
@@ -146,7 +149,7 @@ def make_document(
     return {"doc_id": doc_id, "spans": spans}
 
 
-def corpus_dataframe(spark, n_docs: int, seed: int = 42, **kwargs):
+def corpus_dataframe(spark, n_docs: int, seed: int = 42):
     """Materialize the corpus as a Spark DataFrame with the input_hint
     schema (distributed generation: one task per ~2k docs, rows built
     executor-side so the driver never holds the corpus)."""
@@ -182,20 +185,14 @@ def corpus_dataframe(spark, n_docs: int, seed: int = 42, **kwargs):
     starts = list(range(0, n_docs, chunk))
     sc = spark.sparkContext
 
-    doc_knobs = {
-        k: kwargs[k]
-        for k in ("media_rate", "entity_density", "malformed_rate", "nav_rate")
-        if k in kwargs
-    }
-
     def gen_chunk(start: int):
         end = min(start + chunk, n_docs)
         for i in range(start, end):
             rng = random.Random((seed << 20) ^ i)
-            target = int(rng.lognormvariate(0, 0.8) * kwargs.get("mean_bytes", 4000)) + 300
-            if rng.random() < kwargs.get("giant_rate", 0.01):
-                target *= kwargs.get("giant_multiplier", 40)
-            d = make_document(f"doc-{seed}-{i:08d}", rng, target, **doc_knobs)
+            target = int(rng.lognormvariate(0, 0.8) * MEAN_BYTES) + 300
+            if rng.random() < GIANT_RATE:
+                target *= GIANT_MULTIPLIER
+            d = make_document(f"doc-{seed}-{i:08d}", rng, target)
             spans = [
                 (s["kind"], s["text"], s["media_ref"], s["offset"])
                 for s in d["spans"]
@@ -211,10 +208,6 @@ def adversarial_web_corpus(
     spark,
     n_docs: int = 20000,
     seed: int = 42,
-    n_hosts: int = 100,
-    chain_len: int = 8,
-    body_words: int = 120,
-    vocab: int = 500,
     n_partitions: int = 32,
 ):
     """Adversarial WEB-SHAPED dedup corpus (VERDICT r4 #1): the sf
@@ -225,17 +218,17 @@ def adversarial_web_corpus(
     structures the levers exist for:
 
     * **power-law host skew** — ``host_id = floor(n_hosts^u)`` for a
-      uniform md5 ``u`` (log-uniform ≈ Zipf mass: ~15% of docs land on
-      host 1 at n_hosts=100), plus per-host footer boilerplate whose
-      line df IS the host mass;
+      uniform md5 ``u`` over ``n_hosts`` = 100 hosts (log-uniform ≈
+      Zipf mass: ~15% of docs land on host 1), plus per-host footer
+      boilerplate whose line df IS the host mass;
     * **shared boilerplate at realistic df** — a global cookie-banner
       line on ~60% of docs, a fixed license header on 10%, per-host
       copyright footers on all — exactly the df shapes the substring/
       winnow caps and the C4 line-dedup pass target;
-    * **chained near-dup families** — every 20-id block contributes a
-      ``chain_len``-member chain over one base text: member m mutates
-      a sliding word window [12m, 12m+24), so ADJACENT members are
-      near-dups but chain ends are not — the mirror-ring/pagination
+    * **chained near-dup families** — every 20-id block contributes an
+      8-member chain over one base text: member m mutates a sliding
+      word window [12m, 12m+24), so ADJACENT members are near-dups but
+      chain ends are not — the mirror-ring/pagination
       topology that breaks one-pass dominance and O(diameter)
       components;
     * **giant pages** — every 999th non-chain doc repeats its body
@@ -253,6 +246,8 @@ def adversarial_web_corpus(
     from pyspark.sql import functions as F
 
     from .textops import md5_hash48
+
+    n_hosts, body_words, vocab = 100, 120, 500
 
     def u01(salt):
         """Deterministic uniform [0,1) per doc from md5-48."""

@@ -23,7 +23,7 @@ no recursion, no per-node objects):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from .tree import DocTree, N_ELEMENT, N_TEXT
 
@@ -50,6 +50,11 @@ SKIP_TAGS = frozenset(
     """script style template noframes noembed select option optgroup
     button datalist input textarea head""".split()
 )
+
+# boilerplate strip: blocks under these containers are dropped, and so
+# are blocks whose anchor text exceeds MAX_LINK_DENSITY of their chars
+SEMANTIC_SKIP_TAGS = frozenset(["nav", "footer", "aside"])
+MAX_LINK_DENSITY = 0.66
 
 MEDIA_SRC_TAGS = frozenset(
     ["img", "video", "audio", "embed", "iframe", "source", "track"]
@@ -134,12 +139,6 @@ def is_media_href(href: str) -> bool:
 @dataclass
 class ExtractConfig:
     strip_boilerplate: bool = True
-    max_link_density: float = 0.66
-    # blocks under these containers are dropped in strip mode
-    semantic_skip: frozenset = field(
-        default_factory=lambda: frozenset(["nav", "footer", "aside"])
-    )
-    min_block_chars: int = 1
     # readability-style boost: when the page declares a <main> or
     # <article> landmark, restrict extraction to the FIRST one —
     # sidebars/related-links outside the landmark vanish without any
@@ -412,12 +411,12 @@ def extract_spans(
             return
         raw = "".join(parts)
         text = raw if pre_depth > 0 else _normalize(raw)
-        keep = bool(text) and len(text) >= cfg.min_block_chars
+        keep = bool(text)
         had_text = bool(text)
         if keep and cfg.strip_boilerplate:
             if semantic_skip_depth > 0:
                 keep = False
-            elif total_chars > 0 and anchor_chars / total_chars > cfg.max_link_density:
+            elif total_chars > 0 and anchor_chars / total_chars > MAX_LINK_DENSITY:
                 keep = False
         if keep:
             spans.append((kind_stack[-1] if kind_stack else "text", text, None))
@@ -588,7 +587,7 @@ def extract_spans(
                     link_parts.append(" ")
                 if media_anchor is not None:
                     media_anchor.append(" ")  # same rule for media <a>
-            if name in cfg.semantic_skip:
+            if name in SEMANTIC_SKIP_TAGS:
                 semantic_skip_depth += 1
             if name in KIND_BY_TAG:
                 kind_stack.append(KIND_BY_TAG[name])
@@ -632,7 +631,7 @@ def extract_spans(
                     link_parts.append(" ")
                 if media_anchor is not None:
                     media_anchor.append(" ")
-            if name in cfg.semantic_skip:
+            if name in SEMANTIC_SKIP_TAGS:
                 semantic_skip_depth -= 1
             if name in KIND_BY_TAG:
                 kind_stack.pop()

@@ -168,6 +168,7 @@ _XXH_P2 = 0xC2B2AE3D27D4EB4F
 _XXH_P3 = 0x165667B19E3779F9
 _XXH_P4 = 0x85EBCA77C2B2AE63
 _XXH_P5 = 0x27D4EB2F165667C5
+_XXH_SEED = 42  # Spark's xxhash64 seed
 _M64 = (1 << 64) - 1
 
 
@@ -175,7 +176,7 @@ def _rotl64(x: int, r: int) -> int:
     return ((x << r) | (x >> (64 - r))) & _M64
 
 
-def xxh64(data: bytes, seed: int = 42) -> int:
+def xxh64(data: bytes) -> int:
     """XXH64 (Collet's public spec) over ``data``, returned as the
     SIGNED 64-bit value Spark's ``xxhash64(col)`` produces (Spark
     hashes a string column's UTF-8 bytes with seed 42 — equality is
@@ -183,10 +184,10 @@ def xxh64(data: bytes, seed: int = 42) -> int:
     n = len(data)
     i = 0
     if n >= 32:
-        v1 = (seed + _XXH_P1 + _XXH_P2) & _M64
-        v2 = (seed + _XXH_P2) & _M64
-        v3 = seed & _M64
-        v4 = (seed - _XXH_P1) & _M64
+        v1 = (_XXH_SEED + _XXH_P1 + _XXH_P2) & _M64
+        v2 = (_XXH_SEED + _XXH_P2) & _M64
+        v3 = _XXH_SEED & _M64
+        v4 = (_XXH_SEED - _XXH_P1) & _M64
         while i + 32 <= n:
             v1 = (
                 _rotl64(
@@ -244,7 +245,7 @@ def xxh64(data: bytes, seed: int = 42) -> int:
             h ^= _rotl64((v * _XXH_P2) & _M64, 31) * _XXH_P1 & _M64
             h = ((h * _XXH_P1) + _XXH_P4) & _M64
     else:
-        h = (seed + _XXH_P5) & _M64
+        h = (_XXH_SEED + _XXH_P5) & _M64
     h = (h + n) & _M64
     while i + 8 <= n:
         k = (
@@ -274,47 +275,43 @@ def xxh64(data: bytes, seed: int = 42) -> int:
     return h - (1 << 64) if h >= (1 << 63) else h
 
 
-def bucket_of(
-    gram: str, n_buckets: int = N_BUCKETS, hash_fn: str = "md5"
-) -> int:
-    """Trigram → bucket, per engine:
+def bucket_of(gram: str, hash_fn: str = "md5") -> int:
+    """Trigram → one of ``N_BUCKETS`` buckets, per engine:
 
-    * ``md5`` — md5-48 % n_buckets, mirroring ``textops.md5_hash48``
+    * ``md5`` — md5-48 % N_BUCKETS, mirroring ``textops.md5_hash48``
       (first 12 hex chars of md5 as int) so Spark / DuckDB / Python
       agree;
-    * ``xxhash64`` — ``pmod(xxh64(utf8, seed=42), n_buckets)``,
+    * ``xxhash64`` — ``pmod(xxh64(utf8), N_BUCKETS)``,
       mirroring Spark's ``pmod(xxhash64(col), n)`` (Python ``%`` on
       the signed value is exactly pmod for a positive modulus)."""
     if hash_fn == "md5":
         h = int(
             hashlib.md5(gram.encode("utf-8")).hexdigest()[:12], 16
         )
-        return h % n_buckets
+        return h % N_BUCKETS
     if hash_fn == "xxhash64":
-        return xxh64(gram.encode("utf-8")) % n_buckets
+        return xxh64(gram.encode("utf-8")) % N_BUCKETS
     raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
 
 
 @lru_cache(maxsize=None)
-def trigram_weights(
-    n_buckets: int = N_BUCKETS, hash_fn: str = "md5"
-) -> dict[str, tuple[int, ...]]:
-    """lang → ``n_buckets`` integer weights: add-one-smoothed trigram
+def trigram_weights(hash_fn: str = "md5") -> dict[str, tuple[int, ...]]:
+    """lang → ``N_BUCKETS`` integer weights: add-one-smoothed trigram
     log-probabilities, quantized at 1e-6, bucketed by ``hash_fn``.
-    Pure function of SEED_TEXTS; cached per (n_buckets, hash_fn).
+    Pure function of SEED_TEXTS; cached per ``hash_fn``.
     The two engines train SEPARATE tables (same counts, different
     bucket placement) — predictions agree wherever collisions don't
     flip an argmax, which the md5-vs-xxhash64 pytest pins on the
     seed + held-out corpora."""
     out: dict[str, tuple[int, ...]] = {}
     for lang, text in SEED_TEXTS.items():
-        counts = [0] * n_buckets
+        counts = [0] * N_BUCKETS
         total = 0
         for i in range(len(text) - 2):
-            counts[bucket_of(text[i : i + 3], n_buckets, hash_fn)] += 1
+            counts[bucket_of(text[i : i + 3], hash_fn)] += 1
             total += 1
         out[lang] = tuple(
-            round(_SCALE * math.log((c + 1) / (total + n_buckets)))
+            round(_SCALE * math.log((c + 1) / (total + N_BUCKETS)))
             for c in counts
         )
     return out
@@ -366,34 +363,27 @@ HELD_OUT: dict[str, str] = {
 }
 
 
-def score_text(
-    text: str,
-    lang: str,
-    n_buckets: int = N_BUCKETS,
-    hash_fn: str = "md5",
-) -> tuple[int, int]:
+def score_text(text: str, lang: str, hash_fn: str = "md5") -> tuple[int, int]:
     """Reference scorer (sum, n_trigrams) — the Python ground truth
     the confusion pytest checks the Spark fold against."""
-    w = trigram_weights(n_buckets, hash_fn)[lang]
+    w = trigram_weights(hash_fn)[lang]
     t = text.lower()
     total = 0
     n = 0
     for i in range(len(t) - 2):
-        total += w[bucket_of(t[i : i + 3], n_buckets, hash_fn)]
+        total += w[bucket_of(t[i : i + 3], hash_fn)]
         n += 1
     return total, n
 
 
-def predict(
-    text: str, n_buckets: int = N_BUCKETS, hash_fn: str = "md5"
-) -> str:
+def predict(text: str, hash_fn: str = "md5") -> str:
     """Reference argmax (alphabetical tie-break, 'und' below one
     trigram) — mirrors textops.lang_id_v2."""
     if len(text.lower()) < 3:
         return "und"
     best_lang, best = None, None
     for lang in sorted(SEED_TEXTS):
-        s, _ = score_text(text, lang, n_buckets, hash_fn)
+        s, _ = score_text(text, lang, hash_fn)
         if best is None or s > best:
             best_lang, best = lang, s
     return best_lang or "und"

@@ -71,8 +71,8 @@ FEATURE_SCHEMA = StructType(
     [
         StructField("media_ref", StringType(), False),
         StructField("media_kind", StringType(), True),
-        StructField("checksum", StringType(), False),
-        StructField("features", ArrayType(DoubleType()), False),
+        StructField("checksum", StringType(), True),
+        StructField("features", ArrayType(DoubleType()), True),
         StructField("decoder", StringType(), False),
     ]
 )
@@ -141,7 +141,10 @@ def extract_media_features(
       raises ``NotImplementedError`` where Pillow is absent (this
       container), with undecodable payloads falling back per-row to
       the hash features (``decoder`` column says which);
-    * ``"auto"`` — ``pil`` when available, else ``hash``."""
+    * ``"auto"`` — ``pil`` when available, else ``hash``.
+
+    A null payload gives one row with null ``checksum``/``features``
+    and ``decoder='none'`` (the :func:`decode_image_meta` convention)."""
     if engine not in ("hash", "pil", "auto"):
         raise ValueError(
             f"engine must be hash|pil|auto, got {engine!r}"
@@ -155,6 +158,8 @@ def extract_media_features(
     use_pil = engine != "hash" and PIL_AVAILABLE
 
     def row(media_ref, payload, media_kind=None):
+        if payload is None:
+            return [(media_ref, media_kind, None, None, "none")]
         b = bytes(payload)
         digest, hash_f = _fake_features(b, n_features)
         pil_f = _pil_features(b, n_features) if use_pil else None

@@ -43,6 +43,10 @@ from .extract import ExtractConfig
 from .udfs import EXTRACT_SCHEMA, make_extract_arrow_udf
 
 DEFAULT_ARROW_BATCH = 256  # docs per Arrow batch: ~4KB mean docs → ~1MB batches
+# salted_repartition: a giant holds more than this share of a
+# partition's byte budget; at most MAX_GIANTS are placed by the driver
+GIANT_FRACTION = 0.25
+MAX_GIANTS = 100_000
 
 
 def build_session(
@@ -132,23 +136,18 @@ def with_doc_bytes(df: DataFrame) -> DataFrame:
     )
 
 
-def salted_repartition(
-    df: DataFrame,
-    num_partitions: int,
-    giant_fraction: float = 0.25,
-    max_giants: int = 100_000,
-) -> DataFrame:
+def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
     """Byte-balanced repartition that survives giant-page skew.
 
     A document is one indivisible row, so size skew cannot be fixed by
     key-frequency salting alone — two giants hashing together blows a
     partition.  Strategy (north rule: quantile-thresholded placement):
 
-    * docs below the giant threshold — ``giant_fraction`` of a
+    * docs below the giant threshold — ``GIANT_FRACTION`` of a
       partition's byte budget, floored at the 99th byte quantile —
       balance by law of large numbers under a pure hash slot;
     * docs above it are few by construction (threshold scales with
-      budget, count capped at ``max_giants``): collect their
+      budget, count capped at ``MAX_GIANTS``): collect their
       (id, bytes) to the driver, greedy-LPT them onto the least-loaded
       slots, broadcast the assignment back;
     * one range shuffle on the final slot puts each slot in its own
@@ -170,13 +169,13 @@ def salted_repartition(
     if not total:
         return df.repartition(num_partitions, "doc_id")
     budget = total / num_partitions
-    threshold = max(budget * giant_fraction, stats["q99"] or 0)
+    threshold = max(budget * GIANT_FRACTION, stats["q99"] or 0)
 
     giants = (
         df.where(F.col("n_bytes") > F.lit(threshold))
         .select("doc_id", "n_bytes")
         .orderBy(F.col("n_bytes").desc())
-        .limit(max_giants)
+        .limit(MAX_GIANTS)
         .collect()
     )
 
@@ -275,11 +274,7 @@ def extract_documents(
     )
 
 
-def resolve_media_refs(
-    extracted: DataFrame,
-    media_meta: DataFrame,
-    broadcast_meta: bool = True,
-) -> DataFrame:
+def resolve_media_refs(extracted: DataFrame, media_meta: DataFrame) -> DataFrame:
     """Media-ref resolution join (SURVEY §2.3 joins row): enrich media
     spans with ``media_kind``/``resolved_url`` from a metadata table
     ``(media_ref, media_kind, resolved_url)`` (FIXTURES.md §4).
@@ -287,9 +282,7 @@ def resolve_media_refs(
     Returns the flat enriched span table
     ``(doc_id, offset, kind, text, media_ref, media_kind, resolved_url)``
     — non-media spans pass through with null enrichment (left join).
-    Broadcast the dimension when it fits (default); at 10^12-doc scale
-    with a large media catalog, flip ``broadcast_meta=False`` for a
-    shuffle join and let AQE pick/skew-split it.
+    The metadata dimension is broadcast.
     """
     flat = extracted.select(
         "doc_id", F.explode("spans").alias("s")
@@ -300,9 +293,7 @@ def resolve_media_refs(
         F.col("s.text").alias("text"),
         F.col("s.media_ref").alias("media_ref"),
     )
-    meta = media_meta.select("media_ref", "media_kind", "resolved_url")
-    if broadcast_meta:
-        meta = F.broadcast(meta)
+    meta = F.broadcast(media_meta.select("media_ref", "media_kind", "resolved_url"))
     return flat.join(meta, "media_ref", "left").select(
         "doc_id", "offset", "kind", "text", "media_ref",
         "media_kind", "resolved_url",
@@ -353,9 +344,11 @@ def metrics_table(extracted: DataFrame) -> DataFrame:
     return base.join(exploded_codes, "partition_id", "left")
 
 
-def lineage_table(extracted: DataFrame, snapshot_id: int = 0, attempt: int = 0) -> DataFrame:
+def lineage_table(extracted: DataFrame, snapshot_id: int = 0) -> DataFrame:
     """Per-partition lineage (FIXTURES.md §6): doc-id range + count,
-    for resume audits (no doc processed twice)."""
+    for resume audits (no doc processed twice).  The ``attempt`` column
+    of the sink comes from its ``attempt=<id>`` directory when the
+    table root is read."""
     return (
         extracted.withColumn("partition_id", F.spark_partition_id())
         .groupBy("partition_id")
@@ -365,7 +358,6 @@ def lineage_table(extracted: DataFrame, snapshot_id: int = 0, attempt: int = 0) 
             F.count("*").alias("n_docs"),
         )
         .withColumn("snapshot_id", F.lit(snapshot_id).cast("long"))
-        .withColumn("attempt", F.lit(attempt).cast("int"))
     )
 
 
@@ -449,7 +441,6 @@ def run_job(
     output_path: str,
     checkpoint_path: str | None = None,
     num_partitions: int | None = None,
-    config: ExtractConfig | None = None,
     snapshot_id: int = 0,
     _fault_injection: dict | None = None,
 ) -> dict:
@@ -494,7 +485,7 @@ def run_job(
             ckpt.count()
         docs = filter_done(docs, ckpt)
 
-    extracted = extract_documents(docs, config, num_partitions)
+    extracted = extract_documents(docs, num_partitions=num_partitions)
     extracted = extracted.persist()
     # first action: pin the cache before any sink writes start
     row = extracted.agg(

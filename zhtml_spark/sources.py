@@ -148,16 +148,14 @@ def warc_revisit_record(
     )
 
 
-def _split_warc_rows(
-    archives: DataFrame, content_col: str
-) -> DataFrame:
-    """Archive strings → one ``rec`` row per WARC record (header
-    block + payload, version line stripped) — the shared front end of
-    :func:`parse_warc_records` and :func:`parse_warc_revisits`."""
+def _split_warc_rows(archives: DataFrame) -> DataFrame:
+    """Archive strings (``content``) → one ``rec`` row per WARC record
+    (header block + payload, version line stripped) — the shared front
+    end of :func:`parse_warc_records` and :func:`parse_warc_revisits`."""
     # strip the leading version line so one split expression handles
     # the first record and all subsequent boundaries identically
     body = F.regexp_replace(
-        F.col(content_col), r"\A" + r"WARC/1\.0\r\n", ""
+        F.col("content"), r"\A" + r"WARC/1\.0\r\n", ""
     )
     return archives.select(
         F.explode(
@@ -174,9 +172,7 @@ def _warc_field(hdr_col: Column, name: str) -> Column:
     )
 
 
-def parse_warc_revisits(
-    archives: DataFrame, content_col: str = "content"
-) -> DataFrame:
+def parse_warc_revisits(archives: DataFrame) -> DataFrame:
     """``WARC-Type: revisit`` rows (WARC 1.1 §6.7.2 — a crawler's
     own statement that a fetch produced content it already stored):
     ``(warc_url, warc_date, refers_to_uri, refers_to_date,
@@ -189,7 +185,7 @@ def parse_warc_revisits(
     :func:`parse_warc_records` deliberately drops revisits (they
     carry no body); this is the companion surface that keeps their
     dedup signal."""
-    recs = _split_warc_rows(archives, content_col)
+    recs = _split_warc_rows(archives)
     hdr = F.regexp_extract("rec", r"(?s)^(.*?)(?:\r\n\r\n|$)", 1)
     return (
         recs.select(
@@ -213,9 +209,7 @@ def parse_warc_revisits(
     )
 
 
-def parse_warc_records(
-    archives: DataFrame, content_col: str = "content"
-) -> DataFrame:
+def parse_warc_records(archives: DataFrame) -> DataFrame:
     """Split WARC archive strings into RESPONSE-record rows
     ``(warc_url, warc_date, html, payload_ctype, http_te, http_ce,
     http_status, http_location, http_xrobots, http_link,
@@ -268,7 +262,7 @@ def parse_warc_records(
     # archive table.  The exchange moves raw archive strings only;
     # wide layouts pass through untouched.
     archives = fan_out(archives, key=None)
-    recs = _split_warc_rows(archives, content_col)
+    recs = _split_warc_rows(archives)
     # \z (true end-of-input), NOT $: Java's $ also matches BEFORE a
     # final line terminator, and combined with the non-greedy capture
     # it silently dropped the last CRLF of any payload ending in a
@@ -844,11 +838,7 @@ def cdx_index(records: DataFrame) -> DataFrame:
     )
 
 
-def warc_interleaved_spans(
-    records: DataFrame,
-    config=None,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def warc_interleaved_spans(records: DataFrame, config=None) -> DataFrame:
     """Multi-format extraction over WARC records parsed from the
     BYTE-FAITHFUL carrier (``read_warc(..., charset='ISO-8859-1')``):
     route each record on its payload ``Content-Type`` —
@@ -963,9 +953,7 @@ def warc_interleaved_spans(
         )
     )
     html_spans = (
-        extract_documents(
-            html_docs, config=config, num_partitions=num_partitions
-        )
+        extract_documents(html_docs, config=config)
         .select("doc_id", F.explode("spans").alias("s"))
         .select(
             "doc_id",

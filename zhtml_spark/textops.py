@@ -81,12 +81,12 @@ def _words(col: str = "text") -> Column:
     return F.split(F.col(col), " ")
 
 
-def word_ngrams(n: int, col: str = "text") -> Column:
+def word_ngrams(n: int) -> Column:
     """Distinct word n-grams as an array column (JVM higher-order
     fns), built in LINEAR time: ``arrays_zip`` of ``n`` shifted
     word-array slices + a per-element ``concat_ws`` — every
     ``split``/``slice`` is a row-level operand evaluated once per
-    row.  The previous form sliced ``split(col, ' ')`` INSIDE the
+    row.  The previous form sliced ``split(text, ' ')`` INSIDE the
     transform lambda; CollapseProject-style inlining re-ran the O(n)
     split per element, making every word-shingle op quadratic in doc
     length — 80 s for banded minhash over a corpus whose giant pages
@@ -94,7 +94,7 @@ def word_ngrams(n: int, col: str = "text") -> Column:
     twin of :func:`_char_gram_expr`)."""
     # guard: short docs (< n words) must produce an EMPTY gram array
     # (slice with length <= 0 throws)
-    w = f"split({col}, ' ')"
+    w = "split(text, ' ')"
     ln = f"size({w}) - {n} + 1"
     slices = ", ".join(f"slice({w}, {j + 1}, {ln})" for j in range(n))
     fields = ", ".join(f"s.`{j}`" for j in range(n))
@@ -665,11 +665,10 @@ def _simhash_block_keys(
 def simhash_dup_candidates(
     docs: DataFrame,
     max_hamming: int = 3,
-    bits: int = 48,
     n_blocks: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs with hamming ≤ max_hamming — lossless
-    multi-index pigeonhole banding.
+    multi-index pigeonhole banding over the 48-bit hash.
 
     Split the hash into ``n_blocks`` disjoint bit-blocks.  Hamming ≤ k
     flips at most k blocks, so every qualifying pair agrees on SOME
@@ -689,7 +688,7 @@ def simhash_dup_candidates(
     bounded by dup-pair volume × C(n, k) plus random ~N²/2^|key|
     collisions, no longer by corpus size × bucket count.
     """
-    keyed = _simhash_block_keys(docs, max_hamming, bits, n_blocks)[0]
+    keyed = _simhash_block_keys(docs, max_hamming, 48, n_blocks)[0]
     cands = _bucket_pairs(keyed, "bkey", "simhash")
     return (
         cands.withColumn(
@@ -851,13 +850,14 @@ def nearest_centroid(emb: DataFrame, n_centroids: int = 8) -> DataFrame:
     )
 
 
+# embeddings quantize once to floor(x * VEC_SCALE) BIGINTs (kmeans, PQ)
+VEC_SCALE = 1_000_000
+
+
 def kmeans_centroids(
     emb: DataFrame,
     n_centroids: int = 8,
     iters: int = 3,
-    scale: int = 1_000_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Distributed Lloyd k-means with a FIXED iteration count
     (VERDICT r5 #4) — trains the IVF coarse quantizer from the
@@ -871,7 +871,7 @@ def kmeans_centroids(
     cluster float means are order-dependent sums, so Spark and a SQL
     oracle would disagree in the last ulp and diverge completely
     after one reassignment.  Instead every vector is quantized ONCE
-    — ``floor(x * scale)`` as BIGINT, identical both engines — and
+    — ``floor(x * VEC_SCALE)`` as BIGINT, identical both engines — and
     all k-means arithmetic stays integer: L2 distances are exact
     BIGINT folds in array order, means use truncating integer
     division (``div`` / ``//`` both truncate toward zero), ties
@@ -894,10 +894,10 @@ def kmeans_centroids(
     if n_centroids < 1 or iters < 1:
         raise ValueError("n_centroids and iters must be >= 1")
     q = emb.select(
-        F.col(id_col).alias("vec_id"),
+        F.col("vec_id").alias("vec_id"),
         F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(x.cast("double") * scale).cast("long"),
+            F.col("embedding"),
+            lambda x: F.floor(x.cast("double") * VEC_SCALE).cast("long"),
         ).alias("qv"),
     )
     h = md5_hash48(F.col("vec_id").cast("string"), salt="kmeans|")
@@ -1102,8 +1102,6 @@ def ivf_topk(
 def embed_hashing(
     docs: DataFrame,
     dim: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     hash_fn: str = "md5",
 ) -> DataFrame:
     """Hashing-trick document embedding (VERDICT r4 #6): token →
@@ -1129,14 +1127,14 @@ def embed_hashing(
     winnow/substring).  Bucket = low bits (pmod), sign = a HIGH bit
     (47 for md5-48, 62 for xxhash64) so they are independent.
 
-    Returns (id_col, embedding array<double>); all-empty docs get the
+    Returns (doc_id, embedding array<double>); all-empty docs get the
     zero vector (no NaN from 0/0)."""
     if dim < 1:
         raise ValueError("dim must be >= 1")
     if hash_fn not in ("md5", "xxhash64"):
         raise ValueError(f"hash_fn must be md5|xxhash64, got {hash_fn!r}")
     toks = F.regexp_extract_all(
-        F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+        F.lower(F.coalesce(F.col("text"), F.lit(""))),
         F.lit(r"\w+|[^\w\s]"),
         0,
     )
@@ -1172,7 +1170,7 @@ def embed_hashing(
             + F.when(p["b"] == i, p["s"]).otherwise(F.lit(0).cast("long")),
         ),
     )
-    with_counts = docs.select(id_col, counts.alias("_c"))
+    with_counts = docs.select("doc_id", counts.alias("_c"))
     norm2 = F.aggregate(
         F.col("_c"),
         F.lit(0).cast("long"),
@@ -1187,7 +1185,7 @@ def embed_hashing(
             / F.sqrt(F.col("_n2").cast("double")),
         ),
     ).otherwise(F.transform(F.col("_c"), lambda v: F.lit(0.0)))
-    return with_norm.select(id_col, embedding.alias("embedding"))
+    return with_norm.select("doc_id", embedding.alias("embedding"))
 
 
 def embedding_dup_candidates(
@@ -1240,10 +1238,8 @@ def embedding_dup_candidates(
 
 def parse_robots(
     robots: DataFrame,
-    id_col: str = "host",
-    text_col: str = "text",
 ) -> DataFrame:
-    """Parse robots.txt bodies → (id_col, agent, directive, value)
+    """Parse robots.txt bodies → (host, agent, directive, value)
     rows (RFC 9309 grouping): consecutive ``User-agent`` lines form
     one group sharing the directives that follow; a ``User-agent``
     after a directive starts a new group; rules before any group are
@@ -1255,14 +1251,14 @@ def parse_robots(
     # strip a UTF-8 BOM: Java \\s excludes U+FEFF, so a BOM-prefixed
     # first line would silently drop the leading User-agent and fail
     # the whole gate open (code-review r3b; reference parsers strip it)
-    body = F.regexp_replace(F.col(text_col), "^\\uFEFF", "")
+    body = F.regexp_replace(F.col("text"), "^\\uFEFF", "")
     lines = robots.select(
-        id_col,
+        "host",
         F.posexplode(F.split(body, "\n")).alias("pos", "line"),
     )
     parsed = (
         lines.select(
-            id_col,
+            "host",
             "pos",
             F.lower(
                 F.regexp_extract("line", r"^\s*([A-Za-z-]+)\s*:", 1)
@@ -1279,7 +1275,7 @@ def parse_robots(
         )
         .where(F.col("key") != "")
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy("host").orderBy("pos")
     # EVERY parsed non-user-agent line (rules, sitemap, unknown keys)
     # acts as a group SEPARATOR: a user-agent line after any of them
     # starts a new group.  This is the symmetric seen-separator
@@ -1302,16 +1298,16 @@ def parse_robots(
         .withColumn("grp", F.sum("grp_start").over(w))
     )
     agents = grouped.where(F.col("key") == "user-agent").select(
-        id_col, "grp", F.lower(F.col("value")).alias("agent")
+        "host", "grp", F.lower(F.col("value")).alias("agent")
     )
     directives = grouped.where(
         F.col("key").isin("disallow", "allow", "crawl-delay")
-    ).select(id_col, "grp", F.col("key").alias("directive"), "value")
-    rules = agents.join(directives, [id_col, "grp"]).select(
-        id_col, "agent", "directive", "value"
+    ).select("host", "grp", F.col("key").alias("directive"), "value")
+    rules = agents.join(directives, ["host", "grp"]).select(
+        "host", "agent", "directive", "value"
     )
     sitemaps = grouped.where(F.col("key") == "sitemap").select(
-        id_col,
+        "host",
         F.lit(None).cast("string").alias("agent"),
         F.lit("sitemap").alias("directive"),
         "value",
@@ -1321,7 +1317,7 @@ def parse_robots(
     # empty group as allow-everything, suppressing the * group
     # (code-review r3c); robots_gate keys its group selection on these
     presence = agents.select(
-        id_col,
+        "host",
         "agent",
         F.lit("user-agent").alias("directive"),
         F.lit("").alias("value"),
@@ -1333,8 +1329,6 @@ def robots_gate(
     urls: DataFrame,
     rules: DataFrame,
     agent: str,
-    url_col: str = "url",
-    host_col: str = "host",
 ) -> DataFrame:
     """Per-URL allow/deny against :func:`parse_robots` output for
     ``agent``, with full RFC 9309 matching: literal prefixes, ``*``
@@ -1361,7 +1355,7 @@ def robots_gate(
     # or only a crawl-delay): its presence must still suppress the *
     # group per RFC 9309 (code-review r3b)
     hosts_with = (
-        rules.where(F.col("agent") == al).select(host_col).distinct()
+        rules.where(F.col("agent") == al).select("host").distinct()
     )
     path_rules = rules.where(
         F.col("directive").isin("disallow", "allow")
@@ -1369,7 +1363,7 @@ def robots_gate(
     )
     target = path_rules.where(F.col("agent") == al)
     fallback = path_rules.where(F.col("agent") == "*").join(
-        hosts_with, host_col, "left_anti"
+        hosts_with, "host", "left_anti"
     )
     # RFC 9309 matching: '*' matches any char run, a TRAILING '$'
     # anchors the end; plain rules stay on the cheap literal-prefix
@@ -1404,7 +1398,7 @@ def robots_gate(
         target.unionByName(fallback)
         .where(n_stars <= 2)
         .select(
-            host_col,
+            "host",
             "directive",
             "value",
             has_wild.alias("_wild"),
@@ -1415,12 +1409,12 @@ def robots_gate(
     # path INCLUDING the query — '/*?sessionid=' rules must work);
     # only the fragment is stripped
     path0 = F.regexp_extract(
-        F.col(url_col), r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]+([^#]*)", 1
+        F.col("url"), r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]+([^#]*)", 1
     )
     u = urls.withColumn(
         "_path", F.when(path0 == "", F.lit("/")).otherwise(path0)
     )
-    joined = u.join(eff, host_col, "left")
+    joined = u.join(eff, "host", "left")
     matches = F.when(
         F.col("value").isNull(), F.lit(False)
     ).when(
@@ -1434,11 +1428,11 @@ def robots_gate(
         + (F.col("directive") == "allow").cast("int"),
     )
     return (
-        joined.groupBy(host_col, url_col)
+        joined.groupBy("host", "url")
         .agg(F.max(score).alias("_best"))
         .select(
-            host_col,
-            url_col,
+            "host",
+            "url",
             (
                 F.col("_best").isNull() | (F.col("_best") % 2 == 1)
             ).alias("allowed"),
@@ -1456,7 +1450,6 @@ _NOINDEX_RE = r"(^|[\s,])(noindex|none)($|[\s,:])"
 def crawl_delay(
     rules: DataFrame,
     agent: str,
-    id_col: str = "host",
 ) -> DataFrame:
     """Effective ``Crawl-delay`` per host for ``agent`` from
     :func:`parse_robots` output — the de-facto politeness directive
@@ -1476,7 +1469,7 @@ def crawl_delay(
     mine = rules.where(F.col("agent").isin(al, "*"))
     is_delay = F.col("directive") == "crawl-delay"
     num = F.col("value").try_cast("double")
-    per_host = mine.groupBy(id_col).agg(
+    per_host = mine.groupBy("host").agg(
         F.max((F.col("agent") == al).cast("int")).alias("has_specific"),
         F.max(
             F.when((F.col("agent") == al) & is_delay, num)
@@ -1486,7 +1479,7 @@ def crawl_delay(
         ).alias("star_delay"),
     )
     return per_host.select(
-        id_col,
+        "host",
         F.when(F.col("has_specific") == 1, F.col("spec_delay"))
         .otherwise(F.col("star_delay"))
         .alias("crawl_delay"),
@@ -1496,16 +1489,12 @@ def crawl_delay(
 def fetch_schedule(
     frontier: DataFrame,
     delays: DataFrame,
-    id_col: str = "host",
-    url_col: str = "url",
-    default_delay: float = 1.0,
     order_col: str | None = None,
 ) -> DataFrame:
     """Politeness-scheduled fetch offsets: per host, URLs are ordered
     deterministically and the k-th fetch is scheduled at
     ``(k-1) * delay`` seconds, where ``delay`` is the host's
-    :func:`crawl_delay` (``default_delay`` when the host declares
-    none).  This is the planning half of a polite frontier — the
+    :func:`crawl_delay` (1 s when the host declares none).  This is the planning half of a polite frontier — the
     per-host serialization real fetchers enforce with token buckets,
     made explicit so capacity planning (``max(fetch_at_s)`` per host
     = how long that host's slice takes) is a query, not a simulation.
@@ -1526,20 +1515,20 @@ def fetch_schedule(
     that host's slice — exactly the wall-clock its politeness delay
     implies anyway."""
     if order_col is not None:
-        order = [F.col(order_col).desc_nulls_last(), F.col(url_col)]
+        order = [F.col(order_col).desc_nulls_last(), F.col("url")]
     else:
-        order = [F.col(url_col)]
-    w = Window.partitionBy(id_col).orderBy(*order)
-    joined = frontier.join(delays, id_col, "left")
-    d = F.coalesce(F.col("crawl_delay"), F.lit(float(default_delay)))
+        order = [F.col("url")]
+    w = Window.partitionBy("host").orderBy(*order)
+    joined = frontier.join(delays, "host", "left")
+    d = F.coalesce(F.col("crawl_delay"), F.lit(1.0))
     return joined.select(
-        id_col,
-        url_col,
+        "host",
+        "url",
         ((F.row_number().over(w) - 1) * d).alias("fetch_at_s"),
     )
 
 
-def unified_article_meta(spans: DataFrame, doc_col: str = "doc_id") -> DataFrame:
+def unified_article_meta(spans: DataFrame) -> DataFrame:
     """ONE (headline, published, author) row per document, coalesced
     across every metadata channel the extractor emits — precedence
     JSON-LD > Microdata > RDFa > meta tags (richest and most
@@ -1564,7 +1553,7 @@ def unified_article_meta(spans: DataFrame, doc_col: str = "doc_id") -> DataFrame
 
     def chan(pred, value_col, rank):
         return sp.where(pred).select(
-            doc_col,
+            "doc_id",
             F.col("offset").alias("_off"),
             value_col.alias("_v"),
             F.lit(rank).alias("_rank"),
@@ -1575,7 +1564,7 @@ def unified_article_meta(spans: DataFrame, doc_col: str = "doc_id") -> DataFrame
         for s in sources[1:]:
             u = u.unionByName(s)
         # channel rank first, then document order inside the channel
-        return u.groupBy(doc_col).agg(
+        return u.groupBy("doc_id").agg(
             F.min_by("_v", F.struct("_rank", "_off")).alias("_best")
         )
 
@@ -1610,25 +1599,24 @@ def unified_article_meta(spans: DataFrame, doc_col: str = "doc_id") -> DataFrame
              F.col("text"), 2),
     ]).withColumnRenamed("_best", "author")
 
-    docs = sp.select(doc_col).distinct()
+    docs = sp.select("doc_id").distinct()
     return (
-        docs.join(headline, doc_col, "left")
-        .join(published, doc_col, "left")
-        .join(author, doc_col, "left")
+        docs.join(headline, "doc_id", "left")
+        .join(published, "doc_id", "left")
+        .join(author, "doc_id", "left")
     )
 
 
 def resolve_links_with_base(
     spans: DataFrame,
     page_urls: DataFrame,
-    doc_col: str = "doc_id",
 ) -> DataFrame:
     """Resolve link spans honoring ``<base href>`` (HTML §4.2.3: the
     FIRST base element sets the document base; later ones are
     ignored).  ``spans`` is the exploded span table carrying both the
     ``('meta', value, 'base')`` rows (``emit_head_meta``) and the
     ``('link', anchor, href)`` rows (``emit_links``); ``page_urls``
-    maps ``doc_col`` → ``page_url`` (the fetch URL — a WARC target
+    maps ``doc_id`` → ``page_url`` (the fetch URL — a WARC target
     URI).  The base href may itself be relative, so it first resolves
     against the page URL, then each link resolves against the
     effective base.  Docs with no base span fall back to the page
@@ -1641,22 +1629,22 @@ def resolve_links_with_base(
         spans.where(
             (F.col("kind") == "meta") & (F.col("media_ref") == "base")
         )
-        .groupBy(doc_col)
+        .groupBy("doc_id")
         .agg(F.min_by("text", "offset").alias("_base_href"))
     )
     links = spans.where(F.col("kind") == "link").select(
-        doc_col, F.col("media_ref").alias("href")
+        "doc_id", F.col("media_ref").alias("href")
     )
     joined = (
-        links.join(page_urls, doc_col, "left")
-        .join(base, doc_col, "left")
+        links.join(page_urls, "doc_id", "left")
+        .join(base, "doc_id", "left")
     )
     effective = F.when(
         F.col("_base_href").isNotNull(),
         absolutize_url(F.col("page_url"), F.col("_base_href")),
     ).otherwise(F.col("page_url"))
     return joined.select(
-        doc_col,
+        "doc_id",
         "href",
         absolutize_url(effective, F.col("href")).alias("url"),
     )
@@ -1665,7 +1653,6 @@ def resolve_links_with_base(
 def noindex_gate(
     records: DataFrame,
     spans: DataFrame,
-    doc_col: str = "doc_id",
 ) -> DataFrame:
     """Per-document indexability from BOTH robots channels — the
     ``X-Robots-Tag`` response header (``records.http_xrobots``, as
@@ -1688,7 +1675,7 @@ def noindex_gate(
     left join on the doc key; both co-partition on ``doc_id``, no
     other shuffle — linear at any corpus size."""
     hdr = records.select(
-        F.col("warc_url").alias(doc_col),
+        F.col("warc_url").alias("doc_id"),
         F.lower(F.coalesce(F.col("http_xrobots"), F.lit("")))
         .rlike(_NOINDEX_RE)
         .alias("_hdr_no"),
@@ -1698,7 +1685,7 @@ def noindex_gate(
             (F.col("kind") == "meta")
             & (F.col("media_ref") == "robots")
         )
-        .groupBy(doc_col)
+        .groupBy("doc_id")
         .agg(
             F.max(
                 F.lower(F.coalesce(F.col("text"), F.lit(""))).rlike(
@@ -1708,8 +1695,8 @@ def noindex_gate(
         )
     )
     meta_no = F.coalesce(F.col("_meta_no"), F.lit(False))
-    return hdr.join(meta, doc_col, "left").select(
-        doc_col,
+    return hdr.join(meta, "doc_id", "left").select(
+        "doc_id",
         (~F.col("_hdr_no") & ~meta_no).alias("indexable"),
         F.when(F.col("_hdr_no"), F.lit("header"))
         .when(meta_no, F.lit("meta"))
@@ -1741,8 +1728,6 @@ def winnow_fingerprints(
     docs: DataFrame,
     k: int = 8,
     window: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
@@ -1774,7 +1759,7 @@ def winnow_fingerprints(
 
     Only FULL windows fingerprint (docs shorter than k + window - 1
     chars emit nothing) so engine boundaries are well-defined.
-    Returns (id_col, fp) rows, distinct per doc."""
+    Returns (doc_id, fp) rows, distinct per doc."""
     if k < 1 or window < 1:
         raise ValueError("k and window must be >= 1")
     min_len = k + window - 1
@@ -1784,7 +1769,7 @@ def winnow_fingerprints(
     # 0 per call → quadratic per doc; giant web pages made this 20×
     # (r5, _char_gram_expr).  r8: hash fused into the gram lambda —
     # the gram-string array never materializes (_char_gram_hash_expr)
-    hashes = _char_gram_hash_expr(text_col, k, hash_fn)
+    hashes = _char_gram_hash_expr("text", k, hash_fn)
     # window minimum as a flat least() chain of element_at lookups —
     # stays inside codegen with no per-position slice() array
     # allocation (VERDICT r4 #5: the post-xxhash64 cost is this stage's
@@ -1800,8 +1785,8 @@ def winnow_fingerprints(
     else:
         win_min = f"array_min(slice(h, i, {window}))"
     mins = (
-        f"CASE WHEN length({text_col}) < {min_len} THEN {empty} ELSE "
-        f"transform(sequence(1, length({text_col}) - {min_len} + 1), "
+        f"CASE WHEN length(text) < {min_len} THEN {empty} ELSE "
+        f"transform(sequence(1, length(text) - {min_len} + 1), "
         f"i -> {win_min}) END"
     )
     # consecutive windows usually share their minimum (expected
@@ -1816,11 +1801,11 @@ def winnow_fingerprints(
         "(v, i) -> i = 0 OR v <> m[greatest(i - 1, 0)]))"
     )
     return (
-        fan_out(docs, key=id_col)
-        .select(id_col, text_col)
+        fan_out(docs, key="doc_id")
+        .select("doc_id", "text")
         .withColumn("h", F.expr(hashes))
         .withColumn("m", F.expr(mins))
-        .select(id_col, F.explode(F.expr(fps)).alias("fp"))
+        .select("doc_id", F.explode(F.expr(fps)).alias("fp"))
     )
 
 
@@ -1830,8 +1815,6 @@ def winnow_dup_candidates(
     window: int = 4,
     min_shared: int = 2,
     max_doc_freq: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup candidate pairs sharing >= ``min_shared`` winnowing
@@ -1850,10 +1833,10 @@ def winnow_dup_candidates(
     no join, identical pair counts.
 
     Returns (doc_a, doc_b, shared) with doc_a < doc_b."""
-    fps = winnow_fingerprints(docs, k, window, text_col, id_col, hash_fn)
+    fps = winnow_fingerprints(docs, k, window, hash_fn)
     kept = fps.join(_shared_keys(fps, "fp", max_doc_freq), "fp")
     posting = kept.groupBy("fp").agg(
-        F.array_sort(F.collect_list(id_col)).alias("ids")
+        F.array_sort(F.collect_list("doc_id")).alias("ids")
     )
     pairs = F.explode(
         F.expr(
@@ -2094,7 +2077,6 @@ def _bloom_positions(col: Column, m_bits: int, k: int) -> Column:
 
 def bloom_build(
     df: DataFrame,
-    col: str = "url",
     m_bits: int = 1 << 20,
     k: int = 4,
 ) -> DataFrame:
@@ -2127,7 +2109,7 @@ def bloom_build(
     if k < 1:
         raise ValueError("k must be >= 1")
     pos = df.select(
-        F.explode(_bloom_positions(F.col(col), m_bits, k)).alias("pos")
+        F.explode(_bloom_positions(F.col("url"), m_bits, k)).alias("pos")
     )
     return (
         pos.select(
@@ -2144,12 +2126,11 @@ def bloom_build(
 def bloom_gate(
     df: DataFrame,
     bloom: DataFrame,
-    col: str = "url",
     m_bits: int = 1 << 20,
     k: int = 4,
 ) -> DataFrame:
     """Membership test against a :func:`bloom_build` word table:
-    one (distinct ``col``, ``maybe_seen``) row per candidate value —
+    one (distinct ``url``, ``maybe_seen``) row per candidate value —
     True = all k bits set (present OR false positive), False =
     definitely never inserted.
 
@@ -2164,10 +2145,10 @@ def bloom_gate(
     broke the no-false-negative guarantee on duplicates).  No
     Python, no driver state."""
     pos = df.select(
-        F.col(col),
-        F.explode(_bloom_positions(F.col(col), m_bits, k)).alias("pos"),
+        F.col("url"),
+        F.explode(_bloom_positions(F.col("url"), m_bits, k)).alias("pos"),
     ).select(
-        col,
+        "url",
         F.expr("pos DIV 63").alias("word_idx"),
         F.expr("shiftleft(1L, CAST(pmod(pos, 63) AS INT))").alias("bit"),
     )
@@ -2177,9 +2158,9 @@ def bloom_gate(
         & (F.expr("word & bit") != 0)
     ).cast("int")
     return (
-        joined.groupBy(col)
+        joined.groupBy("url")
         .agg(F.min(hit).alias("_all_hit"))
-        .select(col, (F.col("_all_hit") == 1).alias("maybe_seen"))
+        .select("url", (F.col("_all_hit") == 1).alias("maybe_seen"))
     )
 
 
@@ -2215,9 +2196,6 @@ def url_host(col: Column) -> Column:
 
 def anchor_text_stats(
     links: DataFrame,
-    target_col: str = "resolved",
-    text_col: str = "anchor_text",
-    source_col: str = "doc_id",
 ) -> DataFrame:
     """Incoming anchor-text aggregation per link target — the classic
     web-corpus relevance signal (anchor text describes the TARGET
@@ -2237,33 +2215,31 @@ def anchor_text_stats(
     them silently otherwise — and the anchor tie-break pins NULLS
     LAST, where Spark and DuckDB default opposite ways (code-review
     r4d)."""
-    links = links.where(F.col(target_col).isNotNull())
-    per_anchor = links.groupBy(target_col, text_col).agg(
+    links = links.where(F.col("resolved").isNotNull())
+    per_anchor = links.groupBy("resolved", "anchor_text").agg(
         F.count("*").alias("n")
     )
-    w = Window.partitionBy(target_col).orderBy(
-        F.col("n").desc(), F.col(text_col).asc_nulls_last()
+    w = Window.partitionBy("resolved").orderBy(
+        F.col("n").desc(), F.col("anchor_text").asc_nulls_last()
     )
     top = (
         per_anchor.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select(
-            target_col,
-            F.col(text_col).alias("top_anchor"),
+            "resolved",
+            F.col("anchor_text").alias("top_anchor"),
             F.col("n").alias("top_anchor_count"),
         )
     )
-    totals = links.groupBy(target_col).agg(
+    totals = links.groupBy("resolved").agg(
         F.count("*").alias("n_links"),
-        F.count_distinct(source_col).alias("n_sources"),
+        F.count_distinct("doc_id").alias("n_sources"),
     )
-    return totals.join(top, target_col)
+    return totals.join(top, "resolved")
 
 
 def host_stats(
     docs: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-host crawl-quality report — the standard corpus triage
     view: page count, distinct normalized URLs (URL-dedup ratio per
@@ -2272,9 +2248,9 @@ def host_stats(
     partition so this agg is the fan-in everything else reads."""
     return (
         docs.select(
-            url_host(F.col(url_col)).alias("host"),
-            url_normalize(F.col(url_col)).alias("norm_url"),
-            F.length(text_col).alias("n_chars"),
+            url_host(F.col("url")).alias("host"),
+            url_normalize(F.col("url")).alias("norm_url"),
+            F.length("text").alias("n_chars"),
         )
         .groupBy("host")
         .agg(
@@ -2289,7 +2265,6 @@ def host_stats(
 
 def spans_to_markdown(
     spans: DataFrame,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Render an extracted span table (doc_id, offset, kind, text,
     media_ref) to one markdown document per doc — the common final
@@ -2341,8 +2316,8 @@ def spans_to_markdown(
     # the aggregate, so all-meta pages (redirect stubs, paywall
     # shells) still yield a row with empty markdown — same empty-doc
     # guarantee as line_dedup (code-review r3d)
-    rendered = spans.select(id_col, "offset", md.alias("md"))
-    return rendered.groupBy(id_col).agg(
+    rendered = spans.select("doc_id", "offset", md.alias("md"))
+    return rendered.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.filter(
@@ -2360,7 +2335,6 @@ def spans_to_markdown(
 
 def spans_to_text(
     spans: DataFrame,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Render an extracted span table to one PLAIN-TEXT document per
     doc — the WET form (Common Crawl's extracted-text records), the
@@ -2381,8 +2355,8 @@ def spans_to_text(
         ),
         F.col("text"),
     ).otherwise(F.lit(None).cast("string"))
-    rendered = spans.select(id_col, "offset", txt.alias("t"))
-    return rendered.groupBy(id_col).agg(
+    rendered = spans.select("doc_id", "offset", txt.alias("t"))
+    return rendered.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.filter(
@@ -2400,15 +2374,11 @@ def spans_to_text(
 
 def line_dedup(
     docs: DataFrame,
-    min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
 ) -> DataFrame:
     """Corpus-level line deduplication (the C4 pipeline's famous
-    pass: any line occurring ``min_count``+ times across the corpus —
+    pass: any line occurring twice or more across the corpus —
     cookie banners, nav text, boilerplate — is removed from EVERY
-    document).  Returns (id_col, text) with surviving lines rejoined
+    document).  Returns (doc_id, text) with surviving lines rejoined
     in original order; documents losing all lines keep an empty
     string.
 
@@ -2419,14 +2389,13 @@ def line_dedup(
     lines inside the aggregate.  Two shuffles total; every document
     keeps at least its (possibly empty) first line row, so docs that
     lose everything still come back with empty text — no extra
-    docs-side scan.  ``sep`` is escaped before the regex split, so
-    any literal separator works."""
+    docs-side scan."""
     import re as _re
 
     lines = docs.select(
-        id_col,
+        "doc_id",
         F.posexplode(
-            F.split(F.col(text_col), _re.escape(sep))
+            F.split(F.col("text"), _re.escape("\n"))
         ).alias("pos", "line"),
     )
     keyed = lines.withColumn(
@@ -2440,11 +2409,11 @@ def line_dedup(
         keyed.where(F.col("lk").isNotNull())
         .groupBy("lk")
         .agg(F.count("*").alias("c"))
-        .where(F.col("c") >= min_count)
+        .where(F.col("c") >= 2)
         .select("lk", F.lit(True).alias("_dup"))
     )
     flagged = keyed.join(dup_keys, "lk", "left")
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.filter(
@@ -2457,15 +2426,13 @@ def line_dedup(
                 ),
                 lambda s: s["line"],
             ),
-            sep,
-        ).alias(text_col)
+            "\n",
+        ).alias("text")
     )
 
 
 def dedup_by_canonical(
     docs: DataFrame,
-    url_col: str = "url",
-    canonical_col: str = "canonical",
 ) -> DataFrame:
     """Canonical-URL dedup tier: a page declaring ``rel=canonical``
     (harvested by ``ExtractConfig.emit_head_meta``) dedupes under the
@@ -2479,13 +2446,13 @@ def dedup_by_canonical(
     to the page's own URL rather than becoming a cross-host group key
     (code-review r3c); a null canonical groups by the page's own URL.
     One hash-agg shuffle."""
-    resolved = absolutize_url(F.col(url_col), F.col(canonical_col))
+    resolved = absolutize_url(F.col("url"), F.col("canonical"))
     eff = F.when(
-        F.col(canonical_col).isNotNull()
-        & (F.col(canonical_col) != "")
+        F.col("canonical").isNotNull()
+        & (F.col("canonical") != "")
         & resolved.rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*://"),
         resolved,
-    ).otherwise(F.col(url_col))
+    ).otherwise(F.col("url"))
     return (
         docs.withColumn("norm_url", url_normalize(eff))
         .groupBy("norm_url")
@@ -2497,8 +2464,6 @@ def dedup_by_canonical(
 def hreflang_clusters(
     pages: DataFrame,
     alternates: DataFrame,
-    url_col: str = "url",
-    alt_col: str = "alt",
 ) -> DataFrame:
     """Group pages that declare each other as language alternates
     (``rel=alternate hreflang`` — harvested by ``emit_head_meta`` as
@@ -2517,11 +2482,11 @@ def hreflang_clusters(
     :func:`dedup_components` if that recovery matters.  Plan: one
     union + one hash-agg on the page URL, combinable."""
     members = alternates.select(
-        url_col, F.col(alt_col).alias("_m")
+        "url", F.col("alt").alias("_m")
     ).unionByName(
-        pages.select(url_col, F.col(url_col).alias("_m"))
+        pages.select("url", F.col("url").alias("_m"))
     )
-    return members.groupBy(url_col).agg(
+    return members.groupBy("url").agg(
         F.min("_m").alias("cluster_id"),
         F.count_distinct("_m").alias("n_members"),
     )
@@ -2566,8 +2531,6 @@ def link_header_canonical(link_header: Column) -> Column:
 
 def sitemap_entries(
     sitemaps: DataFrame,
-    id_col: str = "host",
-    text_col: str = "text",
 ) -> DataFrame:
     """Full sitemap entries — ``<loc>`` plus the scheduling metadata
     real recrawl planners consume: ``lastmod`` (drives conditional
@@ -2582,7 +2545,7 @@ def sitemap_entries(
     Projection + explode, no shuffle; ``is_index`` marks sitemapindex
     blocks (their locs are sitemap URLs to fetch, not page URLs)."""
     blocks = F.expr(
-        f"regexp_extract_all({text_col}, "
+        "regexp_extract_all(text, "
         "'(?s)<(?:url|sitemap)>(.*?)</(?:url|sitemap)>', 1)"
     )
 
@@ -2598,12 +2561,12 @@ def sitemap_entries(
 
     return (
         sitemaps.select(
-            id_col,
-            F.col(text_col).contains("<sitemapindex").alias("is_index"),
+            "host",
+            F.col("text").contains("<sitemapindex").alias("is_index"),
             F.explode(blocks).alias("block"),
         )
         .select(
-            id_col,
+            "host",
             "is_index",
             F.regexp_replace(field("loc"), "&amp;", "&").alias("url"),
             field("lastmod").alias("lastmod"),
@@ -2643,12 +2606,12 @@ def quality_filter(
     min_tokens: int = 8,
     max_tokens: int = 100_000,
     max_avg_word_len: float = 12.0,
-    min_stopword_ratio: float = 0.0,
     min_uniq_ratio: float = 0.2,
 ) -> DataFrame:
     """Composed Gopher/C4-style quality gate: keep documents passing
     ALL heuristic thresholds (token-count window, mean word length,
-    stopword floor, repetition ceiling via unique-token ratio) —
+    a non-null stopword ratio, repetition ceiling via unique-token
+    ratio) —
     published filter families (Gopher, Rae et al. 2021 §A1.1; C4,
     Raffel et al. 2020 §2.2), composed over ``text_quality``'s
     features.  One narrow projection + filter, no shuffle; at corpus
@@ -2658,7 +2621,7 @@ def quality_filter(
         (F.col("n_tokens") >= min_tokens)
         & (F.col("n_tokens") <= max_tokens)
         & (F.col("avg_word_len") <= max_avg_word_len)
-        & (F.col("stopword_ratio") >= min_stopword_ratio)
+        & (F.col("stopword_ratio") >= 0.0)
         & (F.col("uniq_ratio") >= min_uniq_ratio)
     ).select("doc_id")
     return docs.join(keep, "doc_id").select("doc_id", "text")
@@ -2766,7 +2729,6 @@ def _langid_score_vector(
 
 def lang_id_v2(
     docs: DataFrame,
-    text_col: str = "text",
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Hashed char-trigram Naive-Bayes language id (VERDICT r5 #7;
@@ -2797,7 +2759,7 @@ def lang_id_v2(
     # lang gate stragglers ran 30+ min (r6).  _char_gram_expr
     # references its source many times, so the alias never collapses.
     low = fan_out(docs).select(
-        "doc_id", F.lower(F.col(text_col)).alias("_lt")
+        "doc_id", F.lower(F.col("text")).alias("_lt")
     )
     grams = F.expr(_char_gram_expr("_lt", 3))
     bucketed = low.select(
@@ -2825,7 +2787,6 @@ def lang_gate(
     lang: str = "en",
     min_lm_score: int | dict[str, int] = -8_000_000,
     max_chars: int | None = 2000,
-    text_col: str = "text",
     langs: tuple[str, ...] | None = None,
     hash_fn: str = "xxhash64",
     with_lang: bool = False,
@@ -2879,7 +2840,7 @@ def lang_gate(
     # FIRST — an O(n) expression passed as the gram source would
     # re-evaluate per position in the short-doc branch (the r5-a
     # quadratic; see lang_id_v2)
-    src = F.lower(F.col(text_col))
+    src = F.lower(F.col("text"))
     if max_chars is not None:
         # substring from pos 1 is O(max_chars), never O(doc) — the
         # giant-page guard
@@ -2970,7 +2931,6 @@ def lang_gate(
 def trigram_lm_score(
     docs: DataFrame,
     lang: str = "en",
-    text_col: str = "text",
     hash_fn: str = "xxhash64",
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -3005,7 +2965,7 @@ def trigram_lm_score(
     # quadratic trap — see lang_id_v2)
     keep = list(keep_cols)
     low = fan_out(docs).select(
-        "doc_id", *keep, F.lower(F.col(text_col)).alias("_lt")
+        "doc_id", *keep, F.lower(F.col("text")).alias("_lt")
     )
     grams = F.expr(_char_gram_expr("_lt", 3))
     bucketed = low.select(
@@ -3153,7 +3113,6 @@ def pack_sequences(
     docs: DataFrame,
     budget_tokens: int = 2048,
     n_buckets: int = 256,
-    text_col: str = "text",
 ) -> DataFrame:
     """Sequence packing for LLM pretraining: assign documents to
     fixed-token-budget packs (the batch-construction pass between
@@ -3183,7 +3142,7 @@ def pack_sequences(
         raise ValueError("budget_tokens and n_buckets must be >= 1")
     toks = docs.select(
         "doc_id",
-        _n_tokens(text_col).alias("n_tokens"),
+        _n_tokens("text").alias("n_tokens"),
         (md5_hash48(F.col("doc_id").cast("string"), salt="pack:")
          % n_buckets).alias("bucket"),
         md5_hash48(F.col("doc_id").cast("string"), salt="order:").alias(
@@ -3216,10 +3175,12 @@ def pack_sequences(
     )
 
 
+# BPE word filter: longer whitespace-split words are dropped
+BPE_MAX_WORD_LEN = 64
+
+
 def bpe_pair_stats(
     docs: DataFrame,
-    text_col: str = "text",
-    max_word_len: int = 64,
 ) -> DataFrame:
     """Adjacent-character pair counts over the corpus vocabulary —
     the statistic the first BPE merge iteration (Sennrich et al.,
@@ -3232,7 +3193,7 @@ def bpe_pair_stats(
     pair explode runs over the VOCABULARY (sublinear in corpus size,
     Heaps' law), not over every token occurrence; the only
     corpus-sized stage is the word-count hash-agg, which is map-side
-    combinable.  Words longer than ``max_word_len`` are dropped
+    combinable.  Words longer than ``BPE_MAX_WORD_LEN`` are dropped
     (unbroken minified-JS/base64 runs are noise to a tokenizer and
     would make the per-word pair loop quadratic via substring's
     O(position) re-scan — the CLAUDE.md gram-plan rule; real BPE
@@ -3244,7 +3205,7 @@ def bpe_pair_stats(
     the Spark plan from the DuckDB oracle (the CLAUDE.md
     cross-engine regex-class gotcha; code-review r5)."""
     words = F.explode(
-        F.split(F.col(text_col), "[ \t\n\r\f]+")
+        F.split(F.col("text"), "[ \t\n\r\f]+")
     ).alias("word")
     wc = (
         docs.select(words)
@@ -3253,7 +3214,7 @@ def bpe_pair_stats(
         .agg(F.count("*").alias("n"))
     )
     pairs = wc.where(
-        (F.length("word") >= 2) & (F.length("word") <= max_word_len)
+        (F.length("word") >= 2) & (F.length("word") <= BPE_MAX_WORD_LEN)
     ).select(
         F.explode(
             F.expr(
@@ -3286,7 +3247,6 @@ def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
     n: int = 8,
-    text_col: str = "text",
 ) -> DataFrame:
     """Benchmark decontamination: drop every training document that
     shares at least one word ``n``-gram with an evaluation/benchmark
@@ -3300,10 +3260,10 @@ def decontaminate(
     never a cross join, no Python.  Returns the CLEAN subset of
     ``docs`` (all original columns)."""
     bench_grams = benchmark.select(
-        F.explode(word_ngrams(n, text_col)).alias("gram")
+        F.explode(word_ngrams(n)).alias("gram")
     ).distinct()
     doc_grams = docs.select(
-        "doc_id", F.explode(word_ngrams(n, text_col)).alias("gram")
+        "doc_id", F.explode(word_ngrams(n)).alias("gram")
     )
     dirty = (
         doc_grams.join(F.broadcast(bench_grams), "gram")
@@ -3323,7 +3283,7 @@ _PII_IPV4 = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 _PII_PHONE = r"\+?\b\d[\d -]{7,}\d\b"
 
 
-def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """PII scrub: emails / bare IPv4s / phone-like digit runs → typed
     placeholder tokens, as one JVM ``regexp_replace`` chain (zero
     Python; order matters — emails first so their digits never match
@@ -3334,7 +3294,7 @@ def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
     text that already contains a literal ``<EMAIL>``/``<IP>``/
     ``<PHONE>`` token is never miscounted as a redaction
     (code-review r3)."""
-    t = F.col(text_col)
+    t = F.col("text")
     step1 = F.regexp_replace(t, _PII_EMAIL, "<EMAIL>")
     step2 = F.regexp_replace(step1, _PII_IPV4, "<IP>")
     clean = F.regexp_replace(step2, _PII_PHONE, "<PHONE>")
@@ -3351,7 +3311,7 @@ def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def repetition_stats(
-    docs: DataFrame, n: int = 3, text_col: str = "text"
+    docs: DataFrame, n: int = 3
 ) -> DataFrame:
     """Gopher-style within-document repetition features: total vs
     distinct word ``n``-gram counts and a ``repetitive`` flag (more
@@ -3359,9 +3319,9 @@ def repetition_stats(
     Integer arithmetic end-to-end (the flag compares
     ``(total-distinct)*10 > total*3``), so the DuckDB oracle is exact
     with no float-rounding hazard.  Projection only — no shuffle."""
-    words = F.split(F.col(text_col), " ")
+    words = F.split(F.col("text"), " ")
     total = F.greatest(F.size(words) - F.lit(n - 1), F.lit(0))
-    distinct = F.size(word_ngrams(n, text_col))
+    distinct = F.size(word_ngrams(n))
     return docs.select(
         "doc_id",
         total.cast("int").alias("total_ngrams"),
@@ -3377,7 +3337,6 @@ def hash_sample(
     rate_pct: int = 10,
     by_rates: dict[str, int] | None = None,
     by: str = "lang",
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic (reproducible, engine-portable) sampling: keep a
     row iff its md5-derived 48-bit hash modulo 100 falls under the
@@ -3385,7 +3344,7 @@ def hash_sample(
     the IDENTICAL sample.  ``by_rates`` gives per-group percentages
     (e.g. upsample low-resource languages), ``rate_pct`` the default.
     Plain filter — no shuffle, pushes to the scan."""
-    bucket = md5_hash48(F.col(key_col).cast("string"), salt="sample|") % 100
+    bucket = md5_hash48(F.col("doc_id").cast("string"), salt="sample|") % 100
     if by_rates:
         rate: Column = F.lit(rate_pct)
         for key, pct in sorted(by_rates.items()):
@@ -3398,8 +3357,6 @@ def hash_sample(
 def resolve_redirects(
     edges: DataFrame,
     max_hops: int = 8,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Follow redirect chains to their final target — (src, final,
     hops, resolved) per redirecting URL.  The crawl-graph closure
@@ -3417,7 +3374,7 @@ def resolve_redirects(
     the lexicographically smallest — deterministic on both engines."""
     e = (
         edges.select(
-            F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")
+            F.col("src").alias("_s"), F.col("dst").alias("_d")
         )
         .groupBy("_s")
         .agg(F.min("_d").alias("_d"))
@@ -3453,7 +3410,6 @@ def resolve_redirects(
 def recrawl_candidates(
     entries: DataFrame,
     captures: DataFrame,
-    url_col: str = "url",
 ) -> DataFrame:
     """Recrawl planning: join sitemap entries
     (:func:`sitemap_entries`) against the crawl's capture index
@@ -3478,13 +3434,13 @@ def recrawl_candidates(
     Cost: one max-agg over captures (map-side combinable) + one left
     join on the URL key; index entries per URL, not per capture,
     reach the join."""
-    last_cap = captures.groupBy(url_col).agg(
+    last_cap = captures.groupBy("url").agg(
         F.max("ts14").alias("last_ts14")
     )
     lastmod14 = F.rpad(
         F.regexp_replace(F.col("lastmod"), r"[^0-9]", ""), 14, "0"
     )
-    joined = entries.join(last_cap, url_col, "left")
+    joined = entries.join(last_cap, "url", "left")
     reason = F.when(F.col("last_ts14").isNull(), F.lit("new")).when(
         F.col("lastmod").isNotNull()
         & (lastmod14 > F.col("last_ts14")),
@@ -3493,7 +3449,7 @@ def recrawl_candidates(
     return (
         joined.withColumn("reason", reason)
         .where(F.col("reason").isNotNull())
-        .select(url_col, "reason")
+        .select("url", "reason")
     )
 
 
@@ -3584,7 +3540,6 @@ def substring_dup_spans(
     docs: DataFrame,
     k: int = 25,
     min_len: int = 40,
-    text_col: str = "text",
     max_gram_freq: int | None = 20,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
@@ -3628,7 +3583,7 @@ def substring_dup_spans(
     # an array<bigint> of gram hashes directly — the k-char
     # gram-string array never materializes (_char_gram_hash_expr;
     # also validates hash_fn)
-    arr_h = F.expr(_char_gram_hash_expr(text_col, k, hash_fn))
+    arr_h = F.expr(_char_gram_hash_expr("text", k, hash_fn))
     docs = fan_out(docs)
     # Positioned pass as a ROW-ENGINE hybrid (r8): higher-order
     # lambdas evaluate interpreted (no whole-stage codegen), and at
@@ -3643,28 +3598,28 @@ def substring_dup_spans(
     # dwarf interpreter overhead.  Gram strings, hashes, positions
     # are identical in both branches.
     if hash_fn == "xxhash64":
-        row_hash = f"xxhash64(substring({text_col}, pos + 1, {k}))"
+        row_hash = f"xxhash64(substring(text, pos + 1, {k}))"
     else:
         row_hash = (
-            f"CAST(conv(substring(md5(substring({text_col}, pos + 1,"
+            f"CAST(conv(substring(md5(substring(text, pos + 1,"
             f" {k})), 1, 12), 16, 10) AS BIGINT)"
         )
     switch_chars = 48 * k
     pos_range = (
-        f"CASE WHEN length({text_col}) < {k} THEN "
+        f"CASE WHEN length(text) < {k} THEN "
         f"CAST(array() AS ARRAY<INT>) "
-        f"ELSE sequence(0, length({text_col}) - {k}) END"
+        f"ELSE sequence(0, length(text) - {k}) END"
     )
     short = (
-        docs.where(F.length(text_col) < switch_chars)
+        docs.where(F.length("text") < switch_chars)
         .select(
             "doc_id",
-            F.col(text_col),
+            F.col("text"),
             F.explode(F.expr(pos_range)).alias("pos"),
         )
         .select("doc_id", "pos", F.expr(row_hash).alias("gh"))
     )
-    giant = docs.where(F.length(text_col) >= switch_chars).select(
+    giant = docs.where(F.length("text") >= switch_chars).select(
         "doc_id", F.posexplode(arr_h).alias("pos", "gh")
     )
     grams = short.unionByName(giant)
@@ -3738,7 +3693,6 @@ def substring_dup_spans(
 def substring_dedup_apply(
     docs: DataFrame,
     spans: DataFrame,
-    text_col: str = "text",
 ) -> DataFrame:
     """APPLY exact-substring dedup (the action half of
     :func:`substring_dup_spans`, completing the Lee-et-al pipeline:
@@ -3786,19 +3740,19 @@ def substring_dedup_apply(
     splice = F.expr(
         "aggregate(_cuts, struct(0L as pos, '' as acc), "
         "(st, c) -> struct(CAST(c.ce AS BIGINT) as pos, "
-        f"concat(st.acc, substring({text_col}, "
+        "concat(st.acc, substring(text, "
         "CAST(st.pos AS INT) + 1, CAST(c.cs - st.pos AS INT))) as acc), "
-        f"st -> concat(st.acc, substring({text_col}, "
-        f"CAST(st.pos AS INT) + 1, length({text_col}))))"
+        "st -> concat(st.acc, substring(text, "
+        "CAST(st.pos AS INT) + 1, length(text))))"
     )
     cut_chars = F.expr(
         "aggregate(_cuts, 0L, (n, c) -> n + c.ce - c.cs)"
     )
     return joined.select(
         "doc_id",
-        F.when(F.col("_cuts").isNull(), F.col(text_col))
+        F.when(F.col("_cuts").isNull(), F.col("text"))
         .otherwise(splice)
-        .alias(text_col),
+        .alias("text"),
         F.coalesce(cut_chars, F.lit(0)).cast("long").alias("n_cut_chars"),
     )
 
@@ -3807,7 +3761,6 @@ def substring_gram_stats(
     docs: DataFrame,
     k: int = 25,
     max_gram_freq: int = 20,
-    text_col: str = "text",
 ) -> dict:
     """Plan-evidence helper for :func:`substring_dup_spans` (mirrors
     ``minhash_band_stats``; VERDICT r3 #2): per-k-gram bucket stats
@@ -3817,7 +3770,7 @@ def substring_gram_stats(
     rows (the a.doc < b.doc filter only shrinks it); ``max_bucket`` is
     the largest position list a single gram fans out to.  ONE
     aggregation pass serves both variants."""
-    arr = F.expr(_char_gram_expr(text_col, k))
+    arr = F.expr(_char_gram_expr("text", k))
     per_gram = (
         docs.select("doc_id", F.explode(arr).alias("gram"))
         .select("doc_id", md5_hash48(F.col("gram")).alias("gh"))
@@ -3849,8 +3802,6 @@ def winnow_candidate_stats(
     k: int = 8,
     window: int = 4,
     max_doc_freq: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     hash_fn: str = "xxhash64",
 ) -> dict:
     """Plan-evidence helper for :func:`winnow_dup_candidates` (mirrors
@@ -3861,7 +3812,7 @@ def winnow_candidate_stats(
     headers/footers) dominate the uncapped sum on web-shaped corpora
     and are what the cap removes.  ONE aggregation pass serves both
     variants."""
-    fps = winnow_fingerprints(docs, k, window, text_col, id_col, hash_fn)
+    fps = winnow_fingerprints(docs, k, window, hash_fn)
     per_fp = fps.groupBy("fp").agg(F.count("*").alias("df"))
     v = _bucket_volume(per_fp, "df", F.col("df") <= max_doc_freq)
     return {
@@ -3952,26 +3903,27 @@ def absolutize_url(base: Column, ref: Column) -> Column:
     return F.concat(head, tail)
 
 
+# pagerank's quantized rank mass: sum(rank_q) ≈ PAGERANK_SCALE
+PAGERANK_SCALE = 10**12
+
+
 def pagerank(
     edges: DataFrame,
     iters: int = 4,
     damping_pct: int = 85,
-    scale: int = 10**12,
-    src_col: str = "src",
-    dst_col: str = "dst",
     checkpoint: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a link graph — the classic
     crawl-quality weight (Common Crawl ranks hosts exactly this way
     and trains e.g. CCNet/RefinedWeb-style corpus curation on it).
     Returns ``(node, rank_q)`` with ranks in quantized integer space,
-    ``sum(rank_q) ≈ scale`` (minus integer-truncation dust).
+    ``sum(rank_q) ≈ PAGERANK_SCALE`` (minus integer-truncation dust).
 
     Cross-engine exactness (the kmeans_centroids recipe): float
     PageRank sums are order-dependent, so ALL arithmetic stays
     BIGINT — per-edge contribution ``r div outdeg``, damping
-    ``(85 * x) div 100``, teleport ``((scale * 15) div 100) div n``
-    — identical truncating division both engines.  ``scale`` 10^12
+    ``(85 * x) div 100``, teleport ``((PAGERANK_SCALE * 15) div 100)
+    div n`` — identical truncating division both engines.  The 10^12
     keeps 12 significant digits while ``damping_pct * (contrib +
     share)`` stays under 2^63 at any graph size.
 
@@ -4005,7 +3957,7 @@ def pagerank(
         raise ValueError("damping_pct must be in (0, 100)")
     e = (
         edges.select(
-            F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")
+            F.col("src").alias("_s"), F.col("dst").alias("_d")
         )
         .where(F.col("_s") != F.col("_d"))
         .distinct()
@@ -4021,12 +3973,12 @@ def pagerank(
     nn = nodes.agg(F.count("*").alias("n"))
     # ranks carry n so the per-node teleport term needs no re-join
     ranks = nodes.crossJoin(F.broadcast(nn)).select(
-        "node", "n", F.expr(f"{scale} div n").alias("r")
+        "node", "n", F.expr(f"{PAGERANK_SCALE} div n").alias("r")
     )
     edges_w = e.join(outdeg, e["_s"] == outdeg["node"]).select(
         "_s", "_d", "outdeg"
     )
-    teleport = f"(({scale} * {100 - damping_pct}) div 100) div n"
+    teleport = f"(({PAGERANK_SCALE} * {100 - damping_pct}) div 100) div n"
     spark = edges.sparkSession
     prev_ids: set = set()
     if checkpoint:
@@ -4078,7 +4030,6 @@ def rebalance_sample(
     docs: DataFrame,
     target_bp: dict[str, int],
     by: str = "lang",
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Sample a corpus DOWN to a target group distribution (language
     rebalancing à la The Pile / CC multilingual mixes): ``target_bp``
@@ -4124,7 +4075,7 @@ def rebalance_sample(
             "((share_bp * t_total) div 10000) * 1000000 div cnt"
         ).alias("rate_ppm"),
     )
-    h = md5_hash48(F.col(key_col).cast("string"), salt="rebal|")
+    h = md5_hash48(F.col("doc_id").cast("string"), salt="rebal|")
     return docs.join(F.broadcast(rates), by).where(
         h % 1_000_000 < F.col("rate_ppm")
     )
@@ -4146,9 +4097,6 @@ def pq_books(
     k: int = 8,
     iters: int = 2,
     dim: int = 64,
-    scale: int = 1_000_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Product-quantization codebooks: split each ``dim``-vector into
     ``m`` subspaces of ``dim/m`` and train ``k`` centroids per
@@ -4166,11 +4114,11 @@ def pq_books(
     books = None
     for j in range(m):
         sub = emb.select(
-            F.col(id_col).alias("vec_id"),
-            F.slice(F.col(vec_col), j * d + 1, d).alias("embedding"),
+            F.col("vec_id").alias("vec_id"),
+            F.slice(F.col("embedding"), j * d + 1, d).alias("embedding"),
         )
         bk = kmeans_centroids(
-            sub, n_centroids=k, iters=iters, scale=scale
+            sub, n_centroids=k, iters=iters
         ).select(
             F.lit(j).cast("int").alias("sub_idx"),
             F.col("centroid_id").alias("code"),
@@ -4185,9 +4133,6 @@ def pq_codes(
     books: DataFrame,
     m: int = 4,
     dim: int = 64,
-    scale: int = 1_000_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """PQ encoder: assign every vector's j-th quantized subvector to
     its nearest codebook centroid (exact BIGINT L2, ``(dist, code)``
@@ -4202,10 +4147,10 @@ def pq_codes(
     parts = None
     for j in range(m):
         q = emb.select(
-            F.col(id_col).alias("vec_id"),
+            F.col("vec_id").alias("vec_id"),
             F.transform(
-                F.slice(F.col(vec_col), j * d + 1, d),
-                lambda x: F.floor(x.cast("double") * scale).cast(
+                F.slice(F.col("embedding"), j * d + 1, d),
+                lambda x: F.floor(x.cast("double") * VEC_SCALE).cast(
                     "long"
                 ),
             ).alias("qv"),
@@ -4238,8 +4183,6 @@ def pq_adc_topk(
     k: int = 8,
     iters: int = 2,
     dim: int = 64,
-    scale: int = 1_000_000,
-    books: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes (the classic
     IVFADC-style scan without the coarse stage): each query computes
@@ -4255,11 +4198,8 @@ def pq_adc_topk(
     Queries are the first ``n_queries`` vectors (like
     :func:`cosine_topk`); self-matches excluded.  Returns
     ``(query_id, neighbor_id, rank, adist)``."""
-    if books is None:
-        books = pq_books(
-            emb, m=m, k=k, iters=iters, dim=dim, scale=scale
-        )
-    codes = pq_codes(emb, books, m=m, dim=dim, scale=scale)
+    books = pq_books(emb, m=m, k=k, iters=iters, dim=dim)
+    codes = pq_codes(emb, books, m=m, dim=dim)
     d = dim // m
     qsub = None
     for j in range(m):
@@ -4268,7 +4208,7 @@ def pq_adc_topk(
             F.lit(j).cast("int").alias("sub_idx"),
             F.transform(
                 F.slice(F.col("embedding"), j * d + 1, d),
-                lambda x: F.floor(x.cast("double") * scale).cast(
+                lambda x: F.floor(x.cast("double") * VEC_SCALE).cast(
                     "long"
                 ),
             ).alias("qv"),
@@ -4299,8 +4239,6 @@ def pq_adc_topk(
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 4,
-    text_col: str = "text",
-    max_word_len: int = 64,
     checkpoint: bool = False,
 ) -> DataFrame:
     """Distributed BPE tokenizer TRAINING (Sennrich et al. ACL'16 —
@@ -4330,7 +4268,7 @@ def bpe_train(
     tree — the :func:`pagerank` trade); real vocab-sized runs (K in
     the tens of thousands) pass ``checkpoint=True`` for per-round
     materialization at O(K) cost.  Words longer than
-    ``max_word_len`` are dropped (minified/base64 runs are noise to
+    ``BPE_MAX_WORD_LEN`` are dropped (minified/base64 runs are noise to
     a tokenizer); words containing U+001F/U+001E would corrupt the
     carrier and are dropped (never legitimate text)."""
     if n_merges < 1:
@@ -4339,12 +4277,12 @@ def bpe_train(
     wc = (
         docs.select(
             F.explode(
-                F.split(F.col(text_col), "[ \t\n\r\f]+")
+                F.split(F.col("text"), "[ \t\n\r\f]+")
             ).alias("word")
         )
         .where(
             (F.length("word") >= 1)
-            & (F.length("word") <= max_word_len)
+            & (F.length("word") <= BPE_MAX_WORD_LEN)
             & ~F.col("word").contains(sep)
             & ~F.col("word").contains("\x1e")
         )
@@ -4416,9 +4354,6 @@ def bpe_train(
 def bpe_encode(
     docs: DataFrame,
     merges: DataFrame,
-    text_col: str = "text",
-    max_word_len: int = 64,
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Apply a trained BPE merge table (:func:`bpe_train`) to a
     corpus and return per-document token accounting ``(doc_id,
@@ -4443,22 +4378,20 @@ def bpe_encode(
     expression chain — one plan node however many merges); the
     corpus-scale side is one hash join of the encoded vocabulary
     onto the exploded word stream plus a map-side-combinable per-doc
-    sum.  ``broadcast_vocab`` pins the join broadcast (default —
-    vocabularies up to ~10⁷ words fit executors); at open-web scale
-    where the long-tail vocabulary outgrows that, pass ``False`` and
-    let AQE shuffle the word join instead.  Words failing training's
-    own filters (> ``max_word_len`` chars, or containing
+    sum.  The encoded vocabulary is broadcast into that join
+    (vocabularies up to ~10⁷ words fit executors).  Words failing
+    training's own filters (> ``BPE_MAX_WORD_LEN`` chars, or containing
     U+001F/U+001E) are excluded from BOTH counts, matching what the
     tokenizer was trained on."""
     sep = "\x1f"
     words = docs.select(
         "doc_id",
         F.explode(
-            F.split(F.col(text_col), "[ \t\n\r\f]+")
+            F.split(F.col("text"), "[ \t\n\r\f]+")
         ).alias("word"),
     ).where(
         (F.length("word") >= 1)
-        & (F.length("word") <= max_word_len)
+        & (F.length("word") <= BPE_MAX_WORD_LEN)
         & ~F.col("word").contains(sep)
         & ~F.col("word").contains("\x1e")
     )
@@ -4490,10 +4423,8 @@ def bpe_encode(
             F.size(F.split("_sym", sep)).alias("_tok_n"),
         )
     )
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
     return (
-        words.join(vocab, "word")
+        words.join(F.broadcast(vocab), "word")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_words"),
@@ -4508,11 +4439,10 @@ def decontaminate_fuzzy(
     n: int = 3,
     bands: int = 4,
     rows: int = 2,
-    min_bands: int = 1,
 ) -> DataFrame:
     """NEAR-duplicate benchmark decontamination: drop every training
     document whose banded MinHash signature collides with an
-    evaluation/benchmark document in ≥ ``min_bands`` bands — the
+    evaluation/benchmark document in at least one band — the
     fuzzy companion to :func:`decontaminate` (exact n-gram overlap),
     catching lightly-edited / paraphrased eval leakage that shares no
     verbatim 8-gram (the Llama/GPT-4 eval-contamination reports'
@@ -4533,37 +4463,40 @@ def decontaminate_fuzzy(
         .distinct()
     )
     sig = _band_signatures(docs.select("doc_id", "text"), n, bands, rows)
-    dirty = _dominated_ids(sig, F.broadcast(buckets), min_bands)
+    dirty = _dominated_ids(sig, F.broadcast(buckets), 1)
     return docs.join(dirty, "doc_id", "left_anti")
 
 
-def with_log2q(
-    df: DataFrame, x_col: str, out_col: str, frac_bits: int = 8
-) -> DataFrame:
+# fractional bits of the fixed-point log2 (with_log2q, log2q_int)
+LOG2Q_FRAC_BITS = 8
+
+
+def with_log2q(df: DataFrame, x_col: str, out_col: str) -> DataFrame:
     """Append ``out_col`` = fixed-point log2 of BIGINT column
-    ``x_col``: an integer ≈ ``2^frac_bits · log2(x)`` for ``x ≥ 1``
-    (NULL otherwise), computed by the classic mantissa-squaring digit
-    recurrence in PURE 64-bit integer arithmetic — the primitive that
-    makes data-dependent log scores (BM25 idf, DSIR log-likelihood
-    ratios) cross-engine EXACT.  Float ``ln()`` is libm-dependent
-    (Java Math.log vs DuckDB's C library need not round identically),
-    so any oracle-gated score built on it would be hash-fragile; this
-    recurrence is deterministic integer ops both engines.
+    ``x_col``: an integer ≈ ``2^LOG2Q_FRAC_BITS · log2(x)`` for
+    ``x ≥ 1`` (NULL otherwise), computed by the classic
+    mantissa-squaring digit recurrence in PURE 64-bit integer
+    arithmetic — the primitive that makes data-dependent log scores
+    (BM25 idf, DSIR log-likelihood ratios) cross-engine EXACT.  Float
+    ``ln()`` is libm-dependent (Java Math.log vs DuckDB's C library
+    need not round identically), so any oracle-gated score built on
+    it would be hash-fragile; this recurrence is deterministic
+    integer ops both engines.
 
     Algorithm: ``n = ilog2(x)`` via ``length(bin(x)) - 1`` (identical
     string semantics both engines), mantissa normalized to
     ``[2^30, 2^31)`` (squares stay < 2^62 — no BIGINT overflow), then
     per fractional bit: square; if the square crosses 2^61 the bit is
     1 and the shift renormalizes by 31, else 0 and 30.  Result
-    ``n·2^frac_bits + bits``.  Truncation error ≤ ~2 ulp at
-    frac_bits=8 (≈0.8% of a doubling) — scoring-grade resolution,
+    ``n·2^LOG2Q_FRAC_BITS + bits``.  Truncation error ≤ ~2 ulp at
+    8 fractional bits (≈0.8% of a doubling) — scoring-grade resolution,
     bit-identical everywhere.
 
-    Built as ``frac_bits`` chained projections over multi-referenced
-    aliases (CollapseProject keeps them materialized — CLAUDE.md r5
-    gotcha), so the plan stays linear in frac_bits; intended for
-    SMALL tables (vocabularies, histograms, bucket stats), where the
-    per-row cost is irrelevant."""
+    Built as ``LOG2Q_FRAC_BITS`` chained projections over
+    multi-referenced aliases (CollapseProject keeps them materialized
+    — CLAUDE.md r5 gotcha), so the plan stays linear in the bit count;
+    intended for SMALL tables (vocabularies, histograms, bucket
+    stats), where the per-row cost is irrelevant."""
     two61 = 1 << 61
     df = df.select(
         "*",
@@ -4581,7 +4514,7 @@ def with_log2q(
         ).alias("_l2m0"),
         F.col("_l2n").alias("_l2f0"),
     ).drop("_l2n")
-    for i in range(frac_bits):
+    for i in range(LOG2Q_FRAC_BITS):
         df = df.select(
             "*",
             F.expr(
@@ -4594,8 +4527,8 @@ def with_log2q(
                 f"THEN 1 ELSE 0 END"
             ).alias(f"_l2f{i + 1}"),
         ).drop(f"_l2m{i}", f"_l2f{i}")
-    return df.withColumnRenamed(f"_l2f{frac_bits}", out_col).drop(
-        f"_l2m{frac_bits}"
+    return df.withColumnRenamed(f"_l2f{LOG2Q_FRAC_BITS}", out_col).drop(
+        f"_l2m{LOG2Q_FRAC_BITS}"
     )
 
 
@@ -4603,8 +4536,6 @@ def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    text_col: str = "text",
-    frac_bits: int = 8,
 ) -> DataFrame:
     """BM25 ranked keyword retrieval (Robertson–Spärck Jones /
     Okapi): top-``k`` documents per query with the standard
@@ -4631,13 +4562,13 @@ def bm25_topk(
     doc key; one per-query top-k window over scored candidates
     (candidates = posting-list union, never the corpus).  Zero
     Python.  Overflow: ``idf_q·22·tf·W`` needs ``tf·W ≤ ~1.6e15``
-    (frac_bits=8) — at larger corpora rescale W and N by a common
+    (8 fractional bits) — at larger corpora rescale W and N by a common
     factor before calling (only their ratio enters the score).
 
     Returns (query_id, doc_id, score_q, rank), rank 1..k by
     (score desc, doc_id) — ties broken deterministically."""
     words = fan_out(docs).select(
-        "doc_id", F.explode(F.split(F.col(text_col), " ")).alias("word")
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
     ).where(F.col("word") != "")
     tf = words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
@@ -4660,8 +4591,8 @@ def bm25_topk(
             "n_words",
         )
     )
-    qdf = with_log2q(qdf, "_xa", "_l2a", frac_bits)
-    qdf = with_log2q(qdf, "_xb", "_l2b", frac_bits)
+    qdf = with_log2q(qdf, "_xa", "_l2a")
+    qdf = with_log2q(qdf, "_xb", "_l2b")
     qidf = qdf.select(
         "query_id",
         "word",
@@ -4696,8 +4627,6 @@ def dsir_weights(
     docs: DataFrame,
     target: DataFrame,
     n_buckets: int = 1024,
-    frac_bits: int = 8,
-    text_col: str = "text",
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data
     Selection for Language Models via Importance Resampling"): score
@@ -4734,7 +4663,7 @@ def dsir_weights(
         return (
             d.select(
                 "doc_id",
-                F.explode(F.split(F.col(text_col), " ")).alias("word"),
+                F.explode(F.split(F.col("text"), " ")).alias("word"),
             )
             .where(F.col("word") != "")
             .select("doc_id", bucket.alias("bucket"))
@@ -4753,8 +4682,8 @@ def dsir_weights(
             (F.col("t_tot") + n_buckets).alias("_xt"),
         )
     )
-    totals = with_log2q(totals, "_xr", "_l2r", frac_bits)
-    totals = with_log2q(totals, "_xt", "_l2t", frac_bits)
+    totals = with_log2q(totals, "_xr", "_l2r")
+    totals = with_log2q(totals, "_xt", "_l2t")
     const = totals.select(
         (F.col("_l2r") - F.col("_l2t")).alias("llr_const")
     )
@@ -4766,8 +4695,8 @@ def dsir_weights(
             (F.col("r_b") + 1).alias("_xb"),
         )
     )
-    buckets_tbl = with_log2q(buckets_tbl, "_xa", "_l2a", frac_bits)
-    buckets_tbl = with_log2q(buckets_tbl, "_xb", "_l2b", frac_bits)
+    buckets_tbl = with_log2q(buckets_tbl, "_xa", "_l2a")
+    buckets_tbl = with_log2q(buckets_tbl, "_xb", "_l2b")
     llr = buckets_tbl.crossJoin(F.broadcast(const)).select(
         "bucket",
         (F.col("_l2a") - F.col("_l2b") + F.col("llr_const")).alias("llr_q"),
@@ -4784,9 +4713,6 @@ def dsir_weights(
 
 def dedup_lines_in_doc(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
 ) -> DataFrame:
     """WITHIN-document duplicate-line removal (RefinedWeb/Gopher-style
     repetition scrubbing — the APPLY side of :func:`repetition_stats`'
@@ -4806,15 +4732,15 @@ def dedup_lines_in_doc(
     re-evaluation trap, CLAUDE.md).  Per-doc cost is O(L²) int
     compares over L = lines/doc — bounded by the page, not the
     corpus, and embarrassingly parallel at any scale.  Returns
-    (id_col, text_col, n_removed)."""
+    (doc_id, text, n_removed)."""
     import re as _re
 
-    df = docs.select(id_col, F.col(text_col).alias("_orig")).select(
-        id_col,
-        F.split(F.col("_orig"), _re.escape(sep)).alias("_lines"),
+    df = docs.select("doc_id", F.col("text").alias("_orig")).select(
+        "doc_id",
+        F.split(F.col("_orig"), _re.escape("\n")).alias("_lines"),
     )
     df = df.select(
-        id_col,
+        "doc_id",
         "_lines",
         F.transform(
             "_lines",
@@ -4839,17 +4765,17 @@ def dedup_lines_in_doc(
             == 0
         ),
     )
-    df = df.select(id_col, "_lines", kept.alias("_kept"))
+    df = df.select("doc_id", "_lines", kept.alias("_kept"))
     return df.select(
-        id_col,
+        "doc_id",
         F.array_join(
-            F.transform("_kept", lambda s: s["l"]), sep
-        ).alias(text_col),
+            F.transform("_kept", lambda s: s["l"]), "\n"
+        ).alias("text"),
         (F.size("_lines") - F.size("_kept")).cast("int").alias("n_removed"),
     )
 
 
-def log2q_int(x: int, frac_bits: int = 8) -> int:
+def log2q_int(x: int) -> int:
     """Python twin of :func:`with_log2q` (same mantissa-squaring
     recurrence, same truncation) — for baking CONSTANT log terms into
     plans/oracles as literals, e.g. the smoothing floor log2q(V).
@@ -4859,7 +4785,7 @@ def log2q_int(x: int, frac_bits: int = 8) -> int:
     n = x.bit_length() - 1
     m = x << (30 - n) if n <= 30 else x >> (n - 30)
     f = n
-    for _ in range(frac_bits):
+    for _ in range(LOG2Q_FRAC_BITS):
         mm = m * m
         if mm >= 1 << 61:
             m, f = mm >> 31, f * 2 + 1
@@ -4872,8 +4798,6 @@ def bigram_lm_selfscore(
     docs: DataFrame,
     ref: DataFrame | None = None,
     n_buckets: int = 256,
-    frac_bits: int = 8,
-    text_col: str = "text",
 ) -> DataFrame:
     """Perplexity-style quality scoring WITHOUT an external language
     model: estimate a hashed-bigram LM from ``ref`` (default: the
@@ -4911,7 +4835,7 @@ def bigram_lm_selfscore(
         base = d.select(
             "doc_id",
             F.filter(
-                F.split(F.col(text_col), " "), lambda w: w != ""
+                F.split(F.col("text"), " "), lambda w: w != ""
             ).alias("_w"),
         ).select(
             "doc_id",
@@ -4942,14 +4866,14 @@ def bigram_lm_selfscore(
     big = ref_pairs.groupBy("b1", "b2").agg(
         (F.count("*") + 1).alias("_x12")
     )
-    big = with_log2q(big, "_x12", "l2_12", frac_bits).select(
+    big = with_log2q(big, "_x12", "l2_12").select(
         "b1", "b2", "l2_12"
     )
     uni = ref_pairs.groupBy("b1").agg(
         (F.count("*") + n_buckets).alias("_x1")
     )
-    uni = with_log2q(uni, "_x1", "l2_1", frac_bits).select("b1", "l2_1")
-    floor_v = log2q_int(n_buckets, frac_bits)
+    uni = with_log2q(uni, "_x1", "l2_1").select("b1", "l2_1")
+    floor_v = log2q_int(n_buckets)
     scored = (
         pairs(docs)
         .join(F.broadcast(big), ["b1", "b2"], "left")
@@ -4981,8 +4905,6 @@ def corpus_kl(
     docs: DataFrame,
     target: DataFrame,
     n_buckets: int = 1024,
-    frac_bits: int = 8,
-    text_col: str = "text",
 ) -> DataFrame:
     """ONE-row corpus-divergence diagnostic: quantized
     ``KL(target ‖ raw)`` over the hashed-unigram buckets — the number
@@ -4994,7 +4916,7 @@ def corpus_kl(
     — the weight is the SMOOTHED target mass (the same (·+1)/(T+V)
     distribution the ratio uses), so Gibbs' inequality holds and
     ``kl_q ≥ 0`` up to log-quantization dust (identical corpora give
-    exactly 0; base-2, scaled by 2^frac_bits).  Buckets absent from
+    exactly 0; base-2, scaled by 2^LOG2Q_FRAC_BITS).  Buckets absent from
     both corpora contribute 0 to the weighted sum (their smoothed
     ratio is the totals constant, folded in exactly), so the full
     V-bucket domain never materializes.  All log arithmetic on the
@@ -5008,7 +4930,7 @@ def corpus_kl(
     def counts(d: DataFrame, out: str) -> DataFrame:
         return (
             d.select(
-                F.explode(F.split(F.col(text_col), " ")).alias("word")
+                F.explode(F.split(F.col("text"), " ")).alias("word")
             )
             .where(F.col("word") != "")
             .select(bucket.alias("bucket"))
@@ -5027,8 +4949,8 @@ def corpus_kl(
         (F.coalesce(F.col("t_b"), F.lit(0)) + 1).alias("_xa"),
         (F.coalesce(F.col("r_b"), F.lit(0)) + 1).alias("_xb"),
     )
-    joined = with_log2q(joined, "_xa", "_l2a", frac_bits)
-    joined = with_log2q(joined, "_xb", "_l2b", frac_bits)
+    joined = with_log2q(joined, "_xa", "_l2a")
+    joined = with_log2q(joined, "_xb", "_l2b")
     totals = (
         rc.agg(F.sum("r_b").alias("r_tot"))
         .crossJoin(tc.agg(F.sum("t_b").alias("t_tot")))
@@ -5039,8 +4961,8 @@ def corpus_kl(
             (F.col("t_tot") + n_buckets).alias("_xt"),
         )
     )
-    totals = with_log2q(totals, "_xr", "_l2r", frac_bits)
-    totals = with_log2q(totals, "_xt", "_l2t", frac_bits)
+    totals = with_log2q(totals, "_xr", "_l2r")
+    totals = with_log2q(totals, "_xt", "_l2t")
     num = joined.select(
         F.sum(
             (F.col("t_b") + 1) * (F.col("_l2a") - F.col("_l2b"))
@@ -5059,7 +4981,6 @@ def chunk_documents(
     docs: DataFrame,
     max_tokens: int = 512,
     overlap: int = 64,
-    text_col: str = "text",
 ) -> DataFrame:
     """Sliding-window document chunking — the splitting pass between
     extraction and embedding/packing (RAG indexes, long-doc
@@ -5087,7 +5008,7 @@ def chunk_documents(
     df = docs.select(
         "doc_id",
         F.filter(
-            F.split(F.col(text_col), " "), lambda w: w != ""
+            F.split(F.col("text"), " "), lambda w: w != ""
         ).alias("_w"),
     ).where(F.size("_w") > 0)
     starts = F.filter(

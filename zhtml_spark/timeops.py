@@ -19,11 +19,10 @@ def asof_join(
     on: str = "ts",
     by: str = "user_id",
     value_cols: list[str] | None = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
     """For every left row, attach the MOST RECENT right row with
     ``right.on <= left.on`` within the same ``by`` key (the financial
-    "as-of" / point-in-time join).
+    "as-of" / point-in-time join), as ``<value>_asof`` columns.
 
     Distributed shape — union + per-key ordered window, the
     merge-join formulation: tag both sides, sort each key's rows by
@@ -85,7 +84,7 @@ def asof_join(
     )
     out = carried.where(F.col("_side") == 1)
     for c in value_cols:
-        out = out.withColumn(f"{c}{suffix}", F.col(f"_rrow.{c}"))
+        out = out.withColumn(f"{c}_asof", F.col(f"_rrow.{c}"))
     return out.drop("_side", "_rrow")
 
 
@@ -159,15 +158,13 @@ def _explode_intervals(
 def interval_join(
     points: DataFrame,
     intervals: DataFrame,
-    ts_col: str = "ts",
-    start_col: str = "start_ts",
-    end_col: str = "end_ts",
     bucket_minutes: int = 60,
     coarse_factor: int | None = None,
 ) -> DataFrame:
     """Point-in-interval (range) join — the second operator family the
     brief names that Spark only does as an O(n·m) nested-loop
-    BroadcastNestedLoopJoin.
+    BroadcastNestedLoopJoin: each ``points.ts`` matches the intervals
+    ``[start_ts, end_ts)`` that contain it.
 
     Bucketed-equality strategy: intervals explode to the time buckets
     they overlap (``sequence`` — JVM-side), points map to their single
@@ -186,9 +183,9 @@ def interval_join(
     per interval capped at span/(bucket·k) + 2k.
     """
     bucket_us = bucket_minutes * 60 * 1_000_000
-    p_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    s_us = F.unix_micros(F.col(start_col).cast("timestamp"))
-    e_us = F.unix_micros(F.col(end_col).cast("timestamp"))
+    p_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    s_us = F.unix_micros(F.col("start_ts").cast("timestamp"))
+    e_us = F.unix_micros(F.col("end_ts").cast("timestamp"))
 
     # drop empty/inverted intervals: a descending bound pair would make
     # sequence() count DOWN and fabricate buckets
@@ -196,8 +193,8 @@ def interval_join(
     ivs_fine, ivs_coarse = _explode_intervals(
         intervals, s_us, e_us, bucket_us, coarse_factor
     )
-    pred = (F.col(ts_col) >= F.col(start_col)) & (
-        F.col(ts_col) < F.col(end_col)
+    pred = (F.col("ts") >= F.col("start_ts")) & (
+        F.col("ts") < F.col("end_ts")
     )
     pts_fine = points.withColumn("_bucket", F.floor(p_us / bucket_us))
     joined = pts_fine.join(ivs_fine, "_bucket").where(pred).drop("_bucket")
@@ -217,24 +214,23 @@ def interval_join(
 def sessionize(
     events: DataFrame,
     gap_minutes: int = 30,
-    ts_col: str = "ts",
-    by: str = "user_id",
 ) -> DataFrame:
-    """Gap-based sessionization: per ``by`` key, events closer than
-    ``gap_minutes`` chain into one session.  Returns one row per
-    session: (by, session_start, n_events, total_value).
+    """Gap-based sessionization: per ``user_id``, events whose ``ts``
+    are closer than ``gap_minutes`` chain into one session.  Returns
+    one row per session: (user_id, session_start, n_events,
+    total_value).
 
     Gaps-and-islands composition (same semantics as Spark's
     ``session_window`` with a fixed gap, but expressed with
     lag + cumulative sum so the DuckDB oracle is exact): new-session
     flag when the gap to the previous event is ≥ the threshold,
     running sum of flags numbers the sessions, then one aggregation.
-    One shuffle on ``by``.
+    One shuffle on ``user_id``.
     """
-    w = Window.partitionBy(by).orderBy(F.col(ts_col).asc())
+    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc())
     # integer microseconds: exact gap comparison on both engines
     # (TIMESTAMP_NTZ reinterpreted as UTC; differences are tz-free)
-    micros = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    micros = F.unix_micros(F.col("ts").cast("timestamp"))
     gap_us = gap_minutes * 60 * 1_000_000
     flagged = events.withColumn(
         "_new",
@@ -246,13 +242,13 @@ def sessionize(
         ),
     )
     return (
-        flagged.groupBy(by, "_session")
+        flagged.groupBy("user_id", "_session")
         .agg(
-            F.date_format(F.min(ts_col), "yyyy-MM-dd HH:mm:ss").alias(
+            F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias(
                 "session_start"
             ),
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 2).alias("total_value"),
         )
-        .select(by, "session_start", "n_events", "total_value")
+        .select("user_id", "session_start", "n_events", "total_value")
     )

@@ -264,7 +264,6 @@ def tokenize(
     text: str,
     initial_state: str = "Data",
     last_start_tag: str | None = None,
-    do_preprocess: bool = True,
     tree_aware: bool = False,
     enable_fast_tags: bool = True,
     with_positions: bool = False,
@@ -298,8 +297,7 @@ def tokenize(
     tuples too).  Off by default: the only always-on cost is one
     integer store per ``<`` seen in a text state.
     """
-    if do_preprocess:
-        text = preprocess(text)
+    text = preprocess(text)
 
     # tree-aware rawtext feedback table; scripting=True adds noscript
     # (spec: in-head noscript is generic-rawtext iff scripting is on)

@@ -592,7 +592,7 @@ def _fragment_initial_mode(context: str) -> int:
     return M_IN_BODY
 
 
-def parse_fragment(html: str, context: str = "div", scripting: bool = True):
+def parse_fragment(html: str, context: str = "div"):
     """Parse an ``innerHTML``-shaped fragment in ``context`` →
     ``(DocTree, root_id, errors)`` where ``root_id`` is the synthetic
     root whose children are the fragment's nodes (spec §13.2.2.2;
@@ -613,7 +613,7 @@ def parse_fragment(html: str, context: str = "div", scripting: bool = True):
     work; rawtext switching stays off; a stray close tag cannot
     un-foreign the context).
     """
-    return parse_document(html, fragment_context=context, scripting=scripting)
+    return parse_document(html, fragment_context=context)
 
 
 def parse_document(
