@@ -4,7 +4,9 @@ passes to an imported ``zhtml_spark`` callable must name one of its
 parameters.  Deleting an API or an option a script still uses then
 fails the suite instead of a later run of that script.  The reverse
 guard: every public function in the package has a caller outside the
-tests, so test-only surface cannot grow back.
+tests, so test-only surface cannot grow back, and every defaulted
+parameter of one is passed by some call, so a value nobody varies is a
+constant rather than an option.
 
 Scripts are parsed, not run.  Imports nested in functions count, and
 so do import lines inside string literals (code snippets a script

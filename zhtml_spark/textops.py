@@ -4494,9 +4494,9 @@ def with_log2q(df: DataFrame, x_col: str, out_col: str) -> DataFrame:
 
     Built as ``LOG2Q_FRAC_BITS`` chained projections over
     multi-referenced aliases (CollapseProject keeps them materialized
-    — CLAUDE.md r5 gotcha), so the plan stays linear in the bit count;
-    intended for SMALL tables (vocabularies, histograms, bucket
-    stats), where the per-row cost is irrelevant."""
+    — the r5 single-use-alias gotcha), so the plan stays linear in the
+    bit count; intended for SMALL tables (vocabularies, histograms,
+    bucket stats), where the per-row cost is irrelevant."""
     two61 = 1 << 61
     df = df.select(
         "*",
