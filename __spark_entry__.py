@@ -16,10 +16,22 @@ tokenize→tree→extract path.
 from __future__ import annotations
 
 import hashlib
+import inspect
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# the DuckDB twins read the Spark side's own constants, so changing one
+# moves both engines together
+from zhtml_spark.textops import (
+    BPE_MAX_WORD_LEN,
+    LOG2Q_FRAC_BITS,
+    PAGERANK_SCALE,
+    STOPWORDS,
+    VEC_SCALE,
+    pagerank,
+)
 
 
 def _span_struct(kind, text, media_ref, offset) -> Column:
@@ -910,20 +922,20 @@ def _q_dedup_exact(spark, sf_dir):
     return dedup_exact(_docs(spark, sf_dir))
 
 
-def _q_ngram_jaccard(spark, sf_dir):
+def _q_ngram_jaccard_pairs(spark, sf_dir):
     from zhtml_spark.textops import ngram_jaccard_pairs
 
     return ngram_jaccard_pairs(_docs(spark, sf_dir), n=3, threshold=0.05)
 
 
-def _q_minhash_candidates(spark, sf_dir):
+def _q_minhash_dup_candidates(spark, sf_dir):
     from zhtml_spark.textops import minhash_dup_candidates
 
     return minhash_dup_candidates(_docs(spark, sf_dir), n=3, seeds=8,
                                   min_agree=2)
 
 
-def _q_minhash_banded(spark, sf_dir):
+def _q_minhash_banded_candidates(spark, sf_dir):
     """b×r banded LSH (r=2): the scale-safe candidate generator."""
     from zhtml_spark.textops import minhash_banded_candidates
 
@@ -989,7 +1001,7 @@ def _q_simhash60(spark, sf_dir):
     return simhash_bits(_docs(spark, sf_dir), bits=60)
 
 
-def _q_simhash_candidates(spark, sf_dir):
+def _q_simhash_dup_candidates(spark, sf_dir):
     """Near-dup detection demo on docs ∪ near-copies (one appended
     word) so qualifying pairs actually exist in the synthetic data."""
     from zhtml_spark.textops import simhash_dup_candidates
@@ -1131,7 +1143,7 @@ def _q_lang_gate(spark, sf_dir):
     d = _docs(spark, sf_dir).select(
         "doc_id",
         F.when(F.col("doc_id") % 7 == 0, gib)
-        .otherwise(_langid_case_col(F.col("doc_id") % 11))
+        .otherwise(_langid_case_col())
         .alias("text"),
     )
     return lang_gate(
@@ -1161,7 +1173,7 @@ def _q_kmeans_centroids(spark, sf_dir):
     )
 
 
-def _q_pagerank(spark, sf_dir):
+def _q_pagerank_links(spark, sf_dir):
     """Fixed-iteration integer PageRank (r7 — crawl-quality weight):
     the edge list is derived DETERMINISTICALLY from the documents
     table (two arithmetic out-links per non-dangling doc; every
@@ -1407,13 +1419,13 @@ def _q_ivf_topk_embedded(spark, sf_dir):
     cents = kmeans_centroids(emb, n_centroids=8, iters=2).select(
         "centroid_id",
         F.transform(
-            "centroid", lambda x: x.cast("double") / F.lit(1000000.0)
+            "centroid", lambda x: x.cast("double") / F.lit(float(VEC_SCALE))
         ).alias("c"),
     )
     return ivf_topk(emb, n_queries=5, k=5, n_probe=2, centroids=cents)
 
 
-def _q_embedding_dup(spark, sf_dir):
+def _q_embedding_dup_candidates(spark, sf_dir):
     from zhtml_spark.textops import embedding_dup_candidates
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1847,19 +1859,20 @@ from zhtml_spark.langid_model import N_BUCKETS as _LANGID_B
 _LANGID_LANGS = sorted(_LANGID_HELD_OUT)  # de en es fr it ja nl pt ru zh
 
 
-def _langid_case_sql(expr: str = "doc_id % 11") -> str:
-    """CASE over ``expr``: 1..10 → the held-out sentence of the i-th
+def _langid_case_sql() -> str:
+    """CASE over ``doc_id % 11``: 1..10 → the held-out sentence of the i-th
     sorted language, else the document's own text — the DuckDB twin
     of the Spark-side corpus in _q_lang_id_v2/_q_lang_gate."""
     whens = "\n".join(
         f"WHEN {i + 1} THEN '{_LANGID_HELD_OUT[lg].replace(chr(39), chr(39) * 2)}'"
         for i, lg in enumerate(_LANGID_LANGS)
     )
-    return f"CASE {expr} {whens} ELSE text END"
+    return f"CASE doc_id % 11 {whens} ELSE text END"
 
 
-def _langid_case_col(expr):
+def _langid_case_col() -> Column:
     """Spark twin of :func:`_langid_case_sql`."""
+    expr = F.col("doc_id") % 11
     c = None
     for i, lg in enumerate(_LANGID_LANGS):
         branch = F.when(expr == i + 1, F.lit(_LANGID_HELD_OUT[lg]))
@@ -1894,7 +1907,7 @@ def _q_lang_id_v2(spark, sf_dir):
 
     d = _docs(spark, sf_dir).select(
         "doc_id",
-        _langid_case_col(F.col("doc_id") % 11).alias("text"),
+        _langid_case_col().alias("text"),
     )
     return lang_id_v2(d, hash_fn="md5")
 
@@ -2852,7 +2865,7 @@ def _q_asof_join(spark, sf_dir):
     )
 
 
-def _q_sessionize(spark, sf_dir):
+def _q_events_sessionized(spark, sf_dir):
     from zhtml_spark.timeops import sessionize
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -4008,130 +4021,14 @@ def digest(rows: Sequence[Sequence], cols: Sequence[str]) -> str:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Every registry query by name; ``oracle_sql()`` holds the DuckDB
-    mirror of each, and the tier-1 test compares every pair with
-    :func:`digest`."""
+    """Every registry query by name: each module-level ``_q_<name>``
+    function is the query ``<name>``.  ``oracle_sql()`` holds the
+    DuckDB mirror of each, and the tier-1 test compares every pair
+    with :func:`digest`."""
     return {
-        "bigram_selfscore": _q_bigram_selfscore,
-        "bm25_topk": _q_bm25_topk,
-        "cosine_topk": _q_cosine_topk,
-        "decontaminate_fuzzy": _q_decontaminate_fuzzy,
-        "dedup_components": _q_dedup_components,
-        "dedup_incremental": _q_dedup_incremental,
-        "dedup_survivors_banded": _q_dedup_survivors_banded,
-        "ivf_topk_embedded": _q_ivf_topk_embedded,
-        "lang_gate": _q_lang_gate,
-        "lang_id_v2": _q_lang_id_v2,
-        "minhash_banded_candidates": _q_minhash_banded,
-        "minhash_dup_candidates": _q_minhash_candidates,
-        "ngram_jaccard_pairs": _q_ngram_jaccard,
-        "quality_tiers": _q_quality_tiers,
-        "recrawl_candidates": _q_recrawl_candidates,
-        "resolve_redirects": _q_resolve_redirects,
-        "simhash60": _q_simhash60,
-        "simhash_dup_candidates": _q_simhash_candidates,
-        "substring_dedup_apply": _q_substring_dedup_apply,
-        "substring_dup_spans": _q_substring_dup_spans,
-        "trigram_lm_score": _q_trigram_lm_score,
-        "warc_canonical_header": _q_warc_canonical_header,
-        "warc_cdx_index": _q_warc_cdx_index,
-        "warc_charset_extract": _q_warc_charset_extract,
-        "warc_extract": _q_warc_extract,
-        "warc_feed_extract": _q_warc_feed_extract,
-        "warc_frontier_mixed": _q_warc_frontier_mixed,
-        "warc_http_codec_extract": _q_warc_http_codec_extract,
-        "warc_length_audit": _q_warc_length_audit,
-        "warc_noindex_gate": _q_warc_noindex_gate,
-        "warc_pdf_extract": _q_warc_pdf_extract,
-        "warc_plaintext_extract": _q_warc_plaintext_extract,
-        "warc_redirect_extract": _q_warc_redirect_extract,
-        "warc_revisit_dedup": _q_warc_revisit_dedup,
-        "winnow_dup_candidates": _q_winnow_dup_candidates,
-        "winnow_fingerprints": _q_winnow_fingerprints,
-        "pdf_extract": _q_pdf_extract,
-        "media_container_meta": _q_media_container_meta,
-        "embed_hashing": _q_embed_hashing,
-        "pack_sequences": _q_pack_sequences,
-        "image_meta": _q_image_meta,
-        "extract_meta": _q_extract_meta,
-        "extract_heading_para": _q_extract_heading_para,
-        "extract_entities": _q_extract_entities,
-        "extract_media": _q_extract_media,
-        "extract_list": _q_extract_list,
-        "extract_boilerplate": _q_extract_boilerplate,
-        "span_kind_counts": _q_span_kind_counts,
-        "interleaved_passthrough": _q_interleaved_passthrough,
-        "article_meta_unified": _q_article_meta_unified,
-        "extract_style_media": _q_extract_style_media,
-        "frontier_with_base": _q_frontier_with_base,
-        "extract_lazy_media": _q_extract_lazy_media,
-        "extract_srcset": _q_extract_srcset,
-        "kmeans_centroids": _q_kmeans_centroids,
-        "host_quota_sample": _q_host_quota_sample,
-        "media_features": _q_media_features,
-        "media_resolution": _q_media_resolution,
-        "dedup_exact": _q_dedup_exact,
-        "nearest_centroid": _q_nearest_centroid,
-        "text_quality": _q_text_quality,
-        "doc_fingerprint": _q_doc_fingerprint,
-        "frame_sample": _q_frame_sample,
-        "resize_dims": _q_resize_dims,
-        "quality_filter": _q_quality_filter,
-        "order_window_rank": _q_order_window_rank,
-        "events_windowed": _q_events_windowed,
-        "anchor_stats": _q_anchor_stats,
-        "crawl_frontier": _q_crawl_frontier,
-        "extract_density": _q_extract_density,
-        "bloom_seen": _q_bloom_seen,
-        "extract_svg_media": _q_extract_svg_media,
-        "robots_parse": _q_robots_parse,
-        "robots_gate": _q_robots_gate,
-        "dedup_by_canonical": _q_dedup_by_canonical,
-        "extract_src_offsets": _q_extract_src_offsets,
-        "line_dedup": _q_line_dedup,
-        "spans_to_markdown": _q_spans_to_markdown,
-        "host_stats": _q_host_stats,
-        "interval_join_guarded": _q_interval_join_guarded,
-        "media_absolutize": _q_media_absolutize,
-        "decontaminate": _q_decontaminate,
-        "redact_pii": _q_redact_pii,
-        "repetition_stats": _q_repetition_stats,
-        "hash_sample": _q_hash_sample,
-        "events_rollup": _q_events_rollup,
-        "extract_table": _q_extract_table,
-        "extract_links": _q_extract_links,
-        "extract_svg_mixed": _q_extract_svg_mixed,
-        "extract_template": _q_extract_template,
-        "extract_fragment": _q_extract_fragment,
-        "pagerank_links": _q_pagerank,
-        "rebalance_sample": _q_rebalance_sample,
-        "pq_adc_topk": _q_pq_adc_topk,
-        "bpe_train": _q_bpe_train,
-        "bpe_encode": _q_bpe_encode,
-        "dsir_weights": _q_dsir_weights,
-        "doc_line_dedup": _q_doc_line_dedup,
-        "corpus_kl": _q_corpus_kl,
-        "doc_chunks": _q_doc_chunks,
-        "embedding_dup_candidates": _q_embedding_dup,
-        "embedding_dedup_survivors": _q_embedding_dedup_survivors,
-        "url_normalize": _q_url_normalize,
-        "pricing_summary": _q_pricing_summary,
-        "top_customers": _q_top_customers,
-        "asof_join": _q_asof_join,
-        "events_sessionized": _q_sessionize,
-        "kmv_distinct": _q_kmv_distinct,
-        "html_lang_meta": _q_html_lang_meta,
-        "pdf_outline": _q_pdf_outline,
-        "wet_render": _q_wet_render,
-        "frontier_prioritized": _q_frontier_prioritized,
-        "hreflang_clusters": _q_hreflang_clusters,
-        "spans_to_text": _q_spans_to_text,
-        "bpe_pair_stats": _q_bpe_pair_stats,
-        "fetch_schedule": _q_fetch_schedule,
-        "sitemap_entries": _q_sitemap_entries,
-        "rdfa_meta": _q_rdfa_meta,
-        "microdata_meta": _q_microdata_meta,
-        "jsonld_meta": _q_jsonld_meta,
+        name[len("_q_"):]: fn
+        for name, fn in globals().items()
+        if name.startswith("_q_")
     }
 
 
@@ -4183,17 +4080,18 @@ _EMB_HASH_ORACLE_HEAD = r"""
     )
 """
 
-def _pagerank_ctes(
-    iters: int = 3, damping_pct: int = 85, scale: int = 10**12
-) -> str:
+def _pagerank_ctes(iters: int) -> str:
     """CTE chain replicating textops.pagerank in DuckDB — generated
     because the iterations are plan-unrolled on the Spark side too.
     Expects an ``e(src, dst)`` CTE (already DISTINCT, self-loop-free)
     in scope.  Exact cross-engine by construction: all-BIGINT ranks,
     truncating ``//`` division everywhere Spark uses ``div``, and the
-    dangling mass as an explicit 1-row aggregate per iteration.
-    Final ranks live in ``r{iters}``."""
-    tele = f"(({scale} * {100 - damping_pct}) // 100) // p.n"
+    dangling mass as an explicit 1-row aggregate per iteration.  The
+    scale and the damping are the Spark side's own: ``PAGERANK_SCALE``
+    and ``pagerank``'s default ``damping_pct``, which the registry
+    query uses.  Final ranks live in ``r{iters}``."""
+    damping_pct = inspect.signature(pagerank).parameters["damping_pct"].default
+    tele = f"(({PAGERANK_SCALE} * {100 - damping_pct}) // 100) // p.n"
     parts = [
         """
         nodes AS (
@@ -4209,7 +4107,7 @@ def _pagerank_ctes(
         ),
         r0 AS (
             SELECT node, n, """
-        + f"{scale} // n"
+        + f"{PAGERANK_SCALE} // n"
         + """ AS r FROM nodes, nn)"""
     ]
     for i in range(1, iters + 1):
@@ -4239,7 +4137,7 @@ def _pagerank_ctes(
     return ",".join(parts)
 
 
-def _bpe_ctes(n_merges: int = 4, max_word_len: int = 64) -> str:
+def _bpe_ctes(n_merges: int) -> str:
     """CTE chain replaying textops.bpe_train in DuckDB — per merge
     round: vocabulary pair counts (adjacent symbols on the chr(31)
     carrier), deterministic argmax (count DESC, lhs, rhs), literal
@@ -4252,7 +4150,7 @@ def _bpe_ctes(n_merges: int = 4, max_word_len: int = 64) -> str:
       SELECT word, CAST(count(*) AS BIGINT) AS n
       FROM (SELECT unnest(string_split_regex(text,
                    '[ \t\n\r\f]+')) AS word FROM documents)
-      WHERE length(word) BETWEEN 1 AND {max_word_len}
+      WHERE length(word) BETWEEN 1 AND {BPE_MAX_WORD_LEN}
         AND NOT contains(word, chr(31))
         AND NOT contains(word, chr(30))
       GROUP BY 1),
@@ -4282,11 +4180,9 @@ def _bpe_ctes(n_merges: int = 4, max_word_len: int = 64) -> str:
     return ",".join(parts)
 
 
-def _log2q_ctes(
-    src: str, prefix: str, x: str, out: str, frac_bits: int = 8
-) -> str:
+def _log2q_ctes(src: str, prefix: str, x: str, out: str) -> str:
     """CTE chain replaying textops.with_log2q in DuckDB: appends
-    column ``out`` = fixed-point log2 (``≈ 2^frac_bits · log2(x)``)
+    column ``out`` = fixed-point log2 (``≈ 2^LOG2Q_FRAC_BITS · log2(x)``)
     of BIGINT column ``x`` (NULL below 1) to every row of CTE
     ``src``, via the same mantissa-squaring recurrence in pure
     64-bit integer arithmetic — mantissa in [2^30, 2^31) so squares
@@ -4308,7 +4204,7 @@ def _log2q_ctes(
              _n AS _f
       FROM {prefix}n)"""
     ]
-    for i in range(frac_bits):
+    for i in range(LOG2Q_FRAC_BITS):
         parts.append(
             f"""
     {prefix}{i + 1} AS (
@@ -4322,19 +4218,12 @@ def _log2q_ctes(
     parts.append(
         f"""
     {prefix}z AS (
-      SELECT * EXCLUDE (_m, _f), _f AS {out} FROM {prefix}{frac_bits})"""
+      SELECT * EXCLUDE (_m, _f), _f AS {out} FROM {prefix}{LOG2Q_FRAC_BITS})"""
     )
     return ",".join(parts)
 
 
-def _pq_ctes(
-    m: int = 4,
-    k: int = 8,
-    iters: int = 2,
-    dim: int = 64,
-    n_queries: int = 4,
-    scale: int = 1_000_000,
-) -> str:
+def _pq_ctes(m: int, k: int, iters: int, dim: int, n_queries: int) -> str:
     """CTE chain replicating textops.pq_adc_topk in DuckDB: per
     subspace a prefix-named kmeans training over the sliced
     embeddings, the nearest-code assignment (same (dist, code)
@@ -4392,8 +4281,7 @@ def _pq_ctes(
 
 
 def _kmeans_ctes(
-    src: str, k: int = 8, iters: int = 3, dim: int = 64,
-    scale: int = 1_000_000, prefix: str = "k",
+    src: str, k: int, iters: int, dim: int, prefix: str = "k"
 ) -> str:
     """CTE chain replicating textops.kmeans_centroids in DuckDB —
     emitted by a generator because the Lloyd iterations are plan-
@@ -4410,7 +4298,7 @@ def _kmeans_ctes(
     {p}q AS (
       SELECT vec_id,
              list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * {scale}) AS BIGINT))
+               x -> CAST(floor(CAST(x AS DOUBLE) * {VEC_SCALE}) AS BIGINT))
                AS qv
       FROM {src}),
     {p}seed AS (
@@ -4522,7 +4410,7 @@ def _abs_url_sql() -> str:
     """
 
 
-_STOP_EN = "['the','and','of','to','a','in','is','it','for','on']"
+_STOP_EN = "[" + ",".join(f"'{w}'" for w in STOPWORDS["en"]) + "]"
 
 
 _EMB_CAND_SQL = """            WITH c AS (
@@ -5588,7 +5476,7 @@ def oracle_sql() -> dict[str, str]:
             c AS (
                 SELECT centroid_id,
                        list_transform(cv,
-                         x -> CAST(x AS DOUBLE) / 1000000) AS ce
+                         x -> CAST(x AS DOUBLE) / """ + f"{VEC_SCALE}" + """) AS ce
                 FROM kc2
             ),
             adist AS (

@@ -5,8 +5,9 @@ parameters.  Deleting an API or an option a script still uses then
 fails the suite instead of a later run of that script.  The reverse
 guard: every public function in the package has a caller outside the
 tests, so test-only surface cannot grow back, and every defaulted
-parameter of one is passed by some call, so a value nobody varies is a
-constant rather than an option.
+parameter of a package or registry function, private helpers included,
+is passed by some call, so a value nobody varies is a constant rather
+than an option.
 
 Scripts are parsed, not run.  Imports nested in functions count, and
 so do import lines inside string literals (code snippets a script
@@ -19,6 +20,7 @@ import ast
 import importlib
 import importlib.util
 import inspect
+import textwrap
 from pathlib import Path
 
 import pytest
@@ -242,6 +244,8 @@ NO_CALLER_PARAM_OK = {
     "bpe_train.checkpoint": "plan-depth guard for vocab-sized merge counts",
 }
 CALLER_FILES = sorted([*PACKAGE, *KWARG_SCRIPTS, *REPO.glob("tests/*.py")])
+# every top-level function here, private helpers included, is checked
+DEFAULTED_FILES = [*PACKAGE, REPO / "__spark_entry__.py"]
 
 
 def _trees(tree: ast.AST):
@@ -273,11 +277,34 @@ def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
     return out
 
 
-def _passed(paths) -> set[str]:
+def _callee(f: ast.expr) -> str | None:
+    """The function name a call's ``func`` node names: ``f``,
+    ``m.f`` and ``getattr(m, "f")`` give ``f``; a computed callee
+    (``getattr(m, name)``, ``ops[i]``, ``make()``) gives None."""
+    if isinstance(f, ast.Name):
+        return f.id
+    if isinstance(f, ast.Attribute):
+        return f.attr
+    if (
+        isinstance(f, ast.Call)
+        and isinstance(f.func, ast.Name)
+        and f.func.id == "getattr"
+        and len(f.args) == 2
+        and isinstance(f.args[1], ast.Constant)
+        and isinstance(f.args[1].value, str)
+    ):
+        return f.args[1].value
+    return None
+
+
+def _passed(paths) -> tuple[set[str], list[str]]:
     """``f.p`` for each parameter ``p`` that some call to a function
     named ``f`` (or an import alias of it) in ``paths`` passes, by
-    keyword as ``f.p`` and by position as ``f.#i``."""
+    keyword as ``f.p`` and by position as ``f.#i``; and ``file:line``
+    of each call through a computed callee that passes a keyword,
+    which the guard cannot attribute to any function."""
     passed: set[str] = set()
+    blind: list[str] = []
     for path in paths:
         for tree in _trees(ast.parse(path.read_text(), filename=str(path))):
             alias = {
@@ -290,17 +317,20 @@ def _passed(paths) -> set[str]:
             for node in ast.walk(tree):
                 if not isinstance(node, ast.Call):
                     continue
-                f = node.func
-                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                name = _callee(node.func)
+                if name is None:
+                    if node.keywords:
+                        blind.append(f"{path.name}:{node.lineno}")
+                    continue
                 name = alias.get(name, name)
                 passed.update(f"{name}.#{i}" for i in range(len(node.args)))
                 passed.update(f"{name}.{kw.arg}" for kw in node.keywords)
-    return passed
+    return passed, blind
 
 
 def _unpassed_parameters(package, callers) -> list[str]:
-    passed = _passed(callers)
-    unpassed = []
+    passed, blind = _passed(callers)
+    unpassed = [f"computed callee passes keywords at {b}" for b in blind]
     for path in package:
         for node in ast.parse(path.read_text()).body:
             if isinstance(node, ast.ClassDef) and node.name == "ExtractConfig":
@@ -309,7 +339,7 @@ def _unpassed_parameters(package, callers) -> list[str]:
                         key = f"{node.name}.{field.target.id}"
                         if key not in passed:
                             unpassed.append(key)
-            if not isinstance(node, ast.FunctionDef) or node.name.startswith("_"):
+            if not isinstance(node, ast.FunctionDef):
                 continue
             if node.args.kwarg is not None:
                 unpassed.append(f"{node.name}.**{node.args.kwarg.arg}")
@@ -323,12 +353,34 @@ def _unpassed_parameters(package, callers) -> list[str]:
 
 
 def test_defaulted_parameters_have_a_caller():
-    """A defaulted parameter of a public package function, or an
-    ``ExtractConfig`` field, that no call anywhere in the repo (tests
-    included) passes by keyword or by position is a constant with a
-    dial on it; ``**kwargs`` catch-alls hide such dials and fail too."""
-    unpassed = _unpassed_parameters(PACKAGE, CALLER_FILES)
+    """A defaulted parameter of a top-level package or registry
+    function, private helpers included, or an ``ExtractConfig`` field,
+    that no call anywhere in the repo (tests included) passes by
+    keyword or by position is a constant with a dial on it;
+    ``**kwargs`` catch-alls hide such dials and fail too, and so does a
+    call the guard cannot attribute (a computed callee with keywords)."""
+    unpassed = _unpassed_parameters(DEFAULTED_FILES, CALLER_FILES)
     extra = sorted(set(unpassed) - set(NO_CALLER_PARAM_OK))
     assert not extra, f"defaulted parameters no caller sets: {extra}"
     stale = sorted(set(NO_CALLER_PARAM_OK) - set(unpassed))
     assert not stale, f"NO_CALLER_PARAM_OK entries that now have a caller: {stale}"
+
+
+def test_defaults_guard_resolves_getattr_calls(tmp_path):
+    """``getattr(m, "f")(…)`` counts as a call to ``f``; a call through
+    a computed callee cannot be attributed, so passing it a keyword is
+    flagged with its file and line."""
+    snippet = tmp_path / "snippet.py"
+    # indented, so the guard's own scan of this file skips the literal
+    snippet.write_text(textwrap.dedent("""\
+        from zhtml_spark import textops
+        def job(docs, op):
+            getattr(textops, 'pagerank')(docs, 3, checkpoint=True)
+            getattr(textops, op)(docs)
+            getattr(textops, op)(docs, n_blocks=3)
+            {'a': textops.pagerank}[op](docs, iters=2)
+        """))
+    passed, blind = _passed([snippet])
+    assert {"pagerank.#0", "pagerank.#1", "pagerank.checkpoint"} <= passed
+    assert "pagerank.iters" not in passed
+    assert blind == ["snippet.py:5", "snippet.py:6"]

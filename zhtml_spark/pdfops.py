@@ -280,7 +280,8 @@ def _parse_object(b: bytes, i: int, depth: int = 0):
     return None, i + 1
 
 
-def _resolve(v, objs, depth: int = 0):
+def _resolve(v, objs):
+    depth = 0
     while isinstance(v, _Ref) and depth < 32:
         v = objs.get(v.num, (None, None))[0]
         depth += 1
