@@ -4020,6 +4020,46 @@ def digest(rows: Sequence[Sequence], cols: Sequence[str]) -> str:
     return h.hexdigest()
 
 
+def oracle_gate(
+    spark: SparkSession, sf_dir: str
+) -> Callable[[str], str | None]:
+    """The correctness gate at one scale factor: a DuckDB connection
+    with one view per ``TABLES`` entry over ``sf_dir``'s parquet files,
+    and a check that runs a query on Spark and its ``oracle_sql()``
+    mirror on those views.  The check returns None when the row count,
+    the sorted column names and :func:`digest` agree, and otherwise
+    says what differs; an engine error propagates."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    qs, oracles = queries(), oracle_sql()
+
+    def check(name: str) -> str | None:
+        sdf = qs[name](spark, sf_dir)
+        srows = [tuple(r) for r in sdf.collect()]
+        cur = con.execute(oracles[name])
+        ocols = [d[0] for d in cur.description]
+        orows = cur.fetchall()
+        rows_ok = len(srows) == len(orows)
+        schema_ok = sorted(sdf.columns) == sorted(ocols)
+        hash_ok = schema_ok and (
+            digest(srows, sdf.columns) == digest(orows, ocols)
+        )
+        if rows_ok and hash_ok:
+            return None
+        return (
+            f"rows={len(srows)}/{len(orows)} schema={schema_ok} "
+            f"hash={hash_ok}"
+        )
+
+    return check
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Every registry query by name: each module-level ``_q_<name>``
     function is the query ``<name>``.  ``oracle_sql()`` holds the

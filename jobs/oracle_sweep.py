@@ -2,8 +2,8 @@
 
 Runs every `__spark_entry__.queries()` entry on Spark AND its
 `oracle_sql()` DuckDB mirror, and compares row count, column names
-(sorted) and `__spark_entry__.digest` — the same protocol as
-`tests/test_entry_oracle.py`.
+(sorted) and `__spark_entry__.digest` — the same gate
+(`__spark_entry__.oracle_gate`) as `tests/test_entry_oracle.py`.
 
 Usage:  python jobs/oracle_sweep.py [sf_dir] [query ...]
         (default sf_dir /root/testdata/sf0.01; no query args = all)
@@ -27,46 +27,23 @@ def main() -> None:
     from zhtml_spark.pipeline import build_session
 
     spark = build_session("oracle-sweep")
-    con = duckdb.connect()
-    for t in entry.TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
-    queries = entry.queries()
-    oracles = entry.oracle_sql()
+    check = entry.oracle_gate(spark, sf_dir)
     bad = []
-    for name, fn in queries.items():
+    for name in entry.queries():
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir)
-            scols = list(sdf.columns)
-            srows = [tuple(r) for r in sdf.collect()]
+            mismatch = check(name)
+        except duckdb.Error as e:
+            bad.append((name, f"oracle err: {e}"))
+            print(f"{name}: ORACLE ERROR {e}")
+            continue
         except Exception as e:  # noqa: BLE001
             bad.append((name, f"spark err: {e}"))
             print(f"{name}: SPARK ERROR {e}")
             continue
-        try:
-            cur = con.execute(oracles[name])
-            ocols = [d[0] for d in cur.description]
-            orows = cur.fetchall()
-        except Exception as e:  # noqa: BLE001
-            bad.append((name, f"oracle err: {e}"))
-            print(f"{name}: ORACLE ERROR {e}")
-            continue
-        rows_ok = len(srows) == len(orows)
-        schema_ok = sorted(scols) == sorted(ocols)
-        hash_ok = schema_ok and (
-            entry.digest(srows, scols) == entry.digest(orows, ocols)
-        )
-        status = "OK" if (rows_ok and schema_ok and hash_ok) else "FAIL"
-        print(
-            f"{name}: {status} rows={len(srows)}/{len(orows)} "
-            f"schema={schema_ok} hash={hash_ok}"
-        )
-        if status == "FAIL":
+        print(f"{name}: {'FAIL ' + mismatch if mismatch else 'OK'}")
+        if mismatch:
             bad.append((name, "mismatch"))
     spark.stop()
     print(json.dumps({"bad": bad}))

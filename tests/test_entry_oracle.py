@@ -1,14 +1,15 @@
 """The correctness gate: every ``queries()`` entry runs on Spark AND as
 its ``oracle_sql()`` on DuckDB at sf0.001; the two results must agree
-on row count, sorted column names and ``digest``."""
+on row count, sorted column names and ``digest``
+(``__spark_entry__.oracle_gate``)."""
 
 from __future__ import annotations
 
+import ast
 import importlib
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -19,16 +20,8 @@ entry_mod = importlib.import_module("__spark_entry__")
 
 
 @pytest.fixture(scope="module")
-def oracle():
-    con = duckdb.connect()
-    for t in entry_mod.TABLES:
-        path = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-    yield con
-    con.close()
+def gate(spark):
+    return entry_mod.oracle_gate(spark, SF_DIR)
 
 
 def test_entry_smoke(spark):
@@ -37,15 +30,21 @@ def test_entry_smoke(spark):
     assert {"doc_id", "offset", "kind", "text", "media_ref"} <= set(df.columns)
 
 
+def test_registry_matches_oracles_and_q_functions():
+    """Every query has an oracle and every oracle a query, and the
+    registry is exactly the module's top-level ``_q_<name>`` functions."""
+    qs = entry_mod.queries()
+    assert set(qs) == set(entry_mod.oracle_sql())
+    tree = ast.parse(open(entry_mod.__file__).read())
+    defined = {
+        node.name[len("_q_"):]: getattr(entry_mod, node.name)
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef) and node.name.startswith("_q_")
+    }
+    assert qs == defined
+
+
 @pytest.mark.parametrize("name", sorted(entry_mod.queries().keys()))
-def test_query_matches_oracle(spark, oracle, name):
-    sdf = entry_mod.queries()[name](spark, SF_DIR)
-    got = [tuple(r) for r in sdf.collect()]
-    cur = oracle.execute(entry_mod.oracle_sql()[name])
-    ocols = [d[0] for d in cur.description]
-    want = cur.fetchall()
-    assert sorted(sdf.columns) == sorted(ocols)
-    assert len(got) == len(want), f"{name}: {len(got)} vs {len(want)} rows"
-    assert entry_mod.digest(got, sdf.columns) == entry_mod.digest(
-        want, ocols
-    ), f"{name}: value mismatch"
+def test_query_matches_oracle(gate, name):
+    mismatch = gate(name)
+    assert mismatch is None, f"{name}: {mismatch}"

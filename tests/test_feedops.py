@@ -4,11 +4,14 @@ path end-to-end (dispatch routing + XML-prolog charset)."""
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
 from zhtml_spark.feedops import (
     FEED_ROOT_RE,
+    _tokens,
     decode_feed_spans,
     extract_feed_spans,
 )
@@ -253,6 +256,50 @@ def test_blank_prefixed_non_feed_is_linear():
     assert extract_feed_spans(
         " \n\t <rss><channel><item><title>T</title></item></channel></rss>"
     ) == [("heading", "T", None, 0)]
+
+
+@pytest.mark.parametrize("unit", ["<a", "<"])
+def test_unclosed_tag_run_is_linear(unit):
+    """A truncated feed ending in an unclosed run of tags must not
+    rescan the run from each '<' (``"<a" * 400`` once took ~3 s and
+    each doubling cost 8x)."""
+    import time
+
+    head = '<rss version="2.0"><channel><item><title>x'
+    t0 = time.perf_counter()
+    assert extract_feed_spans(head + unit * (400_000 // len(unit))) == []
+    assert time.perf_counter() - t0 < 0.5
+
+
+# the tag scan before it skipped unclosed runs: plain backtracking
+_BACKTRACKING_TOK = re.compile(
+    r"<!\[CDATA\[(.*?)(?:\]\]>|\Z)|<!--.*?(?:-->|\Z)|<\?.*?(?:\?>|\Z)"
+    r"|<!DOCTYPE[^>]*>|</\s*([^\s>]*)\s*>|<([^!?/\s>][^\s/>]*)"
+    r"((?:\"[^\"]*\"|'[^']*'|[^>\"'])*?)(/?)>",
+    re.S,
+)
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        '<a"b c=">',  # the name gives a quote back to the soup
+        '<a"b>',  # ... or keeps it
+        "<\"a\"b c='>'>",
+        "<a url=a/b/>",
+        "<title/>rest<b x='1'/>",
+        "x=<<!--<?",  # the skipped run stops before a comment
+        "<a<</b>",
+        ']]>!/><</"x=a<a]]>]<!DOCTYPE<!--<![CDATA[<?b!>?>',
+        "<a<a<a <b>",
+        "<a x='1' <b> y\"",
+    ],
+)
+def test_tag_scan_matches_backtracking_form(text):
+    def sig(ms):
+        return [(m.span(), m.group(1, 2, 3, 4, 5)) for m in ms]
+
+    assert sig(_tokens(text)) == sig(_BACKTRACKING_TOK.finditer(text))
 
 
 def test_self_closed_elements_do_not_open_captures():

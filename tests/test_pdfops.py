@@ -6,11 +6,15 @@ fixtures, no libraries), so each test states its expectation from
 construction knowledge — the same discipline as the image/container
 sniffer oracles."""
 
+import re
+import time
 import zlib
 
 import pytest
 
 from zhtml_spark.pdfops import (
+    _OBJ_HEAD_AT_RE,
+    _OBJ_HEAD_RE,
     _parse_lit_string,
     _parse_object,
     _Ref,
@@ -850,3 +854,32 @@ def test_outline_titles_walk_depth_and_utf16():
         ("meta", "Doc T", "info:title", 4),
         ("meta", "A", "info:author", 5),
     ]  # /Producer is not allowlisted
+
+
+# ------------------------------------------------------------ scan cost
+
+
+def test_digit_run_scans_in_linear_time():
+    """The object-header search once rescanned a digit run from each
+    of its digits (20 KB of digits took ~5 s, quadratic)."""
+    t0 = time.perf_counter()
+    assert extract_pdf_spans(b"%PDF-1.4\n" + b"0" * 1_000_000) == []
+    assert time.perf_counter() - t0 < 0.5
+
+
+def test_object_header_scan_matches_plain_search():
+    """Match-at-pos, then a search that never starts inside a digit
+    run, finds what the plain backtracking search finds, from every
+    position, including one inside a digit run."""
+    plain = re.compile(rb"(\d+)\s+\d+\s+obj\b")
+    for b in (
+        b"12 0 obj",
+        b"5 12 0 obj << >> endobj 7 0 obj",
+        b"123 0 objx 45 6\n obj",
+        b"1 2 3 obj 99 0 obj9 1 0 obj",
+        b"0000 0 0 obj",
+    ):
+        for pos in range(len(b) + 1):
+            want = plain.search(b, pos)
+            got = _OBJ_HEAD_AT_RE.match(b, pos) or _OBJ_HEAD_RE.search(b, pos)
+            assert (got and got.span()) == (want and want.span()), (b, pos)

@@ -52,23 +52,41 @@ from .udfs import map_rows
 
 # One scan, every construct atomic.  CDATA / comments / PIs tolerate
 # a missing terminator at EOF (truncated responses must not deadlock
-# the scan or leak their tail into element structure).
+# the scan or leak their tail into element structure).  Read it
+# through _tokens, which drops the ``skip`` runs.
 _TOK_RE = re.compile(
     r"<!\[CDATA\[(.*?)(?:\]\]>|\Z)"  # 1: CDATA payload
     r"|<!--.*?(?:-->|\Z)"  # comment
     r"|<\?.*?(?:\?>|\Z)"  # PI / XML prolog
     r"|<!DOCTYPE[^>]*>"  # doctype
     r"|</\s*([^\s>]*)\s*>"  # 2: end-tag name
-    r"|<([^!?/\s>][^\s/>]*)"  # 3: start-tag name
-    # 4: attribute soup — LAZY, or the greedy char class (which must
-    # admit '/' for unquoted values like url=a/b) would swallow the
-    # self-closing slash and group 5 could never match (every
-    # self-closed tag would read as an open tag, so a `<title/>`
-    # capture would silently eat the rest of the feed).
-    r"((?:\"[^\"]*\"|'[^']*'|[^>\"'])*?)"
-    r"(/?)>",  # 5: self-closing slash
+    # 3: start-tag name.  The name may give back characters to the
+    # soup, but only a cut before a quote can change where the soup
+    # ends, so the runs between quotes are possessive and the name
+    # backtracks one quoted segment at a time.
+    r"|<([^!?/\s>][^\s/>\"']*+(?:[\"'][^\s/>\"']*+)*)"
+    # 4: attribute soup — it must admit '/' for unquoted values like
+    # url=a/b, yet never swallow the self-closing slash, or group 5
+    # could never match (every self-closed tag would read as an open
+    # tag, so a `<title/>` capture would silently eat the rest of the
+    # feed): a '/' joins the soup only when no '>' follows it.  Each
+    # step has one choice, so the soup is possessive.
+    r"((?:\"[^\"]*\"|'[^']*'|/(?!>)|[^>\"'/])*+)"
+    r"(/?)>"  # 5: self-closing slash
+    # A start tag that fails fails from every later '<' of its name
+    # run too (those try a subset of its soup starts), so the run is
+    # skipped whole, up to a '<' that could open another construct.
+    # Without this, every '<' of an unclosed `<a<a<a…` rescans the run.
+    r"|(?P<skip><(?![!?/\s>])(?:[^\s/><]|<(?![!?/]))++)",
     re.S,
 )
+
+
+def _tokens(text: str):
+    """The ``_TOK_RE`` matches in ``text``, skipped runs left out."""
+    return (t for t in _TOK_RE.finditer(text) if t.group("skip") is None)
+
+
 _ATTR_RE = re.compile(
     r"([^\s=/>]+)\s*=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s>]+))"
 )
@@ -122,7 +140,7 @@ def _content_str(raw: str) -> str:
     HTML either way (plain text comes back as one text span)."""
     if any(
         t.group(2) is not None or t.group(3) is not None
-        for t in _TOK_RE.finditer(raw)
+        for t in _tokens(raw)
     ):
         return raw
     return _text_content(raw)
@@ -151,7 +169,7 @@ def _text_content(raw: str) -> str:
     runs + literal CDATA payloads, markup tokens dropped."""
     out: list[str] = []
     pos = 0
-    for t in _TOK_RE.finditer(raw):
+    for t in _tokens(raw):
         out.append(_decode_refs(raw[pos : t.start()]))
         if t.group(1) is not None:
             out.append(t.group(1))
@@ -230,7 +248,7 @@ def extract_feed_spans(
         cap_sink = sink
         cap_key = key
 
-    for t in _TOK_RE.finditer(xml):
+    for t in _tokens(xml):
         start_name = t.group(3)
         end_name = t.group(2)
         if cap_name is not None:

@@ -86,7 +86,12 @@ _OCT = b"01234567"
 _NUM_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
 _INT_RE = re.compile(rb"[+-]?\d+")
 _NAME_ESC = re.compile(rb"#([0-9A-Fa-f]{2})")
-_OBJ_HEAD_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b")
+# ``N G obj``.  The runs are possessive (each is followed by a byte it
+# cannot hold) and a header never starts inside a digit run, so a long
+# digit run is read once, not again from each of its digits.
+_OBJ_HEAD = rb"(\d++)\s++\d++\s++obj\b"
+_OBJ_HEAD_RE = re.compile(rb"(?<!\d)" + _OBJ_HEAD)
+_OBJ_HEAD_AT_RE = re.compile(_OBJ_HEAD)
 _STREAM_RE = re.compile(rb"stream(?:\r\n|\n|\r)")
 _ROOT_RE = re.compile(rb"/Root\s+(\d+)\s+\d+\s+R")
 _INFO_RE = re.compile(rb"/Info\s+(\d+)\s+\d+\s+R")
@@ -306,7 +311,9 @@ def _scan_objects(b: bytes) -> tuple[dict, list]:
     pos = 0
     n = len(b)
     while pos < n:
-        m = _OBJ_HEAD_RE.search(b, pos)
+        # the lookbehind sees the byte before ``pos``, so a header that
+        # starts right at ``pos`` is tried without it
+        m = _OBJ_HEAD_AT_RE.match(b, pos) or _OBJ_HEAD_RE.search(b, pos)
         if not m:
             break
         num = int(m.group(1))
