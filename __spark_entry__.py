@@ -65,7 +65,11 @@ def _extract_exploded(df: DataFrame, config=None) -> DataFrame:
     """Run the fused extraction UDF and explode spans to flat rows."""
     from zhtml_spark.pipeline import extract_documents
 
-    out = extract_documents(df, config)
+    return _exploded(extract_documents(df, config))
+
+
+def _exploded(out: DataFrame) -> DataFrame:
+    """One flat row per span of an extraction result."""
     return out.select(
         "doc_id", F.explode("spans").alias("s")
     ).select(
@@ -794,14 +798,7 @@ def _q_extract_fragment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("text"),
         ).alias("fragment"),
     )
-    out = extract_fragments(frags, "ul")
-    return out.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id",
-        F.col("s.offset").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-    )
+    return _exploded(extract_fragments(frags, "ul"))
 
 
 def _q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -811,7 +808,6 @@ def _q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     container format.  r3: records carry a FULL HTTP response payload
     (Common Crawl's actual wire shape), so the oracle also gates the
     HTTP-header strip — leaked headers would change every span hash."""
-    from zhtml_spark.pipeline import extract_documents
     from zhtml_spark.sources import (
         parse_warc_records,
         warc_record,
@@ -833,13 +829,8 @@ def _q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             http_headers=True,
         ).alias("content")
     )
-    out = extract_documents(warc_to_documents(parse_warc_records(archives)))
-    return out.select("doc_id", F.explode("spans").alias("s")).select(
-        F.col("doc_id"),
-        F.col("s.offset").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
+    return _extract_exploded(
+        warc_to_documents(parse_warc_records(archives))
     )
 
 
@@ -1531,12 +1522,10 @@ def _q_line_dedup(spark, sf_dir):
     return line_dedup(docs)
 
 
-def _q_spans_to_markdown(spark, sf_dir):
-    """Gates the markdown renderer end-to-end: parse → extract spans
-    (heading/text/list/media) → one markdown doc per page.  The
-    oracle states the expected markdown literally."""
-    from zhtml_spark.textops import spans_to_markdown
-
+def _page_shape_spans(spark, sf_dir):
+    """Exploded spans of one page per document (heading, paragraph,
+    list item, image), which the markdown, text and WET renderers
+    read."""
     d = F.col("doc_id").cast("string")
     html = F.concat(
         F.lit("<body><h1>Doc "), d, F.lit("</h1><p>"),
@@ -1545,7 +1534,18 @@ def _q_spans_to_markdown(spark, sf_dir):
         F.lit('</li></ul><img src="i'), d,
         F.lit('.png" alt="fig"></body>'),
     )
-    ex = _extract_exploded(_wrap_as_interleaved(_docs(spark, sf_dir), html))
+    return _extract_exploded(
+        _wrap_as_interleaved(_docs(spark, sf_dir), html)
+    )
+
+
+def _q_spans_to_markdown(spark, sf_dir):
+    """Gates the markdown renderer end-to-end: parse → extract spans
+    (heading/text/list/media) → one markdown doc per page.  The
+    oracle states the expected markdown literally."""
+    from zhtml_spark.textops import spans_to_markdown
+
+    ex = _page_shape_spans(spark, sf_dir)
     return spans_to_markdown(ex)
 
 
@@ -1559,15 +1559,7 @@ def _q_wet_render(spark, sf_dir):
     from zhtml_spark.sources import wet_record
     from zhtml_spark.textops import spans_to_text
 
-    d = F.col("doc_id").cast("string")
-    html = F.concat(
-        F.lit("<body><h1>Doc "), d, F.lit("</h1><p>"),
-        F.col("text"),
-        F.lit("</p><ul><li>item "), F.col("lang"),
-        F.lit('</li></ul><img src="i'), d,
-        F.lit('.png" alt="fig"></body>'),
-    )
-    ex = _extract_exploded(_wrap_as_interleaved(_docs(spark, sf_dir), html))
+    ex = _page_shape_spans(spark, sf_dir)
     txt = spans_to_text(ex)
     return txt.select(
         "doc_id",
@@ -1798,15 +1790,7 @@ def _q_spans_to_text(spark, sf_dir):
     verbatim, newline-joined in offset order."""
     from zhtml_spark.textops import spans_to_text
 
-    d = F.col("doc_id").cast("string")
-    html = F.concat(
-        F.lit("<body><h1>Doc "), d, F.lit("</h1><p>"),
-        F.col("text"),
-        F.lit("</p><ul><li>item "), F.col("lang"),
-        F.lit('</li></ul><img src="i'), d,
-        F.lit('.png" alt="fig"></body>'),
-    )
-    ex = _extract_exploded(_wrap_as_interleaved(_docs(spark, sf_dir), html))
+    ex = _page_shape_spans(spark, sf_dir)
     return spans_to_text(ex)
 
 
@@ -1880,6 +1864,22 @@ def _langid_case_col() -> Column:
             expr == i + 1, F.lit(_LANGID_HELD_OUT[lg])
         )
     return c.otherwise(F.col("text"))
+
+
+# per-doc trigram buckets ``bk(doc_id, b)`` over a ``low(doc_id, t)``
+# CTE: the DuckDB twin of the Spark-side trigram hashing, shared by the
+# lang_id_v2, lang_gate, trigram_lm_score and quality_tiers oracles
+_LANGID_BUCKET_CTES = f"""grams AS (
+                SELECT doc_id, substr(t, CAST(i.i AS INTEGER), 3) AS g
+                FROM low, UNNEST(range(1, length(t) - 1)) i(i)
+                WHERE length(t) >= 3
+            ),
+            bk AS (
+                SELECT doc_id,
+                       CAST(('0x' || substr(md5(g), 1, 12)) AS BIGINT)
+                         % {_LANGID_B} AS b
+                FROM grams
+            )"""
 
 
 def _langid_values() -> str:
@@ -2278,7 +2278,6 @@ def _q_warc_charset_extract(spark, sf_dir):
     declared, high-byte latin-1 body — the spec default path (a blind
     UTF-8 engine would mojibake or throw); (4) BOM'd UTF-16LE.  The
     oracle states every span from construction."""
-    from zhtml_spark.pipeline import extract_documents
     from zhtml_spark.sources import (
         _W1252_DST,
         _W1252_SRC,
@@ -2339,14 +2338,7 @@ def _q_warc_charset_extract(spark, sf_dir):
         default_charset="windows-1252",
         extended=False,
     )
-    out = extract_documents(warc_to_documents(recs))
-    return out.select("doc_id", F.explode("spans").alias("s")).select(
-        F.col("doc_id"),
-        F.col("s.offset").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-    )
+    return _extract_exploded(warc_to_documents(recs))
 
 
 def _q_warc_http_codec_extract(spark, sf_dir):
@@ -5416,17 +5408,7 @@ def oracle_sql() -> dict[str, str]:
             en AS (SELECT w FROM langs WHERE lang = 'en'),
             low AS (SELECT doc_id, lang,
                            lower(text) AS t FROM documents),
-            grams AS (
-                SELECT doc_id, substr(t, CAST(i.i AS INTEGER), 3) AS g
-                FROM low, UNNEST(range(1, length(t) - 1)) i(i)
-                WHERE length(t) >= 3
-            ),
-            bk AS (
-                SELECT doc_id,
-                       CAST(('0x' || substr(md5(g), 1, 12)) AS BIGINT)
-                         % {_LANGID_B} AS b
-                FROM grams
-            ),
+            {_LANGID_BUCKET_CTES},
             sc AS (
                 SELECT doc_id,
                        CAST(sum(w[CAST(b AS INTEGER) + 1]) AS BIGINT)
@@ -5803,17 +5785,7 @@ def oracle_sql() -> dict[str, str]:
             WITH langs AS (SELECT * FROM {_langid_values()}),
             en AS (SELECT w FROM langs WHERE lang = 'en'),
             low AS (SELECT doc_id, lower(text) AS t FROM documents),
-            grams AS (
-                SELECT doc_id, substr(t, CAST(i.i AS INTEGER), 3) AS g
-                FROM low, UNNEST(range(1, length(t) - 1)) i(i)
-                WHERE length(t) >= 3
-            ),
-            bk AS (
-                SELECT doc_id,
-                       CAST(('0x' || substr(md5(g), 1, 12)) AS BIGINT)
-                         % {_LANGID_B} AS b
-                FROM grams
-            ),
+            {_LANGID_BUCKET_CTES},
             sc AS (
                 SELECT doc_id,
                        CAST(sum(w[CAST(b AS INTEGER) + 1]) AS BIGINT)
@@ -5930,17 +5902,7 @@ def oracle_sql() -> dict[str, str]:
             low AS (
                 SELECT doc_id, substr(lower(text), 1, 120) AS t FROM src
             ),
-            grams AS (
-                SELECT doc_id, substr(t, CAST(i.i AS INTEGER), 3) AS g
-                FROM low, UNNEST(range(1, length(t) - 1)) i(i)
-                WHERE length(t) >= 3
-            ),
-            bk AS (
-                SELECT doc_id,
-                       CAST(('0x' || substr(md5(g), 1, 12)) AS BIGINT)
-                         % {_LANGID_B} AS b
-                FROM grams
-            ),
+            {_LANGID_BUCKET_CTES},
             sc AS (
                 SELECT doc_id, l.lang,
                        CAST(sum(l.w[CAST(b AS INTEGER) + 1]) AS BIGINT)
@@ -5973,17 +5935,7 @@ def oracle_sql() -> dict[str, str]:
                 FROM documents
             ),
             low AS (SELECT doc_id, lower(text) AS t FROM src),
-            grams AS (
-                SELECT doc_id, substr(t, CAST(i.i AS INTEGER), 3) AS g
-                FROM low, UNNEST(range(1, length(t) - 1)) i(i)
-                WHERE length(t) >= 3
-            ),
-            bk AS (
-                SELECT doc_id,
-                       CAST(('0x' || substr(md5(g), 1, 12)) AS BIGINT)
-                         % {_LANGID_B} AS b
-                FROM grams
-            ),
+            {_LANGID_BUCKET_CTES},
             sc AS (
                 SELECT doc_id, l.lang,
                        CAST(sum(l.w[CAST(b AS INTEGER) + 1]) AS BIGINT)
