@@ -15,9 +15,10 @@ tokenize→tree→extract path.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import inspect
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1844,9 +1845,9 @@ _LANGID_LANGS = sorted(_LANGID_HELD_OUT)  # de en es fr it ja nl pt ru zh
 
 
 def _langid_case_sql() -> str:
-    """CASE over ``doc_id % 11``: 1..10 → the held-out sentence of the i-th
-    sorted language, else the document's own text — the DuckDB twin
-    of the Spark-side corpus in _q_lang_id_v2/_q_lang_gate."""
+    """CASE over ``doc_id % 11``: 1..10 → the held-out sentence of
+    the i-th sorted language, else the document's own text — the
+    DuckDB twin of the Spark-side corpus in _q_lang_id_v2/_q_lang_gate."""
     whens = "\n".join(
         f"WHEN {i + 1} THEN '{_LANGID_HELD_OUT[lg].replace(chr(39), chr(39) * 2)}'"
         for i, lg in enumerate(_LANGID_LANGS)
@@ -4012,9 +4013,10 @@ def digest(rows: Sequence[Sequence], cols: Sequence[str]) -> str:
     return h.hexdigest()
 
 
+@contextlib.contextmanager
 def oracle_gate(
     spark: SparkSession, sf_dir: str
-) -> Callable[[str], str | None]:
+) -> Iterator[Callable[[str], str | None]]:
     """The correctness gate at one scale factor: a DuckDB connection
     with one view per ``TABLES`` entry over ``sf_dir``'s parquet files,
     and a check that runs a query on Spark and its ``oracle_sql()``
@@ -4049,7 +4051,10 @@ def oracle_gate(
             f"hash={hash_ok}"
         )
 
-    return check
+    try:
+        yield check
+    finally:
+        con.close()
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -27,24 +27,24 @@ def main() -> None:
     from zhtml_spark.pipeline import build_session
 
     spark = build_session("oracle-sweep")
-    check = entry.oracle_gate(spark, sf_dir)
     bad = []
-    for name in entry.queries():
-        if only and name not in only:
-            continue
-        try:
-            mismatch = check(name)
-        except duckdb.Error as e:
-            bad.append((name, f"oracle err: {e}"))
-            print(f"{name}: ORACLE ERROR {e}")
-            continue
-        except Exception as e:  # noqa: BLE001
-            bad.append((name, f"spark err: {e}"))
-            print(f"{name}: SPARK ERROR {e}")
-            continue
-        print(f"{name}: {'FAIL ' + mismatch if mismatch else 'OK'}")
-        if mismatch:
-            bad.append((name, "mismatch"))
+    with entry.oracle_gate(spark, sf_dir) as check:
+        for name in entry.queries():
+            if only and name not in only:
+                continue
+            try:
+                mismatch = check(name)
+            except duckdb.Error as e:
+                bad.append((name, f"oracle err: {e}"))
+                print(f"{name}: ORACLE ERROR {e}")
+                continue
+            except Exception as e:  # noqa: BLE001
+                bad.append((name, f"spark err: {e}"))
+                print(f"{name}: SPARK ERROR {e}")
+                continue
+            print(f"{name}: {'FAIL ' + mismatch if mismatch else 'OK'}")
+            if mismatch:
+                bad.append((name, "mismatch"))
     spark.stop()
     print(json.dumps({"bad": bad}))
     if bad:

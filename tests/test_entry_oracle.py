@@ -21,7 +21,8 @@ entry_mod = importlib.import_module("__spark_entry__")
 
 @pytest.fixture(scope="module")
 def gate(spark):
-    return entry_mod.oracle_gate(spark, SF_DIR)
+    with entry_mod.oracle_gate(spark, SF_DIR) as check:
+        yield check
 
 
 def test_entry_smoke(spark):
