@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import contextlib
 import hashlib
-import inspect
 from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -28,10 +27,10 @@ from pyspark.sql import functions as F
 from zhtml_spark.textops import (
     BPE_MAX_WORD_LEN,
     LOG2Q_FRAC_BITS,
+    PAGERANK_DAMPING_PCT,
     PAGERANK_SCALE,
     STOPWORDS,
     VEC_SCALE,
-    pagerank,
 )
 
 
@@ -4125,10 +4124,8 @@ def _pagerank_ctes(iters: int) -> str:
     truncating ``//`` division everywhere Spark uses ``div``, and the
     dangling mass as an explicit 1-row aggregate per iteration.  The
     scale and the damping are the Spark side's own: ``PAGERANK_SCALE``
-    and ``pagerank``'s default ``damping_pct``, which the registry
-    query uses.  Final ranks live in ``r{iters}``."""
-    damping_pct = inspect.signature(pagerank).parameters["damping_pct"].default
-    tele = f"(({PAGERANK_SCALE} * {100 - damping_pct}) // 100) // p.n"
+    and ``PAGERANK_DAMPING_PCT``.  Final ranks live in ``r{iters}``."""
+    tele = f"(({PAGERANK_SCALE} * {100 - PAGERANK_DAMPING_PCT}) // 100) // p.n"
     parts = [
         """
         nodes AS (
@@ -4166,7 +4163,7 @@ def _pagerank_ctes(iters: int) -> str:
         r{i} AS (
             SELECT p.node, p.n,
                    {tele}
-                   + ({damping_pct} * (coalesce(c.contrib, 0)
+                   + ({PAGERANK_DAMPING_PCT} * (coalesce(c.contrib, 0)
                                        + d.dang // p.n)) // 100 AS r
             FROM {p} p LEFT JOIN c{i} c ON c.node = p.node, d{i} d
         )"""

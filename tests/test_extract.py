@@ -49,13 +49,6 @@ def test_full_page_stripped():
     ]
 
 
-def test_full_page_unstripped_keeps_nav_footer():
-    spans, _ = extract_html(FULL_PAGE, ExtractConfig(strip_boilerplate=False))
-    texts = [s[1] for s in spans]
-    assert "Home" in texts
-    assert "Copyright 2026 About" in texts
-
-
 def test_link_density_threshold():
     # one real sentence + one nav-ish block: only nav-ish dropped
     html = (
@@ -162,35 +155,6 @@ def test_inline_code_is_own_span():
 def test_code_kind_survives_paragraph_break():
     spans, _ = extract_html("<p><code>x</p><p>y</p>")
     assert spans == [("code", "x", None), ("code", "y", None)]
-
-
-def test_prefer_main_content_boost():
-    """Opt-in readability boost: landmark subtree only; default
-    behavior (span-parity contract) unchanged."""
-    from zhtml_spark.extract import ExtractConfig, extract_html
-
-    page = (
-        '<body><div class="sidebar"><p>Related stories</p></div>'
-        "<article><h1>Title</h1><p>Real body</p></article>"
-        "<div><p>More widgets</p></div></body>"
-    )
-    default_spans, _ = extract_html(page)
-    assert ("text", "Related stories", None) in default_spans
-    boosted, _ = extract_html(page, ExtractConfig(prefer_main_content=True))
-    assert boosted == [("heading", "Title", None), ("text", "Real body", None)]
-    # no landmark: falls back to full-body extraction
-    plain, _ = extract_html(
-        "<body><p>plain page</p></body>",
-        ExtractConfig(prefer_main_content=True),
-    )
-    assert plain == [("text", "plain page", None)]
-    # svg <title> must not be mistaken for a landmark... and an svg
-    # inside the landmark stays excluded
-    svg_page = (
-        "<body><main><p>m</p><svg><title>tip</title></svg></main></body>"
-    )
-    spans, _ = extract_html(svg_page, ExtractConfig(prefer_main_content=True))
-    assert spans == [("text", "m", None)]
 
 
 def test_template_content_never_extracted():

@@ -151,7 +151,7 @@ def _image_meta(spark, tmp_path):
         return [(ref, *(meta or (None, None, None)),
                  "sniff" if meta else "none")]
 
-    return decode_image_meta(df, engine="sniff"), rows, direct
+    return decode_image_meta(df), rows, direct
 
 
 def _container_meta(spark, tmp_path):

@@ -171,10 +171,14 @@ def test_simhash_candidate_stats_match_brute_force(docs, n_blocks):
 
 
 def test_winnow_candidate_stats_match_brute_force(docs):
-    k, window, cap = 4, 3, 2
+    """Engine path: xxhash64 k-gram hashes, mirrored in pure Python by
+    ``langid_model.xxh64``."""
+    from zhtml_spark.langid_model import xxh64
+
+    k, window, cap = textops.WINNOW_K, textops.WINNOW_WINDOW, 2
     df: dict = {}
     for _, text in TEXTS:
-        h = [_md5_48(text[i:i + k]) for i in range(len(text) - k + 1)]
+        h = [xxh64(text[i:i + k].encode()) for i in range(len(text) - k + 1)]
         fps = {
             min(h[i:i + window])
             for i in range(len(text) - (k + window - 1) + 1)
@@ -184,9 +188,7 @@ def test_winnow_candidate_stats_match_brute_force(docs):
     max_df, pairs = _volume(df.values())
     capped_max, capped_pairs = _volume(v for v in df.values() if v <= cap)
     assert max_df > cap  # the cap really bites on this corpus
-    assert textops.winnow_candidate_stats(
-        docs, k=k, window=window, max_doc_freq=cap, hash_fn="md5"
-    ) == {
+    assert textops.winnow_candidate_stats(docs, max_doc_freq=cap) == {
         "k": k,
         "window": window,
         "max_doc_freq": cap,

@@ -64,9 +64,7 @@ def test_substring_hybrid_branches_agree_across_crossover(spark):
     # the shared `body` must be found as a cross-doc span regardless
     # of which branch built each side's grams, with doc-2 offsets
     # shifted by exactly the pad length
-    spans = substring_dup_spans(
-        docs, k=k, min_len=60, max_gram_freq=None
-    ).collect()
+    spans = substring_dup_spans(docs, k=k, min_len=60).collect()
     assert len(spans) == 1
     s = spans[0]
     assert (s["doc_a"], s["doc_b"]) == (1, 2)
@@ -74,7 +72,7 @@ def test_substring_hybrid_branches_agree_across_crossover(spark):
     assert s["length"] >= len(body)
     # and the md5 engine path (the oracle form) agrees with xxhash64
     spans_md5 = substring_dup_spans(
-        docs, k=k, min_len=60, max_gram_freq=None, hash_fn="md5"
+        docs, k=k, min_len=60, hash_fn="md5"
     ).collect()
     assert [tuple(r) for r in spans_md5] == [tuple(r) for r in spans]
 

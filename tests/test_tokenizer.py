@@ -89,21 +89,3 @@ def test_every_fixture_has_valid_error_codes() -> None:
     for case in CASES:
         for e in case.get("errors", []):
             assert e["code"] in SPEC_ERROR_IDS, e
-
-
-def test_error_positions_flag() -> None:
-    """Opt-in line/col positions (reference tracks the same pair,
-    src/tokenizer.zig:115-116; its harness skips comparing them)."""
-    _, errors = tokenize("line1\n<p>\n<!-->", with_positions=True)
-    assert errors == ["abrupt-closing-of-empty-comment@3:5"]
-    _, errors = tokenize("&#0;", with_positions=True)
-    assert errors == ["null-character-reference@1:5"]
-    # default path stays bare codes
-    _, errors = tokenize("<!-->")
-    assert errors == ["abrupt-closing-of-empty-comment"]
-    # positions attach to every error on multi-error input
-    _, errors = tokenize("<!-->\n<!-->", with_positions=True)
-    codes = [e.split("@")[0] for e in errors]
-    lines = [e.split("@")[1].split(":")[0] for e in errors]
-    assert codes == ["abrupt-closing-of-empty-comment"] * 2
-    assert lines == ["1", "2"]

@@ -138,12 +138,6 @@ def is_media_href(href: str) -> bool:
 
 @dataclass
 class ExtractConfig:
-    strip_boilerplate: bool = True
-    # readability-style boost: when the page declares a <main> or
-    # <article> landmark, restrict extraction to the FIRST one —
-    # sidebars/related-links outside the landmark vanish without any
-    # density heuristics.  Off by default (span-parity contract).
-    prefer_main_content: bool = False
     # noscript policy: a scripting-enabled browser never renders
     # <noscript> content, and at crawl scale it is tracking pixels and
     # "enable JS" banners — skipped by default.  Flip on to harvest the
@@ -349,22 +343,6 @@ def extract_spans(
                 ]
             return head_meta
 
-    if cfg.prefer_main_content:
-        # preorder DFS for the first <main>/<article> landmark
-        walk = [body]
-        while walk:
-            nid0 = walk.pop()
-            if (
-                nid0 != body
-                and tree.ntype[nid0] == N_ELEMENT
-                and tree.name[nid0] in ("main", "article")
-                and tree.ns[nid0] is None
-            ):
-                body = nid0
-                break
-            for c in _reversed_children(tree, nid0):
-                walk.append(c)
-
     spans: list[tuple[str, str, str | None]] = list(head_meta)
     # parallel source anchors, one per span (kept aligned through the
     # density filter); -1 where the tree carries no position
@@ -411,13 +389,15 @@ def extract_spans(
             return
         raw = "".join(parts)
         text = raw if pre_depth > 0 else _normalize(raw)
-        keep = bool(text)
         had_text = bool(text)
-        if keep and cfg.strip_boilerplate:
-            if semantic_skip_depth > 0:
-                keep = False
-            elif total_chars > 0 and anchor_chars / total_chars > MAX_LINK_DENSITY:
-                keep = False
+        keep = (
+            had_text
+            and semantic_skip_depth == 0
+            and not (
+                total_chars > 0
+                and anchor_chars / total_chars > MAX_LINK_DENSITY
+            )
+        )
         if keep:
             spans.append((kind_stack[-1] if kind_stack else "text", text, None))
             span_srcs.append(block_src)

@@ -14,11 +14,10 @@ Decode capability tiers (r4, VERDICT r3 #7):
   import-try), handles the formats the sniffer doesn't — same UDF,
   ``decoder='pil'`` rows.
 * Full pixel decode / resample / frame grab (PIL/ffmpeg/torchaudio)
-  is NOT in this container: ``extract_media_features(engine='pil')``
-  raises ``NotImplementedError`` at the exact integration point, and
-  the default produces a deterministic md5-derived fake feature vector
-  so the Spark-side plumbing (schema, batching, partitioning, UDF
-  signature) stays fully real and testable end-to-end.
+  is out of scope: :func:`extract_media_features` produces a
+  deterministic md5-derived feature vector so the Spark-side plumbing
+  (schema, batching, partitioning, UDF signature) stays fully real
+  and testable end-to-end.
 
 Media table schema::
 
@@ -56,15 +55,9 @@ from .udfs import map_rows
 try:  # pragma: no cover - exercised only where Pillow exists
     from PIL import Image as _PILImage
 
-    # Resolve the resampling constant ONCE at import (ADVICE r6): on
-    # Pillow <9.1 `Image.Resampling` does not exist, and resolving it
-    # inside the per-row try/except silently branded every row
-    # decoder='hash' instead of surfacing the version problem.
-    _PIL_BILINEAR = getattr(_PILImage, "Resampling", _PILImage).BILINEAR
     PIL_AVAILABLE = True
 except ImportError:
     _PILImage = None
-    _PIL_BILINEAR = None
     PIL_AVAILABLE = False
 
 FEATURE_SCHEMA = StructType(
@@ -89,83 +82,21 @@ def _fake_features(payload: bytes, n_features: int) -> tuple[str, list[float]]:
     return digest, feats
 
 
-_THUMB_SIDE = 8
-
-
-def _pil_features(payload: bytes, n_features: int) -> list[float] | None:
-    """REAL pixel features via Pillow (VERDICT r5 #8): decode,
-    grayscale, resample to an 8×8 thumbnail, and emit the row-major
-    mean intensities (0..1, rounded at 1e-6) — the aHash-style
-    downsample every perceptual-dedup pipeline starts from.  Shorter
-    requests truncate; longer ones pad with the global mean so the
-    vector length contract holds.  Deterministic given the payload
-    and Pillow's (pinned-per-cluster) resampler.  Returns None for
-    payloads Pillow cannot decode — the caller falls back to the
-    hash features and brands the row ``decoder='hash'``."""
-    if not PIL_AVAILABLE:  # pragma: no cover - gated by caller
-        return None
-    import io
-
-    try:  # pragma: no cover - exercised only where Pillow exists
-        with _PILImage.open(io.BytesIO(payload)) as im:
-            gray = im.convert("L").resize(
-                (_THUMB_SIDE, _THUMB_SIDE), resample=_PIL_BILINEAR
-            )
-            px = list(gray.getdata())
-    except (OSError, ValueError, SyntaxError):
-        # decode errors only (truncated/undecodable payloads);
-        # anything else — including a misresolved resampler — raises
-        return None
-    feats = [round(p / 255.0, 6) for p in px[:n_features]]
-    if len(feats) < n_features:  # pragma: no cover
-        mean = round(sum(px) / (255.0 * len(px)), 6) if px else 0.0
-        feats += [mean] * (n_features - len(feats))
-    return feats
-
-
-def extract_media_features(
-    df: DataFrame,
-    n_features: int = 8,
-    engine: str = "hash",
-) -> DataFrame:
+def extract_media_features(df: DataFrame, n_features: int = 8) -> DataFrame:
     """Feature extraction over binary payloads (ONE Arrow-batched
-    ``map_rows`` stage — pure map, no shuffle, no driver state).
-
-    ``engine`` picks the decode tier (VERDICT r5 #8):
-
-    * ``"hash"`` (default) — the deterministic md5-derived feature
-      vector: plumbing (schema, batching, partitioning) fully real
-      and oracle-able with zero native deps;
-    * ``"pil"`` — require Pillow and decode REAL pixels
-      (:func:`_pil_features`: grayscale 8×8 thumbnail intensities);
-      raises ``NotImplementedError`` where Pillow is absent (this
-      container), with undecodable payloads falling back per-row to
-      the hash features (``decoder`` column says which);
-    * ``"auto"`` — ``pil`` when available, else ``hash``.
+    ``map_rows`` stage — pure map, no shuffle, no driver state): the
+    deterministic md5-derived feature vector, so the plumbing (schema,
+    batching, partitioning) is fully real and oracle-able with zero
+    native deps.  Rows carry ``decoder='hash'``.
 
     A null payload gives one row with null ``checksum``/``features``
     and ``decoder='none'`` (the :func:`decode_image_meta` convention)."""
-    if engine not in ("hash", "pil", "auto"):
-        raise ValueError(
-            f"engine must be hash|pil|auto, got {engine!r}"
-        )
-    if engine == "pil" and not PIL_AVAILABLE:
-        raise NotImplementedError(
-            "engine='pil' requires Pillow, which this container "
-            "lacks; use engine='auto' (pil when present, hash "
-            "fallback) or the default deterministic hash features"
-        )
-    use_pil = engine != "hash" and PIL_AVAILABLE
 
     def row(media_ref, payload, media_kind=None):
         if payload is None:
             return [(media_ref, media_kind, None, None, "none")]
-        b = bytes(payload)
-        digest, hash_f = _fake_features(b, n_features)
-        pil_f = _pil_features(b, n_features) if use_pil else None
-        if pil_f is None:
-            return [(media_ref, media_kind, digest, hash_f, "hash")]
-        return [(media_ref, media_kind, digest, pil_f, "pil")]
+        digest, feats = _fake_features(bytes(payload), n_features)
+        return [(media_ref, media_kind, digest, feats, "hash")]
 
     cols = ["media_ref", "payload"] + (
         ["media_kind"] if "media_kind" in df.columns else []
@@ -267,35 +198,21 @@ def sniff_image_meta(b: bytes) -> tuple[str, int, int] | None:
     return None
 
 
-def decode_image_meta(
-    df: DataFrame, engine: str = "auto"
-) -> DataFrame:
+def decode_image_meta(df: DataFrame) -> DataFrame:
     """Image width/height/format over binary payloads — ONE
     Arrow-batched ``map_rows`` stage (same shape as
     :func:`extract_media_features`; a pure map, embarrassingly
     parallel at any scale).
 
-    ``engine``:
-
-    * ``"auto"`` (default) — the pure-Python header sniffer first
-      (PNG/GIF/JPEG/BMP, REAL decoding, zero deps); payloads it
-      cannot read fall through to Pillow WHEN the library is present
-      (``PIL_AVAILABLE``), else null dims.  Deterministic either way
-      for the sniffable formats, so tests/oracles are stable across
-      containers with and without Pillow.
-    * ``"sniff"`` — header sniffer only (format-limited, no deps).
-    * ``"pil"`` — require Pillow; raises ``NotImplementedError`` when
-      the container lacks it (the declared integration point).
+    The pure-Python header sniffer runs first (PNG/GIF/JPEG/BMP, REAL
+    decoding, zero deps); payloads it cannot read fall through to
+    Pillow WHEN the library is present (``PIL_AVAILABLE``), else null
+    dims.  Deterministic either way for the sniffable formats, so
+    tests/oracles are stable across containers with and without
+    Pillow.
 
     Output rows carry ``decoder`` ∈ {sniff, pil, none} so callers can
     audit which path produced each row."""
-    if engine not in ("auto", "sniff", "pil"):
-        raise ValueError(f"engine must be auto|sniff|pil, got {engine!r}")
-    if engine == "pil" and not PIL_AVAILABLE:
-        raise NotImplementedError(
-            "engine='pil' requires Pillow, which this container lacks; "
-            "use engine='auto' (header sniffer + PIL fallback)"
-        )
 
     def row(media_ref, payload):
         import io
@@ -303,9 +220,9 @@ def decode_image_meta(
         if payload is None:
             return [(media_ref, None, None, None, "none")]
         b = bytes(payload)
-        meta = None if engine == "pil" else sniff_image_meta(b)
+        meta = sniff_image_meta(b)
         dec = "sniff" if meta else "none"
-        if meta is None and engine != "sniff" and PIL_AVAILABLE:
+        if meta is None and PIL_AVAILABLE:
             try:
                 with _PILImage.open(io.BytesIO(b)) as im:
                     meta = (im.format.lower(), im.width, im.height)
@@ -570,8 +487,7 @@ def decode_container_meta(df: DataFrame) -> DataFrame:
     and contract as :func:`decode_image_meta` (a pure map,
     embarrassingly parallel at any scale; rows carry ``decoder`` ∈
     {sniff, none} for auditing).  There is no library fallback tier:
-    real pixel/sample decoding stays behind
-    :func:`extract_media_features(engine='pil')`."""
+    real pixel/sample decoding is out of scope."""
 
     def row(media_ref, payload):
         meta = None if payload is None else sniff_container_meta(

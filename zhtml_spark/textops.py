@@ -300,23 +300,12 @@ def _dominated_ids(
     )
 
 
-def _gram_array(n: int, shingle: str) -> Column:
-    """Per-row DISTINCT shingle array (word or CJK-safe char grams) —
-    the shared source for the gram table and the per-row signature
-    folds."""
-    if shingle == "word":
-        return word_ngrams(n)
-    # char shingles via the linear arrays_zip gram builder — the
-    # substring() form is quadratic in doc length (r5)
-    return F.array_distinct(F.expr(_char_gram_expr("text", n)))
-
-
-def ngram_gram_table(
-    docs: DataFrame, n: int = 3, shingle: str = "word"
-) -> DataFrame:
+def ngram_gram_table(docs: DataFrame, n: int = 3) -> DataFrame:
+    """(doc_id, gram): each row's DISTINCT word n-grams, one per row —
+    the shared source of the Jaccard join and the minhash tier."""
     # doc_id keeps its input type (numeric OR string ids both order)
     return fan_out(docs).select(
-        "doc_id", F.explode(_gram_array(n, shingle)).alias("gram")
+        "doc_id", F.explode(word_ngrams(n)).alias("gram")
     )
 
 
@@ -361,9 +350,7 @@ def ngram_jaccard_pairs(
     return j.select("doc_a", "doc_b", "jaccard")
 
 
-def _minhash_min_table(
-    docs: DataFrame, n: int, seeds: int, shingle: str = "word"
-) -> DataFrame:
+def _minhash_min_table(docs: DataFrame, n: int, seeds: int) -> DataFrame:
     """One row per doc with the whole signature as ``seeds`` columns
     ``_mh0.._mh{seeds-1}`` — the shared r8 core of the minhash tier.
 
@@ -377,7 +364,7 @@ def _minhash_min_table(
     the row engine and only the row machinery is gone.  Hash values
     (md5 of ``"{seed}:{gram}"``) are byte-identical to every earlier
     round's."""
-    grams = ngram_gram_table(docs, n, shingle)
+    grams = ngram_gram_table(docs, n)
     return grams.groupBy("doc_id").agg(
         *[
             F.min(
@@ -399,18 +386,17 @@ def _minhash_min_table(
 
 
 def minhash_signatures(
-    docs: DataFrame, n: int = 3, seeds: int = 8, shingle: str = "word"
+    docs: DataFrame, n: int = 3, seeds: int = 8
 ) -> DataFrame:
-    """MinHash signature matrix: (doc_id, seed, minhash) — md5-salted
-    per-seed hashes.  ``shingle='char'`` switches to character
-    shingles (CJK-safe).
+    """MinHash signature matrix over word n-grams: (doc_id, seed,
+    minhash) — md5-salted per-seed hashes.
 
     Plan (r8): one gram explode, ``seeds`` codegen md5 columns, ONE
     partial-agg ``min`` shuffle (narrow: seeds longs per doc per map
     partition), then a posexplode back to rows —
     :func:`_minhash_min_table`.  Docs too short for any gram emit
     nothing, as before (they produce no gram rows)."""
-    mins = _minhash_min_table(docs, n, seeds, shingle)
+    mins = _minhash_min_table(docs, n, seeds)
     return mins.select(
         "doc_id",
         F.posexplode(
@@ -663,32 +649,30 @@ def _simhash_block_keys(
 
 
 def simhash_dup_candidates(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    n_blocks: int | None = None,
+    docs: DataFrame, max_hamming: int = 3
 ) -> DataFrame:
     """SimHash near-dup pairs with hamming ≤ max_hamming — lossless
     multi-index pigeonhole banding over the 48-bit hash.
 
-    Split the hash into ``n_blocks`` disjoint bit-blocks.  Hamming ≤ k
-    flips at most k blocks, so every qualifying pair agrees on SOME
+    Split the hash into n_blocks = k+2 disjoint bit-blocks.  Hamming
+    ≤ k flips at most k blocks, so every qualifying pair agrees on SOME
     (n_blocks − k)-subset of blocks; joining once per subset
     combination on the concatenated block values finds every pair
     (lossless) and the exact hamming filter runs on candidates only.
 
     Scale math (the round-1 plan used n_blocks = k+1, i.e. single-block
     keys: 48-bit hash, k=3 → 12-bit buckets = 4,096 values — quadratic
-    per bucket at 10^12 docs).  The default here is n_blocks = k+2 →
-    C(k+2, 2) combinations of PAIRED blocks: for k=3 that is 10 probe
-    tables keyed on ~19 bits (×128 more key space), for the bench's
-    k=6 it is 28 tables on ~12 bits (vs 64 single-block values).
-    Raising ``n_blocks`` widens keys further at C(n_blocks, k)
-    replication cost — the Manku-style multi-index dial
-    (cf. Manku et al., WWW'07, via PAPERS.md).  Candidate volume is
+    per bucket at 10^12 docs).  n_blocks = k+2 gives C(k+2, 2)
+    combinations of PAIRED blocks: for k=3 that is 10 probe tables
+    keyed on ~19 bits (×128 more key space), for the bench's k=6 it is
+    28 tables on ~12 bits (vs 64 single-block values).  More blocks
+    widen keys further at C(n_blocks, k) replication cost — the
+    Manku-style multi-index dial (cf. Manku et al., WWW'07, via
+    PAPERS.md) that :func:`simhash_candidate_stats` measures.  Candidate volume is
     bounded by dup-pair volume × C(n, k) plus random ~N²/2^|key|
     collisions, no longer by corpus size × bucket count.
     """
-    keyed = _simhash_block_keys(docs, max_hamming, 48, n_blocks)[0]
+    keyed = _simhash_block_keys(docs, max_hamming, 48, None)[0]
     cands = _bucket_pairs(keyed, "bkey", "simhash")
     return (
         cands.withColumn(
@@ -1099,11 +1083,7 @@ def ivf_topk(
     )
 
 
-def embed_hashing(
-    docs: DataFrame,
-    dim: int = 16,
-    hash_fn: str = "md5",
-) -> DataFrame:
+def embed_hashing(docs: DataFrame, dim: int = 16) -> DataFrame:
     """Hashing-trick document embedding (VERDICT r4 #6): token →
     hash bucket with a hash-derived ±1 sign, signed counts summed per
     bucket, L2-normalized — the classic feature-hashing sketch
@@ -1121,38 +1101,26 @@ def embed_hashing(
     only at dims far beyond sketch size.  Embarrassingly parallel at
     10^12 docs.
 
-    ``hash_fn``: ``'md5'`` (default) is the blessed cross-engine
-    md5-48 form so DuckDB oracles mirror it exactly; ``'xxhash64'``
-    is the faster engine-only path (same switch contract as
-    winnow/substring).  Bucket = low bits (pmod), sign = a HIGH bit
-    (47 for md5-48, 62 for xxhash64) so they are independent.
+    Token hash: the blessed cross-engine md5-48 form, so DuckDB
+    oracles mirror it exactly.  Bucket = low bits (pmod), sign = the
+    HIGH bit 47, so they are independent.
 
     Returns (doc_id, embedding array<double>); all-empty docs get the
     zero vector (no NaN from 0/0)."""
     if dim < 1:
         raise ValueError("dim must be >= 1")
-    if hash_fn not in ("md5", "xxhash64"):
-        raise ValueError(f"hash_fn must be md5|xxhash64, got {hash_fn!r}")
     toks = F.regexp_extract_all(
         F.lower(F.coalesce(F.col("text"), F.lit(""))),
         F.lit(r"\w+|[^\w\s]"),
         0,
     )
-    if hash_fn == "md5":
-        def _h(t):
-            return md5_hash48(t, salt="emb:")
-        sign_bit = 47
-    else:
-        def _h(t):
-            return F.xxhash64(F.concat(F.lit("emb:"), t))
-        sign_bit = 62
-    hashes = F.transform(toks, _h)
+    hashes = F.transform(toks, lambda t: md5_hash48(t, salt="emb:"))
     pairs = F.transform(
         hashes,
         lambda h: F.struct(
             F.pmod(h, F.lit(dim)).cast("int").alias("b"),
             F.when(
-                F.pmod(F.shiftright(h, sign_bit), F.lit(2)) == 0,
+                F.pmod(F.shiftright(h, 47), F.lit(2)) == 0,
                 F.lit(1),
             )
             .otherwise(F.lit(-1))
@@ -1724,23 +1692,26 @@ def embedding_dedup_survivors(
     return emb.join(losers, "vec_id", "left_anti").select("vec_id")
 
 
+# winnowing gram width and window (k + window - 1 = 11: any shared
+# run of 11+ chars shares a fingerprint)
+WINNOW_K = 8
+WINNOW_WINDOW = 4
+
+
 def winnow_fingerprints(
-    docs: DataFrame,
-    k: int = 8,
-    window: int = 4,
-    hash_fn: str = "xxhash64",
+    docs: DataFrame, hash_fn: str = "xxhash64"
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03 "Winnowing: Local Algorithms for Document
-    Fingerprinting"): hash every character k-gram, slide a
-    ``window``-wide window over the hash sequence, keep each window's
-    minimum.  Guarantee: any substring match of length >= k + window
-    - 1 contributes at least one shared fingerprint; expected
-    selection density ~2/(window+1).
+    Fingerprinting"): hash every character k-gram (``WINNOW_K``),
+    slide a ``WINNOW_WINDOW``-wide window over the hash sequence,
+    keep each window's minimum.  Guarantee: any substring match of
+    length >= k + window - 1 contributes at least one shared
+    fingerprint; expected selection density ~2/(window+1).
 
     Plan: pure per-row map — higher-order functions build the k-gram
-    hash array and the windowed minima (``slice`` + ``array_min``
-    inside ``transform``), ``array_distinct`` dedups per doc, then
+    hash array and the windowed minima (a ``least`` chain inside
+    ``transform``), ``array_distinct`` dedups per doc, then
     one explode; memory per row is O(n_chars).  The only exchange is
     :func:`fan_out`'s scan-width guard, and only when the input scan
     is narrower than the session (r8).
@@ -1760,30 +1731,21 @@ def winnow_fingerprints(
     Only FULL windows fingerprint (docs shorter than k + window - 1
     chars emit nothing) so engine boundaries are well-defined.
     Returns (doc_id, fp) rows, distinct per doc."""
-    if k < 1 or window < 1:
-        raise ValueError("k and window must be >= 1")
-    min_len = k + window - 1
+    min_len = WINNOW_K + WINNOW_WINDOW - 1
     empty = "CAST(array() AS ARRAY<BIGINT>)"
     # grams from the linear arrays_zip builder, not per-position
     # substring(text, j, k): positional substring re-scans from byte
     # 0 per call → quadratic per doc; giant web pages made this 20×
     # (r5, _char_gram_expr).  r8: hash fused into the gram lambda —
     # the gram-string array never materializes (_char_gram_hash_expr)
-    hashes = _char_gram_hash_expr(k, hash_fn)
+    hashes = _char_gram_hash_expr(WINNOW_K, hash_fn)
     # window minimum as a flat least() chain of element_at lookups —
     # stays inside codegen with no per-position slice() array
     # allocation (VERDICT r4 #5: the post-xxhash64 cost is this stage's
-    # intermediate volume); falls back to slice+array_min for wide
-    # windows where a 1-deep expression chain would bloat codegen
-    if window == 1:
-        win_min = "element_at(h, i)"
-    elif window <= 16:
-        terms = ", ".join(
-            f"element_at(h, i + {d})" for d in range(window)
-        )
-        win_min = f"least({terms})"
-    else:
-        win_min = f"array_min(slice(h, i, {window}))"
+    # intermediate volume)
+    win_min = "least({})".format(
+        ", ".join(f"element_at(h, i + {d})" for d in range(WINNOW_WINDOW))
+    )
     mins = (
         f"CASE WHEN length(text) < {min_len} THEN {empty} ELSE "
         f"transform(sequence(1, length(text) - {min_len} + 1), "
@@ -1811,8 +1773,6 @@ def winnow_fingerprints(
 
 def winnow_dup_candidates(
     docs: DataFrame,
-    k: int = 8,
-    window: int = 4,
     min_shared: int = 2,
     max_doc_freq: int = 50,
     hash_fn: str = "xxhash64",
@@ -1833,7 +1793,7 @@ def winnow_dup_candidates(
     no join, identical pair counts.
 
     Returns (doc_a, doc_b, shared) with doc_a < doc_b."""
-    fps = winnow_fingerprints(docs, k, window, hash_fn)
+    fps = winnow_fingerprints(docs, hash_fn)
     kept = fps.join(_shared_keys(fps, "fp", max_doc_freq), "fp")
     posting = kept.groupBy("fp").agg(
         F.array_sort(F.collect_list("doc_id")).alias("ids")
@@ -2784,7 +2744,6 @@ def lang_id_v2(
 
 def lang_gate(
     docs: DataFrame,
-    lang: str = "en",
     min_lm_score: int | dict[str, int] = -8_000_000,
     max_chars: int | None = 2000,
     langs: tuple[str, ...] | None = None,
@@ -2810,7 +2769,7 @@ def lang_gate(
     gate.  ``None`` scores the full text (the oracle-gated
     :func:`lang_id_v2`/:func:`trigram_lm_score` semantics).
 
-    Keeps documents predicted ``lang`` (or any of ``langs`` when
+    Keeps documents predicted English (or any of ``langs`` when
     given — multilingual pipelines gate to their whole target set)
     whose mean per-trigram log-prob UNDER THE PREDICTED LANGUAGE
     clears ``min_lm_score`` (1e-6-scaled integer, or a
@@ -2832,10 +2791,6 @@ def lang_gate(
     from .langid_model import trigram_weights
 
     weights = trigram_weights(hash_fn=hash_fn)
-    if lang not in weights:
-        raise ValueError(
-            f"no trigram model for {lang!r}; have {sorted(weights)}"
-        )
     # lower (and the head cap) land in a real multi-referenced column
     # FIRST — an O(n) expression passed as the gram source would
     # re-evaluate per position in the short-doc branch (the r5-a
@@ -2895,7 +2850,7 @@ def lang_gate(
     }
     pred = _langid_argmax(scores)
     n = F.size("_b")
-    accept = langs if langs is not None else (lang,)
+    accept = langs if langs is not None else ("en",)
     for lg in accept:
         if lg not in weights:
             raise ValueError(f"no trigram model for {lg!r}")
@@ -3463,18 +3418,21 @@ def _host_quota_rank_cols(url_col: str, key_col: str):
     )
 
 
+# host_quota_sample's phase-1 salt slices per host
+HOST_QUOTA_SALTS = 32
+
+
 def host_quota_presample(
     docs: DataFrame,
     max_per_host: int = 1000,
     url_col: str = "url",
     key_col: str = "doc_id",
-    salts: int = 32,
 ) -> DataFrame:
     """Phase 1 of :func:`host_quota_sample` (exposed for plan/bound
     tests): rank within ``(host, salt)`` where
-    ``salt = pmod(xxhash64(key), salts)`` and keep ``max_per_host``
-    per salt slice, so the final per-host window sees at most
-    ``salts × max_per_host`` rows per host.  Sound because ranking is
+    ``salt = pmod(xxhash64(key), HOST_QUOTA_SALTS)`` and keep
+    ``max_per_host`` per salt slice, so the final per-host window sees
+    at most ``HOST_QUOTA_SALTS × max_per_host`` rows per host.  Sound because ranking is
     a total order on ``(rank_key, key)``: any row in the global
     per-host top-``max_per_host`` ranks at least as high inside its
     salt slice (a subset of the host's rows), so per-slice top-k
@@ -3483,7 +3441,8 @@ def host_quota_presample(
     survivors."""
     h, rk = _host_quota_rank_cols(url_col, key_col)
     salt = F.pmod(
-        F.xxhash64(F.col(key_col).cast("string")), F.lit(salts)
+        F.xxhash64(F.col(key_col).cast("string")),
+        F.lit(HOST_QUOTA_SALTS),
     )
     w = Window.partitionBy(h, salt).orderBy(rk, F.col(key_col))
     return (
@@ -3498,7 +3457,6 @@ def host_quota_sample(
     max_per_host: int = 1000,
     url_col: str = "url",
     key_col: str = "doc_id",
-    salts: int = 32,
 ) -> DataFrame:
     """Per-domain quota capping — the domain-balancing pass every
     web-scale training corpus applies (C4/Gopher/RefinedWeb all cap
@@ -3516,17 +3474,14 @@ def host_quota_sample(
     wiki mirror) in ONE task for a total sort — the classic skewed
     window straggler, and the sort is paid before the quota cuts
     anything.  Phase 1 (:func:`host_quota_presample`) ranks within
-    ``(host, salt)`` — ``salts×`` more, uniformly smaller partitions
-    — keeping ``max_per_host`` per slice; the final per-host window
-    then sees at most ``salts × max_per_host`` rows per host, bounded
-    regardless of corpus size.  Survivors are IDENTICAL to the
-    single-window form by construction (per-slice top-k over a total
-    order preserves every global winner), so the oracle is unchanged.
-    ``salts <= 1`` degenerates to the single-window plan."""
-    if salts > 1:
-        docs = host_quota_presample(
-            docs, max_per_host, url_col, key_col, salts
-        )
+    ``(host, salt)`` — ``HOST_QUOTA_SALTS×`` more, uniformly smaller
+    partitions — keeping ``max_per_host`` per slice; the final
+    per-host window then sees at most ``HOST_QUOTA_SALTS ×
+    max_per_host`` rows per host, bounded regardless of corpus size.
+    Survivors are IDENTICAL to the single-window form by construction
+    (per-slice top-k over a total order preserves every global
+    winner), so the oracle is unchanged."""
+    docs = host_quota_presample(docs, max_per_host, url_col, key_col)
     h, rk = _host_quota_rank_cols(url_col, key_col)
     w = Window.partitionBy(h).orderBy(rk, F.col(key_col))
     return (
@@ -3536,11 +3491,14 @@ def host_quota_sample(
     )
 
 
+# substring_dup_spans' gram document-frequency cap
+SUBSTRING_MAX_GRAM_FREQ = 20
+
+
 def substring_dup_spans(
     docs: DataFrame,
     k: int = 25,
     min_len: int = 40,
-    max_gram_freq: int | None = 20,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Exact substring dedup (the Lee-et-al-style pass the dedup
@@ -3558,15 +3516,14 @@ def substring_dup_spans(
     shuffles (join, window, final agg), never a cross join; integer
     output end-to-end, so the DuckDB oracle is exact.
 
-    ``max_gram_freq`` is the scale lever (same role as in
-    ``winnow_dup_candidates``): a k-gram in f docs contributes f² join
+    The document-frequency cap (``SUBSTRING_MAX_GRAM_FREQ``) is the
+    scale lever (same role as ``winnow_dup_candidates``'
+    ``max_doc_freq``): a k-gram in f docs contributes f² join
     rows; boilerplate grams (headers, licenses) explode quadratically
     at corpus scale — cap their document frequency and runs split at
     the capped grams only (spans through ubiquitous boilerplate are
-    exactly what substring dedup wants to surface anyway).  ON BY
-    DEFAULT at df ≤ 20 (VERDICT r3 #2 — mirrors
-    ``winnow_dup_candidates``); pass ``None`` to opt out explicitly
-    on corpora known boilerplate-free.
+    exactly what substring dedup wants to surface anyway), always on
+    (VERDICT r3 #2).
 
     ``hash_fn`` picks the positioned-gram hash (same split as
     :func:`winnow_fingerprints`, VERDICT r3 #4): ``"xxhash64"``
@@ -3575,10 +3532,6 @@ def substring_dup_spans(
     64 bits both are ~2⁻⁶⁴ per comparison; ``"md5"`` is the
     cross-engine md5-48 form the DuckDB oracle mirrors.
     """
-    if max_gram_freq is not None and max_gram_freq < 1:
-        raise ValueError(
-            f"max_gram_freq must be >= 1 or None, got {max_gram_freq}"
-        )
     # fused gram→hash builder (r8): the df-gate pass below explodes
     # an array<bigint> of gram hashes directly — the k-char
     # gram-string array never materializes (_char_gram_hash_expr;
@@ -3623,38 +3576,37 @@ def substring_dup_spans(
         "doc_id", F.posexplode(arr_h).alias("pos", "gh")
     )
     grams = short.unionByName(giant)
-    if max_gram_freq is not None:
-        # df-gate as a BROADCAST semi-join against the SHARED gram
-        # set (r6, VERDICT r5 #5).  Two changes vs the old
-        # keep-shuffle-join, both result-identical by construction:
-        #
-        # * df counts ``count(*)`` over per-doc DISTINCT grams
-        #   (``array_distinct`` before explode) instead of
-        #   ``count_distinct(doc_id)`` over positioned rows — the
-        #   same number, but it partial-aggregates map-side;
-        # * the keep set is ``2 <= df <= cap``, not ``df <= cap``: a
-        #   df=1 gram exists in ONE doc and can never produce a
-        #   cross-doc pair, and every gram inside a genuinely shared
-        #   run has df >= 2, so no island can split.  The keep set is
-        #   then bounded by DUP STRUCTURE (distinct shared grams),
-        #   not corpus size — it broadcasts, and the positioned-gram
-        #   table (one row per corpus character) is filtered to
-        #   shared positions BEFORE its pair-join shuffle.  At 10^12
-        #   docs that turns the dominant shuffle from O(corpus chars)
-        #   into O(duplicated chars); statically the plan drops from
-        #   5 hash exchanges over full-position rows to 3 (one over
-        #   narrow distinct-gram rows + the two filtered join sides).
-        # r8: the per-doc distinct runs on the HASH array (8-byte
-        # comparisons) instead of the gram-string array — same df
-        # counts (distinct grams and distinct hashes coincide short
-        # of a 2^-64 collision, which this op's contract already
-        # accepts for pair generation)
-        keep = _shared_keys(
-            docs.select(F.explode(F.array_distinct(arr_h)).alias("gh")),
-            "gh",
-            max_gram_freq,
-        )
-        grams = grams.join(F.broadcast(keep), "gh")
+    # df-gate as a BROADCAST semi-join against the SHARED gram
+    # set (r6, VERDICT r5 #5).  Two changes vs the old
+    # keep-shuffle-join, both result-identical by construction:
+    #
+    # * df counts ``count(*)`` over per-doc DISTINCT grams
+    #   (``array_distinct`` before explode) instead of
+    #   ``count_distinct(doc_id)`` over positioned rows — the
+    #   same number, but it partial-aggregates map-side;
+    # * the keep set is ``2 <= df <= cap``, not ``df <= cap``: a
+    #   df=1 gram exists in ONE doc and can never produce a
+    #   cross-doc pair, and every gram inside a genuinely shared
+    #   run has df >= 2, so no island can split.  The keep set is
+    #   then bounded by DUP STRUCTURE (distinct shared grams),
+    #   not corpus size — it broadcasts, and the positioned-gram
+    #   table (one row per corpus character) is filtered to
+    #   shared positions BEFORE its pair-join shuffle.  At 10^12
+    #   docs that turns the dominant shuffle from O(corpus chars)
+    #   into O(duplicated chars); statically the plan drops from
+    #   5 hash exchanges over full-position rows to 3 (one over
+    #   narrow distinct-gram rows + the two filtered join sides).
+    # r8: the per-doc distinct runs on the HASH array (8-byte
+    # comparisons) instead of the gram-string array — same df
+    # counts (distinct grams and distinct hashes coincide short
+    # of a 2^-64 collision, which this op's contract already
+    # accepts for pair generation)
+    keep = _shared_keys(
+        docs.select(F.explode(F.array_distinct(arr_h)).alias("gh")),
+        "gh",
+        SUBSTRING_MAX_GRAM_FREQ,
+    )
+    grams = grams.join(F.broadcast(keep), "gh")
     a = grams.alias("a")
     b = grams.alias("b")
     pairs = (
@@ -3797,13 +3749,7 @@ def substring_gram_stats(
     }
 
 
-def winnow_candidate_stats(
-    docs: DataFrame,
-    k: int = 8,
-    window: int = 4,
-    max_doc_freq: int = 50,
-    hash_fn: str = "xxhash64",
-) -> dict:
+def winnow_candidate_stats(docs: DataFrame, max_doc_freq: int = 50) -> dict:
     """Plan-evidence helper for :func:`winnow_dup_candidates` (mirrors
     ``substring_gram_stats``; VERDICT r4 #1): per-fingerprint posting
     stats with the doc-frequency cap OFF vs ON.  ``candidate_pairs`` =
@@ -3812,12 +3758,12 @@ def winnow_candidate_stats(
     headers/footers) dominate the uncapped sum on web-shaped corpora
     and are what the cap removes.  ONE aggregation pass serves both
     variants."""
-    fps = winnow_fingerprints(docs, k, window, hash_fn)
+    fps = winnow_fingerprints(docs)
     per_fp = fps.groupBy("fp").agg(F.count("*").alias("df"))
     v = _bucket_volume(per_fp, "df", F.col("df") <= max_doc_freq)
     return {
-        "k": k,
-        "window": window,
+        "k": WINNOW_K,
+        "window": WINNOW_WINDOW,
         "max_doc_freq": max_doc_freq,
         "max_df": v["max_bucket"],
         "uncapped_candidate_pairs": v["candidate_pairs"],
@@ -3905,12 +3851,13 @@ def absolutize_url(base: Column, ref: Column) -> Column:
 
 # pagerank's quantized rank mass: sum(rank_q) ≈ PAGERANK_SCALE
 PAGERANK_SCALE = 10**12
+# damping factor in percent (0.85, the textbook value)
+PAGERANK_DAMPING_PCT = 85
 
 
 def pagerank(
     edges: DataFrame,
     iters: int = 4,
-    damping_pct: int = 85,
     checkpoint: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a link graph — the classic
@@ -3924,8 +3871,8 @@ def pagerank(
     BIGINT — per-edge contribution ``r div outdeg``, damping
     ``(85 * x) div 100``, teleport ``((PAGERANK_SCALE * 15) div 100)
     div n`` — identical truncating division both engines.  The 10^12
-    keeps 12 significant digits while ``damping_pct * (contrib +
-    share)`` stays under 2^63 at any graph size.
+    keeps 12 significant digits while ``PAGERANK_DAMPING_PCT *
+    (contrib + share)`` stays under 2^63 at any graph size.
 
     Distributed shape, per iteration (``iters`` plan-unrolled, no
     driver loop, no collect): ranks join the (src, dst, outdeg) edge
@@ -3953,8 +3900,6 @@ def pagerank(
     arithmetic; checkpointing changes nothing about values)."""
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    if not 0 < damping_pct < 100:
-        raise ValueError("damping_pct must be in (0, 100)")
     e = (
         edges.select(
             F.col("src").alias("_s"), F.col("dst").alias("_d")
@@ -3978,7 +3923,9 @@ def pagerank(
     edges_w = e.join(outdeg, e["_s"] == outdeg["node"]).select(
         "_s", "_d", "outdeg"
     )
-    teleport = f"(({PAGERANK_SCALE} * {100 - damping_pct}) div 100) div n"
+    teleport = (
+        f"(({PAGERANK_SCALE} * {100 - PAGERANK_DAMPING_PCT}) div 100) div n"
+    )
     spark = edges.sparkSession
     prev_ids: set = set()
     if checkpoint:
@@ -4012,7 +3959,7 @@ def pagerank(
                 "node",
                 "n",
                 F.expr(
-                    f"{teleport} + ({damping_pct}"
+                    f"{teleport} + ({PAGERANK_DAMPING_PCT}"
                     " * (coalesce(contrib, cast(0 as bigint))"
                     " + (dang div n))) div 100"
                 ).alias("r"),
@@ -4467,7 +4414,7 @@ def decontaminate_fuzzy(
     return docs.join(dirty, "doc_id", "left_anti")
 
 
-# fractional bits of the fixed-point log2 (with_log2q, log2q_int)
+# fractional bits of the fixed-point log2 (with_log2q)
 LOG2Q_FRAC_BITS = 8
 
 
@@ -4775,36 +4722,13 @@ def dedup_lines_in_doc(
     )
 
 
-def log2q_int(x: int) -> int:
-    """Python twin of :func:`with_log2q` (same mantissa-squaring
-    recurrence, same truncation) — for baking CONSTANT log terms into
-    plans/oracles as literals, e.g. the smoothing floor log2q(V).
-    Raises on x < 1 (callers own their guards for literals)."""
-    if x < 1:
-        raise ValueError("log2q_int requires x >= 1")
-    n = x.bit_length() - 1
-    m = x << (30 - n) if n <= 30 else x >> (n - 30)
-    f = n
-    for _ in range(LOG2Q_FRAC_BITS):
-        mm = m * m
-        if mm >= 1 << 61:
-            m, f = mm >> 31, f * 2 + 1
-        else:
-            m, f = mm >> 30, f * 2
-    return f
-
-
-def bigram_lm_selfscore(
-    docs: DataFrame,
-    ref: DataFrame | None = None,
-    n_buckets: int = 256,
-) -> DataFrame:
+def bigram_lm_selfscore(docs: DataFrame, n_buckets: int = 256) -> DataFrame:
     """Perplexity-style quality scoring WITHOUT an external language
-    model: estimate a hashed-bigram LM from ``ref`` (default: the
-    corpus itself) and score every document by its mean conditional
-    log-probability ``mean_i log2 P(w_i | w_{i-1})`` with add-one
-    smoothing — the CCNet/KenLM filtering idea with the LM trained
-    in-plan from the data (low score = text unusual RELATIVE TO THE
+    model: estimate a hashed-bigram LM from the corpus itself and
+    score every document by its mean conditional log-probability
+    ``mean_i log2 P(w_i | w_{i-1})`` with add-one smoothing — the
+    CCNet/KenLM filtering idea with the LM trained in-plan from the
+    data (low score = text unusual RELATIVE TO THE
     CORPUS: gibberish, boilerplate soup, wrong-language islands).
     :func:`trigram_lm_score` scores against STATIC per-language seed
     models; this op scores against the live corpus distribution.
@@ -4812,9 +4736,9 @@ def bigram_lm_selfscore(
     ``P(w2|w1) = (c(b1,b2) + 1) / (c(b1) + V)`` over ``V=n_buckets``
     hashed word buckets, logs via :func:`with_log2q` (cross-engine
     exact), so ``score_q = Σ [log2q(c12+1) − log2q(c1+V)] div
-    n_pairs`` is oracle-checkable bit-for-bit.  Unseen bigrams
-    contribute ``0 − log2q(V)`` (the literal :func:`log2q_int`
-    floor).
+    n_pairs`` is oracle-checkable bit-for-bit.  Every scored bigram
+    and context is in the LM by construction, so the count-table
+    joins are inner joins.
 
     Distributed shape: bucket arrays are one md5 per WORD (transform,
     never per-pair rescans); pair streams are map-side explodes into
@@ -4826,10 +4750,6 @@ def bigram_lm_selfscore(
     (doc_id, n_pairs, lm_q, mean_q)."""
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
-    if ref is None:
-        ref = docs
-    docs = fan_out(docs)
-    ref = fan_out(ref)
 
     def pairs(d: DataFrame) -> DataFrame:
         base = d.select(
@@ -4862,7 +4782,7 @@ def bigram_lm_selfscore(
             F.col("p.b2").alias("b2"),
         )
 
-    ref_pairs = pairs(ref)
+    ref_pairs = pairs(fan_out(docs))
     big = ref_pairs.groupBy("b1", "b2").agg(
         (F.count("*") + 1).alias("_x12")
     )
@@ -4873,18 +4793,10 @@ def bigram_lm_selfscore(
         (F.count("*") + n_buckets).alias("_x1")
     )
     uni = with_log2q(uni, "_x1", "l2_1").select("b1", "l2_1")
-    floor_v = log2q_int(n_buckets)
     scored = (
-        pairs(docs)
-        .join(F.broadcast(big), ["b1", "b2"], "left")
-        .join(F.broadcast(uni), ["b1"], "left")
-        .select(
-            "doc_id",
-            (
-                F.coalesce(F.col("l2_12"), F.lit(0))
-                - F.coalesce(F.col("l2_1"), F.lit(floor_v))
-            ).alias("_lp"),
-        )
+        ref_pairs.join(F.broadcast(big), ["b1", "b2"])
+        .join(F.broadcast(uni), ["b1"])
+        .select("doc_id", (F.col("l2_12") - F.col("l2_1")).alias("_lp"))
     )
     return (
         scored.groupBy("doc_id")

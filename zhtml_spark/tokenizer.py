@@ -266,7 +266,6 @@ def tokenize(
     last_start_tag: str | None = None,
     tree_aware: bool = False,
     enable_fast_tags: bool = True,
-    with_positions: bool = False,
     scripting: bool = True,
     with_token_positions: bool = False,
     foreign_seed: int = 0,
@@ -278,13 +277,6 @@ def tokenize(
     /root/reference/test/tokenizer-html5lib.zig:224-233).  ``errors`` is
     a list of spec-id strings, order-insensitive vs goldens
     (:151-153 compares codes only).
-
-    ``with_positions=True`` appends ``code@line:col`` instead of bare
-    codes (1-based, position of the scan cursor when the error fired —
-    the reference tracks the same pair, src/tokenizer.zig:115-116, and
-    its own harness disables comparing them,
-    test/tokenizer-html5lib.zig:151-153).  Opt-in: triage at corpus
-    scale wants positions; the hot path stays a bare list append.
 
     ``with_token_positions=True`` (r4) appends each token's SOURCE
     START offset (0-based char offset into the post-``preprocess``
@@ -310,18 +302,7 @@ def tokenize(
     state = INITIAL_STATES[initial_state]
     out: list[tuple] = []
     errors: list[str] = []
-    if with_positions:
-        from bisect import bisect_right
-
-        _newlines = [j for j, ch in enumerate(text) if ch == "\n"]
-
-        def err(code: str) -> None:
-            # i is the live scan cursor (closure reads it at call time)
-            line = bisect_right(_newlines, i - 1) + 1
-            prev_nl = _newlines[line - 2] if line > 1 else -1
-            errors.append(f"{code}@{line}:{i - prev_nl}")
-    else:
-        err = errors.append
+    err = errors.append
 
     # --- character-run accumulator (coalesces adjacent char tokens)
     chars: list[str] = []
