@@ -271,6 +271,33 @@ def test_unclosed_tag_run_is_linear(unit):
     assert time.perf_counter() - t0 < 0.5
 
 
+@pytest.mark.parametrize(
+    "unit, suffix",
+    [("<a ", ""), ("</a", ""), ("<!DOCTYPE", ""), ("</a", " x>")],
+    ids=["start_tag", "end_tag", "doctype", "end_tag_broken_name"],
+)
+def test_unclosed_tag_pump_grows_linearly(unit, suffix):
+    """Doubling a pump must about double the scan time.  A '>'-free
+    tail once cost x4 per doubling, every '<' rescanning it to the end
+    (``"<a " * 6400`` took 2.7 s), and so did a run of end tags whose
+    name a space breaks before the '>'."""
+    import time
+
+    head = '<rss version="2.0"><channel><item><title>x'
+
+    def best(n):
+        text = head + unit * n + suffix
+        times = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            extract_feed_spans(text)
+            times.append(time.perf_counter() - t0)
+        return min(times)
+
+    small, large = best(2000), best(4000)
+    assert large < 3 * small + 0.01, (small, large)
+
+
 # the tag scan before it skipped unclosed runs: plain backtracking
 _BACKTRACKING_TOK = re.compile(
     r"<!\[CDATA\[(.*?)(?:\]\]>|\Z)|<!--.*?(?:-->|\Z)|<\?.*?(?:\?>|\Z)"

@@ -77,14 +77,38 @@ _TOK_RE = re.compile(
     # run too (those try a subset of its soup starts), so the run is
     # skipped whole, up to a '<' that could open another construct.
     # Without this, every '<' of an unclosed `<a<a<a…` rescans the run.
-    r"|(?P<skip><(?![!?/\s>])(?:[^\s/><]|<(?![!?/]))++)",
+    # Likewise a failed end tag: every later '</' inside its name run
+    # ends its name at the same place, unless the name would start
+    # only after that place.
+    r"|(?P<skip><(?![!?/\s>])(?:[^\s/><]|<(?![!?/]))++"
+    r"|</\s*(?:[^\s><]|<(?=/[^\s>]))*+)",
     re.S,
 )
 
 
+_OPENER_RE = re.compile(r"<!\[CDATA\[|<!--|<\?")
+
+
 def _tokens(text: str):
-    """The ``_TOK_RE`` matches in ``text``, skipped runs left out."""
-    return (t for t in _TOK_RE.finditer(text) if t.group("skip") is None)
+    """The ``_TOK_RE`` matches in ``text``, skipped runs left out.
+
+    Every tag ends at a '>', so past the last '>' only CDATA, a comment
+    or a PI can match, and the first of them reads to the end of input.
+    The scan stops at that '>' and finds the opener with one search: a
+    tag-by-tag scan of a '>'-free tail retries every later '<' to the
+    end of input (``"<a " * n``, ``"</a" * n`` and ``"<!DOCTYPE" * n``
+    were quadratic).  A construct that the cut ends early is matched
+    again over the whole text, so the matches are the uncut scan's."""
+    tail = end = text.rfind(">") + 1
+    for t in _TOK_RE.finditer(text, 0, tail):
+        if t.end() == tail:
+            t = _TOK_RE.match(text, t.start())
+            end = t.end()
+        if t.group("skip") is None:
+            yield t
+    opener = _OPENER_RE.search(text, end)
+    if opener:
+        yield _TOK_RE.match(text, opener.start())
 
 
 _ATTR_RE = re.compile(
