@@ -22,6 +22,8 @@ from collections.abc import Callable, Iterator, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from zhtml_spark.pipeline import explode_spans
+
 # the DuckDB twins read the Spark side's own constants, so changing one
 # moves both engines together
 from zhtml_spark.textops import (
@@ -65,20 +67,7 @@ def _extract_exploded(df: DataFrame, config=None) -> DataFrame:
     """Run the fused extraction UDF and explode spans to flat rows."""
     from zhtml_spark.pipeline import extract_documents
 
-    return _exploded(extract_documents(df, config))
-
-
-def _exploded(out: DataFrame) -> DataFrame:
-    """One flat row per span of an extraction result."""
-    return out.select(
-        "doc_id", F.explode("spans").alias("s")
-    ).select(
-        "doc_id",
-        F.col("s.offset").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-    )
+    return explode_spans(extract_documents(df, config))
 
 
 # ------------------------------------------------------------- queries
@@ -798,7 +787,7 @@ def _q_extract_fragment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("text"),
         ).alias("fragment"),
     )
-    return _exploded(extract_fragments(frags, "ul"))
+    return explode_spans(extract_fragments(frags, "ul"))
 
 
 def _q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1023,7 +1012,7 @@ def _q_embed_hashing(spark, sf_dir):
     """Self-derived document embeddings (r5, VERDICT r4 #6): the
     hashing-trick sketch over the documents table, emitted as
     (doc_id, dim_idx, q_weight) rows with the weight FLOOR-quantized
-    at 1e-6 (floor is identical on both engines; the doubles
+    by ``VEC_SCALE`` (floor is identical on both engines; the doubles
     themselves are bit-identical — integer counts, IEEE sqrt/divide).
     The oracle recomputes bucket, sign bit 47, signed counts, and the
     L2 norm from the same md5-48 hash."""
@@ -1036,7 +1025,7 @@ def _q_embed_hashing(spark, sf_dir):
     ).select(
         "doc_id",
         "dim_idx",
-        F.floor(F.col("w") * 1000000).cast("long").alias("q_weight"),
+        F.floor(F.col("w") * VEC_SCALE).cast("long").alias("q_weight"),
     )
 
 
@@ -4911,9 +4900,9 @@ def oracle_sql() -> dict[str, str]:
                                  ELSE 0 END) AS BIGINT) AS simhash
             FROM per_bit GROUP BY doc_id
         """,
-        "embed_hashing": _EMB_HASH_ORACLE_HEAD + """
+        "embed_hashing": _EMB_HASH_ORACLE_HEAD + f"""
             SELECT doc_id, dim_idx,
-                   CAST(floor(w * 1000000) AS BIGINT) AS q_weight
+                   CAST(floor(w * {VEC_SCALE}) AS BIGINT) AS q_weight
             FROM wts
         """,
         "pagerank_links": """

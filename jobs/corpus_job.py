@@ -50,7 +50,7 @@ def run(
 
     from zhtml_spark.corpus import adversarial_web_corpus
     from zhtml_spark.extract import ExtractConfig
-    from zhtml_spark.pipeline import extract_documents
+    from zhtml_spark.pipeline import explode_spans, extract_documents
     from zhtml_spark.sources import (
         parse_warc_records,
         warc_record,
@@ -127,18 +127,9 @@ def run(
     # the final markdown render all reuse it
     cfg = ExtractConfig(emit_links=True, emit_head_meta=True)
     t0 = time.time()
-    spans = (
+    spans = explode_spans(
         extract_documents(docs, config=cfg, num_partitions=2 * cores)
-        .select("doc_id", F.explode("spans").alias("s"))
-        .select(
-            "doc_id",
-            F.col("s.offset").alias("offset"),
-            F.col("s.kind").alias("kind"),
-            F.col("s.text").alias("text"),
-            F.col("s.media_ref").alias("media_ref"),
-        )
-        .localCheckpoint()
-    )
+    ).localCheckpoint()
     n_spans = spans.count()
     el = time.time() - t0
     stages["extract"] = {

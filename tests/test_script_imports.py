@@ -108,9 +108,10 @@ def test_guard_sees_nested_and_snippet_imports():
 
 def _stale_keywords(tree: ast.AST) -> list[str]:
     """``f(kw=)`` for each keyword argument in ``tree`` that a call to
-    an imported ``zhtml_spark`` callable passes but the callable does
-    not accept.  Names resolve file-wide (import scope is ignored);
-    callables taking ``**kwargs`` accept anything."""
+    an imported ``zhtml_spark`` callable (``f``, ``m.f`` or
+    ``getattr(m, "f")``, resolved by :func:`_callee`) passes but the
+    callable does not accept.  Names resolve file-wide (import scope is
+    ignored); callables taking ``**kwargs`` accept anything."""
     bound: dict[str, list] = {}
     for node in ast.walk(tree):
         if not isinstance(node, ast.ImportFrom) or node.level:
@@ -131,14 +132,19 @@ def _stale_keywords(tree: ast.AST) -> list[str]:
         if not isinstance(node, ast.Call):
             continue
         f = node.func
+        name = _callee(f)
+        # the module a ``m.f`` or ``getattr(m, "f")`` call reads from
+        base = f.value if isinstance(f, ast.Attribute) else (
+            f.args[0] if isinstance(f, ast.Call) else None
+        )
         if isinstance(f, ast.Name):
             label, targets = f.id, bound.get(f.id, [])
-        elif isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name):
-            label = f"{f.value.id}.{f.attr}"
+        elif name is not None and isinstance(base, ast.Name):
+            label = f"{base.id}.{name}"
             targets = [
-                getattr(m, f.attr)
-                for m in bound.get(f.value.id, [])
-                if inspect.ismodule(m) and hasattr(m, f.attr)
+                getattr(m, name)
+                for m in bound.get(base.id, [])
+                if inspect.ismodule(m) and hasattr(m, name)
             ]
         else:
             continue
@@ -176,10 +182,12 @@ def test_keyword_guard_flags_removed_option():
         "    dedup_survivors(docs, n=3, seeds=8, bands=4)\n"
         "    textops.ngram_jaccard_pairs(docs, threshold=0.5, max_doc_freq=9)\n"
         "    wdc(docs, max_doc_freq=20, shingle='char')\n"
+        "    getattr(textops, 'lang_gate')(docs, lang='en')\n"
         "    len(docs, seeds=8)\n"
     )
     assert _stale_keywords(ast.parse(src)) == [
         "dedup_survivors(seeds=)",
+        "textops.lang_gate(lang=)",
         "textops.ngram_jaccard_pairs(max_doc_freq=)",
         "wdc(shingle=)",
     ]

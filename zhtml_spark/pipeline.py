@@ -274,6 +274,20 @@ def extract_documents(
     )
 
 
+def explode_spans(extracted: DataFrame) -> DataFrame:
+    """One flat ``(doc_id, offset, kind, text, media_ref)`` row per
+    span of an extraction result (``doc_id`` + ``spans``)."""
+    return extracted.select(
+        "doc_id", F.explode("spans").alias("s")
+    ).select(
+        "doc_id",
+        F.col("s.offset").alias("offset"),
+        F.col("s.kind").alias("kind"),
+        F.col("s.text").alias("text"),
+        F.col("s.media_ref").alias("media_ref"),
+    )
+
+
 def resolve_media_refs(extracted: DataFrame, media_meta: DataFrame) -> DataFrame:
     """Media-ref resolution join (SURVEY §2.3 joins row): enrich media
     spans with ``media_kind``/``resolved_url`` from a metadata table
@@ -284,15 +298,7 @@ def resolve_media_refs(extracted: DataFrame, media_meta: DataFrame) -> DataFrame
     — non-media spans pass through with null enrichment (left join).
     The metadata dimension is broadcast.
     """
-    flat = extracted.select(
-        "doc_id", F.explode("spans").alias("s")
-    ).select(
-        "doc_id",
-        F.col("s.offset").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-    )
+    flat = explode_spans(extracted)
     meta = F.broadcast(media_meta.select("media_ref", "media_kind", "resolved_url"))
     return flat.join(meta, "media_ref", "left").select(
         "doc_id", "offset", "kind", "text", "media_ref",

@@ -886,7 +886,7 @@ def warc_interleaved_spans(records: DataFrame, config=None) -> DataFrame:
     ``pdfops`` as real PDF bytes, and the charset sniff reads the
     decoded markup, not compressed noise."""
     from .pdfops import decode_pdf_spans
-    from .pipeline import extract_documents
+    from .pipeline import explode_spans, extract_documents
 
     from .feedops import FEED_ROOT_RE, decode_feed_spans
     # Materialize the parsed records behind ONE exchange (r8): the
@@ -952,17 +952,7 @@ def warc_interleaved_spans(records: DataFrame, config=None) -> DataFrame:
             default_charset="utf-8",
         )
     )
-    html_spans = (
-        extract_documents(html_docs, config=config)
-        .select("doc_id", F.explode("spans").alias("s"))
-        .select(
-            "doc_id",
-            F.col("s.offset").alias("offset"),
-            F.col("s.kind").alias("kind"),
-            F.col("s.text").alias("text"),
-            F.col("s.media_ref").alias("media_ref"),
-        )
-    )
+    html_spans = explode_spans(extract_documents(html_docs, config=config))
     pdf_spans = decode_pdf_spans(
         records.where(is_pdf).select(
             F.col("warc_url").alias("media_ref"),

@@ -838,6 +838,24 @@ def nearest_centroid(emb: DataFrame, n_centroids: int = 8) -> DataFrame:
 VEC_SCALE = 1_000_000
 
 
+def _quantized(vec: Column) -> Column:
+    """``vec`` (array<double>) as ``floor(x * VEC_SCALE)`` BIGINTs —
+    the one quantization the vector tier and its oracles share."""
+    return F.transform(
+        vec, lambda x: F.floor(x.cast("double") * VEC_SCALE).cast("long")
+    )
+
+
+def _l2_q(a: Column, b: Column) -> Column:
+    """Exact BIGINT L2 fold over two quantized vectors (array order —
+    deterministic both engines; shared by kmeans assignment and PQ)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+
+
 def kmeans_centroids(
     emb: DataFrame,
     n_centroids: int = 8,
@@ -879,10 +897,7 @@ def kmeans_centroids(
         raise ValueError("n_centroids and iters must be >= 1")
     q = emb.select(
         F.col("vec_id").alias("vec_id"),
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.floor(x.cast("double") * VEC_SCALE).cast("long"),
-        ).alias("qv"),
+        _quantized(F.col("embedding")).alias("qv"),
     )
     h = md5_hash48(F.col("vec_id").cast("string"), salt="kmeans|")
     seed = (
@@ -898,13 +913,6 @@ def kmeans_centroids(
         F.col("qv").alias("cv"),
     )
 
-    def _l2(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
     agg = None
     for _ in range(iters):
         ass = (
@@ -913,7 +921,7 @@ def kmeans_centroids(
                 "vec_id",
                 "qv",
                 "centroid_id",
-                _l2(F.col("qv"), F.col("cv")).alias("dist"),
+                _l2_q(F.col("qv"), F.col("cv")).alias("dist"),
             )
             .groupBy("vec_id")
             .agg(
@@ -4028,16 +4036,6 @@ def rebalance_sample(
     )
 
 
-def _l2_q(a: Column, b: Column) -> Column:
-    """Exact BIGINT L2 fold over two quantized vectors (array order —
-    deterministic both engines; shared by kmeans assignment and PQ)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def pq_books(
     emb: DataFrame,
     m: int = 4,
@@ -4095,12 +4093,9 @@ def pq_codes(
     for j in range(m):
         q = emb.select(
             F.col("vec_id").alias("vec_id"),
-            F.transform(
-                F.slice(F.col("embedding"), j * d + 1, d),
-                lambda x: F.floor(x.cast("double") * VEC_SCALE).cast(
-                    "long"
-                ),
-            ).alias("qv"),
+            _quantized(F.slice(F.col("embedding"), j * d + 1, d)).alias(
+                "qv"
+            ),
         )
         bj = books.where(F.col("sub_idx") == j)
         ass = (
@@ -4153,12 +4148,9 @@ def pq_adc_topk(
         qs = emb.where(F.col("vec_id") < n_queries).select(
             F.col("vec_id").alias("query_id"),
             F.lit(j).cast("int").alias("sub_idx"),
-            F.transform(
-                F.slice(F.col("embedding"), j * d + 1, d),
-                lambda x: F.floor(x.cast("double") * VEC_SCALE).cast(
-                    "long"
-                ),
-            ).alias("qv"),
+            _quantized(F.slice(F.col("embedding"), j * d + 1, d)).alias(
+                "qv"
+            ),
         )
         qsub = qs if qsub is None else qsub.unionByName(qs)
     dtab = qsub.join(books, "sub_idx").select(
