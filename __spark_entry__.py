@@ -32,6 +32,7 @@ from zhtml_spark.textops import (
     PAGERANK_DAMPING_PCT,
     PAGERANK_SCALE,
     STOPWORDS,
+    SUBSTRING_MAX_GRAM_FREQ,
     VEC_SCALE,
 )
 
@@ -7310,7 +7311,7 @@ def oracle_sql() -> dict[str, str]:
               ON e.ts >= w.start_ts AND e.ts < w.end_ts
         """,
         "media_absolutize": _abs_url_sql(),
-        "substring_dup_spans": """
+        "substring_dup_spans": f"""
             WITH g AS (
                 SELECT doc_id, i - 1 AS pos,
                        ('0x' || substr(
@@ -7322,7 +7323,7 @@ def oracle_sql() -> dict[str, str]:
             ),
             keep AS (
                 SELECT gh FROM g
-                GROUP BY gh HAVING count(DISTINCT doc_id) <= 20
+                GROUP BY gh HAVING count(DISTINCT doc_id) <= {SUBSTRING_MAX_GRAM_FREQ}
             ),
             gk AS (
                 SELECT g.* FROM g JOIN keep USING (gh)

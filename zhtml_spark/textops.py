@@ -668,9 +668,10 @@ def simhash_dup_candidates(
     28 tables on ~12 bits (vs 64 single-block values).  More blocks
     widen keys further at C(n_blocks, k) replication cost — the
     Manku-style multi-index dial (cf. Manku et al., WWW'07, via
-    PAPERS.md) that :func:`simhash_candidate_stats` measures.  Candidate volume is
-    bounded by dup-pair volume × C(n, k) plus random ~N²/2^|key|
-    collisions, no longer by corpus size × bucket count.
+    PAPERS.md) that :func:`simhash_candidate_stats` measures.
+    Candidate volume is bounded by dup-pair volume × C(n, k) plus
+    random ~N²/2^|key| collisions, no longer by corpus size × bucket
+    count.
     """
     keyed = _simhash_block_keys(docs, max_hamming, 48, None)[0]
     cands = _bucket_pairs(keyed, "bkey", "simhash")
