@@ -5053,7 +5053,8 @@ def oracle_sql() -> dict[str, str]:
             -- corpus-trained bigram LM, scored over itself: pair
             -- buckets = md5-48('blm|'||word) % 256 of adjacent
             -- non-empty words; P(b2|b1) add-one smoothed; logs via
-            -- the fixed-point log2 chain (floor log2q(256) = 2048)
+            -- the fixed-point log2 chain; every pair is in both count
+            -- tables (the corpus is scored against itself)
             WITH prs AS (
                 SELECT doc_id,
                        CAST(('0x' || substr(md5('blm|' || w[i]), 1, 12))
@@ -5077,12 +5078,10 @@ def oracle_sql() -> dict[str, str]:
             ),
         """ + _log2q_ctes("uni0", "cb", "_x1", "l2_1") + """,
             sc AS (
-                SELECT p.doc_id,
-                       coalesce(g.l2_12, 0)
-                       - coalesce(u.l2_1, 2048) AS lp
+                SELECT p.doc_id, g.l2_12 - u.l2_1 AS lp
                 FROM prs p
-                LEFT JOIN caz g ON p.b1 = g.b1 AND p.b2 = g.b2
-                LEFT JOIN cbz u ON p.b1 = u.b1
+                JOIN caz g ON p.b1 = g.b1 AND p.b2 = g.b2
+                JOIN cbz u ON p.b1 = u.b1
             )
             SELECT doc_id,
                    CAST(count(*) AS BIGINT) AS n_pairs,

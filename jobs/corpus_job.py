@@ -172,8 +172,7 @@ def run(
     # ---- 3b. host-graph PageRank (optional, r7): quality weights
     # from the crawl's OWN link structure — the Common Crawl-style
     # host ranking a curation pipeline joins against its quota/
-    # sampling tiers.  checkpointed iteration above 5 rounds (the
-    # lazy plan's 3^iters tree — see textops.pagerank).
+    # sampling tiers.
     if pagerank_iters:
         from zhtml_spark.textops import pagerank
 
@@ -188,11 +187,7 @@ def run(
                     1,
                 ).alias("dst"),
             ).where((F.col("src") != "") & (F.col("dst") != ""))
-            pr = pagerank(
-                edges,
-                iters=pagerank_iters,
-                checkpoint=pagerank_iters > 5,
-            )
+            pr = pagerank(edges, iters=pagerank_iters)
             top = pr.orderBy(
                 F.col("rank_q").desc(), "node"
             ).limit(3).collect()

@@ -273,14 +273,30 @@ def test_unclosed_tag_run_is_linear(unit):
 
 @pytest.mark.parametrize(
     "unit, suffix",
-    [("<a ", ""), ("</a", ""), ("<!DOCTYPE", ""), ("</a", " x>")],
-    ids=["start_tag", "end_tag", "doctype", "end_tag_broken_name"],
+    [
+        ("<a ", ""),
+        ("</a", ""),
+        ("<!DOCTYPE", ""),
+        ("</a", " x>"),
+        ("<a ", "'>"),
+        ("<a ", "'\">"),
+    ],
+    ids=[
+        "start_tag",
+        "end_tag",
+        "doctype",
+        "end_tag_broken_name",
+        "start_tag_unclosed_quote",
+        "start_tag_unclosed_quotes",
+    ],
 )
 def test_unclosed_tag_pump_grows_linearly(unit, suffix):
     """Doubling a pump must about double the scan time.  A '>'-free
     tail once cost x4 per doubling, every '<' rescanning it to the end
     (``"<a " * 6400`` took 2.7 s), and so did a run of end tags whose
-    name a space breaks before the '>'."""
+    name a space breaks before the '>', and a run of start tags whose
+    soup stops at an unclosed quote before the '>' (0.71 s at
+    ``"<a " * 3200``)."""
     import time
 
     head = '<rss version="2.0"><channel><item><title>x'

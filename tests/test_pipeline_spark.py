@@ -1080,6 +1080,23 @@ def test_dedup_components_chains_and_convergence(spark):
         dedup_components(pairs, max_iter=2)
 
 
+def test_dedup_components_raise_frees_every_round(spark):
+    """A call that does not converge raises and leaves no storage
+    blocks behind: the pinned edge set, the initial labelling and the
+    last round are all freed on the way out."""
+    import pytest
+
+    from zhtml_spark.textops import _persistent_rdd_ids, dedup_components
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)], "doc_a long, doc_b long"
+    )
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup_components(pairs, max_iter=2)
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
 def test_dedup_components_long_chain_log_rounds(spark):
     """The r4 scale-killer, closed (VERDICT r4 #2): a 10k-vertex PATH
     graph — the adversarial mirror-ring/pagination topology — must
@@ -1495,6 +1512,63 @@ def test_kmeans_centroids_trains_and_is_deterministic(spark):
     ).collect()
     assert {r["query_id"] for r in got} == {0, 1}
     assert all(r["rank"] <= 3 for r in got)
+
+
+def _kmeans_reference(vecs, k, iters):
+    """Integer Lloyd written independently of the Spark plan: md5-48
+    init, exact squared-L2 argmin with centroid-id tie-break, means by
+    truncating division, empty clusters keep their coords."""
+    import hashlib
+    import math
+
+    from zhtml_spark.textops import VEC_SCALE
+
+    q = {i: [math.floor(x * VEC_SCALE) for x in v] for i, v in vecs.items()}
+
+    def h(i):
+        return int(hashlib.md5(f"kmeans|{i}".encode()).hexdigest()[:12], 16)
+
+    cents = [list(q[i]) for i in sorted(q, key=lambda i: (h(i), i))[:k]]
+    members = [0] * k
+    for _ in range(iters):
+        groups = [[] for _ in cents]
+        for v in q.values():
+            dist = [sum((a - b) ** 2 for a, b in zip(v, c)) for c in cents]
+            groups[min(range(len(cents)), key=lambda c: (dist[c], c))].append(v)
+        for c, g in enumerate(groups):
+            members[c] = len(g)
+            if g:
+                sums = [sum(col) for col in zip(*g)]
+                cents[c] = [
+                    -(-s // len(g)) if s < 0 else s // len(g) for s in sums
+                ]
+    return sorted((c, tuple(v), members[c]) for c, v in enumerate(cents))
+
+
+def test_kmeans_deep_run_matches_reference(spark):
+    """Ten Lloyd rounds finish quickly (each round is materialized; a
+    lazily unrolled plan doubled per round) and equal the independent
+    integer reference, on vectors that keep reassigning for several
+    rounds."""
+    import random
+    import time
+
+    from zhtml_spark.textops import kmeans_centroids
+
+    rng = random.Random(11)
+    vecs = {i: [rng.uniform(-1, 1) for _ in range(4)] for i in range(200)}
+    emb = spark.createDataFrame(
+        sorted(vecs.items()), "vec_id long, embedding array<double>"
+    )
+    t0 = time.perf_counter()
+    got = sorted(
+        (r["centroid_id"], tuple(r["centroid"]), r["n_members"])
+        for r in kmeans_centroids(emb, n_centroids=5, iters=10).collect()
+    )
+    elapsed = time.perf_counter() - t0
+    assert got == _kmeans_reference(vecs, 5, 10)
+    assert got != _kmeans_reference(vecs, 5, 3)  # rounds 4-10 mattered
+    assert elapsed < 20, elapsed
 
 
 def test_kmeans_empty_cluster_keeps_coords(spark):
@@ -2582,22 +2656,10 @@ def test_lang_gate_per_language_floors(spark):
         )
 
 
-def test_pagerank_matches_independent_integer_reference(spark):
-    """Spark's plan-unrolled integer PageRank vs a dict-based
-    reference implementing the SAME recurrence independently —
-    including a dangling node (no out-edges) so the 1-row
-    redistribution aggregate is exercised, and exact mass
-    conservation (teleport + damping shares sum back to ~scale)."""
-    from zhtml_spark.textops import pagerank
-
-    edges = [(0, 1), (1, 2), (2, 0), (0, 2), (3, 0), (1, 5), (1, 5)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["node"]: r["rank_q"]
-        for r in pagerank(df, iters=3).collect()
-    }
-
-    scale, d, iters = 10**12, 85, 3
+def _pagerank_reference(edges, iters):
+    """The integer PageRank recurrence over a plain dict, written
+    independently of the Spark plan."""
+    scale, d = 10**12, 85
     e = sorted(set((s, t) for s, t in edges if s != t))
     nodes = sorted(set([s for s, _ in e] + [t for _, t in e]))
     outd: dict[int, int] = {}
@@ -2615,9 +2677,28 @@ def test_pagerank_matches_independent_integer_reference(spark):
             v: tele + (d * (contrib[v] + dang // n)) // 100
             for v in nodes
         }
+    return r
+
+
+def test_pagerank_matches_independent_integer_reference(spark):
+    """Spark's integer PageRank vs a dict-based reference implementing
+    the SAME recurrence independently — including a dangling node (no
+    out-edges) so the 1-row redistribution aggregate is exercised, and
+    exact mass conservation (teleport + damping shares sum back to
+    ~scale)."""
+    from zhtml_spark.textops import pagerank
+
+    edges = [(0, 1), (1, 2), (2, 0), (0, 2), (3, 0), (1, 5), (1, 5)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {
+        r["node"]: r["rank_q"]
+        for r in pagerank(df, iters=3).collect()
+    }
+    r = _pagerank_reference(edges, 3)
     assert got == r
     # integer dust only: each div truncates < 1 unit per node/edge
-    assert abs(sum(got.values()) - scale) < n * (len(e) + 3)
+    n, n_edges = len(r), len({(s, t) for s, t in edges if s != t})
+    assert abs(sum(got.values()) - 10**12) < n * (n_edges + 3)
     # the hub (two in-links incl. the dangling redistribution target)
     # outranks the leaf that only receives teleport mass
     assert got[0] > got[3]
@@ -2738,12 +2819,13 @@ def test_pq_codes_and_adc_rank_near_duplicates_first(spark):
         pq_books(df, m=3, dim=dim)  # 16 % 3 != 0
 
 
-def test_pagerank_checkpoint_mode_identical_and_deep(spark):
-    """checkpoint=True (per-round localCheckpoint, production depth)
-    returns bit-identical ranks to the lazy plan, and a 12-iteration
-    run — where the lazy 3^iters plan tree would be ~500k subtrees —
-    completes; storage is freed per round (≤ edges + 2 rank
-    snapshots live, the dedup_components hygiene)."""
+def test_pagerank_deep_run_matches_reference(spark):
+    """A 12-round run — where a lazily unrolled 3^iters plan tree
+    would hold ~500k subtrees — equals the independent reference, and
+    storage is freed per round: only the returned ranks may still hold
+    blocks, never O(rounds) snapshots."""
+    import time
+
     import pyspark.sql.functions as F
 
     from zhtml_spark.textops import (
@@ -2755,22 +2837,19 @@ def test_pagerank_checkpoint_mode_identical_and_deep(spark):
         (F.col("id") % 600).alias("src"),
         ((F.col("id") * 7 + 3) % 600).alias("dst"),
     )
-    lazy = {
-        r["node"]: r["rank_q"]
-        for r in pagerank(edges, iters=3).collect()
-    }
-    chk = {
-        r["node"]: r["rank_q"]
-        for r in pagerank(edges, iters=3, checkpoint=True).collect()
-    }
-    assert lazy == chk
     before = _persistent_rdd_ids(spark)
-    deep = pagerank(edges, iters=12, checkpoint=True)
-    assert deep.count() == 600
+    t0 = time.perf_counter()
+    deep = {
+        r["node"]: r["rank_q"]
+        for r in pagerank(edges, iters=12).collect()
+    }
+    elapsed = time.perf_counter() - t0
+    assert deep == _pagerank_reference(
+        [(i % 600, (i * 7 + 3) % 600) for i in range(3000)], 12
+    )
     leaked = _persistent_rdd_ids(spark) - before
-    # edges_w + at most 2 rank snapshots may still hold blocks
-    # (non-blocking unpersist); never O(rounds)
-    assert len(leaked) <= 4, leaked
+    assert len(leaked) <= 1, leaked
+    assert elapsed < 60, elapsed
 
 
 def test_lang_gate_with_lang_feeds_rebalance(spark):
@@ -2804,37 +2883,24 @@ def test_lang_gate_with_lang_feeds_rebalance(spark):
     assert got == {"en": 10, "ja": 10}
 
 
-def test_bpe_train_matches_independent_reference(spark):
-    """Spark's distributed BPE trainer vs a dict-based reference
-    implementing the same algorithm independently (frequency-weighted
-    vocabulary, greedy left-to-right non-overlapping merges, argmax
-    by (count DESC, lhs ASC, rhs ASC)) — ASCII corpus so both
-    engines' string orders coincide with Python's."""
+_BPE_TEXTS = [
+    "low lower lowest low low",
+    "new newer newest new new new",
+    "wide wider widest low newer",
+]
+
+
+def _bpe_reference(texts, n_merges):
+    """Dict-based BPE training written independently of the Spark
+    plan: frequency-weighted vocabulary, greedy left-to-right
+    non-overlapping merges, argmax by (count DESC, lhs ASC, rhs
+    ASC)."""
     from collections import Counter
-
-    from zhtml_spark.textops import bpe_train
-
-    texts = [
-        "low lower lowest low low",
-        "new newer newest new new new",
-        "wide wider widest low newer",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)],
-        "doc_id long, text string",
-    )
-    got = [
-        (r["step"], r["lhs"], r["rhs"], r["pair_n"])
-        for r in sorted(
-            bpe_train(df, n_merges=6).collect(),
-            key=lambda r: r["step"],
-        )
-    ]
 
     wc = Counter(w for t in texts for w in t.split())
     syms: dict[tuple, int] = {tuple(w): c for w, c in wc.items()}
     exp = []
-    for step in range(6):
+    for step in range(n_merges):
         pc: Counter = Counter()
         for s, c in syms.items():
             for a, b in zip(s, s[1:]):
@@ -2858,20 +2924,54 @@ def test_bpe_train_matches_independent_reference(spark):
             t = tuple(out)
             merged[t] = merged.get(t, 0) + c
         syms = merged
-    assert got == exp
-    # rerun identical (no RNG anywhere)
-    again = [
+    return exp
+
+
+def _bpe_rows(merges):
+    return [
         (r["step"], r["lhs"], r["rhs"], r["pair_n"])
-        for r in sorted(
-            bpe_train(df, n_merges=6).collect(),
-            key=lambda r: r["step"],
-        )
+        for r in sorted(merges.collect(), key=lambda r: r["step"])
     ]
-    assert got == again
+
+
+def test_bpe_train_matches_independent_reference(spark):
+    """Spark's distributed BPE trainer vs the dict-based reference —
+    ASCII corpus so both engines' string orders coincide with
+    Python's."""
+    from zhtml_spark.textops import bpe_train
+
+    df = spark.createDataFrame(
+        list(enumerate(_BPE_TEXTS)), "doc_id long, text string"
+    )
+    got = _bpe_rows(bpe_train(df, n_merges=6))
+    assert got == _bpe_reference(_BPE_TEXTS, 6)
+    # rerun identical (no RNG anywhere)
+    assert got == _bpe_rows(bpe_train(df, n_merges=6))
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
         bpe_train(df, n_merges=0)
+
+
+def test_bpe_train_deep_run_matches_reference(spark):
+    """Twelve merge rounds finish quickly (each round is materialized;
+    a lazily unrolled plan doubled per round) and equal the reference;
+    the merge table reads no freed round, so it collects after the
+    call."""
+    import time
+
+    from zhtml_spark.textops import bpe_train
+
+    df = spark.createDataFrame(
+        list(enumerate(_BPE_TEXTS)), "doc_id long, text string"
+    )
+    t0 = time.perf_counter()
+    merges = bpe_train(df, n_merges=12)
+    got = _bpe_rows(merges)
+    elapsed = time.perf_counter() - t0
+    assert got == _bpe_reference(_BPE_TEXTS, 12) and len(got) == 12
+    assert _bpe_rows(merges) == got
+    assert elapsed < 20, elapsed
 
 
 def test_bpe_encode_matches_independent_apply(spark):

@@ -7,7 +7,9 @@ guard: every public function in the package has a caller outside the
 tests, so test-only surface cannot grow back, and every defaulted
 parameter of a package or registry function, private helpers included,
 is passed by some call outside the tests, so a value only a test varies
-is a constant rather than an option.
+is a constant rather than an option.  The iterative ops of
+``textops`` materialize and free their rounds only through its one
+round helper.
 
 Scripts are parsed, not run.  Imports nested in functions count, and
 so do import lines inside string literals (code snippets a script
@@ -249,7 +251,6 @@ def test_public_functions_have_a_non_test_caller():
 
 # defaulted parameters kept although no non-test caller passes them
 NO_CALLER_PARAM_OK = {
-    "bpe_train.checkpoint": "plan-depth guard for vocab-sized merge counts",
     "tokenize.enable_fast_tags": (
         "the state-machine reference the regex fast path is fuzzed against"
     ),
@@ -407,12 +408,72 @@ def test_defaults_guard_resolves_getattr_calls(tmp_path):
     snippet.write_text(textwrap.dedent("""\
         from zhtml_spark import textops
         def job(docs, op):
-            getattr(textops, 'pagerank')(docs, 3, checkpoint=True)
+            getattr(textops, 'kmeans_centroids')(docs, 8, iters=3)
             getattr(textops, op)(docs)
             getattr(textops, op)(docs, n_blocks=3)
             {'a': textops.pagerank}[op](docs, iters=2)
         """))
     passed, blind = _passed([snippet])
-    assert {"pagerank.#0", "pagerank.#1", "pagerank.checkpoint"} <= passed
+    assert {
+        "kmeans_centroids.#0", "kmeans_centroids.#1", "kmeans_centroids.iters"
+    } <= passed
     assert "pagerank.iters" not in passed
     assert blind == ["snippet.py:5", "snippet.py:6"]
+
+
+# the one round loop of the iterative ops in textops
+ROUND_HELPER = "_Rounds"
+ROUND_NAMES = {"_persistent_rdd_ids", "_unpersist_rdd_ids"}
+
+
+def _round_bookkeeping_outside_helper(tree: ast.AST) -> list[str]:
+    """``name@line`` for each ``.localCheckpoint`` or use of the
+    persistent-RDD accessors outside the top-level ``_Rounds`` class:
+    an iterative op materializes and frees its rounds only through
+    the helper, never with a loop of its own."""
+    helper = [
+        node
+        for node in getattr(tree, "body", [])
+        if isinstance(node, ast.ClassDef) and node.name == ROUND_HELPER
+    ]
+    inside = {id(n) for h in helper for n in ast.walk(h)}
+    found = []
+    for node in ast.walk(tree):
+        if id(node) in inside:
+            continue
+        if isinstance(node, ast.Attribute) and node.attr == "localCheckpoint":
+            found.append((node.lineno, "localCheckpoint"))
+        elif isinstance(node, ast.Name) and node.id in ROUND_NAMES:
+            found.append((node.lineno, node.id))
+    return [f"{name}@{line}" for line, name in sorted(found)]
+
+
+def test_textops_rounds_go_through_the_helper():
+    path = REPO / "zhtml_spark" / "textops.py"
+    found = _round_bookkeeping_outside_helper(ast.parse(path.read_text()))
+    assert not found, f"round bookkeeping outside {ROUND_HELPER}: {found}"
+
+
+def test_round_guard_flags_a_loop_of_its_own():
+    src = textwrap.dedent("""\
+        def _persistent_rdd_ids(spark):
+            return set()
+
+        class _Rounds:
+            def next(self, df):
+                before = _persistent_rdd_ids(self._spark)
+                return df.localCheckpoint()
+
+        def op(df, spark):
+            \"\"\"Docstrings may say localCheckpoint.\"\"\"
+            ids = _persistent_rdd_ids(spark)
+            for _ in range(3):
+                df = df.localCheckpoint()
+            free = _unpersist_rdd_ids
+            return df
+        """)
+    assert _round_bookkeeping_outside_helper(ast.parse(src)) == [
+        "_persistent_rdd_ids@11",
+        "localCheckpoint@13",
+        "_unpersist_rdd_ids@14",
+    ]

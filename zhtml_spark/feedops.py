@@ -38,6 +38,7 @@ matching what real-world feeds actually emit.
 from __future__ import annotations
 
 import re
+from bisect import bisect_left
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -53,57 +54,156 @@ from .udfs import map_rows
 # One scan, every construct atomic.  CDATA / comments / PIs tolerate
 # a missing terminator at EOF (truncated responses must not deadlock
 # the scan or leak their tail into element structure).  Read it
-# through _tokens, which drops the ``skip`` runs.
+# through _tokens, which reads the start tags and drops the ``skip``
+# runs.
 _TOK_RE = re.compile(
     r"<!\[CDATA\[(.*?)(?:\]\]>|\Z)"  # 1: CDATA payload
     r"|<!--.*?(?:-->|\Z)"  # comment
     r"|<\?.*?(?:\?>|\Z)"  # PI / XML prolog
     r"|<!DOCTYPE[^>]*>"  # doctype
     r"|</\s*([^\s>]*)\s*>"  # 2: end-tag name
-    # 3: start-tag name.  The name may give back characters to the
-    # soup, but only a cut before a quote can change where the soup
-    # ends, so the runs between quotes are possessive and the name
-    # backtracks one quoted segment at a time.
-    r"|<([^!?/\s>][^\s/>\"']*+(?:[\"'][^\s/>\"']*+)*)"
-    # 4: attribute soup — it must admit '/' for unquoted values like
-    # url=a/b, yet never swallow the self-closing slash, or group 5
-    # could never match (every self-closed tag would read as an open
-    # tag, so a `<title/>` capture would silently eat the rest of the
-    # feed): a '/' joins the soup only when no '>' follows it.  Each
-    # step has one choice, so the soup is possessive.
-    r"((?:\"[^\"]*\"|'[^']*'|/(?!>)|[^>\"'/])*+)"
-    r"(/?)>"  # 5: self-closing slash
-    # A start tag that fails fails from every later '<' of its name
-    # run too (those try a subset of its soup starts), so the run is
-    # skipped whole, up to a '<' that could open another construct.
-    # Without this, every '<' of an unclosed `<a<a<a…` rescans the run.
-    # Likewise a failed end tag: every later '</' inside its name run
-    # ends its name at the same place, unless the name would start
-    # only after that place.
-    r"|(?P<skip><(?![!?/\s>])(?:[^\s/><]|<(?![!?/]))++"
-    r"|</\s*(?:[^\s><]|<(?=/[^\s>]))*+)",
+    # 3-5: a start tag's name, attribute soup and self-closing slash,
+    # when neither holds a '<' and the name no quote (every well-formed
+    # XML tag): one possessive walk that ends by the next '<'.
+    r"|<([^!?/\s>][^\s/>\"'<]*+)(?![\"'<])"
+    r"((?:\"[^\"<]*\"|'[^'<]*'|/(?!>)|[^>\"'/<])*+)(/?)>"
+    # any other start tag: _start_tag reads it
+    r"|(?P<tag><)(?=[^!?/\s>])"
+    # A failed end tag: every later '</' inside its name run ends its
+    # name at the same place, unless the name would start only after
+    # that place, so the run is skipped whole.
+    r"|(?P<skip></\s*(?:[^\s><]|<(?=/[^\s>]))*+)",
     re.S,
 )
-
-
 _OPENER_RE = re.compile(r"<!\[CDATA\[|<!--|<\?")
+# a start tag's name run: the name may end at any of its quotes
+_NAME_RE = re.compile(r"[^\s/>]*")
+# where an unquoted attribute soup can stop: a tag end or a quote
+_STOP_RE = re.compile(r"[>\"']|/(?=>)")
+
+
+class _StartTag:
+    """A start tag read like the other tokens' ``re.Match``: group 3 is
+    the name, 4 the attribute soup, 5 the self-closing slash."""
+
+    __slots__ = ("_span", "_groups")
+
+    def __init__(self, start: int, end: int, name: str, soup: str, slash: str):
+        self._span = (start, end)
+        self._groups = (None, None, None, name, soup, slash)
+
+    def group(self, *idx):
+        if len(idx) == 1:
+            return self._groups[idx[0]]
+        return tuple(self._groups[i] for i in idx)
+
+    def start(self) -> int:
+        return self._span[0]
+
+    def end(self) -> int:
+        return self._span[1]
+
+    def span(self) -> tuple[int, int]:
+        return self._span
+
+
+class _Soups:
+    """Where an attribute soup ends, memoized over the stops of one
+    text.  A soup is ``"…"``, ``'…'`` and single other characters up
+    to the first unquoted ``>`` or ``/>``, and fails at a quote nothing
+    closes.  From an unquoted position the walk depends only on the
+    next stop, so every stop is walked once for the whole text: a soup
+    that fails at an unclosed quote is not walked again from each '<'
+    before it (``"<a " * n + "'>"`` was quadratic)."""
+
+    def __init__(self, text: str):
+        self.text = text
+        self.stops = [m.start() for m in _STOP_RE.finditer(text)]
+        self.ends: dict[int, tuple[int, str] | None] = {}
+
+    def end(self, i: int) -> tuple[int, str] | None:
+        """(position of the closing ``>`` or ``/``, slash) for a soup
+        whose first stop is ``stops[i]``; None when it never closes."""
+        path = []
+        while i not in self.ends:
+            if i == len(self.stops):
+                out = None
+                break
+            path.append(i)
+            at = self.stops[i]
+            c = self.text[at]
+            if c == ">":
+                out = (at, "")
+                break
+            if c == "/":
+                out = (at, "/")
+                break
+            close = self.text.find(c, at + 1)
+            if close < 0:
+                out = None
+                break
+            i = bisect_left(self.stops, close + 1)
+        else:
+            out = self.ends[i]
+        for j in path:
+            self.ends[j] = out
+        return out
+
+
+def _start_tag(soups: _Soups, p: int, name_end: int) -> _StartTag | None:
+    """The start tag at ``p`` whose name run ends at ``name_end``, or
+    None.  The name is the longest prefix of the run after which the
+    soup closes; it can only give characters back at a quote, so the
+    run's end and then each quote inside it, last first, are tried."""
+    stops = soups.stops
+    lo = bisect_left(stops, p + 2)
+    hi = bisect_left(stops, name_end)
+    for i in range(hi, lo - 1, -1):
+        out = soups.end(i)
+        if out is not None:
+            at, slash = out
+            e = name_end if i == hi else stops[i]
+            text = soups.text
+            return _StartTag(
+                p, at + len(slash) + 1, text[p + 1 : e], text[e:at], slash
+            )
+    return None
 
 
 def _tokens(text: str):
-    """The ``_TOK_RE`` matches in ``text``, skipped runs left out.
+    """The ``_TOK_RE`` matches and start tags in ``text``, skipped runs
+    left out.
 
-    Every tag ends at a '>', so past the last '>' only CDATA, a comment
-    or a PI can match, and the first of them reads to the end of input.
-    The scan stops at that '>' and finds the opener with one search: a
-    tag-by-tag scan of a '>'-free tail retries every later '<' to the
-    end of input (``"<a " * n``, ``"</a" * n`` and ``"<!DOCTYPE" * n``
-    were quadratic).  A construct that the cut ends early is matched
-    again over the whole text, so the matches are the uncut scan's."""
+    A start tag that fails fails from every later '<' of its name run
+    too (those try a subset of its soup starts), so those are not
+    tried again (``"<a" * n`` was cubic).  Every tag ends at a '>', so
+    past the last '>' only CDATA, a comment or a PI can match, and the
+    first of them reads to the end of input.  The scan stops at that
+    '>' and finds the opener with one search: a tag-by-tag scan of a
+    '>'-free tail retries every later '<' to the end of input
+    (``"</a" * n`` and ``"<!DOCTYPE" * n`` were quadratic).  A
+    construct that the cut ends early is matched again over the whole
+    text, so the matches are the uncut scan's."""
     tail = end = text.rfind(">") + 1
-    for t in _TOK_RE.finditer(text, 0, tail):
+    soups = None
+    pos = failed = 0
+    while (t := _TOK_RE.search(text, pos, tail)) is not None:
+        pos = t.end()
+        if t.group("tag") is not None:
+            if t.start() < failed:
+                continue
+            name_end = _NAME_RE.match(text, pos).end()
+            soups = soups or _Soups(text)
+            tag = _start_tag(soups, t.start(), name_end)
+            if tag is None:
+                failed = name_end
+                continue
+            pos = tag.end()
+            yield tag
+            continue
         if t.end() == tail:
             t = _TOK_RE.match(text, t.start())
-            end = t.end()
+            pos = end = t.end()
         if t.group("skip") is None:
             yield t
     opener = _OPENER_RE.search(text, end)

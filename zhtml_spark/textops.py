@@ -889,85 +889,93 @@ def kmeans_centroids(
     vectors cross-joined against the BROADCAST k-row centroid table,
     argmin via ``min_by`` groupBy (map-side partial agg — no skewed
     window), then posexplode → per-(centroid, dim) sum/count (k×dim
-    groups, trivially parallel).  ``iters`` is a fixed plan-unrolled
-    bound exactly like ``resolve_redirects``'s max_hops self-joins —
-    no driver loop, no collect; the whole training is one lazy plan.
+    groups, trivially parallel).  ``iters`` is a fixed round count
+    with no convergence collect.  Rounds run through :class:`_Rounds`:
+    the quantized vectors are pinned once, and each round's k-row
+    centroid table is materialized, because a round reads the previous
+    table twice (the broadcast assignment and the empty-cluster base)
+    and a lazily unrolled plan doubled per round (measured 3.3 / 5.3 /
+    38.2 s at iters 2 / 4 / 8 on the sf0.001 embeddings, local[2]).
     At 10^12 vectors each round is a linear scan plus a k×dim-sized
     reduction — the textbook scalable Lloyd."""
     if n_centroids < 1 or iters < 1:
         raise ValueError("n_centroids and iters must be >= 1")
-    q = emb.select(
-        F.col("vec_id").alias("vec_id"),
-        _quantized(F.col("embedding")).alias("qv"),
-    )
-    h = md5_hash48(F.col("vec_id").cast("string"), salt="kmeans|")
-    seed = (
-        q.select("vec_id", "qv", h.alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(n_centroids)
-    )
-    wseed = Window.orderBy("h", "vec_id")
-    cents = seed.select(
-        (F.row_number().over(wseed) - 1)
-        .cast("long")
-        .alias("centroid_id"),
-        F.col("qv").alias("cv"),
-    )
-
-    agg = None
-    for _ in range(iters):
-        ass = (
-            q.crossJoin(F.broadcast(cents))
-            .select(
-                "vec_id",
-                "qv",
-                "centroid_id",
-                _l2_q(F.col("qv"), F.col("cv")).alias("dist"),
-            )
-            .groupBy("vec_id")
-            .agg(
-                F.min_by(
-                    "centroid_id", F.struct("dist", "centroid_id")
-                ).alias("centroid_id"),
-                F.first("qv").alias("qv"),
+    with _Rounds(emb.sparkSession) as rounds:
+        q = rounds.pin(
+            emb.select(
+                F.col("vec_id").alias("vec_id"),
+                _quantized(F.col("embedding")).alias("qv"),
             )
         )
-        agg = (
-            ass.select(
-                "centroid_id", F.posexplode("qv").alias("dim_idx", "v")
-            )
-            .groupBy("centroid_id", "dim_idx")
-            .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
-            .select(
-                "centroid_id",
-                "dim_idx",
-                F.expr("s div n").alias("coord"),
-                "n",
-            )
+        h = md5_hash48(F.col("vec_id").cast("string"), salt="kmeans|")
+        seed = (
+            q.select("vec_id", "qv", h.alias("h"))
+            .orderBy("h", "vec_id")
+            .limit(n_centroids)
         )
-        new = agg.groupBy("centroid_id").agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("dim_idx", "coord"))
-                ),
-                lambda s: s["coord"],
-            ).alias("cv_new"),
-            F.max("n").alias("n_members"),
-        )
-        # an empty cluster keeps its previous coords (deterministic
-        # both engines; n_members 0)
-        cents = (
-            cents.select("centroid_id", "cv")
-            .join(new, "centroid_id", "left")
-            .select(
-                "centroid_id",
-                F.coalesce("cv_new", "cv").alias("cv"),
-                F.coalesce("n_members", F.lit(0)).alias("n_members"),
+        wseed = Window.orderBy("h", "vec_id")
+        cents = rounds.next(
+            seed.select(
+                (F.row_number().over(wseed) - 1)
+                .cast("long")
+                .alias("centroid_id"),
+                F.col("qv").alias("cv"),
             )
         )
-    return cents.select(
-        "centroid_id", F.col("cv").alias("centroid"), "n_members"
-    )
+        for _ in range(iters):
+            ass = (
+                q.crossJoin(F.broadcast(cents))
+                .select(
+                    "vec_id",
+                    "qv",
+                    "centroid_id",
+                    _l2_q(F.col("qv"), F.col("cv")).alias("dist"),
+                )
+                .groupBy("vec_id")
+                .agg(
+                    F.min_by(
+                        "centroid_id", F.struct("dist", "centroid_id")
+                    ).alias("centroid_id"),
+                    F.first("qv").alias("qv"),
+                )
+            )
+            agg = (
+                ass.select(
+                    "centroid_id",
+                    F.posexplode("qv").alias("dim_idx", "v"),
+                )
+                .groupBy("centroid_id", "dim_idx")
+                .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
+                .select(
+                    "centroid_id",
+                    "dim_idx",
+                    F.expr("s div n").alias("coord"),
+                    "n",
+                )
+            )
+            new = agg.groupBy("centroid_id").agg(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(F.struct("dim_idx", "coord"))
+                    ),
+                    lambda s: s["coord"],
+                ).alias("cv_new"),
+                F.max("n").alias("n_members"),
+            )
+            # an empty cluster keeps its previous coords (deterministic
+            # both engines; n_members 0)
+            cents = rounds.next(
+                cents.select("centroid_id", "cv")
+                .join(new, "centroid_id", "left")
+                .select(
+                    "centroid_id",
+                    F.coalesce("cv_new", "cv").alias("cv"),
+                    F.coalesce("n_members", F.lit(0)).alias("n_members"),
+                )
+            )
+        return cents.select(
+            "centroid_id", F.col("cv").alias("centroid"), "n_members"
+        )
 
 
 def ivf_topk(
@@ -1826,10 +1834,7 @@ def winnow_dup_candidates(
 def _persistent_rdd_ids(spark) -> set:
     """Ids of every RDD currently holding storage blocks (the JVM-side
     persistent-RDD registry).  Internal accessor (`_jsc`) — the public
-    API has no way to enumerate or free ``localCheckpoint`` blocks, and
-    an iterative algorithm that checkpoints per round must free the
-    previous round's blocks or executor storage grows O(rounds)
-    (ADVICE r4)."""
+    API has no way to enumerate or free ``localCheckpoint`` blocks."""
     return set(
         spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
     )
@@ -1843,6 +1848,56 @@ def _unpersist_rdd_ids(spark, ids) -> None:
         rdd = jmap.get(rid)
         if rdd is not None:
             rdd.unpersist(False)
+
+
+class _Rounds:
+    """The one round loop of the iterative ops (:func:`kmeans_centroids`,
+    :func:`dedup_components`, :func:`pagerank`, :func:`bpe_train`), as
+    a context manager.
+
+    ``pin(df)`` materializes an input that every round reads, once,
+    and holds it until the loop exits.  ``next(df)`` materializes one
+    round's state with ``localCheckpoint`` and frees the round before
+    it, so each round plans over a one-node scan and executor storage
+    holds the pins plus at most two states, never O(rounds).  A round
+    that reads the previous state twice (a join and its own base)
+    would, left lazy, grow its plan tree 2^rounds — measured 165 s
+    against 4 s for 8 PageRank rounds — so no round is unrolled
+    lazily.  On exit the pins are freed and so is every state but the
+    last, which the op returns; when the op raises, that one is freed
+    too.
+
+    Blocks are attributed by diffing the persistent-RDD registry
+    around each ``localCheckpoint``."""
+
+    def __init__(self, spark):
+        self._spark = spark
+        self._pins: set = set()
+        self._state: set = set()
+
+    def __enter__(self) -> "_Rounds":
+        return self
+
+    def _materialize(self, df: DataFrame) -> tuple[DataFrame, set]:
+        before = _persistent_rdd_ids(self._spark)
+        df = df.localCheckpoint()
+        return df, _persistent_rdd_ids(self._spark) - before
+
+    def pin(self, df: DataFrame) -> DataFrame:
+        df, ids = self._materialize(df)
+        self._pins |= ids
+        return df
+
+    def next(self, df: DataFrame) -> DataFrame:
+        df, ids = self._materialize(df)
+        _unpersist_rdd_ids(self._spark, self._state)
+        self._state = ids
+        return df
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        _unpersist_rdd_ids(self._spark, self._pins)
+        if exc_type is not None:
+            _unpersist_rdd_ids(self._spark, self._state)
 
 
 def dedup_components(
@@ -1871,15 +1926,14 @@ def dedup_components(
     vertices, so the fixpoint (no label changed) is exactly the
     component-minimum labelling — unlike star contraction, the
     convergence test is a trivially-correct change count, and the
-    edge set is checkpointed ONCE and never rewritten.
+    edge set is pinned ONCE and never rewritten.
 
     Per round: one edge⋈label join + map-side-combinable min-agg
     (O(E)), one label self-join for the jump (O(V)), one scalar
-    collect for convergence.  Each round ``localCheckpoint``\\ s so
-    lineage stays O(1); the PREVIOUS round's blocks are explicitly
-    unpersisted once the new round is materialized, so executor
-    storage holds ≤2 label snapshots + the edge set at any time
-    (ADVICE r4 — was O(rounds)).
+    collect for convergence.  Rounds run through :class:`_Rounds`:
+    each labelling is materialized and the one before it freed, and
+    nothing but the returned labelling is left persisted, also when
+    the call raises.
 
     Raises after ``max_iter`` rounds rather than returning a
     half-propagated labelling (with doubling, 50 rounds covers any
@@ -1890,32 +1944,12 @@ def dedup_components(
     own component by definition (callers union them back if needed).
     Deterministic, Python-free plan per round.  ``stats`` (optional
     dict) receives ``{"rounds": k}`` for observability/tests."""
-    spark = pairs.sparkSession
     edges = pairs.select("doc_a", "doc_b")
-    before_ids = _persistent_rdd_ids(spark)
-    sym = edges.unionByName(
-        edges.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    # materialize ONCE: the edge set may be an expensive candidate
-    # pipeline (LSH generation) — without this every propagation
-    # round re-runs it (code-review r4b)
-    ).localCheckpoint()
-    labels = (
-        sym.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .withColumn("component", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    # edge-set + initial-label blocks stay persisted for the whole
-    # loop; everything newer gets freed one round later
-    keep_ids = _persistent_rdd_ids(spark) - before_ids
-    prev_round_ids: set = set()
 
-    def _step(lbl: DataFrame, with_jump: bool) -> DataFrame:
+    def _step(sym: DataFrame, lbl: DataFrame, with_jump: bool) -> DataFrame:
         """One min-label propagation step (neighbour min + pointer
-        jump) as a lazy plan over ``lbl``; emits (doc_id, component,
-        _chg).  ``with_jump=False`` skips the label-of-label join —
+        jump) as a lazy plan over ``sym`` and ``lbl``; emits (doc_id,
+        component, _chg).  ``with_jump=False`` skips the label-of-label join —
         valid ONLY for the very first step, where every label is its
         own id and the jump is the identity (r8: one join+shuffle
         saved per call)."""
@@ -1965,33 +1999,44 @@ def dedup_components(
             ).cast("int").alias("_chg"),
         ).withColumnRenamed("new_component", "component")
 
-    for rnd in range(max_iter):
-        # ONE step per materialized round.  (r8 measured dead end,
-        # recorded: fusing two steps per checkpoint halves the
-        # checkpoint+collect overhead but step 2 references step 1's
-        # UNmaterialized plan four times — neighbour join, the two
-        # jump sides, and the merge base — so step 1's joins re-run
-        # 4×: the lazy-tree trap this op's own docstring warns about,
-        # and probes read 2-3× slower.  The cheap win that survives
-        # is skipping the round-0 jump, where labels are all self.)
-        merged = _step(labels, with_jump=(rnd > 0)).localCheckpoint()
-        changed = merged.agg(F.sum("_chg")).collect()[0][0] or 0
-        # the new round is materialized — the round before LAST is no
-        # longer reachable by any plan; free its blocks now
-        after_ids = _persistent_rdd_ids(spark)
-        _unpersist_rdd_ids(spark, prev_round_ids)
-        prev_round_ids = after_ids - keep_ids - before_ids - prev_round_ids
-        labels = merged.drop("_chg")
-        if changed == 0:
-            if stats is not None:
-                stats["rounds"] = rnd + 1
-            _unpersist_rdd_ids(spark, keep_ids)
-            return labels
-    raise RuntimeError(
-        f"dedup_components did not converge in {max_iter} rounds — "
-        "with pointer jumping this needs a graph of ~2^{max_iter} "
-        "vertices; check the candidate edge set for corruption"
-    )
+    with _Rounds(pairs.sparkSession) as rounds:
+        # pinned ONCE: the edge set may be an expensive candidate
+        # pipeline (LSH generation) — without this every propagation
+        # round re-runs it (code-review r4b)
+        sym = rounds.pin(
+            edges.unionByName(
+                edges.select(
+                    F.col("doc_b").alias("doc_a"),
+                    F.col("doc_a").alias("doc_b"),
+                )
+            )
+        )
+        labels = rounds.next(
+            sym.select(F.col("doc_a").alias("doc_id"))
+            .distinct()
+            .withColumn("component", F.col("doc_id"))
+        )
+        for rnd in range(max_iter):
+            # ONE step per materialized round.  (r8 measured dead end,
+            # recorded: fusing two steps per round halves the
+            # checkpoint+collect overhead but step 2 references step
+            # 1's UNmaterialized plan four times — neighbour join, the
+            # two jump sides, and the merge base — so step 1's joins
+            # re-run 4× and probes read 2-3× slower.  The cheap win
+            # that survives is skipping the round-0 jump, where labels
+            # are all self.)
+            merged = rounds.next(_step(sym, labels, with_jump=(rnd > 0)))
+            changed = merged.agg(F.sum("_chg")).collect()[0][0] or 0
+            labels = merged.drop("_chg")
+            if changed == 0:
+                if stats is not None:
+                    stats["rounds"] = rnd + 1
+                return labels
+        raise RuntimeError(
+            f"dedup_components did not converge in {max_iter} rounds — "
+            "with pointer jumping this needs a graph of ~2^{max_iter} "
+            "vertices; check the candidate edge set for corruption"
+        )
 
 
 def kmv_distinct_estimate(
@@ -3867,7 +3912,6 @@ PAGERANK_DAMPING_PCT = 85
 def pagerank(
     edges: DataFrame,
     iters: int = 4,
-    checkpoint: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a link graph — the classic
     crawl-quality weight (Common Crawl ranks hosts exactly this way
@@ -3883,30 +3927,26 @@ def pagerank(
     keeps 12 significant digits while ``PAGERANK_DAMPING_PCT *
     (contrib + share)`` stays under 2^63 at any graph size.
 
-    Distributed shape, per iteration (``iters`` plan-unrolled, no
-    driver loop, no collect): ranks join the (src, dst, outdeg) edge
-    table on src (shuffle on src), per-edge integer contribution,
-    groupBy dst sum — MAP-SIDE COMBINABLE, which is the whole answer
-    to in-degree skew: a page with 10^9 in-links reduces to one
-    partial per task, never one reducer row per link.  Dangling mass
-    (nodes without out-edges) is one 1-row aggregate broadcast per
-    iteration — the textbook redistribution, not the leaky shortcut.
-    Multi-edges are collapsed (DISTINCT src,dst); self-loops dropped.
-    At 10^12 edges each iteration is two shuffles of the edge table
-    and a k-byte broadcast — the reference has no graph surface; this
-    is brief-driven (training-data pipeline tier).
+    Distributed shape, per iteration: ranks join the (src, dst,
+    outdeg) edge table on src (shuffle on src), per-edge integer
+    contribution, groupBy dst sum — MAP-SIDE COMBINABLE, which is the
+    whole answer to in-degree skew: a page with 10^9 in-links reduces
+    to one partial per task, never one reducer row per link.
+    Dangling mass (nodes without out-edges, flagged once in the rank
+    table) is one 1-row aggregate broadcast per iteration — the
+    textbook redistribution, not the leaky shortcut.  Multi-edges are
+    collapsed (DISTINCT src,dst); self-loops dropped.  At 10^12 edges
+    each iteration is two shuffles of the edge table and a k-byte
+    broadcast — the reference has no graph surface; this is
+    brief-driven (training-data pipeline tier).
 
-    ``checkpoint``: the default lazy plan references the previous
-    ranks 3× per iteration (contribution join, dangling aggregate,
-    next-round base), so the plan TREE grows ~3^iters — execution
-    stays cheap (AQE exchange reuse: measured flat 1.3–3.6 s, 20k
-    nodes, iters 2→4) but plan construction does not (the r7-b
-    plan-size lesson), so past ~5 iterations pass
-    ``checkpoint=True``: each round materializes via
-    ``localCheckpoint`` and frees the previous round's blocks
-    (:func:`dedup_components`' storage hygiene) — linear cost at
-    convergence depth (10–20 rounds), bit-identical ranks (integer
-    arithmetic; checkpointing changes nothing about values)."""
+    Rounds run through :class:`_Rounds`: the weighted edge table is
+    pinned once and each round's ranks are materialized.  A round
+    reads the previous ranks three times (contribution join, dangling
+    sum, next-round base), so a lazily unrolled plan grew 3^iters —
+    165 s against 4.1 s materialized at ``iters=8`` on 3,000 edges
+    (local[2]) — while materialized rounds cost linearly at
+    convergence depth (10–20 rounds)."""
     if iters < 1:
         raise ValueError("iters must be >= 1")
     e = (
@@ -3925,61 +3965,58 @@ def pagerank(
         F.count("*").alias("outdeg")
     )
     nn = nodes.agg(F.count("*").alias("n"))
-    # ranks carry n so the per-node teleport term needs no re-join
-    ranks = nodes.crossJoin(F.broadcast(nn)).select(
-        "node", "n", F.expr(f"{PAGERANK_SCALE} div n").alias("r")
-    )
-    edges_w = e.join(outdeg, e["_s"] == outdeg["node"]).select(
-        "_s", "_d", "outdeg"
-    )
     teleport = (
         f"(({PAGERANK_SCALE} * {100 - PAGERANK_DAMPING_PCT}) div 100) div n"
     )
-    spark = edges.sparkSession
-    prev_ids: set = set()
-    if checkpoint:
-        base_ids = _persistent_rdd_ids(spark)
-        # the edge table is reused by EVERY round: checkpoint once,
-        # keep its blocks for the whole run
-        edges_w = edges_w.localCheckpoint()
-        keep_ids = _persistent_rdd_ids(spark) - base_ids
-        ranks = ranks.localCheckpoint()
-        prev_ids = _persistent_rdd_ids(spark) - base_ids - keep_ids
-    for _ in range(iters):
-        contrib = (
-            ranks.join(edges_w, ranks["node"] == edges_w["_s"])
-            .select(
-                F.col("_d").alias("node"),
-                F.expr("r div outdeg").alias("c"),
+    with _Rounds(edges.sparkSession) as rounds:
+        edges_w = rounds.pin(
+            e.join(outdeg, e["_s"] == outdeg["node"]).select(
+                "_s", "_d", "outdeg"
             )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
         )
-        dang = (
-            ranks.join(outdeg, "node", "left_anti")
-            .agg(F.coalesce(F.sum("r"), F.lit(0)).alias("dang"))
-            .select(F.col("dang").cast("long").alias("dang"))
-        )
-        ranks = (
-            ranks.select("node", "n")
-            .join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dang))
+        # ranks carry n so the per-node teleport term needs no
+        # re-join, and the dangling flag so no round re-reads outdeg
+        ranks = rounds.next(
+            nodes.crossJoin(F.broadcast(nn))
+            .join(outdeg, "node", "left")
             .select(
                 "node",
                 "n",
-                F.expr(
-                    f"{teleport} + ({PAGERANK_DAMPING_PCT}"
-                    " * (coalesce(contrib, cast(0 as bigint))"
-                    " + (dang div n))) div 100"
-                ).alias("r"),
+                F.col("outdeg").isNull().alias("dangling"),
+                F.expr(f"{PAGERANK_SCALE} div n").alias("r"),
             )
         )
-        if checkpoint:
-            ranks = ranks.localCheckpoint()
-            live = _persistent_rdd_ids(spark) - base_ids - keep_ids
-            _unpersist_rdd_ids(spark, prev_ids)
-            prev_ids = live - prev_ids
-    return ranks.select("node", F.col("r").alias("rank_q"))
+        for _ in range(iters):
+            contrib = (
+                ranks.join(edges_w, ranks["node"] == edges_w["_s"])
+                .select(
+                    F.col("_d").alias("node"),
+                    F.expr("r div outdeg").alias("c"),
+                )
+                .groupBy("node")
+                .agg(F.sum("c").alias("contrib"))
+            )
+            dang = (
+                ranks.where("dangling")
+                .agg(F.coalesce(F.sum("r"), F.lit(0)).alias("dang"))
+                .select(F.col("dang").cast("long").alias("dang"))
+            )
+            ranks = rounds.next(
+                ranks.select("node", "n", "dangling")
+                .join(contrib, "node", "left")
+                .crossJoin(F.broadcast(dang))
+                .select(
+                    "node",
+                    "n",
+                    "dangling",
+                    F.expr(
+                        f"{teleport} + ({PAGERANK_DAMPING_PCT}"
+                        " * (coalesce(contrib, cast(0 as bigint))"
+                        " + (dang div n))) div 100"
+                    ).alias("r"),
+                )
+            )
+        return ranks.select("node", F.col("r").alias("rank_q"))
 
 
 def rebalance_sample(
@@ -4052,8 +4089,8 @@ def pq_books(
     a 64-dim float vector compresses to ``m`` byte-ish codes, so a
     10^12-vector index fits a cluster's RAM where raw floats never
     would.  Returns ``(sub_idx, code, cv)`` with ``cv`` the quantized
-    centroid subvector.  Training is m plan-unrolled independent
-    k-means runs — one lazy plan, no driver loop."""
+    centroid subvector.  Training is m independent k-means runs, each
+    with its own materialized rounds."""
     if dim % m:
         raise ValueError("dim must be divisible by m")
     d = dim // m
@@ -4179,7 +4216,6 @@ def pq_adc_topk(
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 4,
-    checkpoint: bool = False,
 ) -> DataFrame:
     """Distributed BPE tokenizer TRAINING (Sennrich et al. ACL'16 —
     the merge-table learner, completing :func:`bpe_pair_stats`' view
@@ -4199,18 +4235,21 @@ def bpe_train(
     DuckDB oracle replays the identical training run.  Argmax pair
     is a deterministic total order (count DESC, lhs ASC, rhs ASC)
     via TakeOrderedAndProject; if the vocabulary merges to single
-    symbols early the remaining steps emit no row (the table just
-    ends, mirrored by the oracle's empty cross join).
+    symbols early the table just ends (mirrored by the oracle's
+    empty cross join).
 
     Scale: each round = one vocabulary-sized pair explode +
-    combinable sum + a 1-row top-1 broadcast + one ``replace`` scan.
-    The lazy plan references the symbol table ~2× per round (2^K
-    tree — the :func:`pagerank` trade); real vocab-sized runs (K in
-    the tens of thousands) pass ``checkpoint=True`` for per-round
-    materialization at O(K) cost.  Words longer than
-    ``BPE_MAX_WORD_LEN`` are dropped (minified/base64 runs are noise to
-    a tokenizer); words containing U+001F/U+001E would corrupt the
-    carrier and are dropped (never legitimate text)."""
+    combinable sum + a top-1 collect of the argmax row + one
+    ``replace`` scan.  Rounds run through :class:`_Rounds`: each
+    round's symbol table is materialized, and the merge table is
+    built from the collected rows, so it reads no freed round.  A
+    lazily unrolled plan read the symbol table twice per round and
+    grew 2^K (4.8 / 14.5 / 79.9 s at K = 4 / 8 / 10 on 15 rows,
+    local[2]); materialized rounds cost O(K) at vocabulary-sized K.
+    Words longer than ``BPE_MAX_WORD_LEN`` are dropped (minified/base64
+    runs are noise to a tokenizer); words containing U+001F/U+001E
+    would corrupt the carrier and are dropped (never legitimate
+    text)."""
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
     sep = "\x1f"
@@ -4229,66 +4268,60 @@ def bpe_train(
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
-    syms = wc.select(
-        F.concat_ws(sep, F.split("word", "")).alias("sym"), "n"
-    )
     spark = docs.sparkSession
-    if checkpoint:
-        base_ids = _persistent_rdd_ids(spark)
-        syms = syms.localCheckpoint()
-        prev_ids = _persistent_rdd_ids(spark) - base_ids
-    merges = None
-    for step in range(n_merges):
-        # linear pair plan (CLAUDE.md gram rule): split ONCE into a
-        # multi-referenced alias, adjacent pairs = zip of two shifted
-        # slices — never a split inside a lambda
-        pairs = (
-            syms.where(F.col("sym").contains(sep))
-            .select(F.expr(f"split(sym, '{sep}')").alias("parts"), "n")
-            .select(
-                F.explode(
-                    F.arrays_zip(
-                        F.expr("slice(parts, 1, size(parts) - 1)"),
-                        F.expr("slice(parts, 2, size(parts) - 1)"),
+    merges = []
+    with _Rounds(spark) as rounds:
+        syms = rounds.next(
+            wc.select(F.concat_ws(sep, F.split("word", "")).alias("sym"), "n")
+        )
+        for step in range(n_merges):
+            if merges:
+                _, lhs, rhs, _ = merges[-1]
+                syms = rounds.next(
+                    syms.select(
+                        F.replace(
+                            "sym", F.lit(lhs + sep + rhs), F.lit(lhs + rhs)
+                        ).alias("sym"),
+                        "n",
                     )
-                ).alias("p"),
-                "n",
+                )
+            # linear pair plan (CLAUDE.md gram rule): split ONCE into a
+            # multi-referenced alias, adjacent pairs = zip of two
+            # shifted slices — never a split inside a lambda
+            top = (
+                syms.where(F.col("sym").contains(sep))
+                .select(F.expr(f"split(sym, '{sep}')").alias("parts"), "n")
+                .select(
+                    F.explode(
+                        F.arrays_zip(
+                            F.expr("slice(parts, 1, size(parts) - 1)"),
+                            F.expr("slice(parts, 2, size(parts) - 1)"),
+                        )
+                    ).alias("p"),
+                    "n",
+                )
+                .select(
+                    F.col("p.`0`").alias("lhs"),
+                    F.col("p.`1`").alias("rhs"),
+                    "n",
+                )
+                .groupBy("lhs", "rhs")
+                .agg(F.sum("n").alias("pair_n"))
+                .orderBy(
+                    F.col("pair_n").desc(), F.col("lhs").asc(),
+                    F.col("rhs").asc(),
+                )
+                .limit(1)
+                .collect()
             )
-            .select(
-                F.col("p.`0`").alias("lhs"),
-                F.col("p.`1`").alias("rhs"),
-                "n",
+            if not top:
+                break
+            merges.append((step, *top[0]))
+        return rounds.next(
+            spark.createDataFrame(
+                merges, "step int, lhs string, rhs string, pair_n long"
             )
-            .groupBy("lhs", "rhs")
-            .agg(F.sum("n").alias("pair_n"))
         )
-        top = pairs.orderBy(
-            F.col("pair_n").desc(), F.col("lhs").asc(),
-            F.col("rhs").asc(),
-        ).limit(1)
-        merges_step = top.select(
-            F.lit(step).cast("int").alias("step"),
-            "lhs",
-            "rhs",
-            "pair_n",
-        )
-        merges = (
-            merges_step
-            if merges is None
-            else merges.unionByName(merges_step)
-        )
-        syms = syms.crossJoin(F.broadcast(top.select("lhs", "rhs"))).select(
-            F.expr(
-                f"replace(sym, lhs || '{sep}' || rhs, lhs || rhs)"
-            ).alias("sym"),
-            "n",
-        )
-        if checkpoint and step < n_merges - 1:
-            syms = syms.localCheckpoint()
-            live = _persistent_rdd_ids(spark) - base_ids
-            _unpersist_rdd_ids(spark, prev_ids)
-            prev_ids = live - prev_ids
-    return merges
 
 
 def bpe_encode(
