@@ -76,8 +76,7 @@ _TOK_RE = re.compile(
     re.S,
 )
 _OPENER_RE = re.compile(r"<!\[CDATA\[|<!--|<\?")
-# a start tag's name run: the name may end at any of its quotes
-_NAME_RE = re.compile(r"[^\s/>]*")
+_NAME_RE = re.compile(r"[^\s/>]*")  # a start tag's name run
 # where an unquoted attribute soup can stop: a tag end or a quote
 _STOP_RE = re.compile(r"[>\"']|/(?=>)")
 
@@ -86,88 +85,75 @@ class _StartTag:
     """A start tag read like the other tokens' ``re.Match``: group 3 is
     the name, 4 the attribute soup, 5 the self-closing slash."""
 
-    __slots__ = ("_span", "_groups")
-
-    def __init__(self, start: int, end: int, name: str, soup: str, slash: str):
-        self._span = (start, end)
+    def __init__(self, span, name, soup, slash):
+        self._span = span
         self._groups = (None, None, None, name, soup, slash)
 
     def group(self, *idx):
-        if len(idx) == 1:
-            return self._groups[idx[0]]
-        return tuple(self._groups[i] for i in idx)
+        g = tuple(self._groups[i] for i in idx)
+        return g[0] if len(g) == 1 else g
 
-    def start(self) -> int:
+    def span(self):
+        return self._span
+
+    def start(self):
         return self._span[0]
 
-    def end(self) -> int:
+    def end(self):
         return self._span[1]
-
-    def span(self) -> tuple[int, int]:
-        return self._span
 
 
 class _Soups:
-    """Where an attribute soup ends, memoized over the stops of one
-    text.  A soup is ``"…"``, ``'…'`` and single other characters up
-    to the first unquoted ``>`` or ``/>``, and fails at a quote nothing
-    closes.  From an unquoted position the walk depends only on the
-    next stop, so every stop is walked once for the whole text: a soup
-    that fails at an unclosed quote is not walked again from each '<'
-    before it (``"<a " * n + "'>"`` was quadratic)."""
+    """The start tags of one text whose name holds a quote or whose
+    tag holds a '<'.  A soup is ``"…"``, ``'…'`` and other single
+    characters up to the first unquoted ``>`` or ``/>``, and fails at
+    a quote nothing closes.  From an unquoted position the walk
+    depends only on the next stop, so each stop's outcome is walked
+    once per text: a soup that fails at an unclosed quote is not
+    walked again from every '<' before it (``"<a " * n + "'>"`` was
+    quadratic)."""
 
     def __init__(self, text: str):
         self.text = text
         self.stops = [m.start() for m in _STOP_RE.finditer(text)]
-        self.ends: dict[int, tuple[int, str] | None] = {}
+        self.ends: dict = {}  # stop index -> (closing '>' or '/', slash)
 
-    def end(self, i: int) -> tuple[int, str] | None:
-        """(position of the closing ``>`` or ``/``, slash) for a soup
-        whose first stop is ``stops[i]``; None when it never closes."""
+    def _end(self, i: int):
         path = []
-        while i not in self.ends:
-            if i == len(self.stops):
-                out = None
-                break
+        while i not in self.ends and i < len(self.stops):
             path.append(i)
             at = self.stops[i]
             c = self.text[at]
-            if c == ">":
-                out = (at, "")
-                break
-            if c == "/":
-                out = (at, "/")
+            if c in ">/":
+                self.ends[i] = (at, "/" if c == "/" else "")
                 break
             close = self.text.find(c, at + 1)
             if close < 0:
-                out = None
+                self.ends[i] = None
                 break
             i = bisect_left(self.stops, close + 1)
-        else:
-            out = self.ends[i]
+        out = self.ends.get(i)
         for j in path:
             self.ends[j] = out
         return out
 
-
-def _start_tag(soups: _Soups, p: int, name_end: int) -> _StartTag | None:
-    """The start tag at ``p`` whose name run ends at ``name_end``, or
-    None.  The name is the longest prefix of the run after which the
-    soup closes; it can only give characters back at a quote, so the
-    run's end and then each quote inside it, last first, are tried."""
-    stops = soups.stops
-    lo = bisect_left(stops, p + 2)
-    hi = bisect_left(stops, name_end)
-    for i in range(hi, lo - 1, -1):
-        out = soups.end(i)
-        if out is not None:
-            at, slash = out
-            e = name_end if i == hi else stops[i]
-            text = soups.text
-            return _StartTag(
-                p, at + len(slash) + 1, text[p + 1 : e], text[e:at], slash
-            )
-    return None
+    def tag(self, p: int, name_end: int) -> _StartTag | None:
+        """The start tag at ``p`` whose name run ends at ``name_end``,
+        or None.  The name is the longest prefix of the run after
+        which the soup closes; it gives characters back only at a
+        quote, so the run's end and then each quote in it, last
+        first, are tried."""
+        lo = bisect_left(self.stops, p + 2)
+        hi = bisect_left(self.stops, name_end)
+        for i in range(hi, lo - 1, -1):
+            out = self._end(i)
+            if out is not None:
+                at, slash = out
+                e = name_end if i == hi else self.stops[i]
+                t = self.text
+                span = (p, at + len(slash) + 1)
+                return _StartTag(span, t[p + 1 : e], t[e:at], slash)
+        return None
 
 
 def _tokens(text: str):
@@ -194,7 +180,7 @@ def _tokens(text: str):
                 continue
             name_end = _NAME_RE.match(text, pos).end()
             soups = soups or _Soups(text)
-            tag = _start_tag(soups, t.start(), name_end)
+            tag = soups.tag(t.start(), name_end)
             if tag is None:
                 failed = name_end
                 continue

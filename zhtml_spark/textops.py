@@ -890,16 +890,65 @@ def kmeans_centroids(
     argmin via ``min_by`` groupBy (map-side partial agg — no skewed
     window), then posexplode → per-(centroid, dim) sum/count (k×dim
     groups, trivially parallel).  ``iters`` is a fixed round count
-    with no convergence collect.  Rounds run through :class:`_Rounds`:
-    the quantized vectors are pinned once, and each round's k-row
-    centroid table is materialized, because a round reads the previous
-    table twice (the broadcast assignment and the empty-cluster base)
-    and a lazily unrolled plan doubled per round (measured 3.3 / 5.3 /
-    38.2 s at iters 2 / 4 / 8 on the sf0.001 embeddings, local[2]).
+    run through :class:`_Rounds`: the quantized vectors are pinned
+    once and each round's k-row centroid table is materialized (a
+    round reads it twice, so a lazy plan doubled per round).
     At 10^12 vectors each round is a linear scan plus a k×dim-sized
     reduction — the textbook scalable Lloyd."""
     if n_centroids < 1 or iters < 1:
         raise ValueError("n_centroids and iters must be >= 1")
+
+    def _round(q: DataFrame, cents: DataFrame) -> DataFrame:
+        ass = (
+            q.crossJoin(F.broadcast(cents))
+            .select(
+                "vec_id",
+                "qv",
+                "centroid_id",
+                _l2_q(F.col("qv"), F.col("cv")).alias("dist"),
+            )
+            .groupBy("vec_id")
+            .agg(
+                F.min_by(
+                    "centroid_id", F.struct("dist", "centroid_id")
+                ).alias("centroid_id"),
+                F.first("qv").alias("qv"),
+            )
+        )
+        agg = (
+            ass.select(
+                "centroid_id", F.posexplode("qv").alias("dim_idx", "v")
+            )
+            .groupBy("centroid_id", "dim_idx")
+            .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
+            .select(
+                "centroid_id",
+                "dim_idx",
+                F.expr("s div n").alias("coord"),
+                "n",
+            )
+        )
+        new = agg.groupBy("centroid_id").agg(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct("dim_idx", "coord"))
+                ),
+                lambda s: s["coord"],
+            ).alias("cv_new"),
+            F.max("n").alias("n_members"),
+        )
+        # an empty cluster keeps its previous coords (deterministic
+        # both engines; n_members 0)
+        return (
+            cents.select("centroid_id", "cv")
+            .join(new, "centroid_id", "left")
+            .select(
+                "centroid_id",
+                F.coalesce("cv_new", "cv").alias("cv"),
+                F.coalesce("n_members", F.lit(0)).alias("n_members"),
+            )
+        )
+
     with _Rounds(emb.sparkSession) as rounds:
         q = rounds.pin(
             emb.select(
@@ -923,56 +972,7 @@ def kmeans_centroids(
             )
         )
         for _ in range(iters):
-            ass = (
-                q.crossJoin(F.broadcast(cents))
-                .select(
-                    "vec_id",
-                    "qv",
-                    "centroid_id",
-                    _l2_q(F.col("qv"), F.col("cv")).alias("dist"),
-                )
-                .groupBy("vec_id")
-                .agg(
-                    F.min_by(
-                        "centroid_id", F.struct("dist", "centroid_id")
-                    ).alias("centroid_id"),
-                    F.first("qv").alias("qv"),
-                )
-            )
-            agg = (
-                ass.select(
-                    "centroid_id",
-                    F.posexplode("qv").alias("dim_idx", "v"),
-                )
-                .groupBy("centroid_id", "dim_idx")
-                .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
-                .select(
-                    "centroid_id",
-                    "dim_idx",
-                    F.expr("s div n").alias("coord"),
-                    "n",
-                )
-            )
-            new = agg.groupBy("centroid_id").agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("dim_idx", "coord"))
-                    ),
-                    lambda s: s["coord"],
-                ).alias("cv_new"),
-                F.max("n").alias("n_members"),
-            )
-            # an empty cluster keeps its previous coords (deterministic
-            # both engines; n_members 0)
-            cents = rounds.next(
-                cents.select("centroid_id", "cv")
-                .join(new, "centroid_id", "left")
-                .select(
-                    "centroid_id",
-                    F.coalesce("cv_new", "cv").alias("cv"),
-                    F.coalesce("n_members", F.lit(0)).alias("n_members"),
-                )
-            )
+            cents = rounds.next(_round(q, cents))
         return cents.select(
             "centroid_id", F.col("cv").alias("centroid"), "n_members"
         )
@@ -1832,9 +1832,9 @@ def winnow_dup_candidates(
 
 
 def _persistent_rdd_ids(spark) -> set:
-    """Ids of every RDD currently holding storage blocks (the JVM-side
-    persistent-RDD registry).  Internal accessor (`_jsc`) — the public
-    API has no way to enumerate or free ``localCheckpoint`` blocks."""
+    """Ids of every RDD currently holding storage blocks (internal
+    `_jsc` accessor: the public API cannot enumerate or free
+    ``localCheckpoint`` blocks)."""
     return set(
         spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
     )
@@ -1851,24 +1851,13 @@ def _unpersist_rdd_ids(spark, ids) -> None:
 
 
 class _Rounds:
-    """The one round loop of the iterative ops (:func:`kmeans_centroids`,
-    :func:`dedup_components`, :func:`pagerank`, :func:`bpe_train`), as
-    a context manager.
-
-    ``pin(df)`` materializes an input that every round reads, once,
-    and holds it until the loop exits.  ``next(df)`` materializes one
-    round's state with ``localCheckpoint`` and frees the round before
-    it, so each round plans over a one-node scan and executor storage
-    holds the pins plus at most two states, never O(rounds).  A round
-    that reads the previous state twice (a join and its own base)
-    would, left lazy, grow its plan tree 2^rounds — measured 165 s
-    against 4 s for 8 PageRank rounds — so no round is unrolled
-    lazily.  On exit the pins are freed and so is every state but the
-    last, which the op returns; when the op raises, that one is freed
-    too.
-
-    Blocks are attributed by diffing the persistent-RDD registry
-    around each ``localCheckpoint``."""
+    """The one round loop of the iterative ops, as a context manager.
+    ``pin(df)`` materializes an input every round reads and holds it
+    until exit; ``next(df)`` materializes one round's state with
+    ``localCheckpoint`` and frees the round before it.  On exit all
+    but the last state, which the op returns, is freed, and that too
+    when the op raises.  A round reading the previous state twice is
+    never unrolled lazily: the plan tree grows reads^rounds."""
 
     def __init__(self, spark):
         self._spark = spark
@@ -1946,13 +1935,13 @@ def dedup_components(
     dict) receives ``{"rounds": k}`` for observability/tests."""
     edges = pairs.select("doc_a", "doc_b")
 
-    def _step(sym: DataFrame, lbl: DataFrame, with_jump: bool) -> DataFrame:
+    def _step(lbl: DataFrame, with_jump: bool) -> DataFrame:
         """One min-label propagation step (neighbour min + pointer
-        jump) as a lazy plan over ``sym`` and ``lbl``; emits (doc_id,
-        component, _chg).  ``with_jump=False`` skips the label-of-label join —
-        valid ONLY for the very first step, where every label is its
-        own id and the jump is the identity (r8: one join+shuffle
-        saved per call)."""
+        jump) as a lazy plan over the pinned ``sym`` and ``lbl``; emits
+        (doc_id, component, _chg).  ``with_jump=False`` skips the
+        label-of-label join — valid ONLY for the very first step, where
+        every label is its own id and the jump is the identity (r8: one
+        join+shuffle saved per call)."""
         neigh = (
             sym.join(lbl, sym["doc_b"] == lbl["doc_id"])
             .groupBy(F.col("doc_a").alias("doc_id"))
@@ -2025,7 +2014,7 @@ def dedup_components(
             # re-run 4× and probes read 2-3× slower.  The cheap win
             # that survives is skipping the round-0 jump, where labels
             # are all self.)
-            merged = rounds.next(_step(sym, labels, with_jump=(rnd > 0)))
+            merged = rounds.next(_step(labels, with_jump=(rnd > 0)))
             changed = merged.agg(F.sum("_chg")).collect()[0][0] or 0
             labels = merged.drop("_chg")
             if changed == 0:
@@ -3941,12 +3930,9 @@ def pagerank(
     brief-driven (training-data pipeline tier).
 
     Rounds run through :class:`_Rounds`: the weighted edge table is
-    pinned once and each round's ranks are materialized.  A round
-    reads the previous ranks three times (contribution join, dangling
-    sum, next-round base), so a lazily unrolled plan grew 3^iters —
-    165 s against 4.1 s materialized at ``iters=8`` on 3,000 edges
-    (local[2]) — while materialized rounds cost linearly at
-    convergence depth (10–20 rounds)."""
+    pinned once and each round's ranks are materialized (a round reads
+    them three times, so a lazy plan grew 3^iters), which costs
+    linearly at convergence depth (10–20 rounds)."""
     if iters < 1:
         raise ValueError("iters must be >= 1")
     e = (
@@ -3968,6 +3954,38 @@ def pagerank(
     teleport = (
         f"(({PAGERANK_SCALE} * {100 - PAGERANK_DAMPING_PCT}) div 100) div n"
     )
+
+    def _round(edges_w: DataFrame, ranks: DataFrame) -> DataFrame:
+        contrib = (
+            ranks.join(edges_w, ranks["node"] == edges_w["_s"])
+            .select(
+                F.col("_d").alias("node"),
+                F.expr("r div outdeg").alias("c"),
+            )
+            .groupBy("node")
+            .agg(F.sum("c").alias("contrib"))
+        )
+        dang = (
+            ranks.where("dangling")
+            .agg(F.coalesce(F.sum("r"), F.lit(0)).alias("dang"))
+            .select(F.col("dang").cast("long").alias("dang"))
+        )
+        return (
+            ranks.select("node", "n", "dangling")
+            .join(contrib, "node", "left")
+            .crossJoin(F.broadcast(dang))
+            .select(
+                "node",
+                "n",
+                "dangling",
+                F.expr(
+                    f"{teleport} + ({PAGERANK_DAMPING_PCT}"
+                    " * (coalesce(contrib, cast(0 as bigint))"
+                    " + (dang div n))) div 100"
+                ).alias("r"),
+            )
+        )
+
     with _Rounds(edges.sparkSession) as rounds:
         edges_w = rounds.pin(
             e.join(outdeg, e["_s"] == outdeg["node"]).select(
@@ -3987,35 +4005,7 @@ def pagerank(
             )
         )
         for _ in range(iters):
-            contrib = (
-                ranks.join(edges_w, ranks["node"] == edges_w["_s"])
-                .select(
-                    F.col("_d").alias("node"),
-                    F.expr("r div outdeg").alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("contrib"))
-            )
-            dang = (
-                ranks.where("dangling")
-                .agg(F.coalesce(F.sum("r"), F.lit(0)).alias("dang"))
-                .select(F.col("dang").cast("long").alias("dang"))
-            )
-            ranks = rounds.next(
-                ranks.select("node", "n", "dangling")
-                .join(contrib, "node", "left")
-                .crossJoin(F.broadcast(dang))
-                .select(
-                    "node",
-                    "n",
-                    "dangling",
-                    F.expr(
-                        f"{teleport} + ({PAGERANK_DAMPING_PCT}"
-                        " * (coalesce(contrib, cast(0 as bigint))"
-                        " + (dang div n))) div 100"
-                    ).alias("r"),
-                )
-            )
+            ranks = rounds.next(_round(edges_w, ranks))
         return ranks.select("node", F.col("r").alias("rank_q"))
 
 
@@ -4239,17 +4229,13 @@ def bpe_train(
     empty cross join).
 
     Scale: each round = one vocabulary-sized pair explode +
-    combinable sum + a top-1 collect of the argmax row + one
-    ``replace`` scan.  Rounds run through :class:`_Rounds`: each
-    round's symbol table is materialized, and the merge table is
-    built from the collected rows, so it reads no freed round.  A
-    lazily unrolled plan read the symbol table twice per round and
-    grew 2^K (4.8 / 14.5 / 79.9 s at K = 4 / 8 / 10 on 15 rows,
-    local[2]); materialized rounds cost O(K) at vocabulary-sized K.
-    Words longer than ``BPE_MAX_WORD_LEN`` are dropped (minified/base64
-    runs are noise to a tokenizer); words containing U+001F/U+001E
-    would corrupt the carrier and are dropped (never legitimate
-    text)."""
+    combinable sum + a collected top-1 row + one ``replace`` scan,
+    the symbol table materialized per round through :class:`_Rounds`
+    (O(K) at vocab-sized K; the merge table is built from the
+    collected rows, so it reads no freed round).  Words longer than
+    ``BPE_MAX_WORD_LEN`` are dropped (minified/base64 runs are noise to
+    a tokenizer); words containing U+001F/U+001E would corrupt the
+    carrier and are dropped (never legitimate text)."""
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
     sep = "\x1f"
@@ -4268,57 +4254,54 @@ def bpe_train(
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
-    spark = docs.sparkSession
+
+    def _top(syms: DataFrame) -> list:
+        # linear pair plan (CLAUDE.md gram rule): split ONCE into a
+        # multi-referenced alias, adjacent pairs = zip of two shifted
+        # slices — never a split inside a lambda
+        pairs = (
+            syms.where(F.col("sym").contains(sep))
+            .select(F.expr(f"split(sym, '{sep}')").alias("parts"), "n")
+            .select(
+                F.explode(
+                    F.arrays_zip(
+                        F.expr("slice(parts, 1, size(parts) - 1)"),
+                        F.expr("slice(parts, 2, size(parts) - 1)"),
+                    )
+                ).alias("p"),
+                "n",
+            )
+            .select(
+                F.col("p.`0`").alias("lhs"),
+                F.col("p.`1`").alias("rhs"),
+                "n",
+            )
+            .groupBy("lhs", "rhs")
+            .agg(F.sum("n").alias("pair_n"))
+        )
+        return pairs.orderBy(
+            F.col("pair_n").desc(), F.col("lhs").asc(),
+            F.col("rhs").asc(),
+        ).limit(1).collect()
+
     merges = []
-    with _Rounds(spark) as rounds:
+    with _Rounds(docs.sparkSession) as rounds:
         syms = rounds.next(
             wc.select(F.concat_ws(sep, F.split("word", "")).alias("sym"), "n")
         )
         for step in range(n_merges):
-            if merges:
-                _, lhs, rhs, _ = merges[-1]
-                syms = rounds.next(
-                    syms.select(
-                        F.replace(
-                            "sym", F.lit(lhs + sep + rhs), F.lit(lhs + rhs)
-                        ).alias("sym"),
-                        "n",
-                    )
-                )
-            # linear pair plan (CLAUDE.md gram rule): split ONCE into a
-            # multi-referenced alias, adjacent pairs = zip of two
-            # shifted slices — never a split inside a lambda
-            top = (
-                syms.where(F.col("sym").contains(sep))
-                .select(F.expr(f"split(sym, '{sep}')").alias("parts"), "n")
-                .select(
-                    F.explode(
-                        F.arrays_zip(
-                            F.expr("slice(parts, 1, size(parts) - 1)"),
-                            F.expr("slice(parts, 2, size(parts) - 1)"),
-                        )
-                    ).alias("p"),
-                    "n",
-                )
-                .select(
-                    F.col("p.`0`").alias("lhs"),
-                    F.col("p.`1`").alias("rhs"),
-                    "n",
-                )
-                .groupBy("lhs", "rhs")
-                .agg(F.sum("n").alias("pair_n"))
-                .orderBy(
-                    F.col("pair_n").desc(), F.col("lhs").asc(),
-                    F.col("rhs").asc(),
-                )
-                .limit(1)
-                .collect()
-            )
+            top = _top(syms)
             if not top:
                 break
-            merges.append((step, *top[0]))
+            lhs, rhs, pair_n = top[0]
+            merges.append((step, lhs, rhs, pair_n))
+            if step < n_merges - 1:
+                merged = F.replace(
+                    "sym", F.lit(lhs + sep + rhs), F.lit(lhs + rhs)
+                )
+                syms = rounds.next(syms.select(merged.alias("sym"), "n"))
         return rounds.next(
-            spark.createDataFrame(
+            docs.sparkSession.createDataFrame(
                 merges, "step int, lhs string, rhs string, pair_n long"
             )
         )
