@@ -64,10 +64,12 @@ _TOK_RE = re.compile(
     r"|</\s*([^\s>]*)\s*>"  # 2: end-tag name
     # 3-5: a start tag's name, attribute soup and self-closing slash,
     # when neither holds a '<' and the name no quote (every well-formed
-    # XML tag): one possessive walk that ends by the next '<'.
+    # XML tag): one possessive walk that ends by the next '<'.  A '/'
+    # joins the soup only when no '>' follows it, so a self-closed
+    # `<title/>` is never read as an open tag that eats the feed.
     r"|<([^!?/\s>][^\s/>\"'<]*+)(?![\"'<])"
     r"((?:\"[^\"<]*\"|'[^'<]*'|/(?!>)|[^>\"'/<])*+)(/?)>"
-    # any other start tag: _start_tag reads it
+    # any other start tag: _Soups.tag reads it
     r"|(?P<tag><)(?=[^!?/\s>])"
     # A failed end tag: every later '</' inside its name run ends its
     # name at the same place, unless the name would start only after
@@ -104,14 +106,14 @@ class _StartTag:
 
 
 class _Soups:
-    """The start tags of one text whose name holds a quote or whose
-    tag holds a '<'.  A soup is ``"…"``, ``'…'`` and other single
-    characters up to the first unquoted ``>`` or ``/>``, and fails at
-    a quote nothing closes.  From an unquoted position the walk
-    depends only on the next stop, so each stop's outcome is walked
-    once per text: a soup that fails at an unclosed quote is not
-    walked again from every '<' before it (``"<a " * n + "'>"`` was
-    quadratic)."""
+    """Reads the start tags of one text that the one-regex path does
+    not: a quote in the name, a '<' in the tag, or no closing '>'.  A
+    soup is ``"…"``, ``'…'`` and other single characters up to the
+    first unquoted ``>`` or ``/>``, and fails at a quote nothing
+    closes.  From an unquoted position the walk depends only on the
+    next stop, so each stop's outcome is walked once per text: a soup
+    that fails at an unclosed quote is not walked again from every '<'
+    before it (``"<a " * n + "'>"`` was quadratic)."""
 
     def __init__(self, text: str):
         self.text = text

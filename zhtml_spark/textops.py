@@ -4300,6 +4300,8 @@ def bpe_train(
                     "sym", F.lit(lhs + sep + rhs), F.lit(lhs + rhs)
                 )
                 syms = rounds.next(syms.select(merged.alias("sym"), "n"))
+        # the merge table is the last state: the last symbol table is
+        # freed with the rounds
         return rounds.next(
             docs.sparkSession.createDataFrame(
                 merges, "step int, lhs string, rhs string, pair_n long"
