@@ -1857,7 +1857,10 @@ class _Rounds:
     ``localCheckpoint`` and frees the round before it.  On exit all
     but the last state, which the op returns, is freed, and that too
     when the op raises.  A round reading the previous state twice is
-    never unrolled lazily: the plan tree grows reads^rounds."""
+    never unrolled lazily: the plan tree grows reads^rounds.  Blocks
+    are found by diffing the persistent-RDD registry around each
+    checkpoint, so no other thread of the session may persist RDDs
+    while a loop runs."""
 
     def __init__(self, spark):
         self._spark = spark
