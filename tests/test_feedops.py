@@ -339,10 +339,10 @@ _BACKTRACKING_TOK = re.compile(
     ],
 )
 def test_tag_scan_matches_backtracking_form(text):
-    def sig(ms):
-        return [(m.span(), m.group(1, 2, 3, 4, 5)) for m in ms]
-
-    assert sig(_tokens(text)) == sig(_BACKTRACKING_TOK.finditer(text))
+    assert list(_tokens(text)) == [
+        (*m.span(), *m.group(1, 2, 3, 4, 5))
+        for m in _BACKTRACKING_TOK.finditer(text)
+    ]
 
 
 def test_self_closed_elements_do_not_open_captures():

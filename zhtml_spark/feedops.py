@@ -62,15 +62,7 @@ _TOK_RE = re.compile(
     r"|<\?.*?(?:\?>|\Z)"  # PI / XML prolog
     r"|<!DOCTYPE[^>]*>"  # doctype
     r"|</\s*([^\s>]*)\s*>"  # 2: end-tag name
-    # 3-5: a start tag's name, attribute soup and self-closing slash,
-    # when neither holds a '<' and the name no quote (every well-formed
-    # XML tag): one possessive walk that ends by the next '<'.  A '/'
-    # joins the soup only when no '>' follows it, so a self-closed
-    # `<title/>` is never read as an open tag that eats the feed.
-    r"|<([^!?/\s>][^\s/>\"'<]*+)(?![\"'<])"
-    r"((?:\"[^\"<]*\"|'[^'<]*'|/(?!>)|[^>\"'/<])*+)(/?)>"
-    # any other start tag: _Soups.tag reads it
-    r"|(?P<tag><)(?=[^!?/\s>])"
+    r"|(?P<tag><)(?=[^!?/\s>])"  # a start tag
     # A failed end tag: every later '</' inside its name run ends its
     # name at the same place, unless the name would start only after
     # that place, so the run is skipped whole.
@@ -79,89 +71,42 @@ _TOK_RE = re.compile(
 )
 _OPENER_RE = re.compile(r"<!\[CDATA\[|<!--|<\?")
 _NAME_RE = re.compile(r"[^\s/>]*")  # a start tag's name run
-# where an unquoted attribute soup can stop: a tag end or a quote
+# where an attribute soup can stop outside quotes: a tag end or a quote
 _STOP_RE = re.compile(r"[>\"']|/(?=>)")
 
 
-class _StartTag:
-    """A start tag read like the other tokens' ``re.Match``: group 3 is
-    the name, 4 the attribute soup, 5 the self-closing slash."""
-
-    def __init__(self, span, name, soup, slash):
-        self._span = span
-        self._groups = (None, None, None, name, soup, slash)
-
-    def group(self, *idx):
-        g = tuple(self._groups[i] for i in idx)
-        return g[0] if len(g) == 1 else g
-
-    def span(self):
-        return self._span
-
-    def start(self):
-        return self._span[0]
-
-    def end(self):
-        return self._span[1]
-
-
-class _Soups:
-    """Reads the start tags of one text that the one-regex path does
-    not: a quote in the name, a '<' in the tag, or no closing '>'.  A
-    soup is ``"…"``, ``'…'`` and other single characters up to the
-    first unquoted ``>`` or ``/>``, and fails at a quote nothing
-    closes.  From an unquoted position the walk depends only on the
-    next stop, so each stop's outcome is walked once per text: a soup
-    that fails at an unclosed quote is not walked again from every '<'
+def _soup_ends(text: str) -> tuple[list, list]:
+    """The soup stops of ``text`` and, for each, where a soup that
+    reaches it unquoted ends: ``(at, slash)`` with ``at`` its closing
+    '>' or the '/' of its '/>', or None at a quote nothing closes.  A soup is ``"…"``, ``'…'`` and other
+    single characters up to the first unquoted ``>`` or ``/>`` (a '/'
+    joins it when no '>' follows, for unquoted values like url=a/b,
+    so a self-closed `<title/>` never reads as an open tag that eats
+    the feed).  From an unquoted position the soup depends only on the
+    next stop, so one pass reads every soup of the text: a soup that
+    fails at an unclosed quote is not walked again from every '<'
     before it (``"<a " * n + "'>"`` was quadratic)."""
-
-    def __init__(self, text: str):
-        self.text = text
-        self.stops = [m.start() for m in _STOP_RE.finditer(text)]
-        self.ends: dict = {}  # stop index -> (closing '>' or '/', slash)
-
-    def _end(self, i: int):
-        path = []
-        while i not in self.ends and i < len(self.stops):
-            path.append(i)
-            at = self.stops[i]
-            c = self.text[at]
-            if c in ">/":
-                self.ends[i] = (at, "/" if c == "/" else "")
-                break
-            close = self.text.find(c, at + 1)
-            if close < 0:
-                self.ends[i] = None
-                break
-            i = bisect_left(self.stops, close + 1)
-        out = self.ends.get(i)
-        for j in path:
-            self.ends[j] = out
-        return out
-
-    def tag(self, p: int, name_end: int) -> _StartTag | None:
-        """The start tag at ``p`` whose name run ends at ``name_end``,
-        or None.  The name is the longest prefix of the run after
-        which the soup closes; it gives characters back only at a
-        quote, so the run's end and then each quote in it, last
-        first, are tried."""
-        lo = bisect_left(self.stops, p + 2)
-        hi = bisect_left(self.stops, name_end)
-        for i in range(hi, lo - 1, -1):
-            out = self._end(i)
-            if out is not None:
-                at, slash = out
-                e = name_end if i == hi else self.stops[i]
-                t = self.text
-                span = (p, at + len(slash) + 1)
-                return _StartTag(span, t[p + 1 : e], t[e:at], slash)
-        return None
+    stops = [m.start() for m in _STOP_RE.finditer(text)]
+    ends: list = [None] * (len(stops) + 1)
+    after: dict = {}  # a quote -> the stop after its next occurrence
+    for i in range(len(stops) - 1, -1, -1):
+        c = text[stops[i]]
+        if c in ">/":
+            ends[i] = (stops[i], "/" if c == "/" else "")
+        else:
+            ends[i] = ends[after[c]] if c in after else None
+            after[c] = i + 1
+    return stops, ends
 
 
 def _tokens(text: str):
-    """The ``_TOK_RE`` matches and start tags in ``text``, skipped runs
-    left out.
+    """``(start, end, cdata, end_name, name, soup, slash)`` for each
+    ``_TOK_RE`` match and start tag in ``text``, skipped runs left out
+    (the fields a token does not have are None).
 
+    A start tag's name is the longest prefix of its name run after
+    which the soup closes.  It gives characters back only at a quote,
+    so the run's end and then each quote in it, last first, are tried.
     A start tag that fails fails from every later '<' of its name run
     too (those try a subset of its soup starts), so those are not
     tried again (``"<a" * n`` was cubic).  Every tag ends at a '>', so
@@ -173,30 +118,37 @@ def _tokens(text: str):
     construct that the cut ends early is matched again over the whole
     text, so the matches are the uncut scan's."""
     tail = end = text.rfind(">") + 1
-    soups = None
+    stops = None
     pos = failed = 0
     while (t := _TOK_RE.search(text, pos, tail)) is not None:
-        pos = t.end()
+        p, pos = t.span()
         if t.group("tag") is not None:
-            if t.start() < failed:
+            if p < failed:
                 continue
             name_end = _NAME_RE.match(text, pos).end()
-            soups = soups or _Soups(text)
-            tag = soups.tag(t.start(), name_end)
-            if tag is None:
+            if stops is None:
+                stops, ends = _soup_ends(text)
+            hi = bisect_left(stops, name_end)
+            for i in range(hi, bisect_left(stops, p + 2) - 1, -1):
+                if ends[i] is not None:
+                    at, slash = ends[i]
+                    e = name_end if i == hi else stops[i]
+                    pos = at + len(slash) + 1
+                    name, soup = text[p + 1 : e], text[e:at]
+                    yield p, pos, None, None, name, soup, slash
+                    break
+            else:
                 failed = name_end
-                continue
-            pos = tag.end()
-            yield tag
             continue
-        if t.end() == tail:
-            t = _TOK_RE.match(text, t.start())
+        if pos == tail:
+            t = _TOK_RE.match(text, p)
             pos = end = t.end()
         if t.group("skip") is None:
-            yield t
+            yield *t.span(), *t.group(1, 2), None, None, None
     opener = _OPENER_RE.search(text, end)
     if opener:
-        yield _TOK_RE.match(text, opener.start())
+        t = _TOK_RE.match(text, opener.start())
+        yield *t.span(), *t.group(1, 2), None, None, None
 
 
 _ATTR_RE = re.compile(
@@ -250,11 +202,9 @@ def _content_str(raw: str) -> str:
     reference-decoded and CDATA payloads taken literally, yielding the
     escaped-HTML / plain-text cases; the caller parses the result as
     HTML either way (plain text comes back as one text span)."""
-    if any(
-        t.group(2) is not None or t.group(3) is not None
-        for t in _tokens(raw)
-    ):
-        return raw
+    for _, _, _, end_name, name, _, _ in _tokens(raw):
+        if end_name is not None or name is not None:
+            return raw
     return _text_content(raw)
 
 
@@ -281,11 +231,11 @@ def _text_content(raw: str) -> str:
     runs + literal CDATA payloads, markup tokens dropped."""
     out: list[str] = []
     pos = 0
-    for t in _tokens(raw):
-        out.append(_decode_refs(raw[pos : t.start()]))
-        if t.group(1) is not None:
-            out.append(t.group(1))
-        pos = t.end()
+    for start, end, cdata, *_ in _tokens(raw):
+        out.append(_decode_refs(raw[pos:start]))
+        if cdata is not None:
+            out.append(cdata)
+        pos = end
     out.append(_decode_refs(raw[pos:]))
     return "".join(out)
 
@@ -360,12 +310,10 @@ def extract_feed_spans(
         cap_sink = sink
         cap_key = key
 
-    for t in _tokens(xml):
-        start_name = t.group(3)
-        end_name = t.group(2)
+    for start, end, _, end_name, start_name, soup, slash in _tokens(xml):
         if cap_name is not None:
             # inside a captured element: only track its nesting
-            if start_name is not None and t.group(5) != "/":
+            if start_name is not None and slash != "/":
                 if start_name.lower() == cap_name:
                     cap_depth += 1
             elif end_name is not None and end_name.lower() == cap_name:
@@ -373,13 +321,13 @@ def extract_feed_spans(
                 if cap_depth == 0:
                     assert cap_sink is not None
                     if cap_sink.get(cap_key) is None:
-                        cap_sink[cap_key] = xml[cap_start : t.start()]
+                        cap_sink[cap_key] = xml[cap_start:start]
                     cap_name = None
                     cap_sink = None
             continue
         if start_name is not None:
             name = start_name.lower()
-            self_close = t.group(5) == "/"
+            self_close = slash == "/"
             if name == item_tag and len(stack) >= 1:
                 close_item()
                 in_item = True
@@ -389,21 +337,21 @@ def extract_feed_spans(
                 continue
             if in_item and cur is not None:
                 if name in _MEDIA_TAGS:
-                    a = _attrs(t.group(4))
+                    a = _attrs(soup)
                     url = a.get("url") or a.get("href")
                     if url:
                         cur["media"].append(url)
                 elif name == "link" and atom:
-                    a = _attrs(t.group(4))
+                    a = _attrs(soup)
                     if a.get("rel") == "enclosure" and a.get("href"):
                         cur["media"].append(a["href"])
                 if not self_close and name == "title":
                     if cur["title"] is None:
-                        cur["ttype"] = _attrs(t.group(4)).get("type", "")
-                    capture(cur, "title", t.end())
+                        cur["ttype"] = _attrs(soup).get("type", "")
+                    capture(cur, "title", end)
                     continue
                 if not self_close and name in body_pref:
-                    capture(cur["bodies"], name, t.end())
+                    capture(cur["bodies"], name, end)
                     continue
             elif (
                 not in_item
@@ -415,8 +363,8 @@ def extract_feed_spans(
                     or (not atom and len(stack) == 2)
                 )
             ):
-                chan["ttype"] = _attrs(t.group(4)).get("type", "")
-                capture(chan, "title", t.end())
+                chan["ttype"] = _attrs(soup).get("type", "")
+                capture(chan, "title", end)
                 continue
             if not self_close:
                 stack.append(name)

@@ -973,8 +973,10 @@ def kmeans_centroids(
         )
         for _ in range(iters):
             cents = rounds.next(_round(q, cents))
-        return cents.select(
-            "centroid_id", F.col("cv").alias("centroid"), "n_members"
+        return rounds.result(
+            cents.select(
+                "centroid_id", F.col("cv").alias("centroid"), "n_members"
+            )
         )
 
 
@@ -1854,13 +1856,17 @@ class _Rounds:
     """The one round loop of the iterative ops, as a context manager.
     ``pin(df)`` materializes an input every round reads and holds it
     until exit; ``next(df)`` materializes one round's state with
-    ``localCheckpoint`` and frees the round before it.  On exit all
-    but the last state, which the op returns, is freed, and that too
-    when the op raises.  A round reading the previous state twice is
-    never unrolled lazily: the plan tree grows reads^rounds.  Blocks
-    are found by diffing the persistent-RDD registry around each
-    checkpoint, so no other thread of the session may persist RDDs
-    while a loop runs."""
+    ``localCheckpoint`` and frees the round before it; ``result(df)``
+    marks ``df``, which reads the last state, as what the op returns.
+    On exit everything else is freed, also when the op raises.  A
+    round reading the previous state twice is never unrolled lazily:
+    the plan tree grows reads^rounds.  Blocks are found by diffing the
+    persistent-RDD registry around each checkpoint, so no other thread
+    of the session may persist RDDs while a loop runs.  A returned
+    state lives in executor storage with no lineage: once an executor
+    holding its blocks is lost (or released by dynamic allocation), a
+    later read fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``
+    instead of recomputing."""
 
     def __init__(self, spark):
         self._spark = spark
@@ -1886,10 +1892,12 @@ class _Rounds:
         self._state = ids
         return df
 
+    def result(self, df: DataFrame) -> DataFrame:
+        self._state = set()
+        return df
+
     def __exit__(self, exc_type, exc, tb) -> None:
-        _unpersist_rdd_ids(self._spark, self._pins)
-        if exc_type is not None:
-            _unpersist_rdd_ids(self._spark, self._state)
+        _unpersist_rdd_ids(self._spark, self._pins | self._state)
 
 
 def dedup_components(
@@ -2023,7 +2031,7 @@ def dedup_components(
             if changed == 0:
                 if stats is not None:
                     stats["rounds"] = rnd + 1
-                return labels
+                return rounds.result(labels)
         raise RuntimeError(
             f"dedup_components did not converge in {max_iter} rounds — "
             "with pointer jumping this needs a graph of ~2^{max_iter} "
@@ -4009,7 +4017,7 @@ def pagerank(
         )
         for _ in range(iters):
             ranks = rounds.next(_round(edges_w, ranks))
-        return ranks.select("node", F.col("r").alias("rank_q"))
+        return rounds.result(ranks.select("node", F.col("r").alias("rank_q")))
 
 
 def rebalance_sample(
@@ -4303,13 +4311,9 @@ def bpe_train(
                     "sym", F.lit(lhs + sep + rhs), F.lit(lhs + rhs)
                 )
                 syms = rounds.next(syms.select(merged.alias("sym"), "n"))
-        # the merge table is the last state: the last symbol table is
-        # freed with the rounds
-        return rounds.next(
-            docs.sparkSession.createDataFrame(
-                merges, "step int, lhs string, rhs string, pair_n long"
-            )
-        )
+    return docs.sparkSession.createDataFrame(
+        merges, "step int, lhs string, rhs string, pair_n long"
+    )
 
 
 def bpe_encode(
