@@ -931,14 +931,15 @@ def _q_minhash_banded_candidates(spark, sf_dir):
 
 
 def _q_dedup_components(spark, sf_dir):
-    """Exact duplicate clusters (r4): connected components by
-    iterative min-label propagation over the banded-LSH candidate
-    edges (same augmented corpus as `minhash_banded_candidates`, so
-    every doc is connected at least to its +10000 shifted copy).  The
-    oracle computes the same components INDEPENDENTLY — a recursive
-    transitive-closure CTE over the identical candidate SQL — so the
-    iterative Spark loop is checked against a non-iterative
-    formulation, not against itself."""
+    """Exact duplicate clusters (r4): connected components over the
+    banded-LSH candidate edges (same augmented corpus as
+    `minhash_banded_candidates`, so every doc is connected at least to
+    its +10000 shifted copy).  The oracle computes the same
+    components INDEPENDENTLY — a recursive transitive-closure CTE over
+    the identical candidate SQL.  The candidate set is far below
+    ``textops._DRIVER_EDGES``, so this checks the driver union-find
+    path; the distributed round loop is checked against the driver
+    path by ``test_dedup_components_driver_path_matches_round_loop``."""
     from zhtml_spark.textops import (
         dedup_components,
         minhash_banded_candidates,

@@ -1061,7 +1061,7 @@ def test_dedup_components_chains_and_convergence(spark):
     returning a half-propagated labelling."""
     import pytest
 
-    from zhtml_spark.textops import dedup_components
+    from zhtml_spark.textops import _components_rounds, dedup_components
 
     pairs = spark.createDataFrame(
         # chain 1-2-3-4-5-6 plus separate triangle 10-11-12
@@ -1077,7 +1077,7 @@ def test_dedup_components_chains_and_convergence(spark):
     # even with pointer jumping the 6-chain needs ~4 rounds; 2 must
     # fail loudly instead of returning a half-propagated labelling
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_components(pairs, max_iter=2)
+        _components_rounds(pairs, max_iter=2)
 
 
 def test_dedup_components_raise_frees_every_round(spark):
@@ -1086,14 +1086,14 @@ def test_dedup_components_raise_frees_every_round(spark):
     last round are all freed on the way out."""
     import pytest
 
-    from zhtml_spark.textops import _persistent_rdd_ids, dedup_components
+    from zhtml_spark.textops import _components_rounds, _persistent_rdd_ids
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)], "doc_a long, doc_b long"
     )
     before = _persistent_rdd_ids(spark)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_components(pairs, max_iter=2)
+        _components_rounds(pairs, max_iter=2)
     assert _persistent_rdd_ids(spark) - before == set()
 
 
@@ -1105,8 +1105,8 @@ def test_dedup_components_long_chain_log_rounds(spark):
     storage does not grow O(rounds): only the final labelling's
     checkpoint blocks survive the call (ADVICE r4)."""
     from zhtml_spark.textops import (
+        _components_rounds,
         _persistent_rdd_ids,
-        dedup_components,
     )
 
     n = 10_000
@@ -1115,7 +1115,7 @@ def test_dedup_components_long_chain_log_rounds(spark):
     )
     ids_before = _persistent_rdd_ids(spark)
     stats: dict = {}
-    labels = dedup_components(pairs, stats=stats)
+    labels = _components_rounds(pairs, stats=stats)
     agg = labels.agg(
         F.count("*").alias("n"),
         F.countDistinct("component").alias("ncomp"),
@@ -1129,6 +1129,91 @@ def test_dedup_components_long_chain_log_rounds(spark):
     leaked = _persistent_rdd_ids(spark) - ids_before
     assert len(leaked) <= 2, leaked
 
+
+
+def _random_edges(n_vertices: int, seed: int) -> list[tuple[int, int]]:
+    """About as many random edges as vertices over ids 0..n-1: a mix
+    of singleton-free components of many sizes."""
+    import random
+
+    rng = random.Random(seed)
+    return [
+        (rng.randrange(n_vertices), rng.randrange(n_vertices))
+        for _ in range(n_vertices)
+    ]
+
+
+def test_dedup_components_driver_path_matches_round_loop(spark):
+    """The driver union-find and the distributed round loop are each
+    other's reference: on every graph both give the same sorted rows
+    and the same id type — chains, an empty edge set, self-loops, a
+    null endpoint, non-ASCII string ids (Spark's UTF-8 byte order and
+    Python's code-point order must agree on the smallest id), random
+    graphs and the 10k-vertex path."""
+    from zhtml_spark.textops import _components_rounds, dedup_components
+
+    long_ = "doc_a long, doc_b long"
+    graphs = {
+        "chain_and_triangle": (
+            [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6),
+             (10, 11), (11, 12), (10, 12)],
+            long_,
+        ),
+        "empty": ([], long_),
+        "self_loops": ([(7, 7), (3, 3), (3, 8), (9, 9)], long_),
+        "null_endpoint": ([(1, 2), (3, None), (None, 4), (2, 5)], long_),
+        "non_ascii": (
+            [("é", "z"), ("z", "a"), ("日本", "éa"), ("\U0001f600", "ÿ"),
+             ("ÿ", "日"), ("Z", "\u00e9")],
+            "doc_a string, doc_b string",
+        ),
+        "int_ids": ([(5, 4), (4, 3), (30, 20)], "doc_a int, doc_b int"),
+        **{
+            f"random_{n}": (_random_edges(n, seed=n), long_)
+            for n in (20, 200, 2000)
+        },
+    }
+    for name, (rows, schema) in graphs.items():
+        pairs = spark.createDataFrame(rows, schema)
+        driver = dedup_components(pairs)
+        loop = _components_rounds(pairs)
+        assert driver.schema == loop.schema, name
+        assert sorted(driver.collect(), key=repr) == sorted(
+            loop.collect(), key=repr
+        ), name
+    n = 10_000
+    path = spark.range(1, n).select(
+        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
+    )
+    assert sorted(dedup_components(path).collect()) == sorted(
+        _components_rounds(path).collect()
+    )
+
+
+def test_dedup_components_below_budget_is_a_local_relation(spark):
+    """Below the edge budget the call is one driver pass: the executed
+    plan is a single JVM LocalTableScan, no storage block is left
+    behind, ``stats["rounds"]`` is 0, and the result still reads after
+    the input edges are unpersisted."""
+    from zhtml_spark.textops import _persistent_rdd_ids, dedup_components
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
+    ).cache()
+    pairs.count()
+    before = _persistent_rdd_ids(spark)
+    stats: dict = {}
+    labels = dedup_components(pairs, stats=stats)
+    assert _persistent_rdd_ids(spark) == before
+    assert stats == {"rounds": 0}
+    plan = labels._jdf.queryExecution().executedPlan().toString()
+    assert_jvm_only(plan)
+    assert plan.strip().startswith("LocalTableScan"), plan
+    assert "\n" not in plan.strip(), plan
+    pairs.unpersist(blocking=True)
+    assert sorted(labels.collect()) == [
+        (1, 1), (2, 1), (3, 1), (10, 10), (11, 10)
+    ]
 
 def test_substring_dedup_apply(spark):
     """The removal half of exact-substring dedup (r4): doc_a keeps

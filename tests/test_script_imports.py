@@ -259,7 +259,7 @@ NO_CALLER_PARAM_OK = {
         "per-run identity in the metrics, lineage and checkpoint tables "
         "and the commit record list_snapshots reads"
     ),
-    "dedup_components.max_iter": (
+    "_components_rounds.max_iter": (
         "the non-convergence check, driven with a small bound"
     ),
     "predict.hash_fn": (

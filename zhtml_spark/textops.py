@@ -1900,9 +1900,14 @@ class _Rounds:
         _unpersist_rdd_ids(self._spark, self._pins | self._state)
 
 
+# the largest edge set dedup_components labels on the driver: 1<<20
+# edges of two int64 ids is 16 MB of Arrow, well inside a 1/8-RAM
+# driver heap; above it the distributed round loop runs
+_DRIVER_EDGES = 1 << 20
+
+
 def dedup_components(
     pairs: DataFrame,
-    max_iter: int = 50,
     stats: dict | None = None,
 ) -> DataFrame:
     """EXACT duplicate clusters from a candidate-pair edge set:
@@ -1911,6 +1916,70 @@ def dedup_components(
     one-pass smallest-NEIGHBOR dominance approximates (dominance can
     keep two docs of one chain A−B−C when B is the smallest;
     components never do).
+
+    Two paths, chosen by the edge count alone.  One
+    ``limit(_DRIVER_EDGES + 1).toArrow()`` reads the edges; at or
+    below ``_DRIVER_EDGES`` (1<<20, 16 MB of int64 Arrow) union-find
+    labels them on the driver, each set rooted at its smallest id,
+    and the result is a local relation (one ``LocalTableScan``, no
+    executor blocks, no Spark round) that reads after the input is
+    unpersisted and survives the loss of any executor.  Above the
+    budget :func:`_components_rounds`, the distributed min-label loop,
+    runs on the whole edge set; it is the only path for a graph the
+    driver cannot hold, and the two paths are each other's reference
+    in the tests.
+
+    Returns (doc_id, component) for every vertex that appears in
+    ``pairs``, typed like the ids; singleton docs never enter the edge
+    set and are their own component by definition (callers union them
+    back if needed).  An edge with a null endpoint adds its vertices
+    (null among them) but joins nothing.  ``stats`` (optional dict)
+    receives ``{"rounds": k}``: the loop's round count, 0 on the
+    driver path, where no Spark round runs."""
+    edges = pairs.select("doc_a", "doc_b")
+    head = edges.limit(_DRIVER_EDGES + 1).toArrow()
+    if head.num_rows > _DRIVER_EDGES:
+        return _components_rounds(pairs, stats=stats)
+    import pyarrow as pa
+
+    # the loop's id type: its edge union widens doc_a and doc_b to one
+    id_type = edges.unionByName(
+        edges.select(
+            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
+        )
+    ).schema["doc_a"].dataType.simpleString()
+    parent: dict = {}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = v = parent[parent[v]]
+        return v
+
+    for a, b in zip(head["doc_a"].to_pylist(), head["doc_b"].to_pylist()):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    if stats is not None:
+        stats["rounds"] = 0
+    ids = list(parent)
+    return pairs.sparkSession.createDataFrame(
+        pa.table({"doc_id": ids, "component": [find(v) for v in ids]}),
+        f"doc_id {id_type}, component {id_type}",
+    )
+
+
+def _components_rounds(
+    pairs: DataFrame,
+    max_iter: int = 50,
+    stats: dict | None = None,
+) -> DataFrame:
+    """The distributed path of :func:`dedup_components`, for edge sets
+    above ``_DRIVER_EDGES``: the same labelling, ``component = min
+    doc_id in the cluster``, computed in Spark rounds.
 
     Algorithm: min-label propagation WITH POINTER JUMPING
     (Shiloach–Vishkin-style shortcutting; same O(log n)-round family
@@ -1933,15 +2002,12 @@ def dedup_components(
     collect for convergence.  Rounds run through :class:`_Rounds`:
     each labelling is materialized and the one before it freed, and
     nothing but the returned labelling is left persisted, also when
-    the call raises.
+    the call raises.  The returned labelling has no lineage (see
+    :class:`_Rounds`).
 
     Raises after ``max_iter`` rounds rather than returning a
     half-propagated labelling (with doubling, 50 rounds covers any
     graph below ~2^49 vertices — unreachable in practice).
-
-    Returns (doc_id, component) for every vertex that appears in
-    ``pairs``; singleton docs never enter the edge set and are their
-    own component by definition (callers union them back if needed).
     Deterministic, Python-free plan per round.  ``stats`` (optional
     dict) receives ``{"rounds": k}`` for observability/tests."""
     edges = pairs.select("doc_a", "doc_b")
