@@ -1132,8 +1132,8 @@ def test_dedup_components_long_chain_log_rounds(spark):
 
 
 def _random_edges(n_vertices: int, seed: int) -> list[tuple[int, int]]:
-    """About as many random edges as vertices over ids 0..n-1: a mix
-    of singleton-free components of many sizes."""
+    """As many random edges as vertices over ids 0..n-1, which leaves
+    components of many sizes."""
     import random
 
     rng = random.Random(seed)

@@ -1930,24 +1930,18 @@ def dedup_components(
     in the tests.
 
     Returns (doc_id, component) for every vertex that appears in
-    ``pairs``, typed like the ids; singleton docs never enter the edge
-    set and are their own component by definition (callers union them
-    back if needed).  An edge with a null endpoint adds its vertices
-    (null among them) but joins nothing.  ``stats`` (optional dict)
+    ``pairs``, typed like ``doc_a`` (``doc_b`` shares its type);
+    singleton docs never enter the edge set and are their own
+    component by definition (callers union them back if needed).  An
+    edge with a null endpoint adds its vertices (null among them) but
+    joins nothing.  ``stats`` (optional dict)
     receives ``{"rounds": k}``: the loop's round count, 0 on the
     driver path, where no Spark round runs."""
-    edges = pairs.select("doc_a", "doc_b")
-    head = edges.limit(_DRIVER_EDGES + 1).toArrow()
+    head = pairs.select("doc_a", "doc_b").limit(_DRIVER_EDGES + 1).toArrow()
     if head.num_rows > _DRIVER_EDGES:
         return _components_rounds(pairs, stats=stats)
     import pyarrow as pa
 
-    # the loop's id type: its edge union widens doc_a and doc_b to one
-    id_type = edges.unionByName(
-        edges.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    ).schema["doc_a"].dataType.simpleString()
     parent: dict = {}
 
     def find(v):
@@ -1966,9 +1960,12 @@ def dedup_components(
     if stats is not None:
         stats["rounds"] = 0
     ids = list(parent)
+    id_type = head.schema.field("doc_a").type
     return pairs.sparkSession.createDataFrame(
-        pa.table({"doc_id": ids, "component": [find(v) for v in ids]}),
-        f"doc_id {id_type}, component {id_type}",
+        pa.table({
+            "doc_id": pa.array(ids, id_type),
+            "component": pa.array([find(v) for v in ids], id_type),
+        })
     )
 
 
