@@ -1130,7 +1130,6 @@ def test_dedup_components_long_chain_log_rounds(spark):
     assert len(leaked) <= 2, leaked
 
 
-
 def _random_edges(n_vertices: int, seed: int) -> list[tuple[int, int]]:
     """As many random edges as vertices over ids 0..n-1, which leaves
     components of many sizes."""
@@ -1214,6 +1213,7 @@ def test_dedup_components_below_budget_is_a_local_relation(spark):
     assert sorted(labels.collect()) == [
         (1, 1), (2, 1), (3, 1), (10, 10), (11, 10)
     ]
+
 
 def test_substring_dedup_apply(spark):
     """The removal half of exact-substring dedup (r4): doc_a keeps

@@ -1934,9 +1934,9 @@ def dedup_components(
     singleton docs never enter the edge set and are their own
     component by definition (callers union them back if needed).  An
     edge with a null endpoint adds its vertices (null among them) but
-    joins nothing.  ``stats`` (optional dict)
-    receives ``{"rounds": k}``: the loop's round count, 0 on the
-    driver path, where no Spark round runs."""
+    joins nothing.  ``stats`` (optional dict) receives ``{"rounds":
+    k}``: the loop's round count, 0 on the driver path, where no Spark
+    round runs."""
     head = pairs.select("doc_a", "doc_b").limit(_DRIVER_EDGES + 1).toArrow()
     if head.num_rows > _DRIVER_EDGES:
         return _components_rounds(pairs, stats=stats)
