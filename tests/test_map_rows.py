@@ -1,15 +1,19 @@
-"""Every Python decoder stage is one ``udfs.map_rows`` stage.
+"""Every Python stage is one ``udfs.map_rows`` stage.
 
 Plan shape: each stage's executed plan holds exactly one MapInArrow
 and no MapInPandas or EvalPython node.  Rows: over a small mixed batch
 (null payloads included) each stage's output equals a direct call of
 its per-document function, and the PDF/feed decoders turn a raising
-document into one ``error`` span."""
+document into one ``error`` span.  A ``list<struct>`` input column
+reaches the row function as a list of tuples, also from a sliced
+batch."""
 
 from __future__ import annotations
 
 import gzip
+import random
 import struct
+from collections import Counter
 
 import pytest
 from pyspark.sql.types import (
@@ -22,6 +26,7 @@ from pyspark.sql.types import (
 )
 
 from zhtml_spark import feedops, pdfops
+from zhtml_spark.corpus import make_document
 from zhtml_spark.extract import ExtractConfig, extract_html, extract_spans
 from zhtml_spark.multimodal import (
     _fake_features,
@@ -31,10 +36,22 @@ from zhtml_spark.multimodal import (
     sniff_container_meta,
     sniff_image_meta,
 )
-from zhtml_spark.sources import _decoded_archives, _stream_gunzip_chunks
+from zhtml_spark.pipeline import extract_documents
+from zhtml_spark.sources import (
+    _decoded_archives,
+    _decoded_body,
+    _stream_gunzip_chunks,
+    decode_http_payloads,
+)
 from zhtml_spark.tokenizer import tokenize
 from zhtml_spark.tree import parse_fragment
-from zhtml_spark.udfs import extract_fragments, map_rows, replay_tokenizer
+from zhtml_spark.udfs import (
+    _row_batches,
+    extract_document_safe,
+    extract_fragments,
+    map_rows,
+    replay_tokenizer,
+)
 
 
 def _plain(v):
@@ -218,7 +235,55 @@ def _src_offsets(spark, tmp_path):
     return entry._q_extract_src_offsets(spark, str(tmp_path)), rows, direct
 
 
+def _extract(spark, tmp_path):
+    doc = make_document("e1", random.Random(1002), 3000)
+    rows = [
+        ("e1", [(sp["kind"], sp["text"], sp["media_ref"], sp["offset"])
+                for sp in doc["spans"]]),
+        ("e2", [("text", " a  b ", None, 1), ("html", "<p>x<b>y", None, 0),
+                ("image", "cap", "media://e2/0", 2)]),
+        ("e3", []),
+        ("e4", None),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+
+    def direct(doc_id, spans):
+        out, errs, n_bytes = extract_document_safe(spans or [],
+                                                   ExtractConfig())
+        return [(doc_id, [(k, t, m, i) for i, (k, t, m) in enumerate(out)],
+                 n_bytes, len(out), len(errs), dict(Counter(errs)))]
+
+    return extract_documents(df).drop("wall_us"), rows, direct
+
+
+def _http_codec(spark, tmp_path):
+    page = b"<p>coded body</p>"
+    rows = [("u/plain", page.decode("latin-1"), "", ""),
+            ("u/gz", gzip.compress(page).decode("latin-1"), "", "gzip"),
+            ("u/chunked", b"5\r\n<p>co\r\n0\r\n\r\n".decode("latin-1"),
+             "chunked", ""),
+            ("u/br", "\x0bbr-bytes", "", "br")]
+    df = spark.createDataFrame(
+        rows, "warc_url string, html string, http_te string, http_ce string"
+    )
+
+    def direct(url, html, te, ce):
+        declared = ",".join(c for c in ["chunked" if te else "", ce] if c)
+        if not declared:  # the JVM-only identity branch
+            return [(url, html, te, ce, "")]
+        body, coding = _decoded_body(html, te, ce, declared)
+        return [(url, body, te, ce, coding)]
+
+    return decode_http_payloads(df), rows, direct
+
+
 STAGES = {
+    "extract_documents": _extract,
+    "decode_http_payloads": _http_codec,
     "extract_fragments": _fragments,
     "replay_tokenizer": _replay,
     "decode_pdf_spans": _pdf_spans,
@@ -285,3 +350,36 @@ def test_map_rows_zero_one_many_and_nulls(spark):
                    ("b", None, None, None)]
     empty = map_rows(df.where("k = 'c'"), ["k", "s"], fn, schema)
     assert empty.schema == schema and empty.collect() == []
+
+
+def test_row_batches_read_list_of_struct_as_tuples():
+    """A ``list<struct>`` column reaches ``fn`` as a list of tuples in
+    field order: from a sliced batch (absolute list offsets), with a
+    null list as ``None``, an empty list as ``[]`` and a null struct as
+    ``None``."""
+    import pyarrow as pa
+
+    item = pa.struct([pa.field("a", pa.string()), pa.field("b", pa.int32())])
+    full = pa.record_batch({
+        "k": pa.array(["x", "y", "z", "w", "v"]),
+        "items": pa.array(
+            [[{"a": "x0", "b": 0}], None, [],
+             [{"a": "w0", "b": 1}, None, {"a": None, "b": 3}],
+             [{"a": "v0", "b": 4}]],
+            pa.list_(item),
+        ),
+    })
+    schema = StructType([StructField("k", StringType()),
+                         StructField("seen", StringType())])
+    seen = []
+
+    def fn(k, items):
+        seen.append((k, items))
+        return [(k, repr(items))]
+
+    sliced = full.slice(1, 3)
+    (out,) = _row_batches(fn, schema)(iter([sliced]))
+    want = [("y", None), ("z", []),
+            ("w", [("w0", 1), None, (None, 3)])]
+    assert seen == want
+    assert out.to_pylist() == [{"k": k, "seen": repr(v)} for k, v in want]

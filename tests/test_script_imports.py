@@ -9,7 +9,8 @@ parameter of a package or registry function, private helpers included,
 is passed by some call outside the tests, so a value only a test varies
 is a constant rather than an option.  The iterative ops of
 ``textops`` materialize and free their rounds only through its one
-round helper.
+round helper, and every Python stage meets the Arrow batch format
+only through ``udfs.map_rows``.
 
 Scripts are parsed, not run.  Imports nested in functions count, and
 so do import lines inside string literals (code snippets a script
@@ -476,4 +477,63 @@ def test_round_guard_flags_a_loop_of_its_own():
         "_persistent_rdd_ids@11",
         "localCheckpoint@13",
         "_unpersist_rdd_ids@14",
+    ]
+
+
+# the one Arrow row stage: no other function runs a Python batch loop
+ROW_STAGE = {("udfs", "_row_batches"), ("udfs", "map_rows")}
+ROW_STAGE_FILES = sorted([*PACKAGE, *SCRIPTS])
+
+
+def _python_stages_outside_map_rows(paths) -> list[str]:
+    """``file:line in module.function`` for each ``.mapInArrow``,
+    ``.mapInPandas`` or ``.applyIn*`` call outside ``udfs._row_batches``
+    and ``udfs.map_rows``."""
+    found = []
+    for path in paths:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for top in tree.body:
+            name = getattr(top, "name", "<module>")
+            if (path.stem, name) in ROW_STAGE:
+                continue
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and (
+                        node.func.attr in ("mapInArrow", "mapInPandas")
+                        or node.func.attr.startswith("applyIn")
+                    )
+                ):
+                    found.append(
+                        f"{path.name}:{node.lineno} in {path.stem}.{name}"
+                    )
+    return found
+
+
+def test_python_stages_go_through_map_rows():
+    found = _python_stages_outside_map_rows(ROW_STAGE_FILES)
+    assert not found, f"Python stages outside udfs.map_rows: {found}"
+
+
+def test_row_stage_guard_flags_a_batch_loop_of_its_own(tmp_path):
+    udfs = tmp_path / "udfs.py"
+    udfs.write_text(textwrap.dedent("""\
+        def map_rows(df, cols, fn, schema):
+            return df.select(*cols).mapInArrow(fn, schema)
+
+        def extract(df):
+            \"\"\"Docstrings may say mapInArrow.\"\"\"
+            return df.mapInArrow(lambda b: b, df.schema)
+        """))
+    job = tmp_path / "job.py"
+    job.write_text(textwrap.dedent("""\
+        def main(df):
+            df.groupBy("k").applyInPandas(len, df.schema)
+            return df.mapInPandas(len, df.schema)
+        """))
+    assert _python_stages_outside_map_rows([udfs, job]) == [
+        "udfs.py:6 in udfs.extract",
+        "job.py:2 in job.main",
+        "job.py:3 in job.main",
     ]

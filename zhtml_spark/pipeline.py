@@ -3,7 +3,7 @@
 The Spark-side architecture (SURVEY §4.2): everything outside the
 fused UDF is declarative DataFrame code — scans prune columns and push
 filters (Catalyst), AQE handles runtime re-planning for the join/agg
-stages, and the ONLY imperative stage is the single mapInArrow parse.
+stages, and the ONLY imperative stage is the single ``map_rows`` parse.
 
 Skew: document sizes are heavy-tailed (giant pages), and a document is
 one row — key-salting frequency tricks don't apply to row-size skew.
@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .extract import ExtractConfig
-from .udfs import EXTRACT_SCHEMA, make_extract_arrow_udf
+from .udfs import EXTRACT_SCHEMA, extract_row, map_rows
 
 DEFAULT_ARROW_BATCH = 256  # docs per Arrow batch: ~4KB mean docs → ~1MB batches
 # salted_repartition: a giant holds more than this share of a
@@ -71,6 +71,11 @@ def build_session(
         os.environ["PYTHONPATH"] = (
             f"{repo_root}:{existing}" if existing else repo_root
         )
+    # driver heap: 1/8 of RAM, clamped to [1g, 16g] — a fixed 16g
+    # heap on a 15 GB host leaves no room for the Python workers and
+    # the tmpfs shuffle files, which are RAM too
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    heap = f"{max(1024, min(ram_mb // 8, 16 * 1024))}m"
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
@@ -81,7 +86,7 @@ def build_session(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(DEFAULT_ARROW_BATCH),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", heap))
         # crawl-decoder hardening (sources.decode_sniffed): restore
         # the full Java charset repertoire (Spark 4 whitelists
         # encode/decode charsets otherwise — SPARK-46115) and
@@ -266,12 +271,11 @@ def extract_documents(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """The core stage: salted repartition → fused parse/extract
-    mapInArrow stage (flat Arrow child arrays in and out)."""
+    ``map_rows`` stage."""
     if num_partitions:
         df = salted_repartition(df, num_partitions)
-    return df.select("doc_id", "spans").mapInArrow(
-        make_extract_arrow_udf(config), EXTRACT_SCHEMA
-    )
+    return map_rows(df, ["doc_id", "spans"], extract_row(config),
+                    EXTRACT_SCHEMA)
 
 
 def explode_spans(extracted: DataFrame) -> DataFrame:

@@ -667,6 +667,19 @@ def _decode_content_codings(body: bytes, ce: str) -> tuple[bytes, bool]:
     return body, True
 
 
+def _decoded_body(carrier: str, te: str, ce: str, declared: str):
+    """One coded record's ``(html, coding)``: the latin-1 carrier with
+    its chunked framing and content codings undone, and the declared
+    codings with ``:fail`` appended when one could not be undone."""
+    body = carrier.encode("latin-1")
+    ok = True
+    if "chunked" in te:
+        body, ok = _dechunk(body)
+    body, c_ok = _decode_content_codings(body, ce)
+    coding = declared if ok and c_ok else declared + ":fail"
+    return body.decode("latin-1"), coding
+
+
 def decode_http_payloads(records: DataFrame) -> DataFrame:
     """Rewrite ``html`` to the DECODED HTTP body for records whose
     headers declare a transfer/content coding; append a ``coding``
@@ -677,7 +690,7 @@ def decode_http_payloads(records: DataFrame) -> DataFrame:
     Requires the BYTE-FAITHFUL carrier
     (``read_warc(charset='ISO-8859-1')``): compressed bodies do not
     survive a UTF-8 decode.  Identity rows take the JVM-only branch —
-    the codec ``mapInArrow`` stage sees exactly the rows that need
+    the codec ``map_rows`` stage sees exactly the rows that need
     bytes work, so archives with no coded bodies (Common Crawl) pay
     nothing.  Per-task working set is one record's decoded body, not
     a segment."""
@@ -693,41 +706,16 @@ def decode_http_payloads(records: DataFrame) -> DataFrame:
     )
     plain = records.where(~needs).withColumn("coding", F.lit(""))
     coded = records.where(needs).withColumn("coding", declared)
-    schema = coded.schema
+    at = {n: i for i, n in enumerate(coded.columns)}
 
-    def codec(batches):
-        import pyarrow as pa
+    def row(*values):
+        out = list(values)
+        out[at["html"]], out[at["coding"]] = _decoded_body(
+            *(values[at[n]] for n in ("html", "http_te", "http_ce", "coding"))
+        )
+        return [tuple(out)]
 
-        for batch in batches:
-            names = batch.schema.names
-            cols = {n: batch.column(i) for i, n in enumerate(names)}
-            htmls: list[str] = []
-            codings: list[str] = []
-            for carrier, rec_te, rec_ce, dec in zip(
-                cols["html"].to_pylist(),
-                cols["http_te"].to_pylist(),
-                cols["http_ce"].to_pylist(),
-                cols["coding"].to_pylist(),
-            ):
-                body = carrier.encode("latin-1")
-                ok = True
-                if "chunked" in rec_te:
-                    body, ok = _dechunk(body)
-                body, c_ok = _decode_content_codings(body, rec_ce)
-                ok = ok and c_ok
-                htmls.append(body.decode("latin-1"))
-                codings.append(dec if ok else dec + ":fail")
-            arrays = []
-            for n in names:
-                if n == "html":
-                    arrays.append(pa.array(htmls, pa.string()))
-                elif n == "coding":
-                    arrays.append(pa.array(codings, pa.string()))
-                else:
-                    arrays.append(cols[n])
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return plain.unionByName(coded.mapInArrow(codec, schema))
+    return plain.unionByName(map_rows(coded, coded.columns, row, coded.schema))
 
 
 def warc_to_documents(records: DataFrame) -> DataFrame:

@@ -108,14 +108,14 @@ def word_ngrams(n: int) -> Column:
     )
 
 
-def _char_gram_expr(text_col: str, k: int) -> str:
+def _char_gram_expr(text_col: str, k: int, hash_fn: str | None) -> str:
     """SQL expr for the array of ALL ``k``-char grams of ``text_col``
-    in LINEAR time — positioned ``substring(text, i, k)`` is O(i) on
-    UTF8String (code-point re-scan from byte 0), so the obvious
-    per-position loop is O(n²/2) character scans per document: 16 G
-    scans for one 180 KB page, and winnow ran 20× slower on 220 KB
-    docs than on the same bytes as 11 KB docs (r5, found by the
-    adversarial giant-page corpus).
+    (``hash_fn=None``) or of their hashes, in LINEAR time — positioned
+    ``substring(text, i, k)`` is O(i) on UTF8String (code-point re-scan
+    from byte 0), so the obvious per-position loop is O(n²/2) character
+    scans per document: 16 G scans for one 180 KB page, and winnow ran
+    20× slower on 220 KB docs than on the same bytes as 11 KB docs (r5,
+    found by the adversarial giant-page corpus).
 
     Construction, PER ROW by document length:
 
@@ -142,7 +142,26 @@ def _char_gram_expr(text_col: str, k: int) -> str:
     ``slice(ch, i, k)`` inside the lambda) is a trap: CollapseProject
     inlines the single-use alias into the lambda body, re-running the
     O(n) split per element and reintroducing the quadratic (measured:
-    6.6 s → 94 s)."""
+    6.6 s → 94 s).
+
+    ``hash_fn``: ``xxhash64`` (engine default) or ``md5`` (the blessed
+    cross-engine md5-48 form the oracles pin) hashes each gram where it
+    is built (r8), so the intermediate ``array<string>`` of gram text
+    never materializes — the per-row intermediate is one
+    ``array<bigint>`` at 8 B/position.  Branches, switch point and gram
+    values are the same either way."""
+    forms = {
+        None: ("STRING", "{}"),
+        "xxhash64": ("BIGINT", "xxhash64({})"),
+        "md5": (
+            "BIGINT", "CAST(conv(substring(md5({}), 1, 12), 16, 10) AS BIGINT)"
+        ),
+    }
+    if hash_fn not in forms:
+        raise ValueError(
+            f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}"
+        )
+    elem, h = forms[hash_fn]
     if k > 64:
         raise ValueError(
             "char grams wider than 64 need a different plan shape"
@@ -154,57 +173,12 @@ def _char_gram_expr(text_col: str, k: int) -> str:
     fields = ", ".join(f"s.`{j}`" for j in range(k))
     return (
         f"CASE WHEN length({text_col}) < {k} THEN "
-        f"CAST(array() AS ARRAY<STRING>) "
+        f"CAST(array() AS ARRAY<{elem}>) "
         f"WHEN length({text_col}) < {switch_chars} THEN "
         f"transform(sequence(1, length({text_col}) - {k} + 1),"
-        f" i -> substring({text_col}, i, {k})) "
-        f"ELSE transform(arrays_zip({slices}), s -> concat({fields})) END"
-    )
-
-
-def _char_gram_hash_expr(k: int, hash_fn: str) -> str:
-    """SQL expr for the array of per-position k-gram HASHES of
-    ``text`` — :func:`_char_gram_expr`'s length-hybrid plan with
-    the hash fused into the gram lambda (r8): each gram string is
-    hashed where it is built and discarded, so the intermediate
-    ``array<string>`` of gram text (k-char allocations per position,
-    then a second transform pass) never materializes — the per-row
-    intermediate is one ``array<bigint>`` at 8 B/position.  Branch
-    structure, switch point (48·k) and gram VALUES are identical to
-    the unfused builder, so every downstream hash is byte-identical.
-
-    ``hash_fn``: ``xxhash64`` (engine default) or ``md5`` (the
-    blessed cross-engine md5-48 form the oracles pin)."""
-    if hash_fn == "xxhash64":
-        def h(g: str) -> str:
-            return f"xxhash64({g})"
-    elif hash_fn == "md5":
-        def h(g: str) -> str:
-            return (
-                f"CAST(conv(substring(md5({g}), 1, 12), 16, 10)"
-                " AS BIGINT)"
-            )
-    else:
-        raise ValueError(
-            f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}"
-        )
-    if k > 64:
-        raise ValueError(
-            "char grams wider than 64 need a different plan shape"
-        )
-    switch_chars = 48 * k
-    ch = "split(text, '')"
-    ln = f"length(text) - {k} + 1"
-    slices = ", ".join(f"slice({ch}, {j + 1}, {ln})" for j in range(k))
-    fields = ", ".join(f"s.`{j}`" for j in range(k))
-    return (
-        f"CASE WHEN length(text) < {k} THEN "
-        f"CAST(array() AS ARRAY<BIGINT>) "
-        f"WHEN length(text) < {switch_chars} THEN "
-        f"transform(sequence(1, length(text) - {k} + 1),"
-        f" i -> {h(f'substring(text, i, {k})')}) "
+        f" i -> {h.format(f'substring({text_col}, i, {k})')}) "
         f"ELSE transform(arrays_zip({slices}),"
-        f" s -> {h(f'concat({fields})')}) END"
+        f" s -> {h.format(f'concat({fields})')}) END"
     )
 
 
@@ -1756,8 +1730,8 @@ def winnow_fingerprints(
     # substring(text, j, k): positional substring re-scans from byte
     # 0 per call → quadratic per doc; giant web pages made this 20×
     # (r5, _char_gram_expr).  r8: hash fused into the gram lambda —
-    # the gram-string array never materializes (_char_gram_hash_expr)
-    hashes = _char_gram_hash_expr(WINNOW_K, hash_fn)
+    # the gram-string array never materializes (_char_gram_expr)
+    hashes = _char_gram_expr("text", WINNOW_K, hash_fn)
     # window minimum as a flat least() chain of element_at lookups —
     # stays inside codegen with no per-position slice() array
     # allocation (VERDICT r4 #5: the post-xxhash64 cost is this stage's
@@ -2838,7 +2812,7 @@ def lang_id_v2(
     low = fan_out(docs).select(
         "doc_id", F.lower(F.col("text")).alias("_lt")
     )
-    grams = F.expr(_char_gram_expr("_lt", 3))
+    grams = F.expr(_char_gram_expr("_lt", 3, None))
     bucketed = low.select(
         "doc_id",
         _langid_buckets(grams, hash_fn).alias("_b"),
@@ -2918,7 +2892,7 @@ def lang_gate(
         # giant-page guard
         src = F.substring(src, 1, max_chars)
     bucketed = fan_out(docs).withColumn("_lt", src)
-    grams = F.expr(_char_gram_expr("_lt", 3))
+    grams = F.expr(_char_gram_expr("_lt", 3, None))
     # ``_b`` carries a value-neutral NONDETERMINISTIC guard
     # (``when(monotonically_increasing_id() >= 0, ...)`` is always
     # taken), and that guard is load-bearing (r6, measured 6×): the
@@ -3039,7 +3013,7 @@ def trigram_lm_score(
     low = fan_out(docs).select(
         "doc_id", *keep, F.lower(F.col("text")).alias("_lt")
     )
-    grams = F.expr(_char_gram_expr("_lt", 3))
+    grams = F.expr(_char_gram_expr("_lt", 3, None))
     bucketed = low.select(
         "doc_id",
         *keep,
@@ -3651,9 +3625,9 @@ def substring_dup_spans(
     """
     # fused gram→hash builder (r8): the df-gate pass below explodes
     # an array<bigint> of gram hashes directly — the k-char
-    # gram-string array never materializes (_char_gram_hash_expr;
+    # gram-string array never materializes (_char_gram_expr;
     # also validates hash_fn)
-    arr_h = F.expr(_char_gram_hash_expr(k, hash_fn))
+    arr_h = F.expr(_char_gram_expr("text", k, hash_fn))
     docs = fan_out(docs)
     # Positioned pass as a ROW-ENGINE hybrid (r8): higher-order
     # lambdas evaluate interpreted (no whole-stage codegen), and at
@@ -3839,7 +3813,7 @@ def substring_gram_stats(
     rows (the a.doc < b.doc filter only shrinks it); ``max_bucket`` is
     the largest position list a single gram fans out to.  ONE
     aggregation pass serves both variants."""
-    arr = F.expr(_char_gram_expr("text", k))
+    arr = F.expr(_char_gram_expr("text", k, None))
     per_gram = (
         docs.select("doc_id", F.explode(arr).alias("gram"))
         .select("doc_id", md5_hash48(F.col("gram")).alias("gh"))

@@ -1,17 +1,17 @@
-"""Fused tokenize→tree→extract mapInArrow stage.
+"""Fused tokenize→tree→extract stage and the one Arrow row stage.
 
 One Python stage, one JVM↔Python Arrow crossing (SURVEY §4.2 "UDF
 fusion": Catalyst cannot fuse across two Python stages, so we never
 split the parse).  Input/output cross the boundary as Arrow record
 batches; inside the batch we loop documents — the per-document DFA is
 inherently sequential (SURVEY §7.2), parallelism comes from doc-level
-batching across tasks.  ``make_extract_arrow_udf`` (mapInArrow) is the
-one extraction engine.
+batching across tasks.
 
-``map_rows`` is the one row-at-a-time Arrow stage every other Python
-decoder runs through (fragment extraction, tokenizer replay, the
-PDF/feed/media decoders, the archive gunzip): the stage supplies a
-per-row function, ``map_rows`` owns the batch format.
+Every Python stage is one ``map_rows`` stage: the fused HTML parse
+(``extract_row``), fragment extraction, tokenizer replay, the
+PDF/feed/media decoders, the archive gunzip and the HTTP codec.  The
+stage supplies a per-row function; ``_row_batches`` owns the batch
+format, including the flat-child read of ``list<struct>`` columns.
 
 Input schema  (BASELINE.json input_hint):
     doc_id: string,
@@ -144,15 +144,11 @@ def extract_document(
 
 
 def _reject_source_offsets(cfg: ExtractConfig) -> None:
-    """The fused stage's span schema (EXTRACT_SCHEMA — the driver/sink
-    contract) has no ``src`` column, so ``with_source_offsets`` cannot
-    ride through them: fail LOUDLY at stage-construction time on the
-    driver (code-review r4c — the 4-tuple spans previously blew up as
-    an unpack ValueError inside the executor, OUTSIDE the per-doc
-    poison-pill guard, killing the task after 4 retries).  Provenance
-    consumers use ``extract_html``/``extract_spans`` directly or a
-    bespoke stage with a src-bearing schema (see the
-    ``extract_src_offsets`` gate query)."""
+    """EXTRACT_SCHEMA has no ``src`` column, so ``with_source_offsets``
+    fails on the driver when the stage is built, not as a task failure
+    outside the per-doc guard.  Provenance consumers use
+    ``extract_html``/``extract_spans`` or a stage with a src-bearing
+    schema (the ``extract_src_offsets`` gate query)."""
     if cfg.with_source_offsets:
         raise ValueError(
             "with_source_offsets is not supported by the fused extract "
@@ -161,130 +157,70 @@ def _reject_source_offsets(cfg: ExtractConfig) -> None:
         )
 
 
-def make_extract_arrow_udf(config: ExtractConfig | None = None):
-    """Build the mapInArrow function for the extraction stage.
-
-    Each document runs through :func:`extract_document_safe`.  The
-    function consumes/produces ``pyarrow.RecordBatch`` directly: the
-    spans ``list<struct>`` column is deconstructed into flat child
-    arrays (one ``to_pylist`` per flat string column) instead of
-    per-row lists of Python dicts, and the output is assembled as
-    Arrow arrays.  This skips the pandas-object-dict round trip of a
-    mapInPandas stage — the dominant Spark-side overhead at 32 cores
-    (1.66×, see BENCH/NOTES.md step 3).
-    """
-    import pyarrow as pa
-
+def extract_row(config: ExtractConfig | None):
+    """The fused stage's per-row function: ``(doc_id, spans)`` → one
+    ``EXTRACT_SCHEMA`` row.  Each document runs through
+    :func:`extract_document_safe`, timed into ``wall_us``; the output
+    spans are numbered 0..n-1 as ``offset``."""
     cfg = config or ExtractConfig()
     _reject_source_offsets(cfg)
 
-    out_span_type = pa.struct(
-        [
-            pa.field("kind", pa.string(), nullable=False),
-            pa.field("text", pa.string()),
-            pa.field("media_ref", pa.string()),
-            pa.field("offset", pa.int32(), nullable=False),
-        ]
-    )
-    out_schema = pa.schema(
-        [
-            pa.field("doc_id", pa.string(), nullable=False),
-            pa.field("spans", pa.list_(out_span_type), nullable=False),
-            pa.field("n_bytes", pa.int64(), nullable=False),
-            pa.field("n_spans", pa.int64(), nullable=False),
-            pa.field("n_errors", pa.int64(), nullable=False),
-            pa.field(
-                "error_codes", pa.map_(pa.string(), pa.int64()), nullable=False
-            ),
-            pa.field("wall_us", pa.int64(), nullable=False),
-        ]
-    )
+    def row(doc_id, spans):
+        t0 = time.perf_counter_ns()
+        out, errs, n_bytes = extract_document_safe(spans or [], cfg)
+        wall_us = (time.perf_counter_ns() - t0) // 1000
+        return [(
+            doc_id, [(k, t, m, i) for i, (k, t, m) in enumerate(out)],
+            n_bytes, len(out), len(errs), list(Counter(errs).items()),
+            wall_us,
+        )]
 
-    def extract_batches(batches):
-        for batch in batches:
-            doc_ids = batch.column("doc_id")
-            spans_col = batch.column("spans")
-            if isinstance(spans_col, pa.ChunkedArray):  # pragma: no cover
-                spans_col = spans_col.combine_chunks()
-            list_offsets = spans_col.offsets.to_numpy(zero_copy_only=False)
-            # sliced arrays keep ABSOLUTE offsets while flatten()
-            # rebases values to the slice start — rebase or every doc
-            # reads another doc's spans
-            base = int(list_offsets[0])
-            flat = spans_col.flatten()
-            kinds = flat.field("kind").to_pylist()
-            texts = flat.field("text").to_pylist()
-            refs = flat.field("media_ref").to_pylist()
-            offs = flat.field("offset").to_pylist()
-
-            out_kind: list[str] = []
-            out_text: list[str | None] = []
-            out_ref: list[str | None] = []
-            out_off: list[int] = []
-            out_list_offsets = [0]
-            n_bytes_col = []
-            n_spans_col = []
-            n_errors_col = []
-            codes_col = []
-            wall_col = []
-            for i in range(len(batch)):
-                lo = int(list_offsets[i]) - base
-                hi = int(list_offsets[i + 1]) - base
-                t0 = time.perf_counter_ns()
-                recs = list(
-                    zip(kinds[lo:hi], texts[lo:hi], refs[lo:hi], offs[lo:hi])
-                )
-                spans, errs, nbytes = extract_document_safe(recs, cfg)
-                wall_col.append((time.perf_counter_ns() - t0) // 1000)
-                for j, (k, t, m) in enumerate(spans):
-                    out_kind.append(k)
-                    out_text.append(t)
-                    out_ref.append(m)
-                    out_off.append(j)
-                out_list_offsets.append(out_list_offsets[-1] + len(spans))
-                n_bytes_col.append(nbytes)
-                n_spans_col.append(len(spans))
-                n_errors_col.append(len(errs))
-                codes_col.append(list(Counter(errs).items()))
-
-            struct_arr = pa.StructArray.from_arrays(
-                [
-                    pa.array(out_kind, pa.string()),
-                    pa.array(out_text, pa.string()),
-                    pa.array(out_ref, pa.string()),
-                    pa.array(out_off, pa.int32()),
-                ],
-                fields=list(out_span_type),
-            )
-            spans_out = pa.ListArray.from_arrays(
-                pa.array(out_list_offsets, pa.int32()), struct_arr
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    spans_out,
-                    pa.array(n_bytes_col, pa.int64()),
-                    pa.array(n_spans_col, pa.int64()),
-                    pa.array(n_errors_col, pa.int64()),
-                    pa.array(codes_col, pa.map_(pa.string(), pa.int64())),
-                    pa.array(wall_col, pa.int64()),
-                ],
-                schema=out_schema,
-            )
-
-    return extract_batches
+    return row
 
 
-def map_rows(
-    df: DataFrame, cols: list, fn: Callable[..., Iterable[tuple]],
-    schema: StructType,
-) -> DataFrame:
-    """ONE mapInArrow stage that calls ``fn(*values)`` per row of
-    ``df.select(*cols)`` (Arrow nulls arrive as ``None``) and emits
-    the zero or more tuples it returns, in ``schema`` field order, as
-    a ``pyarrow.RecordBatch`` typed by ``to_arrow_schema(schema)``.
-    The one place a per-document Python stage meets the batch format;
-    error handling stays with ``fn``."""
+def make_extract_arrow_udf(config: ExtractConfig | None = None):
+    """The extraction stage as a batches → batches function (what
+    ``pipeline.extract_documents`` runs as its one mapInArrow stage),
+    for callers that drive record batches in-process."""
+    return _row_batches(extract_row(config), EXTRACT_SCHEMA)
+
+
+def _column_values(col) -> list:
+    """One Arrow column as Python values, ``None`` for a null.  A
+    ``list<struct>`` column is read as flat child arrays (one
+    ``to_pylist`` per field) and cut into per-row lists of tuples in
+    field order: building a dict per struct costs about three times as
+    much (BENCH/NOTES.md).  Every other type goes through
+    ``to_pylist``."""
+    import pyarrow as pa
+
+    if not (
+        pa.types.is_list(col.type) and pa.types.is_struct(col.type.value_type)
+    ):
+        return col.to_pylist()
+    offsets = col.offsets.to_pylist()
+    # a sliced column keeps ABSOLUTE offsets into its unsliced child:
+    # rebase them, or every row reads another row's structs
+    base = offsets[0]
+    structs = col.values.slice(base, offsets[-1] - base)
+    items = list(zip(*(f.to_pylist() for f in structs.flatten())))
+    if structs.null_count:
+        valid = structs.is_valid().to_pylist()
+        items = [t if ok else None for t, ok in zip(items, valid)]
+    valid = col.is_valid().to_pylist()
+    return [
+        items[lo - base:hi - base] if ok else None
+        for lo, hi, ok in zip(offsets, offsets[1:], valid)
+    ]
+
+
+def _row_batches(fn: Callable[..., Iterable[tuple]], schema: StructType):
+    """The batches → batches function of a row stage: calls
+    ``fn(*values)`` per row of each input batch (see
+    :func:`_column_values`) and builds one output batch from the zero
+    or more tuples each call returns, in ``schema`` field order, typed
+    by ``to_arrow_schema(schema)``.  The one place a Python stage meets
+    the batch format; error handling stays with ``fn``."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -292,7 +228,7 @@ def map_rows(
 
     def row_batches(batches):
         for batch in batches:
-            values = [col.to_pylist() for col in batch.columns]
+            values = [_column_values(col) for col in batch.columns]
             rows = [out for row in zip(*values) for out in fn(*row)]
             columns = list(zip(*rows)) or [()] * len(out_schema)
             yield pa.RecordBatch.from_arrays(
@@ -300,7 +236,17 @@ def map_rows(
                 schema=out_schema,
             )
 
-    return df.select(*cols).mapInArrow(row_batches, schema)
+    return row_batches
+
+
+def map_rows(
+    df: DataFrame, cols: list, fn: Callable[..., Iterable[tuple]],
+    schema: StructType,
+) -> DataFrame:
+    """ONE mapInArrow stage that calls ``fn(*values)`` per row of
+    ``df.select(*cols)`` and emits the tuples it returns as rows of
+    ``schema`` (see :func:`_row_batches`)."""
+    return df.select(*cols).mapInArrow(_row_batches(fn, schema), schema)
 
 
 def extract_fragments(df: DataFrame, context: str = "div") -> DataFrame:
