@@ -189,7 +189,7 @@ def _column_values(col) -> list:
     """One Arrow column as Python values, ``None`` for a null.  A
     ``list<struct>`` column is read as flat child arrays (one
     ``to_pylist`` per field) and cut into per-row lists of tuples in
-    field order: building a dict per struct costs about three times as
+    field order: building a dict per struct costs about 2.5 times as
     much (BENCH/NOTES.md).  Every other type goes through
     ``to_pylist``."""
     import pyarrow as pa
