@@ -77,6 +77,19 @@ def test_substring_hybrid_branches_agree_across_crossover(spark):
     assert [tuple(r) for r in spans_md5] == [tuple(r) for r in spans]
 
 
+@pytest.mark.parametrize("hash_fn", [None, "sha1"])
+def test_hashed_gram_ops_reject_non_hash(spark, hash_fn):
+    """The hashed gram ops accept only ``xxhash64``/``md5`` and fail
+    when the plan is built: ``None`` is the gram-string form of the
+    shared builder, never a public hash choice."""
+    from zhtml_spark.textops import substring_dup_spans, winnow_fingerprints
+
+    docs = spark.createDataFrame([(1, "text")], "doc_id long, text string")
+    for op in (winnow_fingerprints, substring_dup_spans):
+        with pytest.raises(ValueError, match="'xxhash64' or 'md5'"):
+            op(docs, hash_fn=hash_fn)
+
+
 def test_minhash_band_signatures_single_exchange(spark):
     """r8 plan claim: the banded signature side runs ONE aggregation
     exchange (the per-doc min partial agg) — the old per-(doc,seed)

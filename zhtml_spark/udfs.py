@@ -190,8 +190,10 @@ def _column_values(col) -> list:
     ``list<struct>`` column is read as flat child arrays (one
     ``to_pylist`` per field) and cut into per-row lists of tuples in
     field order: building a dict per struct costs about 2.5 times as
-    much (BENCH/NOTES.md).  Every other type goes through
-    ``to_pylist``."""
+    much (BENCH/NOTES.md).  A null struct reads as a tuple of
+    ``None``s (``flatten`` carries the struct's nulls into its
+    fields), so a per-tuple consumer never meets a bare ``None``.
+    Every other type goes through ``to_pylist``."""
     import pyarrow as pa
 
     if not (
@@ -204,9 +206,6 @@ def _column_values(col) -> list:
     base = offsets[0]
     structs = col.values.slice(base, offsets[-1] - base)
     items = list(zip(*(f.to_pylist() for f in structs.flatten())))
-    if structs.null_count:
-        valid = structs.is_valid().to_pylist()
-        items = [t if ok else None for t, ok in zip(items, valid)]
     valid = col.is_valid().to_pylist()
     return [
         items[lo - base:hi - base] if ok else None
