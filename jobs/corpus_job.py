@@ -10,7 +10,8 @@ pages inside WARC response records):
     substring apply) → corpus line dedup → sequence packing →
     spans-to-markdown render
 
-and reports per-stage rows/seconds/docs-per-sec as ONE JSON line
+and reports per-stage rows/seconds/docs-per-sec and codegen compile
+counts (``pipeline.codegen_compiles`` deltas) as ONE JSON line
 (BENCH/NOTES.md records the 2M-doc run).  Every stage is the same
 public operator the oracle gates individually — this job exists to
 surface CROSS-op schema friction and to measure the composition, not
@@ -50,7 +51,11 @@ def run(
 
     from zhtml_spark.corpus import adversarial_web_corpus
     from zhtml_spark.extract import ExtractConfig
-    from zhtml_spark.pipeline import explode_spans, extract_documents
+    from zhtml_spark.pipeline import (
+        codegen_compiles,
+        explode_spans,
+        extract_documents,
+    )
     from zhtml_spark.sources import (
         parse_warc_records,
         warc_record,
@@ -73,9 +78,12 @@ def run(
     stages: dict[str, dict] = {}
 
     def timed(name: str, fn):
-        t0 = time.time()
+        c0, t0 = codegen_compiles(spark), time.time()
         out = fn()
-        stages[name] = {"sec": round(time.time() - t0, 2)}
+        stages[name] = {
+            "sec": round(time.time() - t0, 2),
+            "compiles": codegen_compiles(spark) - c0,
+        }
         return out
 
     # ---- 0. synthetic crawl: adversarial corpus → HTML → WARC -----
@@ -126,18 +134,18 @@ def run(
     # fused parse UDF; checkpoint because frontier, text rebuild, and
     # the final markdown render all reuse it
     cfg = ExtractConfig(emit_links=True, emit_head_meta=True)
-    t0 = time.time()
-    spans = explode_spans(
-        extract_documents(docs, config=cfg, num_partitions=2 * cores)
-    ).localCheckpoint()
-    n_spans = spans.count()
-    el = time.time() - t0
-    stages["extract"] = {
-        "sec": round(el, 2),
-        "docs": n_in,
-        "spans": n_spans,
-        "docs_per_sec": round(n_in / el, 1),
-    }
+    def _extract():
+        out = explode_spans(
+            extract_documents(docs, config=cfg, num_partitions=2 * cores)
+        ).localCheckpoint()
+        return out, out.count()
+
+    spans, n_spans = timed("extract", _extract)
+    stages["extract"].update(
+        docs=n_in,
+        spans=n_spans,
+        docs_per_sec=round(n_in / stages["extract"]["sec"], 1),
+    )
 
     # ---- 3. crawl frontier: links/media → absolutize → robots -----
     hosts = adv.select("host").distinct()
@@ -384,8 +392,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--pagerank-iters", type=int, default=None,
-        help="host-graph PageRank rounds (default: tier off; >5 "
-        "switches to checkpointed iteration)",
+        help="host-graph PageRank rounds (default: tier off)",
     )
     args = ap.parse_args()
     rebalance_bp = None

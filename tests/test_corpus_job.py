@@ -41,3 +41,7 @@ def test_corpus_job_stages_compose(spark):
     assert 0 < st["pack_sequences"]["packs"] <= n_s
     assert st["markdown"]["rows"] == n_s
     assert out["total_sec"] > 0
+    # every stage record counts the classes its stage compiled
+    for name, rec in st.items():
+        assert isinstance(rec["compiles"], int), name
+        assert rec["compiles"] >= 0, name

@@ -239,3 +239,28 @@ def test_bucket_pairs_carries_columns_per_side(spark):
     kept = textops._shared_keys(keyed.where(F.col("doc_id") < 3), "k", 2)
     assert sorted(r["k"] for r in kept.collect()) == ["x", "y"]
     assert textops._shared_keys(keyed, "k", 2).collect() == [("x",)]
+
+
+def test_dedup_survivors_builds_signatures_once(spark):
+    """The executed plan hashes the MinHash signature (the md5 ``min``
+    aggregation) in one place.  The input is a ``localCheckpoint``, as
+    in the crawl chain: exchange reuse cannot merge two reads of it, so
+    a plan that reads the signature table twice computes it twice."""
+    from zhtml_spark.corpus import adversarial_web_corpus
+
+    docs = (
+        adversarial_web_corpus(spark, 40, seed=7, n_partitions=2)
+        .select("doc_id", "text")
+        .localCheckpoint()
+    )
+    df = textops.dedup_survivors(docs)
+    assert df.count() > 0
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, final
+    hashing = [
+        ln for ln in final.splitlines()
+        if "HashAggregate" in ln and "partial_min(" in ln and "md5(" in ln
+    ]
+    assert len(hashing) == 1, final

@@ -483,7 +483,8 @@ def _band_signatures(
     docs: DataFrame, n: int, bands: int, rows: int
 ) -> DataFrame:
     """(doc_id, band, band_sig) rows — the b×r LSH bucket keys shared
-    by ``minhash_banded_candidates`` and ``minhash_band_stats``.
+    by ``minhash_banded_candidates``, ``minhash_band_stats`` and
+    ``dedup_survivors``.
 
     Plan (r8): ONE shuffle — the signature lands as ``seeds`` min
     columns in a single partial-agg pass (:func:`_minhash_min_table`)
@@ -704,19 +705,30 @@ def dedup_survivors(
     closure): at 10^12 docs connected components need an iterative
     join loop; smallest-neighbor dominance is the standard one-pass
     approximation and is what this returns deterministically.
-    Distributed shape: one hash-agg + one banding join + one anti-join.
-    Candidates come from b×r banded LSH
-    (:func:`minhash_banded_candidates`), where a popular single gram
-    can no longer merge buckets.
+    Buckets are b×r banded LSH keys (:func:`_band_signatures`, the
+    ones :func:`minhash_banded_candidates` joins on), where a popular
+    single gram can no longer merge buckets.  A doc has a smaller
+    neighbor iff its id exceeds the minimum id of some bucket it is
+    in, so dominance needs no pairs: one hash-agg, one per-bucket
+    ``min`` window and one anti-join.  A banding self-join here built
+    the signature table once per join side — exchange reuse cannot
+    merge two reads of a ``localCheckpoint``/cached input — and
+    materialized every candidate pair only to keep ``doc_b``.
     """
     # dedup_exact emits string ids for its own contract; recover the
-    # input id type for the ordering-based dominance join
+    # input id type for the ordering-based dominance test
     id_type = dict(docs.dtypes)["doc_id"]
     exact = dedup_exact(docs).select(
         F.col("doc_id").cast(id_type).alias("doc_id"), "text"
     )
-    pairs = minhash_banded_candidates(exact, n=n, bands=bands, rows=rows)
-    dominated = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+    bucket = Window.partitionBy("band", "band_sig")
+    dominated = (
+        _band_signatures(exact, n, bands, rows)
+        .withColumn("_bucket_min", F.min("doc_id").over(bucket))
+        .where(F.col("doc_id") > F.col("_bucket_min"))
+        .select("doc_id")
+        .distinct()
+    )
     return exact.join(dominated, "doc_id", "left_anti").select(
         "doc_id", "text"
     )
