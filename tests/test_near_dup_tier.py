@@ -1,6 +1,7 @@
 """The near-dup tier's shared blocking skeleton: plan shape for every
-candidate generator, and the bucket-volume stats against a brute-force
-count on a hand-built corpus."""
+candidate generator, the bucket-volume stats against a brute-force
+count on a hand-built corpus, and ``dedup_survivors`` hashing its
+signatures once."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import pytest
 from conftest import assert_jvm_only
 
 from zhtml_spark import textops
+from zhtml_spark.corpus import adversarial_web_corpus
 
 TEXTS = [
     (1, "the quick brown fox jumps over the lazy dog"),
@@ -246,16 +248,13 @@ def test_dedup_survivors_builds_signatures_once(spark):
     aggregation) in one place.  The input is a ``localCheckpoint``, as
     in the crawl chain: exchange reuse cannot merge two reads of it, so
     a plan that reads the signature table twice computes it twice."""
-    from zhtml_spark.corpus import adversarial_web_corpus
-
     docs = (
         adversarial_web_corpus(spark, 40, seed=7, n_partitions=2)
         .select("doc_id", "text")
         .localCheckpoint()
     )
     df = textops.dedup_survivors(docs)
-    assert df.count() > 0
-    df.collect()
+    assert df.collect()
     final = df._jdf.queryExecution().executedPlan().toString()
     final = final.split("== Initial Plan ==")[0]
     assert "isFinalPlan=true" in final, final

@@ -97,10 +97,11 @@ def build_session(
         .config("spark.sql.legacy.javaCharsets", "true")
         .config("spark.sql.legacy.codingErrorAction", "true")
         # whole-stage codegen cache (static: read once at JVM start).
-        # One crawl_packs pass compiles 210-228 distinct classes, so the
-        # default LRU of 100 evicted each before its next use and Janino
-        # recompiled ~1.7 s of an 11 s iteration every time; at 1024 a
-        # repeated plan compiles nothing.  ~12 KB of Metaspace an entry.
+        # One crawl_packs pass compiles 230-263 distinct classes; the
+        # default LRU of 100 evicts each before its next use, so every
+        # iteration recompiles them all (12.2 s vs 8.4 s a warm
+        # iteration on local[4]).  At 1024 a repeated plan compiles
+        # nothing, for ~1 MB of Metaspace on that workload.
         .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     # Shuffle spill on this sandbox's network disk is burst-throttled and

@@ -710,10 +710,10 @@ def dedup_survivors(
     single gram can no longer merge buckets.  A doc has a smaller
     neighbor iff its id exceeds the minimum id of some bucket it is
     in, so dominance needs no pairs: one hash-agg, one per-bucket
-    ``min`` window and one anti-join.  A banding self-join here built
-    the signature table once per join side — exchange reuse cannot
-    merge two reads of a ``localCheckpoint``/cached input — and
-    materialized every candidate pair only to keep ``doc_b``.
+    ``min`` window and one anti-join.  A banding self-join would build
+    the signature table once per join side (exchange reuse cannot
+    merge two reads of a ``localCheckpoint``/cached input) and
+    materialize every candidate pair only to keep ``doc_b``.
     """
     # dedup_exact emits string ids for its own contract; recover the
     # input id type for the ordering-based dominance test
